@@ -12,6 +12,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    AQE's coalescing makes the initial number mostly irrelevant.
   *  - session timezone pinned to UTC so timestamp arithmetic matches the
   *    DuckDB oracle and is cluster-location independent.
+  *  - artifact isolation off. Spark caches compiled generated code per
+  *    (task context classloader, source), and with isolation on every
+  *    session clone (each `StreamingQuery.start()`, each
+  *    [[org.apache.spark.sql.graft.ConfBridge]] twin) gets its own
+  *    executor classloader, so it recompiles every plan it runs. Measured
+  *    on 4 cores (`CodeReuseSpec`): a repeated
+  *    [[graft.streaming.TimeSliceOps.streamZarrAppend]] run compiled 19–20
+  *    classes with isolation on and 0 with it off, and a twin's first run
+  *    of a plan the root already ran compiled 5, now 0. The library adds
+  *    no per-session jars or files, so isolation has nothing to isolate.
+  *    A session built outside this builder pays a full code-generation
+  *    pass on every such run.
   */
 object GraftSession {
   def builder(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")): SparkSession.Builder = {
@@ -61,6 +73,9 @@ object GraftSession {
       // testdata parquet stores TIMESTAMP(NANOS) which Spark can't decode;
       // read as Long nanos and convert (see GraftSession.events).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // one executor classloader, and so one compiled-code cache, for the
+      // root session and all its clones (see the scaladoc above)
+      .config("spark.sql.artifact.isolation.enabled", "false")
   }
 
   def get(): SparkSession = {

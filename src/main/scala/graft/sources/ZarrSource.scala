@@ -1128,7 +1128,8 @@ object ZarrSource {
       }
     }
     // the action runs the job (the writes are its side effect, same
-    // pattern as foreachBatch sinks); safe on an empty input. With
+    // pattern as foreachBatch sinks); safe on an empty input. Without
+    // stats it drains the write stage and runs nothing after it. With
     // stats requested the O(chunks × vars) moment rows come back and
     // become the sidecar — a freshly-written cube needs no ANALYZE.
     // Past the inline budget (huge grids × strip rows) nothing
@@ -1159,8 +1160,7 @@ object ZarrSource {
         graft.sources.zarr.ChunkStats.writeParquetDoc(groupDir, shape,
           chunks, grids)
       }
-    } else written.count()
-    ()
+    } else written.foreach((_: (String, Seq[Double])) => ())
   }
 
   /** Append slices along dimension 0 (time, in the reference's cubes) to an
@@ -1285,8 +1285,10 @@ object ZarrSource {
             .map(ord => (s"$key#$ord", strips(ord).toSeq)))
       }
     }
+    // without a carried sidecar the tasks emit nothing: drain the write
+    // stage and run nothing after it
     val newEntries = if (foldStats) written.collect().toSeq
-      else { written.count(); Seq.empty }
+      else { written.foreach((_: (String, Seq[Double])) => ()); Seq.empty }
 
     // extend the dim-0 coordinate array (driver-sized, single chunk) and
     // the variable's shape; patch consolidated metadata in place

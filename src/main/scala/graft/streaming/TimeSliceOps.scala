@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.cube.Cube
 import graft.sources.CubeWriter
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -114,26 +114,39 @@ object TimeSliceOps {
   /** Streaming ingestion INTO A ZARR GROUP — the reference's incremental
     * cube generation writes its native format slice-by-slice (gen append
     * mode over `dsio.py`'s to_zarr append). Each micro-batch's new `tCol`
-    * labels become appended dim-0 slices: the first batch creates the
-    * group ([[graft.sources.ZarrSource.writeCube]]), every later batch
-    * extends it in place ([[graft.sources.ZarrSource.appendCube]] — shape
-    * patched, only new chunks written). Micro-batches are sequential, so
-    * the append ordering is exactly arrival order; the distributed
-    * chunk-assembly shuffle happens inside the batch, per slice.
+    * labels become appended dim-0 slices in ascending order: the first
+    * batch creates the group ([[graft.sources.ZarrSource.writeCube]]),
+    * every later batch extends it in place
+    * ([[graft.sources.ZarrSource.appendCube]] — shape patched, only new
+    * chunks written). Micro-batches are sequential, so the append ordering
+    * is exactly arrival order; the distributed chunk-assembly shuffle
+    * happens inside the batch, per slice.
+    *
+    * A micro-batch is one labels job (a distinct per partition, no
+    * shuffle; a batch without labels is skipped) plus one write. Each run
+    * clones the session: under [[graft.GraftSession.builder]] the clone
+    * reuses the root's compiled code, while a session built outside it
+    * (artifact isolation on) pays a full code-generation pass on every
+    * run. The checkpoint is the group's hidden sibling (`a/cube.zarr` →
+    * `a/_cube.zarr_checkpoint`): outside the group, so its array listing
+    * never sees it, and per group, so groups sharing a parent directory
+    * stream independently.
     */
   def streamZarrAppend(spark: SparkSession, schema: StructType, srcDir: String,
                        groupDir: String, varName: String, tCol: String,
                        spatialDims: Seq[(String, Array[Double])],
                        chunks: Seq[Int],
                        codec: graft.sources.ZarrSource.Codec =
-                         graft.sources.ZarrSource.Zlib()): StreamingQuery =
+                         graft.sources.ZarrSource.Zlib()): StreamingQuery = {
+    val group = new org.apache.hadoop.fs.Path(groupDir)
     spark.readStream.schema(schema)
       .option("recursiveFileLookup", "true").parquet(srcDir)
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val labels = batch.select(col(tCol).cast("double")).distinct()
-            .orderBy(tCol).collect().map(_.getDouble(0))
+        val labels = batch.select(col(tCol).cast("double"))
+          .as(Encoders.scalaDouble).mapPartitions(_.distinct)(Encoders.scalaDouble)
+          .collect().distinct.sorted(Ordering.Double.TotalOrdering)
+        if (labels.nonEmpty) {
           if (!graft.sources.ByteStore.current.exists(s"$groupDir/.zgroup"))
             graft.sources.ZarrSource.writeCube(batch, groupDir, varName,
               (tCol -> labels) +: spatialDims, chunks, codec)
@@ -142,6 +155,8 @@ object TimeSliceOps {
         }
       }
       .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$groupDir/../_zarr_checkpoint")
+      .option("checkpointLocation", new org.apache.hadoop.fs.Path(
+        group.getParent, s"_${group.getName}_checkpoint").toString)
       .start()
+  }
 }

@@ -15,8 +15,9 @@ import org.apache.spark.sql.classic
   * aggregate still planned as `AdaptiveSparkPlan`. So instead each root
   * session gets ONE lazily-created clone ("quiet twin") carrying the
   * overrides; plans are rerooted onto it via their analyzed plan. The
-  * clone shares the SparkContext and (at clone time) catalog/temp
-  * views, its conf is never mutated after creation, and the root
+  * clone shares the SparkContext, (at clone time) catalog/temp views
+  * and, under [[graft.GraftSession.builder]], the root's compiled
+  * generated code; its conf is never mutated after creation, and the root
   * session's conf is never touched — concurrent queries on the root
   * keep AQE, concurrent quiet folds race on nothing.
   */

@@ -1,9 +1,12 @@
 package graft
 
 import graft.cube.{Cube, GridMapping}
-import graft.sources.CubeWriter
+import graft.sources.{ByteStore, CubeWriter, ZarrSource}
 import graft.streaming.TimeSliceOps
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.graftbridge.BusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -111,6 +114,106 @@ class StorageStreamingSpec extends AnyFunSuite {
     runOnePass()
     val second = spark.read.parquet(dest)
     assert(second.count() == 100 && second.agg(sum("v")).head().getDouble(0) == 500.0)
+  }
+
+  // ---- streamZarrAppend: a 3 × 4 (y, x) slice per time label, one chunk
+  // per slice, values exact in binary (t·100 + y·10 + x)
+  private val zy = Array(0.0, 1.0, 2.0)
+  private val zx = Array(0.0, 1.0, 2.0, 3.0)
+  private def zvals(t: Double): Seq[Double] =
+    for (yi <- zy.toSeq; xi <- zx.toSeq) yield t * 100 + yi * 10 + xi
+  private def zslice(t: Double): DataFrame = {
+    import spark.implicits._
+    zvals(t).zipWithIndex.map { case (v, c) => (t, zy(c / zx.length), zx(c % zx.length), v) }
+      .toDF("t", "y", "x", "v")
+  }
+  private def putSlice(dir: String, t: Double): Unit =
+    zslice(t).coalesce(1).write.parquet(s"$dir/slice_$t")
+  private def startZarr(src: String, group: String): StreamingQuery =
+    TimeSliceOps.streamZarrAppend(spark, zslice(0.0).schema, src, group, "v",
+      "t", Seq("y" -> zy, "x" -> zx), chunks = Seq(1, 3, 4))
+  private def awaitZarr(q: StreamingQuery): Unit = {
+    q.awaitTermination()
+    q.exception.foreach(e => throw e)
+  }
+  /** (dim-0 coordinates, every cell of `v` in C order) of a group. */
+  private def zarrContents(group: String): (Seq[Double], Seq[Double]) = {
+    def all(name: String) =
+      ZarrSource.readAll(s"$group/$name", ZarrSource.openArray(s"$group/$name")).toSeq
+    (all("t"), all("v"))
+  }
+
+  test("streamZarrAppend: one micro-batch of two files appends both slices in time order") {
+    val src = tmpDir("zsrc")
+    val group = s"${tmpDir("zgrp")}/cube.zarr"
+    putSlice(src, 1.0)
+    awaitZarr(startZarr(src, group))
+    putSlice(src, 5.0)
+    putSlice(src, 3.0)
+    val q = startZarr(src, group)
+    awaitZarr(q)
+    assert(q.recentProgress.count(_.numInputRows > 0) == 1) // one micro-batch
+    assert(zarrContents(group) == ((Seq(1.0, 3.0, 5.0),
+      zvals(1.0) ++ zvals(3.0) ++ zvals(5.0))))
+  }
+
+  test("streamZarrAppend: a zero-row slice file creates no group and does not fail") {
+    val src = tmpDir("zsrc")
+    val group = s"${tmpDir("zgrp")}/cube.zarr"
+    zslice(0.0).limit(0).coalesce(1).write.parquet(s"$src/empty")
+    awaitZarr(startZarr(src, group))
+    assert(!ByteStore.current.exists(s"$group/.zgroup"))
+    putSlice(src, 2.0)
+    awaitZarr(startZarr(src, group))
+    assert(zarrContents(group) == ((Seq(2.0), zvals(2.0))))
+  }
+
+  test("streamZarrAppend: an append micro-batch is one labels job plus the write") {
+    val src = tmpDir("zsrc")
+    val group = s"${tmpDir("zgrp")}/cube.zarr"
+    putSlice(src, 0.0)
+    awaitZarr(startZarr(src, group))
+    putSlice(src, 1.0)
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        groups.add(String.valueOf(j.properties.getProperty("spark.jobGroup.id")))
+        ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val q = try {
+      val q = startZarr(src, group)
+      awaitZarr(q)
+      BusDrain.drain(spark.sparkContext)
+      q
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // the labels job, then the write: one collect job per broadcast
+    // (t, y, x) → index lookup, the chunk shuffle and the chunk-write stage
+    val jobs = groups.toArray.count(_ == q.runId.toString)
+    assert(jobs == 6, s"$jobs jobs in the append micro-batch")
+    assert(zarrContents(group) == ((Seq(0.0, 1.0), zvals(0.0) ++ zvals(1.0))))
+  }
+
+  test("streamZarrAppend: groups in one directory keep their own checkpoints") {
+    val dir = tmpDir("zgrps")
+    val (srcA, srcB) = (tmpDir("zsrcA"), tmpDir("zsrcB"))
+    val (a, b) = (s"$dir/a.zarr", s"$dir/b.zarr")
+    putSlice(srcA, 0.0)
+    putSlice(srcB, 10.0)
+    awaitZarr(startZarr(srcA, a))
+    awaitZarr(startZarr(srcB, b))
+    // both at once: a shared checkpoint would give both streams one query
+    // id, so the second start would stop the first
+    putSlice(srcA, 1.0)
+    putSlice(srcB, 11.0)
+    val (qa, qb) = (startZarr(srcA, a), startZarr(srcB, b))
+    awaitZarr(qa)
+    awaitZarr(qb)
+    assert(qa.id != qb.id, "the two groups' streams share one checkpoint")
+    assert(zarrContents(a) == ((Seq(0.0, 1.0), zvals(0.0) ++ zvals(1.0))))
+    assert(zarrContents(b) == ((Seq(10.0, 11.0), zvals(10.0) ++ zvals(11.0))))
+    assert(ZarrSource.listArrays(a).sorted == Seq("t", "v", "x", "y"))
   }
 
   test("flatMapGroupsWithState: state persists across batches, last is by event time") {
