@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.nio.{ByteBuffer, ByteOrder}
 import scala.jdk.CollectionConverters._
+import graft.sources.zarr.ChunkStats
 
 /** Zarr v2 chunked-array source/sink — the reference's NATIVE cube format
   * (xcube stores cubes as Zarr groups: dsio.py:411-533 writes via to_zarr,
@@ -630,7 +631,7 @@ object ZarrSource {
   def truncateDim0(groupDir: String, newLen: Int): Unit = {
     val bs = ByteStore.current
     // shape change self-invalidates the ANALYZE sidecar; drop it anyway
-    graft.sources.zarr.ChunkStats.invalidate(groupDir)
+    ChunkStats.invalidate(groupDir)
     val names = listArrays(groupDir)
     val metas = names.map(n => n -> openArray(s"$groupDir/$n")).toMap
     val lead = metas.values.maxBy(_.shape.length)
@@ -867,36 +868,13 @@ object ZarrSource {
     }
   }
 
-  /** The shared write-side layout step (v2 [[writeCube]]/[[appendCube]] and
-    * [[ZarrV3Source.writeCube]]): broadcast-join each dim's (value → index)
-    * lookup, then compute (row-major chunk id over `grid`, in-chunk offset)
-    * with integer arithmetic. One shuffle by `__cid` downstream is the only
-    * data movement.
+  /** The shared write-side layout step ([[writeCubeVars]], [[appendCube]]
+    * and [[ZarrV3Source.writeCube]]): broadcast-join each dim's (value →
+    * index) lookup, then compute (row-major chunk id over `grid`, in-chunk
+    * offset) with integer arithmetic. The per-row payload is the array of
+    * all variable values, so one shuffle by `__cid` downstream moves each
+    * input row exactly once.
     */
-  private[sources] def cellsByChunk(df: DataFrame, dimNames: Seq[String],
-                                    lookups: Seq[Seq[(Double, Int)]],
-                                    grid: Seq[Int], chunks: Seq[Int],
-                                    varName: String): org.apache.spark.sql.Dataset[(Long, Int, Double)] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val withIdx = dimNames.zipWithIndex.foldLeft(df) { case (acc, (name, k)) =>
-      val lookup = lookups(k).toDF(s"__v$k", s"__i$k")
-      acc.join(broadcast(lookup), col(name) === col(s"__v$k"))
-    }
-    val cid = dimNames.indices.foldLeft(lit(0L)) { (acc, k) =>
-      acc * grid(k) + floor(col(s"__i$k") / chunks(k)).cast("long")
-    }
-    val off = dimNames.indices.foldLeft(lit(0L)) { (acc, k) =>
-      acc * chunks(k) + (col(s"__i$k") % chunks(k))
-    }
-    withIdx.select(cid.as("__cid"), off.cast("int").as("__off"),
-        col(varName).as("__v"))
-      .as[(Long, Int, Double)]
-  }
-
-  /** [[cellsByChunk]] for N variables: the per-row payload is the array of
-    * all variable values, so the multi-variable writer still shuffles each
-    * input row exactly once. */
   private[sources] def cellsByChunkVars(df: DataFrame, dimNames: Seq[String],
                                         lookups: Seq[Seq[(Double, Int)]],
                                         grid: Seq[Int], chunks: Seq[Int],
@@ -951,12 +929,16 @@ object ZarrSource {
     * chunk key and writes N chunk objects — an N-variable cube is one pass
     * over the rows, not N single-variable writes re-shuffling the same
     * input N times.
+    *
+    * `stats = true` folds the chunk-statistics sidecar
+    * ([[graft.sources.zarr.ChunkStats]]) out of the write tasks, so the
+    * cube needs no ANALYZE; `statsInlineBudget` is the row budget of its
+    * inline form.
     */
   def writeCubeVars(df: DataFrame, groupDir: String, varNames: Seq[String],
                     dims: Seq[(String, Array[Double])], chunks: Seq[Int],
                     codec: Codec = Zlib(), stats: Boolean = false,
-                    statsInlineBudget: Long =
-                      graft.sources.zarr.ChunkStats.MaxInlineStatRows)
+                    statsInlineBudget: Long = ChunkStats.MaxInlineStatRows)
       : Unit = {
     val spark = df.sparkSession
     import spark.implicits._
@@ -968,7 +950,7 @@ object ZarrSource {
     val bs = ByteStore.current
     // overwriting chunk objects of an existing identical grid is the one
     // mutation a stale ANALYZE sidecar would survive shape-checking
-    graft.sources.zarr.ChunkStats.invalidate(groupDir)
+    ChunkStats.invalidate(groupDir)
     bs.mkdirs(groupDir)
     writeJson(s"$groupDir/.zgroup", """{"zarr_format": 2}""")
     writeJson(s"$groupDir/.zattrs", "{}")
@@ -1030,137 +1012,33 @@ object ZarrSource {
     val chunkElems = chunks.product
     val sep = "." // spec default separator; matches openArray's default
     val nVars = varNames.length
-    val vNames = varNames.toArray
     val taskBs = bs // captured VALUE — the write runs inside chunk tasks
     val computeStats = stats
-    // LARGE plain chunks also fold per-STRIP block rows under the same
-    // virtual grid ANALYZE would pick, so the cube is born with
-    // sub-chunk zone maps (decode-skip on selective value reads) too
-    val vGrid: Option[Seq[Int]] =
-      if (stats) graft.sources.zarr.ChunkStats.virtualGrid(chunks) else None
-    val stripElems = vGrid.map(_.product).getOrElse(0)
-    val nStrips = if (stripElems > 0) chunkElems / stripElems else 0
-    // geometry-only array view for the in-bounds cell walk of the
-    // write-time stats fold (same C order as the scan-engine cursor, so
-    // the sidecar's sums are bit-identical to an ANALYZE pass)
-    val zaW = ZarrArray(shape, chunks, "<f8", Double.NaN, Raw,
+    val za = ZarrArray(shape, chunks, "<f8", Double.NaN, codec,
       dims.map(_._1), sep)
+    val grids = Seq.fill(nVars)(ChunkStats.blockGrid(za, v3 = false))
     val written = cells.groupByKey(_._1).flatMapGroups { (cidV, it) =>
       val data = Array.fill(nVars)(Array.fill(chunkElems)(Double.NaN))
-      var n = 0
       it.foreach { case (_, o, vs) =>
         var v = 0
         while (v < nVars) { data(v)(o) = vs(v); v += 1 }
-        n += 1
       }
       val keyIdx = chunkKeyOf(cidV, grid)
       val key = keyIdx.mkString(sep)
       var v = 0
       while (v < nVars) {
-        taskBs.write(s"$groupDir/${vNames(v)}/$key", encodeChunk(data(v), codec))
+        taskBs.write(s"$groupDir/${varNames(v)}/$key", encodeChunk(data(v), codec))
         v += 1
       }
-      // stats ride out of the write tasks for free: per var
-      // [cells, nan, min, max, sum, sumsq] over the in-bounds cells,
-      // folded in the reader's exact cell order (counts exact as doubles)
-      if (!computeStats) Iterator.single((key, Seq.empty[Double]))
-      else {
-        val out = new Array[Double](nVars * 6)
-        // per (var, strip) moments for the virtual grid (strips are
-        // contiguous flat ranges: ord = off / stripElems)
-        val strips =
-          if (nStrips == 0) null
-          else Array.fill(nVars * nStrips)(
-            Array(0.0, 0.0, Double.NaN, Double.NaN, 0.0, 0.0))
-        var w = 0
-        while (w < nVars) {
-          out(w * 6 + 2) = Double.NaN; out(w * 6 + 3) = Double.NaN
-          w += 1
-        }
-        foreachCell(zaW, keyIdx.map(_.toInt).toSeq) { (off, _) =>
-          var u = 0
-          while (u < nVars) {
-            val x = data(u)(off)
-            out(u * 6) += 1.0
-            if (x.isNaN) out(u * 6 + 1) += 1.0
-            else {
-              if (out(u * 6) - out(u * 6 + 1) == 1.0 ||
-                java.lang.Double.compare(x, out(u * 6 + 2)) < 0)
-                out(u * 6 + 2) = x
-              if (out(u * 6) - out(u * 6 + 1) == 1.0 ||
-                java.lang.Double.compare(x, out(u * 6 + 3)) > 0)
-                out(u * 6 + 3) = x
-              out(u * 6 + 4) += x
-              out(u * 6 + 5) += x * x
-            }
-            if (strips != null) {
-              val m = strips(u * nStrips + off / stripElems)
-              m(0) += 1.0
-              if (x.isNaN) m(1) += 1.0
-              else {
-                if (m(0) - m(1) == 1.0 ||
-                  java.lang.Double.compare(x, m(2)) < 0) m(2) = x
-                if (m(0) - m(1) == 1.0 ||
-                  java.lang.Double.compare(x, m(3)) > 0) m(3) = x
-                m(4) += x
-                m(5) += x * x
-              }
-            }
-            u += 1
-          }
-        }
-        val blockRows =
-          if (strips == null) Iterator.empty
-          // the cell walk visits every var at every cell, so a strip's
-          // cell count is var-independent: var 0's decides population
-          else (0 until nStrips).iterator
-            .filter(ord => strips(ord)(0) > 0.0)
-            .map { ord =>
-              val flat = new Array[Double](nVars * 6)
-              var u = 0
-              while (u < nVars) {
-                System.arraycopy(strips(u * nStrips + ord), 0, flat, u * 6, 6)
-                u += 1
-              }
-              (s"$key#$ord", flat.toSeq)
-            }
-        Iterator.single((key, out.toSeq)) ++ blockRows
-      }
+      if (!computeStats) Iterator.empty
+      else ChunkStats.chunkRows(za, keyIdx.map(_.toInt).toSeq, varNames,
+        grids, data).iterator
     }
-    // the action runs the job (the writes are its side effect, same
-    // pattern as foreachBatch sinks); safe on an empty input. Without
-    // stats it drains the write stage and runs nothing after it. With
-    // stats requested the O(chunks × vars) moment rows come back and
-    // become the sidecar — a freshly-written cube needs no ANALYZE.
-    // Past the inline budget (huge grids × strip rows) nothing
-    // chunk-count-sized may land on the driver: the rows flow straight
-    // from the write tasks into the DISTRIBUTED parquet side table and
-    // only the small discovery document is written here.
-    if (computeStats) {
-      val grids =
-        vGrid.map(g => varNames.map(_ -> g).toMap).getOrElse(Map.empty)
-      val bound = grid.map(_.toLong).product * nVars * (1L + nStrips)
-      if (bound <= statsInlineBudget)
-        graft.sources.zarr.ChunkStats.writeInline(groupDir, shape, chunks,
-          varNames, written.collect().toSeq, grids)
-      else {
-        val vNamesB = vNames
-        written.flatMap { case (key, flat) =>
-          vNamesB.indices.map { i =>
-            (vNamesB(i), key, flat(i * 6).toLong, flat(i * 6 + 1).toLong,
-              java.lang.Double.doubleToRawLongBits(flat(i * 6 + 2)),
-              java.lang.Double.doubleToRawLongBits(flat(i * 6 + 3)),
-              java.lang.Double.doubleToRawLongBits(flat(i * 6 + 4)),
-              java.lang.Double.doubleToRawLongBits(flat(i * 6 + 5)))
-          }
-        }.toDF("var", "key", "cells", "nan", "minBits", "maxBits",
-            "sumBits", "sumsqBits")
-          .write.mode("overwrite")
-          .parquet(s"$groupDir/${graft.sources.zarr.ChunkStats.ParquetName}")
-        graft.sources.zarr.ChunkStats.writeParquetDoc(groupDir, shape,
-          chunks, grids)
-      }
-    } else written.foreach((_: (String, Seq[Double])) => ())
+    // the action runs the job; the writes are its side effect
+    if (computeStats)
+      ChunkStats.writeSidecar(groupDir, groupDir, varNames.map(_ -> za),
+        v3 = false, written, budget = statsInlineBudget)
+    else written.foreach((_: ChunkStats.StatRow) => ())
   }
 
   /** Append slices along dimension 0 (time, in the reference's cubes) to an
@@ -1178,7 +1056,9 @@ object ZarrSource {
     * `df` holds the new cells: a column per dimension (dim 0 drawn from
     * `newCoord`, the rest from the store's existing coordinate arrays) plus
     * `varName`. `newCoord` values must not already be in the store's dim-0
-    * coordinates.
+    * coordinates. An inline chunk-statistics sidecar
+    * ([[graft.sources.zarr.ChunkStats]]) of this variable alone stays
+    * valid: the append folds the chunks it writes into it.
     */
   def appendCube(df: DataFrame, groupDir: String, varName: String,
                  newCoord: Array[Double]): Unit = {
@@ -1187,20 +1067,18 @@ object ZarrSource {
     val arrayDir = s"$groupDir/$varName"
     val za = openArray(arrayDir)
     // INCREMENTAL sidecar maintenance: when the store is analyzed
-    // (inline doc, this variable only), the append folds the moments of
-    // exactly the chunks it writes — new dim-0 rows plus at most one
-    // merged boundary chunk — and splices them into the carried doc, so
-    // an appended cube STAYS analyzed without an O(all chunks) re-pass.
-    // Loaded BEFORE the invalidate below (which bumps the generation).
-    val carried: Option[graft.sources.zarr.ChunkStats.EagerStats] =
-      graft.sources.zarr.ChunkStats
-        .load(ByteStore.current, groupDir, za, groupDir) match {
-        case Some(e: graft.sources.zarr.ChunkStats.EagerStats)
+    // (inline doc, this variable only), the append folds exactly the
+    // chunks it writes and carries the other rows over, so an appended
+    // cube STAYS analyzed without an O(all chunks) re-pass. Loaded BEFORE
+    // the invalidate below (which bumps the generation).
+    val carried: Option[ChunkStats.EagerStats] =
+      ChunkStats.load(ByteStore.current, groupDir, za, groupDir) match {
+        case Some(e: ChunkStats.EagerStats)
             if e.vars.keySet == Set(varName) => Some(e)
         case _ => None
       }
     // shape change self-invalidates the ANALYZE sidecar; drop it anyway
-    graft.sources.zarr.ChunkStats.invalidate(groupDir)
+    ChunkStats.invalidate(groupDir)
     require(za.dtype == "<f8", s"appendCube supports <f8 stores, got ${za.dtype}")
     val dim0 = za.dims.head
     val oldLen = za.shape.head
@@ -1219,33 +1097,26 @@ object ZarrSource {
     val lookups = (newCoord.zipWithIndex.map { case (v, i) => (v, oldLen + i) }.toSeq
       +: otherCoords.map(_.zipWithIndex.toSeq))
     val grid = shape.zip(chunks).map { case (s0, c) => (s0 + c - 1) / c }
-    val cells = cellsByChunk(df, za.dims, lookups, grid, chunks, varName)
+    val cells = cellsByChunkVars(df, za.dims, lookups, grid, chunks, Seq(varName))
 
     val chunkElems = chunks.product
     val codec = za.codec
     val sep = za.separator
     val zaForDecode = za // closure-captured; decode needs dtype/codec/chunks only
     val taskBs = ByteStore.current // captured VALUE — runs inside chunk tasks
-    // strip grid of the carried sidecar's block rows, if any — the
-    // appended chunks fold the same sub-chunk rows the writer/ANALYZE
-    // convention produces
-    val stripGrid: Option[Seq[Int]] = carried.flatMap(_.grids.get(varName))
-    val stripElems = stripGrid.map(_.product).getOrElse(0)
-    val nStrips = if (stripElems > 0) chunkElems / stripElems else 0
     val foldStats = carried.isDefined
-    val zaW = ZarrArray(shape, chunks, "<f8", Double.NaN, Raw, za.dims, sep)
+    val zaGrown = za.copy(shape = shape) // the fold's in-bounds cells
+    val grids = Seq(ChunkStats.blockGrid(za, v3 = false))
     val written = cells.groupByKey(_._1).flatMapGroups { (cidV, it) =>
       val keyIdx = chunkKeyOf(cidV, grid)
-      val key = keyIdx.mkString(sep)
-      val path = s"$arrayDir/$key"
+      val path = s"$arrayDir/${keyIdx.mkString(sep)}"
       // boundary chunk: merge over what is already on disk (only possible
       // when oldLen % chunks(0) != 0 — at most one dim-0 chunk row)
       val data = taskBs.readIfExists(path) match {
         case Some(raw0) => decodeChunk(raw0, zaForDecode)
         case None => Array.fill(chunkElems)(Double.NaN)
       }
-      var n = 0
-      it.foreach { case (_, o, v) => data(o) = v; n += 1 }
+      it.foreach { case (_, o, vs) => data(o) = vs.head }
       // packed store: `data` holds PHYSICAL values (decodeChunk applied
       // mask-and-scale, and the incoming DataFrame is physical by contract)
       // — invert the packing before writing so the .zattrs scale/offset are
@@ -1254,41 +1125,20 @@ object ZarrSource {
         if (zaForDecode.cfActive) data.map(zaForDecode.cfEncode) else data
       taskBs.write(path, encodeChunk(raw, codec))
       if (!foldStats) Iterator.empty
-      else {
-        // fold the WHOLE merged chunk (same in-bounds walk as the
-        // write-time/ANALYZE folds, new shape for the edge bounds)
-        val m = Array(0.0, 0.0, Double.NaN, Double.NaN, 0.0, 0.0)
-        val strips =
-          if (nStrips == 0) null
-          else Array.fill(nStrips)(
-            Array(0.0, 0.0, Double.NaN, Double.NaN, 0.0, 0.0))
-        def fold6(a: Array[Double], x: Double): Unit = {
-          a(0) += 1.0
-          if (x.isNaN) a(1) += 1.0
-          else {
-            if (a(0) - a(1) == 1.0 ||
-              java.lang.Double.compare(x, a(2)) < 0) a(2) = x
-            if (a(0) - a(1) == 1.0 ||
-              java.lang.Double.compare(x, a(3)) > 0) a(3) = x
-            a(4) += x
-            a(5) += x * x
-          }
-        }
-        foreachCell(zaW, keyIdx.map(_.toInt).toSeq) { (off, _) =>
-          val x = data(off)
-          fold6(m, x)
-          if (strips != null) fold6(strips(off / stripElems), x)
-        }
-        Iterator.single((key, m.toSeq)) ++ (
-          if (strips == null) Iterator.empty
-          else (0 until nStrips).iterator.filter(strips(_)(0) > 0.0)
-            .map(ord => (s"$key#$ord", strips(ord).toSeq)))
-      }
+      else ChunkStats.chunkRows(zaGrown, keyIdx.map(_.toInt).toSeq,
+        Seq(varName), grids, Array(data)).iterator
     }
-    // without a carried sidecar the tasks emit nothing: drain the write
-    // stage and run nothing after it
-    val newEntries = if (foldStats) written.collect().toSeq
-      else { written.foreach((_: (String, Seq[Double])) => ()); Seq.empty }
+    // the action runs the job; the writes are its side effect
+    carried match {
+      case Some(e) =>
+        val kept = e.vars(varName).toSeq.map { case (k, st) =>
+          ChunkStats.StatRow(varName, k, st)
+        }
+        ChunkStats.writeSidecar(groupDir, groupDir, Seq(varName -> zaGrown),
+          v3 = false, written,
+          carry = ChunkStats.rowsBefore(kept, oldLen / chunks.head))
+      case None => written.foreach((_: ChunkStats.StatRow) => ())
+    }
 
     // extend the dim-0 coordinate array (driver-sized, single chunk) and
     // the variable's shape; patch consolidated metadata in place
@@ -1308,23 +1158,6 @@ object ZarrSource {
       m.set(s"$dim0/.zarray", mapper.readTree(coordZarr))
       m.set(s"$varName/.zarray", mapper.readTree(varZarr))
       writeJson(s"$groupDir/.zmetadata", mapper.writeValueAsString(metaDoc))
-    }
-    // splice the append's folds into the carried sidecar: drop the
-    // rewritten chunks' rows (the boundary chunk and its block rows),
-    // keep the rest verbatim (raw-bit round-trip), stamp the new shape
-    // and the post-invalidate generation — the appended store is as
-    // analyzed as the one it grew from, at the cost of its own chunks
-    carried.foreach { old =>
-      val rewritten = newEntries.map(_._1.takeWhile(_ != '#')).toSet
-      val kept = old.vars(varName).toSeq.collect {
-        case (k, st) if !rewritten.contains(k.takeWhile(_ != '#')) =>
-          (k, Seq(st.cells.toDouble, st.nan.toDouble, st.min, st.max,
-            st.sum, st.sumsq))
-      }
-      graft.sources.zarr.ChunkStats.writeInline(groupDir, shape, chunks,
-        Seq(varName), kept ++ newEntries,
-        stripGrid.map(g => Map(varName -> g)).getOrElse(Map.empty))
-      ()
     }
   }
 }

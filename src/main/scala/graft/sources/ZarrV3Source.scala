@@ -5,6 +5,7 @@ import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.{ByteBuffer, ByteOrder}
 import scala.jdk.CollectionConverters._
+import graft.sources.zarr.ChunkStats
 
 /** Zarr v3 chunked-array source/sink (the public Zarr core spec v3 — the
   * format the reference is migrating toward: its pin is `zarr>=2.11,<3`
@@ -497,11 +498,10 @@ object ZarrV3Source {
     * chunks included) — simple, spec-valid, and the write amplification
     * is bounded by one shard.
     *
-    * `stats = true` folds the ANALYZE sidecar out of the write tasks for
-    * free (the same per-object moment fold as [[ZarrSource
-    * .writeCubeVars]], in the scan cursor's exact cell order) — v3 cubes
+    * `stats = true` folds the chunk-statistics sidecar
+    * ([[graft.sources.zarr.ChunkStats]]) out of the write tasks — v3 cubes
     * are born with their zone maps like v2 ones. For sharded arrays the
-    * stat row covers the SHARD (the scan engine's chunk unit).
+    * chunk row covers the SHARD (the scan engine's chunk unit).
     */
   def writeCube(df: DataFrame, groupDir: String, varName: String,
                 dims: Seq[(String, Array[Double])], chunks: Seq[Int],
@@ -516,7 +516,7 @@ object ZarrV3Source {
       s"shard shape $chunks must be divisible by inner chunk shape $shardInner"))
     // overwriting chunk objects of an existing identical grid is the one
     // mutation a stale ANALYZE sidecar would survive shape-checking
-    graft.sources.zarr.ChunkStats.invalidate(groupDir)
+    ChunkStats.invalidate(groupDir)
     val shape = dims.map(_._2.length)
 
     // ---- metadata: per-node zarr.json + inline consolidated metadata on
@@ -546,80 +546,33 @@ object ZarrV3Source {
 
     // ---- one shuffle by stored-object (chunk or shard) id
     val grid = shape.zip(chunks).map { case (s0, c) => (s0 + c - 1) / c }
-    val cells = ZarrSource.cellsByChunk(df, dims.map(_._1),
-      dims.map(_._2.zipWithIndex.toSeq), grid, chunks, varName)
+    val cells = ZarrSource.cellsByChunkVars(df, dims.map(_._1),
+      dims.map(_._2.zipWithIndex.toSeq), grid, chunks, Seq(varName))
     val chunkElems = chunks.product
     val arrayDir = s"$groupDir/$varName"
     val chain = if (steps.isEmpty) Raw else V3Chain(steps)
     val za = parseArrayJson(varDoc, arrayDir) // serializable parsed form
     val taskBs = ByteStore.current // captured VALUE — runs inside chunk tasks
     val computeStats = stats
-    // geometry-only view for the in-bounds cell walk of the write-time
-    // stats fold — same C order as the scan-engine cursor, so the
-    // sidecar's sums are bit-identical to an ANALYZE pass
-    val zaW = ZarrArray(shape, chunks, "<f8", Double.NaN, Raw,
-      dims.map(_._1), ".")
-    val written = cells.groupByKey(_._1).mapGroups { (cidV, it) =>
+    val grids = Seq(ChunkStats.blockGrid(za, v3 = true))
+    val written = cells.groupByKey(_._1).flatMapGroups { (cidV, it) =>
       val data = Array.fill(chunkElems)(Double.NaN)
-      it.foreach { case (_, o, v) => data(o) = v }
+      it.foreach { case (_, o, vs) => data(o) = vs.head }
       val key = ZarrSource.chunkKeyOf(cidV, grid)
       val payload = shardInner match {
         case None => ZarrSource.encodeChunk(data, chain)
         case Some(inner) => encodeShard(data, chunks, inner, chain)
       }
       taskBs.write(s"$arrayDir/${chunkKey(za, key.toSeq)}", payload)
-      val folds: Seq[(String, Seq[Double])] = if (!computeStats) Seq.empty else {
-        val ks = key.mkString(".")
-        // per-shard moments, plus per-INNER-chunk moments for sharded
-        // arrays — the sub-chunk zone maps decodeShardSelective prunes
-        // ranged reads with (block rows keyed "<key>#<innerOrdinal>")
-        val nBlocks = shardInner.map(inner =>
-          chunks.zip(inner).map { case (c, i) => c / i }.product).getOrElse(0)
-        val stride = chunks.scanRight(1)(_ * _).tail.toArray
-        val bStride = shardInner.map { inner =>
-          val g = chunks.zip(inner).map { case (c, i) => c / i }
-          g.scanRight(1)(_ * _).tail.toArray
-        }.getOrElse(Array.empty[Int])
-        def newMom() = Array(0.0, 0.0, Double.NaN, Double.NaN, 0.0, 0.0)
-        val shard = newMom()
-        val blocks = Array.fill(nBlocks)(newMom())
-        def fold(out: Array[Double], x: Double): Unit = {
-          out(0) += 1.0
-          if (x.isNaN) out(1) += 1.0
-          else {
-            if (out(0) - out(1) == 1.0 ||
-              java.lang.Double.compare(x, out(2)) < 0) out(2) = x
-            if (out(0) - out(1) == 1.0 ||
-              java.lang.Double.compare(x, out(3)) > 0) out(3) = x
-            out(4) += x
-            out(5) += x * x
-          }
-        }
-        ZarrSource.foreachCell(zaW, key.map(_.toInt).toSeq) { (off, _) =>
-          val x = data(off)
-          fold(shard, x)
-          if (nBlocks > 0) {
-            var ord = 0
-            var k = 0
-            while (k < stride.length) {
-              val idxK = (off / stride(k)) % chunks(k)
-              ord += (idxK / shardInner.get(k)) * bStride(k)
-              k += 1
-            }
-            fold(blocks(ord), x)
-          }
-        }
-        (ks, shard.toSeq) +: blocks.toSeq.zipWithIndex.collect {
-          case (m, ord) if m(0) > 0.0 => (s"$ks#$ord", m.toSeq)
-        }
-      }
-      folds
+      if (!computeStats) Iterator.empty
+      else ChunkStats.chunkRows(za, key.map(_.toInt).toSeq, Seq(varName),
+        grids, Array(data)).iterator
     }
+    // the action runs the job; the writes are its side effect
     if (computeStats)
-      graft.sources.zarr.ChunkStats.writeInline(groupDir, shape, chunks,
-        Seq(varName), written.collect().toSeq.flatten)
-    else written.count() // the action that runs the job; writes are its side effect
-    ()
+      ChunkStats.writeSidecar(groupDir, groupDir, Seq(varName -> za),
+        v3 = true, written)
+    else written.foreach((_: ChunkStats.StatRow) => ())
   }
 
   /** Encode one shard: split the shard-shaped array into inner chunks,

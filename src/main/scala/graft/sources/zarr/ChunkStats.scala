@@ -2,15 +2,10 @@ package graft.sources.zarr
 
 import graft.sources.ByteStore
 import graft.sources.ZarrSource.ZarrArray
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** Per-chunk value statistics for a cube group — the zone maps parquet
-  * row groups get for free, persisted as a sidecar beside the group: for
-  * every data variable and every chunk key, the moments `(cells,
-  * nanCount, min, max, sum, sumOfSquares)` over the chunk's in-bounds
-  * decoded cells (min/max/sum/sumsq over the non-NaN cells only — every
-  * Spark aggregate form over the cell values, plain, NaN-guarded, or
-  * squared, derives from these exactly).
+  * row groups get for free, persisted as a sidecar beside the group.
   *
   * Two scan-engine consumers:
   *
@@ -28,20 +23,46 @@ import org.apache.spark.sql.SparkSession
   *    global `compute_statistics` over an analyzed archive reads no
   *    chunk at all ([[ZarrVarAggScan]] stat rows).
   *
-  * The sidecar is computed by [[analyze]] — one distributed pass, one
-  * task per planned chunk pack, each chunk folded in THE SAME cell order
-  * the partial-aggregate reader uses, so a stat-row sum is bit-identical
-  * to the fold it replaces. Doubles are stored as raw IEEE-754 bits
-  * (JSON has no NaN/±Inf literals; bits round-trip exactly).
+  * ==The sidecar format==
+  * This object is the only code that knows it. Every producer — the
+  * writers [[graft.sources.ZarrSource.writeCubeVars]],
+  * [[graft.sources.ZarrSource.appendCube]] and
+  * [[graft.sources.ZarrV3Source.writeCube]], and [[analyze]] — folds each
+  * chunk with [[chunkRows]] and hands the rows to [[writeSidecar]].
   *
-  * Two storage forms behind one `_graft_stats.json` discovery document:
-  * the default inlines the moments in the document itself (driver-sized,
-  * right for groups up to ~10^5 chunks), while `format = "parquet"`
-  * writes them straight from the scan tasks to a DISTRIBUTED
-  * `_graft_stats.parquet` side table — nothing chunk-count-sized ever
-  * lands on the driver, and each query bulk-fetches only ITS candidate
-  * chunks' rows (broadcast-joined on chunk key, the archive-index
-  * pattern) — the form for 10^7-chunk archives.
+  *  - **Rows.** One [[StatRow]] per (data variable, chunk), keyed by the
+  *    chunk indices joined with `.` (`"2.0.1"`), plus one per (variable,
+  *    populated block of the variable's block grid), keyed
+  *    `"<chunk>#<ord>"` with `ord` the block's row-major ordinal in the
+  *    chunk's block grid.
+  *  - **Moments.** Each row holds `[cells, nan, min, max, sum, sumsq]`,
+  *    in this order, over the chunk's (block's) IN-BOUNDS cells folded in
+  *    C order ([[fold]]) — the partial-aggregate reader's cell order, so
+  *    a stat-row sum is bit-identical to the fold it replaces. min/max/
+  *    sum/sumsq cover the non-NaN cells ([[java.lang.Double.compare]]
+  *    ordering) and are NaN when every cell is NaN; every Spark aggregate
+  *    form over the cell values (plain, NaN-guarded, squared) derives
+  *    from these exactly.
+  *  - **Encoding.** The four doubles are stored as raw IEEE-754 bits
+  *    (JSON has no NaN/±Inf literals; bits round-trip exactly).
+  *  - **Block grid** ([[blockGrid]]). A sharded variable's blocks are its
+  *    shard's inner chunks; a LARGE plain-codec chunk of a v2 or refs
+  *    table gets a virtual strip grid ([[virtualGrid]]), which lets the
+  *    reader skip the element-wise decode of excluded strips; anything
+  *    else — v3 plain chunks included, which the reader never strip-skips
+  *    — has none.
+  *  - **Document.** `_graft_stats.json` holds `graft_stats_format` (1),
+  *    the grid's `shape` and `chunks`, the group's write `generation`
+  *    token when it has one, and `block_grids` (variable → virtual strip
+  *    shape; sharded grids derive from the codec). The rows are inlined
+  *    under `vars` (variable → key → the six numbers) while the group's
+  *    row bound ([[inlineRowBound]]) fits the inline budget
+  *    ([[MaxInlineStatRows]]); past it the tasks write them to the
+  *    DISTRIBUTED `_graft_stats.parquet` side table (columns `var, key,
+  *    cells, nan, minBits, maxBits, sumBits, sumsqBits`) and the document
+  *    says `"storage": "parquet"` — nothing chunk-count-sized lands on the
+  *    driver, and each query bulk-fetches only ITS candidate chunks' rows
+  *    (broadcast-joined on chunk key, the archive-index pattern).
   *
   * Staleness contract: the sidecar records the grid's shape + chunk
   * extents and is ignored on any mismatch, which self-invalidates every
@@ -59,21 +80,44 @@ object ChunkStats {
   val ParquetName = "_graft_stats.parquet"
   val GenFileName = "_graft_gen"
 
-  /** One variable's moments over one chunk's in-bounds cells. min/max/
-    * sum/sumsq cover the NON-NaN cells ([[java.lang.Double.compare]]
-    * ordering, sum in cell order); they are NaN when every cell is NaN. */
+  /** One variable's moments over one chunk or block (the format's
+    * moments, decoded). */
   final case class VarStat(cells: Long, nan: Long, min: Double, max: Double,
                            sum: Double, sumsq: Double) {
     def finite: Long = cells - nan
   }
 
+  /** One sidecar row as stored: variable `v`'s moments over chunk or
+    * block `key`, the doubles as raw bits. */
+  final case class StatRow(v: String, key: String, cells: Long, nan: Long,
+                           minBits: Long, maxBits: Long, sumBits: Long,
+                           sumsqBits: Long) {
+    def stat: VarStat = VarStat(cells, nan,
+      java.lang.Double.longBitsToDouble(minBits),
+      java.lang.Double.longBitsToDouble(maxBits),
+      java.lang.Double.longBitsToDouble(sumBits),
+      java.lang.Double.longBitsToDouble(sumsqBits))
+  }
+
+  object StatRow {
+    def apply(v: String, key: String, st: VarStat): StatRow =
+      StatRow(v, key, st.cells, st.nan,
+        java.lang.Double.doubleToRawLongBits(st.min),
+        java.lang.Double.doubleToRawLongBits(st.max),
+        java.lang.Double.doubleToRawLongBits(st.sum),
+        java.lang.Double.doubleToRawLongBits(st.sumsq))
+  }
+
+  /** The side table's column names, in [[StatRow]] field order. */
+  private val ParquetColumns =
+    Seq("var", "key", "cells", "nan", "minBits", "maxBits", "sumBits",
+      "sumsqBits")
+
   /** A loaded sidecar: bulk-resolve the moments of (variables × chunk
     * keys); pairs the sidecar has no row for are simply absent (the
-    * consumers treat absence as "must read the chunk"). `grids` records
-    * the VIRTUAL inner-block grid ANALYZE used per plain-codec variable
-    * (sharded variables derive theirs from the codec) — the planner
-    * needs it to enumerate block ordinals and the cursor to skip
-    * excluded blocks' decode. */
+    * consumers treat absence as "must read the chunk"). `grids` is the
+    * document's `block_grids` — the planner needs it to enumerate block
+    * ordinals and the cursor to skip excluded blocks' decode. */
   sealed trait Loaded {
     def bulk(vars: Seq[String], keys: Seq[String])
         : Map[(String, String), VarStat]
@@ -118,16 +162,13 @@ object ChunkStats {
       spark.read.parquet(path)
         .filter(col("var").isin(vs: _*))
         .join(broadcast(keys.distinct.toDF("k")), col("key") === col("k"))
-        .select("var", "key", "cells", "nan", "minBits", "maxBits",
-          "sumBits", "sumsqBits")
+        .select(ParquetColumns.map(col): _*)
         .collect()
         .map { r =>
-          (r.getString(0), r.getString(1)) -> VarStat(
-            r.getLong(2), r.getLong(3),
-            java.lang.Double.longBitsToDouble(r.getLong(4)),
-            java.lang.Double.longBitsToDouble(r.getLong(5)),
-            java.lang.Double.longBitsToDouble(r.getLong(6)),
-            java.lang.Double.longBitsToDouble(r.getLong(7)))
+          val row = StatRow(r.getString(0), r.getString(1), r.getLong(2),
+            r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6),
+            r.getLong(7))
+          (row.v, row.key) -> row.stat
         }.toMap
     }
   }
@@ -160,13 +201,8 @@ object ChunkStats {
         generationOf(store, groupDir)
       if (!okShape || !okGen) None
       else {
-        val grids = {
-          val b = Map.newBuilder[String, Seq[Int]]
-          val g = doc.path("block_grids")
-          g.fieldNames().forEachRemaining(v => b += v -> jsonInts(g.path(v)))
-          b.result()
-        }
-        loadBody(doc, dir, grids)
+        val g = doc.path("block_grids")
+        loadBody(doc, dir, jsonNames(g).map(v => v -> jsonInts(g.path(v))).toMap)
       }
     }
 
@@ -176,25 +212,35 @@ object ChunkStats {
       if (doc.path("storage").asText("inline") == "parquet")
         Some(ParquetStats(s"$dir/$ParquetName", grids))
       else {
-        val vars = scala.collection.mutable.LinkedHashMap
-          .empty[String, Map[String, VarStat]]
-        val vn = doc.path("vars")
-        vn.fieldNames().forEachRemaining { v =>
-          val m = scala.collection.mutable.LinkedHashMap.empty[String, VarStat]
-          val per = vn.path(v)
-          per.fieldNames().forEachRemaining { key =>
-            val a = per.path(key)
-            m(key) = VarStat(a.get(0).asLong(), a.get(1).asLong(),
-              java.lang.Double.longBitsToDouble(a.get(2).asLong()),
-              java.lang.Double.longBitsToDouble(a.get(3).asLong()),
-              java.lang.Double.longBitsToDouble(a.get(4).asLong()),
-              java.lang.Double.longBitsToDouble(a.get(5).asLong()))
-          }
-          vars(v) = m.toMap
-        }
-        Some(EagerStats(vars.toMap, grids))
+        val byVar = inlineRows(doc).groupBy(_.v)
+        val vars = jsonNames(doc.path("vars")).map { v =>
+          v -> byVar.getOrElse(v, Nil).map(r => r.key -> r.stat).toMap
+        }.toMap
+        Some(EagerStats(vars, grids))
       }
     }
+
+  private def jsonNames(n: com.fasterxml.jackson.databind.JsonNode)
+      : Seq[String] = {
+    val b = Seq.newBuilder[String]
+    n.fieldNames().forEachRemaining(b += _)
+    b.result()
+  }
+
+  /** The rows of an inline document's `vars`, in document order. */
+  private def inlineRows(doc: com.fasterxml.jackson.databind.JsonNode)
+      : Seq[StatRow] = {
+    val vn = doc.path("vars")
+    jsonNames(vn).flatMap { v =>
+      val per = vn.path(v)
+      jsonNames(per).map { key =>
+        val a = per.path(key)
+        StatRow(v, key, a.get(0).asLong(), a.get(1).asLong(),
+          a.get(2).asLong(), a.get(3).asLong(), a.get(4).asLong(),
+          a.get(5).asLong())
+      }
+    }
+  }
 
   private def jsonInts(n: com.fasterxml.jackson.databind.JsonNode): Seq[Int] = {
     val b = Seq.newBuilder[Int]
@@ -228,12 +274,11 @@ object ChunkStats {
       .toOption.flatten
 
   /** ANALYZE: compute the sidecar for an existing group in one
-    * distributed pass — one task per planned chunk pack, per-chunk
-    * moments folded inside the task in the partial-aggregate reader's
-    * cell order. `format = "json"` (default) collects the O(chunks ×
-    * vars) moment rows and inlines them in the discovery document;
-    * `format = "parquet"` writes them straight from the tasks to the
-    * distributed side table (nothing chunk-count-sized on the driver).
+    * distributed pass — one task per planned chunk pack, each chunk
+    * decoded and folded inside the task. `format = "json"` (default)
+    * inlines the rows in the discovery document and refuses loudly past
+    * `maxInlineRows`; `format = "parquet"` writes them straight from the
+    * tasks to the distributed side table.
     * Writes into `outDir` (default: the group itself; point it elsewhere
     * for read-only stores) and returns the document path. Re-running
     * replaces the sidecar. */
@@ -288,51 +333,36 @@ object ChunkStats {
       } &&
       Option(doc.get("generation")).map(_.asText) ==
         generationOf(bs, meta.groupDir) &&
-      doc.path("vars").isObject && {
-        // the carried rows must cover exactly this meta's variables
-        // (a vars-filtered analyze over a doc with more would orphan
-        // rows; fewer would leave silent gaps)
-        val docVars = scala.collection.mutable.Set.empty[String]
-        doc.path("vars").fieldNames().forEachRemaining(docVars += _)
-        docVars == meta.dataVars.toSet
-      }
+      doc.path("vars").isObject &&
+      // the carried rows must cover exactly this meta's variables (a
+      // vars-filtered analyze over a doc with more would orphan rows;
+      // fewer would leave silent gaps)
+      jsonNames(doc.path("vars")).toSet == meta.dataVars.toSet
     if (!ok) return false
-    val oldShape0 = jsonInts(doc.path("shape")).head
-    val c0 = oldShape0 / za.chunks.head // boundary chunk re-folds
-    // carry rows of strictly-before-the-cutoff chunks (block rows ride
-    // with their chunk); raw bits pass through untouched
-    val carry = Seq.newBuilder[(String, String, Long, Long, Long, Long,
-      Long, Long)]
-    val vn = doc.path("vars")
-    vn.fieldNames().forEachRemaining { v =>
-      val per = vn.path(v)
-      per.fieldNames().forEachRemaining { key =>
-        val chunkKey = key.takeWhile(_ != '#')
-        if (chunkKey.takeWhile(_ != '.').toInt < c0) {
-          val a = per.path(key)
-          carry += ((v, key, a.get(0).asLong(), a.get(1).asLong(),
-            a.get(2).asLong(), a.get(3).asLong(), a.get(4).asLong(),
-            a.get(5).asLong()))
-        }
-      }
-    }
+    val c0 = jsonInts(doc.path("shape")).head / za.chunks.head
     analyzeMeta(spark, meta, outDir, format,
-      keep = _.head >= c0, carry = carry.result())
+      keep = _.head >= c0, carry = rowsBefore(inlineRows(doc), c0))
     true
   }
+
+  /** The rows an append that rewrites dim-0 chunks from `c0` on leaves
+    * valid: those of chunks strictly before it (a half-full boundary
+    * chunk re-folds; block rows ride with their chunk). */
+  private[sources] def rowsBefore(rows: Seq[StatRow], c0: Int): Seq[StatRow] =
+    rows.filter(_.key.takeWhile(c => c != '.' && c != '#').toInt < c0)
 
   private[zarr] def analyzeMeta(spark: SparkSession, meta: ZarrGroupMeta,
                                 outDir: String,
                                 format: String = "json",
                                 keep: Seq[Int] => Boolean = _ => true,
-                                carry: Seq[(String, String, Long, Long,
-                                  Long, Long, Long, Long)] = Nil,
+                                carry: Seq[StatRow] = Nil,
                                 maxInlineRows: Long = MaxInlineStatRows)
       : String = {
     require(format == "json" || format == "parquet",
       s"stats format must be json or parquet, got $format")
+    val arrays = meta.dataVars.map(v => v -> meta.varMeta(v))
     if (format == "json") {
-      val bound = inlineRowBound(meta)
+      val bound = inlineRowBound(arrays.map(_._2), meta.v3)
       require(bound <= maxInlineRows,
         s"inline stats doc for ${meta.groupDir} would hold up to $bound " +
           s"rows (budget $maxInlineRows) — a driver-resident document " +
@@ -340,51 +370,15 @@ object ChunkStats {
           "format = \"parquet\" (the distributed side table plans " +
           "through a broadcast key join and prunes identically)")
     }
-    // read the group's write-generation token BEFORE the distributed
-    // stats pass runs (the pass executes at the write.parquet / collect
-    // below): a writer that invalidates and rewrites the group MID-scan
-    // bumps the token, so the sidecar — computed over torn data — is
-    // stamped with the pre-rewrite token and the staleness guard
-    // correctly rejects it on load
-    val genAtStart = generationOf(ByteStore.current, meta.groupDir)
     val required = ZarrTable.schemaFor(meta)
     val shared = ZarrScan.sharedState(meta, required, Array.empty, None)
     val parts = ZarrScan.plannedPartitions(meta, Array.empty, Array.empty,
       required, dim0Range = None)
-    val nd = meta.za.dims.length
-    val nv = meta.dataVars.length
-    val varNames = meta.dataVars.toIndexedSeq
-    // SHARDED variables also get per-INNER-chunk block rows (same layout
-    // as the write-time fold: key "<chunk>#<ord>"), so an ANALYZE of an
-    // existing sharded store enables sub-chunk selective reads exactly
-    // like a cube born with stats. LARGE plain-codec chunks — the
-    // whole-map NetCDF records of a kerchunk archive — get a VIRTUAL
-    // strip grid ([[virtualGrid]]): chunk-granular zone maps cannot
-    // prune inside them, but their block rows let the reader skip the
-    // element-wise decode of excluded strips (IO stays one ref). (inner
-    // shape, block-grid strides, block count) per var; None when no
-    // sub-chunk rows apply.
-    val gridOf: Map[String, Seq[Int]] = varNames.flatMap { v =>
-      meta.varMeta(v).codec match {
-        case _: graft.sources.ZarrSource.Shard => None
-        case _ => virtualGrid(meta.varMeta(v).chunks).map(v -> _)
-      }
-    }.toMap
-    val shardOf: IndexedSeq[Option[(Array[Int], Array[Int], Int)]] =
-      varNames.map { v =>
-        val innerOpt = meta.varMeta(v).codec match {
-          case sh: graft.sources.ZarrSource.Shard => Some(sh.inner)
-          case _ => gridOf.get(v)
-        }
-        innerOpt.map { inner =>
-          val grid = meta.varMeta(v).chunks.zip(inner)
-            .map { case (c, i) => c / i }
-          (inner.toArray, grid.scanRight(1)(_ * _).tail.toArray, grid.product)
-        }
-      }
-    // one row per (chunk, variable) plus one per populated (chunk,
-    // variable, inner block): (var, key, cells, nan, 4 bit-moments)
-    val keepF = keep // task-closure value
+    // task-closure values; the unfiltered cursor decodes each chunk's
+    // variables in meta.dataVars order
+    val (za, vars, keepF) = (meta.za, meta.dataVars, keep)
+    val grids = arrays.map { case (_, a) => blockGrid(a, meta.v3) }
+    import spark.implicits._
     val rows = spark.sparkContext
       .parallelize(parts.toSeq, math.max(1, parts.length))
       .flatMap { part =>
@@ -394,183 +388,155 @@ object ChunkStats {
           case other => throw new IllegalStateException(s"$other")
         }
         chunks.withFilter(cp => keepF(cp.key)).flatMap { cp =>
-          val cur = new ChunkCursor(shared, cp, None)
-          val cells = new Array[Long](nv)
-          val nan = new Array[Long](nv)
-          // [min, max, sum, sumsq] per var, NaN extremes until seen
-          val mom = Array.fill(nv)(Array(Double.NaN, Double.NaN, 0.0, 0.0))
-          val blocks: Array[Array[Array[Double]]] = shardOf.map {
-            case Some((_, _, nB)) =>
-              Array.fill(nB)(Array(0.0, 0.0, Double.NaN, Double.NaN,
-                0.0, 0.0))
-            case None => null
-          }.toArray
-          def fold6(m: Array[Double], x: Double): Unit = {
-            m(0) += 1.0
-            if (x.isNaN) m(1) += 1.0
-            else {
-              if (m(0) - m(1) == 1.0 ||
-                java.lang.Double.compare(x, m(2)) < 0) m(2) = x
-              if (m(0) - m(1) == 1.0 ||
-                java.lang.Double.compare(x, m(3)) > 0) m(3) = x
-              m(4) += x
-              m(5) += x * x
-            }
-          }
-          while (cur.advance()) {
-            var v = 0
-            while (v < nv) {
-              val x = cur.colValue(nd + v)
-              cells(v) += 1L
-              if (x.isNaN) nan(v) += 1L
-              else {
-                val m = mom(v)
-                if (cells(v) - nan(v) == 1L ||
-                  java.lang.Double.compare(x, m(0)) < 0) m(0) = x
-                if (cells(v) - nan(v) == 1L ||
-                  java.lang.Double.compare(x, m(1)) > 0) m(1) = x
-                m(2) += x
-                m(3) += x * x
-              }
-              if (blocks(v) != null) {
-                val (inner, bStride, _) = shardOf(v).get
-                val li = cur.localIdx
-                var ord = 0
-                var k = 0
-                while (k < nd) {
-                  ord += (li(k) / inner(k)) * bStride(k)
-                  k += 1
-                }
-                fold6(blocks(v)(ord), x)
-              }
-              v += 1
-            }
-          }
-          val key = cp.key.mkString(".")
-          val chunkRows = varNames.indices.map { i =>
-            (varNames(i), key, cells(i), nan(i),
-              java.lang.Double.doubleToRawLongBits(mom(i)(0)),
-              java.lang.Double.doubleToRawLongBits(mom(i)(1)),
-              java.lang.Double.doubleToRawLongBits(mom(i)(2)),
-              java.lang.Double.doubleToRawLongBits(mom(i)(3)))
-          }
-          val blockRows = varNames.indices.flatMap { i =>
-            if (blocks(i) == null) Nil
-            else blocks(i).toSeq.zipWithIndex.collect {
-              case (m, ord) if m(0) > 0.0 =>
-                (varNames(i), s"$key#$ord", m(0).toLong, m(1).toLong,
-                  java.lang.Double.doubleToRawLongBits(m(2)),
-                  java.lang.Double.doubleToRawLongBits(m(3)),
-                  java.lang.Double.doubleToRawLongBits(m(4)),
-                  java.lang.Double.doubleToRawLongBits(m(5)))
-            }
-          }
-          chunkRows ++ blockRows
+          chunkRows(za, cp.key, vars, grids,
+            new ChunkCursor(shared, cp, None).decoded.toArray)
         }
-      }
-    val root = mapper.createObjectNode()
-    root.put("graft_stats_format", 1)
-    val sh = root.putArray("shape"); meta.za.shape.foreach(sh.add)
-    val ch = root.putArray("chunks"); meta.za.chunks.foreach(ch.add)
-    // stamp the token read before the scan (see genAtStart above) so a
-    // redirected sidecar goes stale the moment a writer mutates the group
-    genAtStart.foreach(root.put("generation", _))
-    if (gridOf.nonEmpty) {
-      val bg = root.putObject("block_grids")
-      gridOf.foreach { case (v, inner) =>
-        val a = bg.putArray(v); inner.foreach(a.add)
+      }.toDS()
+    // json fits its budget (checked above); no bound fits -1
+    writeSidecar(meta.groupDir, outDir, arrays, meta.v3, rows, carry,
+      budget = if (format == "json") maxInlineRows else -1L)
+  }
+
+  /** The moment fold: add cell value `x` to the six slots
+    * `m(at until at + 6)` = `[cells, nan, min, max, sum, sumsq]` (counts
+    * exact as doubles; min/max start as NaN, see [[slots]]). */
+  private def fold(m: Array[Double], at: Int, x: Double): Unit = {
+    m(at) += 1.0
+    if (x.isNaN) m(at + 1) += 1.0
+    else {
+      val first = m(at) - m(at + 1) == 1.0
+      if (first || java.lang.Double.compare(x, m(at + 2)) < 0) m(at + 2) = x
+      if (first || java.lang.Double.compare(x, m(at + 3)) > 0) m(at + 3) = x
+      m(at + 4) += x
+      m(at + 5) += x * x
+    }
+  }
+
+  /** `n` empty moment slots for [[fold]]. */
+  private def slots(n: Int): Array[Double] = {
+    val m = new Array[Double](6 * n)
+    var i = 0
+    while (i < n) { m(6 * i + 2) = Double.NaN; m(6 * i + 3) = Double.NaN; i += 1 }
+    m
+  }
+
+  private def row(v: String, key: String, m: Array[Double], at: Int): StatRow =
+    StatRow(v, key, m(at).toLong, m(at + 1).toLong,
+      java.lang.Double.doubleToRawLongBits(m(at + 2)),
+      java.lang.Double.doubleToRawLongBits(m(at + 3)),
+      java.lang.Double.doubleToRawLongBits(m(at + 4)),
+      java.lang.Double.doubleToRawLongBits(m(at + 5)))
+
+  /** A variable's block grid (the inner block shape), the rule every
+    * producer and [[inlineRowBound]] follow: the shard's inner chunks,
+    * else virtual strips for a large plain chunk outside v3 (the reader
+    * strip-skips v2 and refs tables only), else none. */
+  private[sources] def blockGrid(za: ZarrArray,
+                                 v3: Boolean): Option[Seq[Int]] =
+    za.codec match {
+      case sh: graft.sources.ZarrSource.Shard => Some(sh.inner)
+      case _ if v3 => None
+      case _ => virtualGrid(za.chunks)
+    }
+
+  /** The stat rows of one assembled chunk: `data(i)` is variable
+    * `vars(i)`'s chunk-shaped buffer and `grids(i)` its [[blockGrid]];
+    * `za` gives the grid geometry whose in-bounds cells are folded. */
+  private[sources] def chunkRows(za: ZarrArray, key: Seq[Int],
+                                 vars: Seq[String],
+                                 grids: Seq[Option[Seq[Int]]],
+                                 data: Array[Array[Double]]): Seq[StatRow] = {
+    val nv = vars.length
+    val cStride = za.chunks.scanRight(1)(_ * _).tail
+    // per variable: its block count (0 without a grid) and, for each dim
+    // its grid splits, (chunk stride, chunk extent, block extent, block
+    // stride) — what maps a flat in-chunk offset to a block ordinal
+    val nBlocks = new Array[Int](nv)
+    val split = new Array[Array[Int]](nv)
+    grids.zipWithIndex.foreach { case (g, i) =>
+      g.foreach { inner =>
+        val bGrid = za.chunks.zip(inner).map { case (c, b) => c / b }
+        val bStride = bGrid.scanRight(1)(_ * _).tail
+        nBlocks(i) = bGrid.product
+        split(i) = bGrid.indices.filter(bGrid(_) > 1).flatMap(k =>
+          Seq(cStride(k), za.chunks(k), inner(k), bStride(k))).toArray
       }
     }
-    if (format == "parquet") {
-      require(carry.isEmpty, "carry rows are json-splice only")
-      root.put("storage", "parquet")
-      import spark.implicits._
-      rows.toDF("var", "key", "cells", "nan", "minBits", "maxBits",
-          "sumBits", "sumsqBits")
-        .write.mode("overwrite").parquet(s"$outDir/$ParquetName")
-    } else {
+    val m = slots(nv)
+    val bm = nBlocks.map(slots)
+    graft.sources.ZarrSource.foreachCell(za, key) { (off, _) =>
+      var i = 0
+      while (i < nv) {
+        val x = data(i)(off)
+        fold(m, 6 * i, x)
+        if (nBlocks(i) > 0) {
+          val s = split(i)
+          var ord = 0
+          var q = 0
+          while (q < s.length) {
+            ord += off / s(q) % s(q + 1) / s(q + 2) * s(q + 3)
+            q += 4
+          }
+          fold(bm(i), 6 * ord, x)
+        }
+        i += 1
+      }
+    }
+    val k = key.mkString(".")
+    vars.indices.flatMap { i =>
+      row(vars(i), k, m, 6 * i) +: (0 until nBlocks(i))
+        .filter(b => bm(i)(6 * b) > 0.0)
+        .map(b => row(vars(i), s"$k#$b", bm(i), 6 * b))
+    }
+  }
+
+  /** Write the sidecar of `arrays` (the group's data variables) into
+    * `outDir` from its stat rows: `carry` (rows kept from an earlier
+    * sidecar) and the lazy `rows`, whose job this runs. Inline while
+    * [[inlineRowBound]] fits `budget`, else the parquet side table.
+    * Returns the document path. */
+  private[graft] def writeSidecar(groupDir: String, outDir: String,
+                                  arrays: Seq[(String, ZarrArray)],
+                                  v3: Boolean,
+                                  rows: Dataset[StatRow],
+                                  carry: Seq[StatRow] = Nil,
+                                  budget: Long = MaxInlineStatRows): String = {
+    val bs = ByteStore.current
+    // the token is read BEFORE the rows' job runs: a writer that
+    // invalidates and rewrites the group mid-pass bumps it, so rows folded
+    // over torn data carry the older token and load rejects them
+    val generation = generationOf(bs, groupDir)
+    val za = arrays.head._2
+    val root = mapper.createObjectNode()
+    root.put("graft_stats_format", 1)
+    val sh = root.putArray("shape"); za.shape.foreach(sh.add)
+    val ch = root.putArray("chunks"); za.chunks.foreach(ch.add)
+    generation.foreach(root.put("generation", _))
+    val strips = arrays.flatMap { case (v, a) =>
+      if (a.codec.isInstanceOf[graft.sources.ZarrSource.Shard]) None
+      else blockGrid(a, v3).map(v -> _)
+    }
+    if (strips.nonEmpty) {
+      val bg = root.putObject("block_grids")
+      strips.foreach { case (v, g) => val a = bg.putArray(v); g.foreach(a.add) }
+    }
+    if (inlineRowBound(arrays.map(_._2), v3) <= budget) {
       val vn = root.putObject("vars")
-      val perVar = meta.dataVars.map(v => v -> vn.putObject(v)).toMap
-      (carry ++ rows.collect()).foreach {
-        case (v, key, cells, nan, mn, mx, s1, s2) =>
-          val a = perVar(v).putArray(key)
-          a.add(cells); a.add(nan); a.add(mn); a.add(mx); a.add(s1); a.add(s2)
-          ()
+      val perVar = arrays.map { case (v, _) => v -> vn.putObject(v) }.toMap
+      (carry ++ rows.collect()).foreach { r =>
+        val a = perVar(r.v).putArray(r.key)
+        a.add(r.cells); a.add(r.nan); a.add(r.minBits); a.add(r.maxBits)
+        a.add(r.sumBits); a.add(r.sumsqBits)
       }
+    } else {
+      root.put("storage", "parquet")
+      val spark = rows.sparkSession
+      import spark.implicits._
+      carry.toDS().union(rows).toDF(ParquetColumns: _*)
+        .write.mode("overwrite").parquet(s"$outDir/$ParquetName")
     }
     val path = s"$outDir/$FileName"
-    val bs = ByteStore.current
     bs.mkdirs(outDir)
-    bs.write(path, mapper.writeValueAsString(root)
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    path
-  }
-
-  /** Write the storage=parquet discovery document — the writer-side
-    * companion of [[writeInline]] for cubes whose stat rows exceed the
-    * inline budget: the rows land in `_graft_stats.parquet` straight
-    * from the write tasks and only this metadata-sized pointer document
-    * is driver-written. */
-  def writeParquetDoc(outDir: String, shape: Seq[Int], chunks: Seq[Int],
-                      blockGrids: Map[String, Seq[Int]] = Map.empty)
-      : String = {
-    val root = mapper.createObjectNode()
-    root.put("graft_stats_format", 1)
-    root.put("storage", "parquet")
-    val sh = root.putArray("shape"); shape.foreach(sh.add)
-    val ch = root.putArray("chunks"); chunks.foreach(ch.add)
-    generationOf(ByteStore.current, outDir)
-      .foreach(root.put("generation", _))
-    if (blockGrids.nonEmpty) {
-      val bg = root.putObject("block_grids")
-      blockGrids.foreach { case (v, inner) =>
-        val a = bg.putArray(v); inner.foreach(a.add)
-      }
-    }
-    val path = s"$outDir/$FileName"
-    ByteStore.current.write(path, mapper.writeValueAsString(root)
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    path
-  }
-
-  /** Write the inline-form discovery document from already-computed
-    * per-chunk moments — the writer-side path: [[graft.sources
-    * .ZarrSource.writeCubeVars]] folds each chunk's moments as it
-    * assembles the chunk buffer (same in-bounds cell order as the
-    * reader), so a freshly-written cube gets its sidecar for free,
-    * no ANALYZE pass needed. `entries` carry (chunk key, per-var
-    * [cells, nan, min, max, sum, sumsq] — counts exact as doubles). */
-  def writeInline(outDir: String, shape: Seq[Int], chunks: Seq[Int],
-                  varNames: Seq[String],
-                  entries: Seq[(String, Seq[Double])],
-                  blockGrids: Map[String, Seq[Int]] = Map.empty): String = {
-    val root = mapper.createObjectNode()
-    root.put("graft_stats_format", 1)
-    val sh = root.putArray("shape"); shape.foreach(sh.add)
-    val ch = root.putArray("chunks"); chunks.foreach(ch.add)
-    // group-local write: stamp the token the writer's invalidate just
-    // bumped, so the fresh sidecar is valid under the generation check
-    generationOf(ByteStore.current, outDir)
-      .foreach(root.put("generation", _))
-    if (blockGrids.nonEmpty) {
-      val bg = root.putObject("block_grids")
-      blockGrids.foreach { case (v, inner) =>
-        val a = bg.putArray(v); inner.foreach(a.add)
-      }
-    }
-    val vn = root.putObject("vars")
-    val perVar = varNames.map(v => vn.putObject(v))
-    entries.foreach { case (key, flat) =>
-      varNames.indices.foreach { i =>
-        val a = perVar(i).putArray(key)
-        a.add(flat(i * 6).toLong) // cells
-        a.add(flat(i * 6 + 1).toLong) // nan
-        (2 until 6).foreach(j =>
-          a.add(java.lang.Double.doubleToRawLongBits(flat(i * 6 + j))))
-      }
-    }
-    val path = s"$outDir/$FileName"
-    val bs = ByteStore.current
     bs.write(path, mapper.writeValueAsString(root)
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     path
@@ -587,25 +553,17 @@ object ChunkStats {
     * archive's stats on the driver. */
   val MaxInlineStatRows: Long = 1L << 20
 
-  /** Upper bound on the inline rows an ANALYZE of `meta` would emit:
-    * one per (variable, chunk) plus one per (variable, chunk, inner
-    * block) for sharded/strip-gridded variables. A bound, not a count —
-    * unpopulated blocks emit nothing — so the budget refusal is
-    * conservative and needs no data pass. */
-  private[zarr] def inlineRowBound(meta: ZarrGroupMeta): Long =
-    meta.dataVars.map { v =>
-      val za = meta.varMeta(v)
-      val nChunks = za.chunkGrid.map(_.toLong).product
-      val nBlocks: Long = za.codec match {
-        case sh: graft.sources.ZarrSource.Shard =>
-          za.chunks.zip(sh.inner).map { case (c, i) => (c / i).toLong }
-            .product
-        case _ => virtualGrid(za.chunks)
-          .map(g => za.chunks.zip(g).map { case (c, i) => (c / i).toLong }
-            .product)
-          .getOrElse(0L)
-      }
-      nChunks * (1L + nBlocks)
+  /** Upper bound on the rows a sidecar of `arrays` holds: one per
+    * (variable, chunk) plus one per (variable, chunk, block of its
+    * [[blockGrid]]). A bound, not a count — unpopulated blocks emit
+    * nothing — so the budget choice is conservative and needs no data
+    * pass. */
+  private[zarr] def inlineRowBound(arrays: Seq[ZarrArray],
+                                   v3: Boolean): Long =
+    arrays.map { za =>
+      val nBlocks = blockGrid(za, v3).map(g =>
+        za.chunks.zip(g).map { case (c, i) => (c / i).toLong }.product)
+      za.chunkGrid.map(_.toLong).product * (1L + nBlocks.getOrElse(0L))
     }.sum
 
   /** Chunks below this many cells keep chunk-granular stats only — a
@@ -616,8 +574,8 @@ object ChunkStats {
   /** Most strips a virtual grid splits a large chunk into. */
   val MaxVirtualStrips: Int = 64
 
-  /** The virtual inner-block grid ANALYZE uses for a LARGE plain-codec
-    * chunk: the slowest non-unit chunk dim splits into the most strips
+  /** The virtual inner-block grid of a LARGE plain-codec chunk: the
+    * slowest non-unit chunk dim splits into the most strips
     * (≤ [[MaxVirtualStrips]]) its extent divides evenly. Splitting only
     * that dim keeps every block a CONTIGUOUS flat range of the decoded
     * buffer — the property [[graft.sources.ZarrSource

@@ -455,7 +455,8 @@ object ZarrTable {
         // stat-row bound exceeds the inline budget auto-routes to the
         // side table rather than tripping the budget's loud refusal
         val fmt = if (KerchunkSource.manifestFormat(side) == "parquet" ||
-          ChunkStats.inlineRowBound(m) > ChunkStats.MaxInlineStatRows)
+          ChunkStats.inlineRowBound(m.dataVars.map(m.varMeta), m.v3) >
+            ChunkStats.MaxInlineStatRows)
           "parquet" else "json"
         // appended granules grow the concat shape: the refresh re-folds
         // ONLY the new granules' chunks and carries the rest verbatim —
@@ -1971,10 +1972,9 @@ private[zarr] final class ChunkCursor(shared: ZarrScan.SharedScanState,
     if (isVar) data(i)(flat) else coordSlices(i)(idx(i))
   }
 
-  /** The cursor's chunk-local per-dim indices (valid after a true
-    * [[advance]]; callers must not mutate) — lets ANALYZE compute
-    * sub-chunk block ordinals in the exact cell order of the fold. */
-  private[zarr] def localIdx: Array[Int] = idx
+  /** The chunk's decoded buffers, one per scanned variable (callers must
+    * not mutate) — ANALYZE folds them like a writer folds its own. */
+  private[zarr] def decoded: Seq[Array[Double]] = data
 }
 
 /** One coalesced multi-range fetch for every refs-backed chunk of a

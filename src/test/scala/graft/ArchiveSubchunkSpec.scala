@@ -87,7 +87,8 @@ class ArchiveSubchunkSpec extends AnyFunSuite {
   test("plain cubes are BORN with strip rows: write-time == ANALYZE, decode skip") {
     import spark.implicits._
     // one 1×256×512 chunk (131072 cells ≥ the virtual-grid threshold),
-    // v monotone in the row-major ordinal so strips have disjoint ranges
+    // v monotone in the row-major ordinal so strips have disjoint ranges;
+    // w holds NaNs — scattered, and filling every fifth strip whole
     val y = Array.tabulate(256)(_ + 0.5)
     val x = Array.tabulate(512)(_ + 0.5)
     def cube(dir: String, stats: Boolean): String = {
@@ -96,8 +97,10 @@ class ArchiveSubchunkSpec extends AnyFunSuite {
         lit(0.0).as("t"),
         (expr("id div 512").cast("double") + 0.5).as("y"),
         ((col("id") % 512L).cast("double") + 0.5).as("x"),
-        col("id").cast("double").as("v"))
-      ZarrSource.writeCubeVars(df, g, Seq("v"),
+        col("id").cast("double").as("v"),
+        when(col("id") % 3 === 0 || expr("id div 2048") % 5 === 0,
+          lit(Double.NaN)).otherwise(col("id") * -0.5).as("w"))
+      ZarrSource.writeCubeVars(df, g, Seq("v", "w"),
         Seq("t" -> Array(0.0), "y" -> y, "x" -> x),
         chunks = Seq(1, 256, 512), stats = stats)
       g

@@ -1,7 +1,7 @@
 package graft
 
-import graft.sources.ZarrSource
-import graft.sources.zarr.ChunkStats
+import graft.sources.{ByteStore, ZarrSource, ZarrV3Source}
+import graft.sources.zarr.{ChunkStats, ZarrTable}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -32,17 +32,38 @@ class StatsBudgetSpec extends AnyFunSuite {
     * 256x512 RAW chunks of 131072 cells — large enough for the 64-strip
     * virtual grid (2048 cells per strip, contiguous byte ranges). */
   private def writeBig(stats: Boolean, budget: Long): String = {
-    import spark.implicits._
     val g = s"${tmpDir("budget")}/cube.zarr"
-    val cells = spark.range(1024L * 512).select(
-      ((col("id") / 512).cast("long").cast("double") + 0.5).as("y"),
-      ((col("id") % 512).cast("double") + 0.5).as("x"),
-      col("id").cast("double").as("v"))
-    ZarrSource.writeCubeVars(cells, g, Seq("v"),
-      Seq("y" -> Array.tabulate(1024)(_ + 0.5),
-        "x" -> Array.tabulate(512)(_ + 0.5)),
+    ZarrSource.writeCubeVars(bigCells, g, Seq("v"), bigDims,
       chunks = Seq(256, 512), codec = ZarrSource.Raw,
       stats = stats, statsInlineBudget = budget)
+    g
+  }
+
+  private def bigCells = spark.range(1024L * 512).select(
+    ((col("id") / 512).cast("long").cast("double") + 0.5).as("y"),
+    ((col("id") % 512).cast("double") + 0.5).as("x"),
+    col("id").cast("double").as("v"))
+
+  private val bigDims = Seq("y" -> Array.tabulate(1024)(_ + 0.5),
+    "x" -> Array.tabulate(512)(_ + 0.5))
+
+  /** The same cube as a sharded v3 store — (256, 512) shards of (4, 512)
+    * inner chunks, so the same 4 chunk rows + 4 × 64 block rows — born
+    * with its inline sidecar, whose rows then go through the sidecar
+    * emitter again under `budget` (the v3 writer uses the default one). */
+  private def writeBigV3(budget: Long): String = {
+    import spark.implicits._
+    val g = s"${tmpDir("budgetv3")}/cube.zarr"
+    ZarrV3Source.writeCube(bigCells, g, "v", bigDims, chunks = Seq(256, 512),
+      steps = Seq(), shardInner = Some(Seq(4, 512)), stats = true)
+    val za = ZarrTable.open(g).za
+    val born = ChunkStats.load(ByteStore.current, g, za, g).get
+      .asInstanceOf[ChunkStats.EagerStats]
+    val rows = born.vars("v").toSeq.map { case (k, st) =>
+      ChunkStats.StatRow("v", k, st)
+    }
+    ChunkStats.writeSidecar(g, g, Seq("v" -> za), v3 = true, rows.toDS(),
+      budget = budget)
     g
   }
 
@@ -60,14 +81,15 @@ class StatsBudgetSpec extends AnyFunSuite {
   }
 
   test("over-budget born-with-stats write auto-routes to the side table") {
-    val g = writeBig(stats = true, budget = 4)
-    val doc = new String(Files.readAllBytes(
-      Paths.get(s"$g/${ChunkStats.FileName}")), "UTF-8")
-    assert(doc.contains("\"storage\":\"parquet\""), doc.take(200))
-    assert(new java.io.File(s"$g/${ChunkStats.ParquetName}").exists())
-    // side-table rows: 4 chunk rows + 4 x 64 strip rows for the one var
-    val n = spark.read.parquet(s"$g/${ChunkStats.ParquetName}").count()
-    assert(n == 4L + 4 * 64, s"side table rows: $n")
+    for (g <- Seq(writeBig(stats = true, budget = 4), writeBigV3(budget = 4))) {
+      val doc = new String(Files.readAllBytes(
+        Paths.get(s"$g/${ChunkStats.FileName}")), "UTF-8")
+      assert(doc.contains("\"storage\":\"parquet\""), doc.take(200))
+      assert(new java.io.File(s"$g/${ChunkStats.ParquetName}").exists())
+      // side-table rows: 4 chunk rows + 4 x 64 strip rows for the one var
+      val n = spark.read.parquet(s"$g/${ChunkStats.ParquetName}").count()
+      assert(n == 4L + 4 * 64, s"side table rows: $n")
+    }
   }
 
   test("parquet sidecar prunes chunks AND skips excluded strips (corruption proof)") {

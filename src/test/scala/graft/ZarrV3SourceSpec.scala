@@ -190,6 +190,31 @@ class ZarrV3SourceSpec extends AnyFunSuite {
     assert(back.filter(!isnan(col("v"))).count() == 2)
   }
 
+  test("plain large v3 chunks: the born sidecar equals ANALYZE's (no strips)") {
+    import graft.sources.zarr.{ChunkStats, ZarrTable}
+    // one 1×256×512 raw chunk: 131072 cells, past the virtual-strip
+    // threshold, which the reader applies to v2 and refs tables only
+    val ys = Array.tabulate(256)(_ + 0.5)
+    val xs = Array.tabulate(512)(_ + 0.5)
+    val df = spark.range(256L * 512).select(lit(0.0).as("t"),
+      (expr("id div 512").cast("double") + 0.5).as("y"),
+      ((col("id") % 512L).cast("double") + 0.5).as("x"),
+      when(col("id") % 5 === 0, lit(Double.NaN))
+        .otherwise(col("id").cast("double")).as("v"))
+    val g = s"${tmpDir("v3plainstats")}/cube.zarr"
+    ZarrV3Source.writeCube(df, g, "v",
+      Seq("t" -> Array(0.0), "y" -> ys, "x" -> xs),
+      chunks = Seq(1, 256, 512), steps = Seq(), stats = true)
+    def loaded() = ChunkStats.load(graft.sources.ByteStore.current, g,
+      ZarrTable.open(g).za, g).get.asInstanceOf[ChunkStats.EagerStats]
+    val born = loaded()
+    ChunkStats.analyze(spark, g)
+    val analyzed = loaded()
+    assert(analyzed.vars === born.vars)
+    assert(analyzed.grids === born.grids)
+    assert(born.grids.isEmpty && born.vars("v").keySet === Set("0.0.0"))
+  }
+
   test("unsupported v3 features are rejected loudly") {
     val dir = tmpDir("zarrv3rej")
     def doc(codecs: String): String =
