@@ -21,15 +21,15 @@ import org.apache.spark.sql.functions._
   *  - the per-node reduction is `min`, computed by groupBy (map-side
   *    combined) — no neighborhood is ever collected into one row, so a
   *    109-degree hub node costs the same as a degree-2 node;
-  *  - RECOVERY CONTRACT: every round is persisted eagerly with lineage
-  *    KEPT (`persist(MEMORY_AND_DISK)` + count), so a lost executor
-  *    recomputes its lost blocks from the upstream plan instead of
-  *    failing the job — `localCheckpoint`'s documented failure mode.
-  *    Because persist does not truncate the LOGICAL plan (it would double
-  *    per round and drown the optimizer), every `CheckpointEvery` rounds
-  *    the edge set takes a RELIABLE `checkpoint()` to the Spark
-  *    checkpoint dir, which bounds both plan depth and the recomputation
-  *    window to ≤ `CheckpointEvery` rounds. On a cluster, point
+  *  - every round is a cut in the caller's [[graft.Cuts.Scope]] (see
+  *    [[graft.Cuts]] for the lineage-recovery contract); the superseded
+  *    round is released as soon as the next one is materialized, and the
+  *    converged one when the caller's scope closes. Because a persist does
+  *    not truncate the LOGICAL plan (it would double per round and drown
+  *    the optimizer), every round re-exposes its cut through a fresh
+  *    LogicalRDD, and every `CheckpointEvery` rounds the edge set takes a
+  *    RELIABLE `checkpoint()` to the Spark checkpoint dir, which bounds the
+  *    RDD lineage depth. On a cluster, point
   *    `spark.sparkContext.setCheckpointDir` at durable storage; when
   *    unset, a local temp dir is used (correct in local mode, and the
   *    library never silently skips the cut). Checkpoint files live until
@@ -62,21 +62,12 @@ object ClusterOps {
     * smallest node id in the connected component. Self-loops are ignored;
     * edge direction is irrelevant. Deterministic (min-based throughout).
     *
-    * NOTE: the converged edge set stays persisted so the returned (lazy)
-    * labels read the cache — callers that fully consume the result in one
-    * invocation should use [[connectedComponentsWithHandle]] and release
-    * the handle, or the cached table outlives the query.
+    * The converged edge set stays kept in `c`, so the returned (lazy)
+    * labels read the cache: consume them inside the caller's scope.
     */
-  def connectedComponents(edges: DataFrame, aCol: String, bCol: String,
-                          maxIter: Int = 50): DataFrame =
-    connectedComponentsWithHandle(edges, aCol, bCol, maxIter)._1
-
-  /** [[connectedComponents]] plus the persisted handle of the converged
-    * edge set — unpersist it once the labels are consumed.
-    */
-  def connectedComponentsWithHandle(edges: DataFrame, aCol: String,
-                                    bCol: String,
-                                    maxIter: Int = 50): (DataFrame, DataFrame) = {
+  def connectedComponents(c: graft.Cuts.Scope, edges: DataFrame,
+                          aCol: String, bCol: String,
+                          maxIter: Int = 50): DataFrame = {
     val e0 = edges
       .select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))
       .filter(col("u") =!= col("v"))
@@ -95,56 +86,33 @@ object ClusterOps {
         sum(pmod(xxhash64(col("u"), col("v")), lit(1000000007L)))).head
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
-    var curHandle = canonical(e0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var curSig = signature(curHandle)
-    // scale-adaptive round sizing (the StatePartitioning rule applied to
-    // the iterative loop): the first materialization just counted the
-    // edge set exactly, so derive the rounds' shuffle.partitions from it
-    // instead of running ~6 rounds of near-empty full-width stages at the
-    // configured count. Conservative 64 bytes/edge; configured count
-    // stays the ceiling (a 100 TB edge set saturates it unchanged), floor
-    // 8 keeps small graphs off a single core. The twin only re-plans the
-    // loop bodies — results are partition-count-invariant (min-based
-    // algebra; oracle-gated).
-    val loopSession = {
-      val conf = edges.sparkSession.conf
-        .get("spark.sql.shuffle.partitions").toInt
-      val advisory = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        edges.sparkSession.conf.get(
-          "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m"))
-      val bySize = math.ceil(
-        curSig._1 * 64.0 / math.max(advisory, 1L)).toLong
-      val n = math.min(conf.toLong,
-        math.max(math.min(8, conf).toLong, bySize)).toInt
-      if (n == conf) edges.sparkSession
-      else org.apache.spark.sql.graft.ConfBridge.twinSession(
-        edges.sparkSession,
-        Map("spark.sql.shuffle.partitions" -> n.toString))
-    }
-    var cur = loopSession.createDataFrame(curHandle.rdd, curHandle.schema)
+    val first = c.keep(canonical(e0))
+    var curSig = signature(first)
+    // the loop bodies re-plan under a twin sized from the first round's
+    // exact edge count instead of running ~6 rounds of near-empty
+    // full-width stages at the configured count
+    var cur = graft.Cuts.sized(edges.sparkSession, curSig._1 * 64)
+      .createDataFrame(first.rdd, first.schema)
+    var curKept = first
     var converged = false
     var it = 0
     while (!converged && it < maxIter) {
-      val round = smallStar(largeStar(cur))
-      // persist BEFORE the periodic reliable checkpoint: an uncached
-      // dataset is computed twice by checkpoint() (action + write job) —
-      // cached, both jobs read the cache. The signature aggregate is the
+      // kept BEFORE the periodic reliable checkpoint: an uncached dataset
+      // is computed twice by checkpoint() (action + write job) — cached,
+      // both jobs read the cache. The signature aggregate is the
       // materializing action; createDataFrame(rdd) truncates the LOGICAL
-      // plan every round while keeping RDD lineage for recovery.
-      val nextHandle = round
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nextSig = signature(nextHandle)
-      val cut = nextHandle.sparkSession
-        .createDataFrame(nextHandle.rdd, nextHandle.schema)
+      // plan every round.
+      val round = c.keep(smallStar(largeStar(cur)))
+      val nextSig = signature(round)
+      val view = round.sparkSession.createDataFrame(round.rdd, round.schema)
       val next =
-        if ((it + 1) % CheckpointEvery == 0) cutReliable(cut) else cut
+        if ((it + 1) % CheckpointEvery == 0) cutReliable(view) else view
       // fixpoint = identical edge SETS; both sides are distinct, so equal
       // counts + empty one-sided difference suffice
       converged = nextSig == curSig && next.except(cur).isEmpty
-      curHandle.unpersist()
+      c.release(curKept)
       cur = next
-      curHandle = nextHandle
+      curKept = round
       curSig = nextSig
       it += 1
     }
@@ -153,9 +121,9 @@ object ClusterOps {
         s"connectedComponents did not converge in $maxIter rounds")
     // converged edge set is a star per component: (child, root) with
     // root = component min; add the root's own label row
-    (cur.select(col("u").as("node"), col("v").as("comp"))
+    cur.select(col("u").as("node"), col("v").as("comp"))
       .unionByName(cur.select(col("v").as("node"), col("v").as("comp")).distinct())
-      .distinct(), curHandle)
+      .distinct()
   }
 
   /** Fold a NEW batch of near-dup pairs into an EXISTING canonical-id

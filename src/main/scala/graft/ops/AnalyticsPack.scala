@@ -55,7 +55,7 @@ object AnalyticsPack extends QueryPack {
           .coalesce(1) // ONE file → ONE micro-batch → converged summaries
           .write.mode("overwrite").parquet(fixDir)
       }
-      val ss = graft.streaming.StatePartitioning.sessionFor(s, fixDir)
+      val ss = graft.streaming.StatePartitioning.replaySession(s, Seq(fixDir))
       import ss.implicits._
       val rows = ss.readStream
         .schema("userId LONG, tsMicros LONG, eventId LONG")
@@ -115,7 +115,7 @@ object AnalyticsPack extends QueryPack {
           .coalesce(1)
           .write.mode("overwrite").parquet(fixDir)
       }
-      val ss = graft.streaming.StatePartitioning.sessionFor(s, fixDir)
+      val ss = graft.streaming.StatePartitioning.replaySession(s, Seq(fixDir))
       import ss.implicits._
       val rows = ss.readStream
         .schema("userId LONG, eventType STRING, tsMicros LONG, eventId LONG")
@@ -173,7 +173,7 @@ object AnalyticsPack extends QueryPack {
           .coalesce(1)
           .write.mode("overwrite").parquet(fixDir)
       }
-      val ss = graft.streaming.StatePartitioning.sessionFor(s, fixDir)
+      val ss = graft.streaming.StatePartitioning.replaySession(s, Seq(fixDir))
       import ss.implicits._
       val rows = ss.readStream
         .schema("userId LONG, eventType STRING, tsMicros LONG, eventId LONG")
@@ -237,8 +237,8 @@ object AnalyticsPack extends QueryPack {
     // standard reference-data enrichment; the dim broadcasts into every
     // micro-batch, so the stream side never shuffles before its agg.
     "q_stream_enrich" -> ((s, d) => {
-      val ss = graft.streaming.StatePartitioning.sessionFor(
-        s, s"$d/events.parquet")
+      val ss = graft.streaming.StatePartitioning.replaySession(
+        s, Seq(s"$d/events.parquet"))
       import ss.implicits._
       val weights = Seq("view" -> 1L, "click" -> 3L, "purchase" -> 10L,
         "signup" -> 5L, "error" -> 0L).toDF("event_type", "weight")
@@ -311,7 +311,7 @@ object AnalyticsPack extends QueryPack {
           .coalesce(1)
           .write.mode("overwrite").parquet(fixDir)
       }
-      val ss = graft.streaming.StatePartitioning.sessionFor(s, fixDir)
+      val ss = graft.streaming.StatePartitioning.replaySession(s, Seq(fixDir))
       import ss.implicits._
       val rows = ss.readStream
         .schema("userId LONG, eventType STRING, tsMicros LONG, eventId LONG")
@@ -338,13 +338,13 @@ object AnalyticsPack extends QueryPack {
     "q_stream_join" -> ((s, d) => {
       // floor 4, not the default 8: the interval join opens four state
       // stores per partition, so its per-partition commit cost is ~4x an
-      // aggregation's (see StatePartitioning.derivedPartitions). The twin
+      // aggregation's (see StatePartitioning.replaySession). The twin
       // also skips the trailing no-data micro-batch (ReplayConfs): an
       // INNER interval join emits every match in the batch where it
       // joins, so that batch only re-executed the join plan on empty
       // input — probed at 0.73 s of the 2.56 s AvailableNow pass.
-      val ss = graft.streaming.StatePartitioning.sessionForFloor(
-        s, 4, s"$d/events.parquet")
+      val ss = graft.streaming.StatePartitioning.replaySession(
+        s, Seq(s"$d/events.parquet"), floor = 4)
       val schema = GraftSession.table(s, d, "events").schema
       def side(et: String, pfx: String) =
         ss.readStream.schema(schema)
@@ -416,7 +416,7 @@ object AnalyticsPack extends QueryPack {
           .coalesce(1)
           .write.mode("overwrite").parquet(fixDir)
       }
-      val ss = graft.streaming.StatePartitioning.sessionFor(s, fixDir)
+      val ss = graft.streaming.StatePartitioning.replaySession(s, Seq(fixDir))
       import ss.implicits._
       val rows = ss.readStream
         .schema("userId LONG, bucket LONG")
@@ -453,7 +453,7 @@ object AnalyticsPack extends QueryPack {
           .coalesce(1)
           .write.mode("overwrite").parquet(fixDir)
       }
-      val ss = graft.streaming.StatePartitioning.sessionFor(s, fixDir)
+      val ss = graft.streaming.StatePartitioning.replaySession(s, Seq(fixDir))
       import ss.implicits._
       val rows = ss.readStream
         .schema("userId LONG, eventType STRING, tsMicros LONG, eventId LONG")

@@ -1,6 +1,7 @@
 package graft.ops
 
-import graft.{GraftSession, QueryPack}
+import graft.{Cuts, GraftSession, QueryPack}
+import graft.Cuts.withCuts
 import graft.operators.{BloomOps, BpeOps, ClassifierOps, ClusterOps, EmbeddingOps, IndexOps, IvfOps, LmOps, MediaCodecs, MultimodalOps, PcaOps, SampleOps, SketchOps, TextOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -25,76 +26,19 @@ object PipelinePack extends QueryPack {
   private def docs(s: SparkSession, d: String) = GraftSession.table(s, d, "documents")
   private def embs(s: SparkSession, d: String) = GraftSession.table(s, d, "embeddings")
 
-  /** Eager materialization boundary for a SMALL (aggregated) result that
-    * consumed per-query `persist`ed inputs: collect the handful of result
-    * rows, release the caches, and hand back a local DataFrame. Without
-    * this the cached tables outlive the returned (lazy) plan and
-    * accumulate executor memory/disk across a benchmark session. Only for
-    * results of a few rows — the collect is a scalar fetch, not a
-    * driver-side data path. */
-  private def finishAndUnpersist(res: DataFrame, cached: DataFrame*): DataFrame = {
-    val rows = res.collect()
-    cached.foreach(_.unpersist(false))
-    res.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), res.schema)
-  }
-
-  /** Eager persisted cut with lineage KEPT — the reliable replacement for
-    * `localCheckpoint` in reused/iterated subplans (the q_simhash_hamming
-    * treatment): a lost executor recomputes its lost blocks from the
-    * upstream plan instead of failing the query, which is the recovery
-    * contract a 1000-executor run needs. `release` names caches the new
-    * cut supersedes (a prior round's table); they are dropped once this
-    * one is materialized, so loop memory stays O(1) rounds.
-    */
-  private def cutRound(df: DataFrame, release: DataFrame*): DataFrame = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    p.count()
-    release.foreach(_.unpersist(false))
-    p
-  }
-
-  /** Size-derived config twin for fixed-round LOOP bodies over a small
-    * persisted table (the ClusterOps CC treatment, r21): the loop input
-    * was just counted by its cutRound materialization, so derive the
-    * rounds' shuffle.partitions from it instead of paying ~k rounds of
-    * near-empty full-width stages at the configured count. Conservative
-    * 64 bytes/row; configured count stays the CEILING (a 100 TB edge set
-    * saturates it unchanged), floor 8. Results are partition-count
-    * invariant; only the loop bodies re-plan through the twin.
-    */
-  private def loopSession(s: SparkSession, rows: Long): SparkSession = {
-    val conf = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val advisory = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      s.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m"))
-    val bySize = math.ceil(rows * 64.0 / math.max(advisory, 1L)).toLong
-    val n = math.min(conf.toLong,
-      math.max(math.min(8, conf).toLong, bySize)).toInt
-    if (n == conf) s
-    else org.apache.spark.sql.graft.ConfBridge.twinSession(s,
-      Map("spark.sql.shuffle.partitions" -> n.toString))
-  }
-
-  /** [[cutRound]] for ITERATED plans: additionally re-exposes the cached
-    * data through a fresh LogicalRDD so the logical plan is truncated
-    * every round — a loop that feeds a round's output into the next
-    * otherwise multiplies plan nodes per round, and the analyzer plus
-    * the SQL listener's plan stringification come to dominate (the
-    * q_dedup_clusters 6x regression). RDD lineage is kept, so the
-    * recovery contract is unchanged. Returns (truncated view, persisted
-    * handle to release when the next round lands).
-    */
-  private def cutLoopRound(df: DataFrame, release: DataFrame*)
-      : (DataFrame, DataFrame) = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    p.count()
-    release.foreach(_.unpersist(false))
-    (p.sparkSession.createDataFrame(p.rdd, p.schema), p)
-  }
+  /** The 6 BPE merges trained over `dd`'s word-frequency table. The table
+    * is cut once for the merge steps; train() collects every per-step
+    * argmax, so it is consumed when the scope closes. */
+  private def trainMerges(dd: DataFrame): Seq[(Long, String, String, Long)] =
+    withCuts { c =>
+      val words0 = BpeOps.wordTable(dd, "text")
+      c.cut(words0)
+      BpeOps.train(words0, 6)._1
+    }
 
   /** The q_curation plan BEFORE its materialization boundary — factored
-    * out so PlanAuditSpec and PlanDump can inspect the REAL shape.
-    * Returns (result, the persisted signature table the caller must
-    * release once done).
+    * out so PlanAuditSpec and PlanDump can inspect the REAL shape. The
+    * signature table is kept in `c`, so consume the result inside it.
     *
     * The (doc, sh, mh) signature table is PERSISTED: three branches
     * consume it (the band join and both sides of the exact-Jaccard
@@ -107,12 +51,12 @@ object PipelinePack extends QueryPack {
     * text-bearing rows costs more than the two remaining evaluations
     * (measured 4.51 s with it cached — the r20 §4 lesson again), so the
     * corpus is scanned twice (signature pass + final anti-join), not 6×.
-    * The cache is released before the query returns
-    * (finishAndUnpersist), so every invocation recomputes from parquet —
-    * no cross-invocation reuse (the r20 §3 CacheManager hazard).
+    * The cache is released when the query's scope closes, so every
+    * invocation recomputes from parquet — no cross-invocation reuse (the
+    * r20 §3 CacheManager hazard).
     */
-  private[graft] def curationPlan(s: SparkSession, d: String)
-      : (DataFrame, DataFrame) = {
+  private[graft] def curationPlan(c: Cuts.Scope, s: SparkSession,
+      d: String): DataFrame = {
     val stop = array(Seq("the", "a", "of", "and", "to").map(lit): _*)
     val w = TextOps.tokens(col("text"))
     val quality = docs(s, d).select(col("doc_id"), col("source"), col("text"),
@@ -127,34 +71,28 @@ object PipelinePack extends QueryPack {
       .agg(min_by(struct(col("doc_id"), col("source"), col("text"),
         col("n_tok")), col("doc_id")).as("r"))
       .select(col("r.doc_id"), col("r.source"), col("r.text"), col("r.n_tok"))
-    val sigs = TextOps.minhashSignatures(
-      TextOps.shingleArrays(keepExact, "doc_id", "text", 3), "doc_id", NumPerms)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sigs = c.keep(TextOps.minhashSignatures(
+      TextOps.shingleArrays(keepExact, "doc_id", "text", 3), "doc_id", NumPerms))
     val bands = TextOps.lshBandRows(sigs, "doc_id", RowsPerBand, NumPerms)
     val dupB = TextOps.jaccardOnCandidates(
         TextOps.candidatePairs(bands, "doc_id", MaxBucket), sigs, "doc_id")
       .filter(col("jaccard") >= 0.5)
       .select(col("doc_b").as("doc_id")).distinct()
-    val res = keepExact.join(dupB, Seq("doc_id"), "left_anti")
+    keepExact.join(dupB, Seq("doc_id"), "left_anti")
       .groupBy("source")
       .agg(count(lit(1)).as("n_kept"),
         sum(col("n_tok")).cast("long").as("total_tokens"))
-    (res, sigs)
   }
 
   /** The q_simhash_hamming plan BEFORE its materialization boundary
-    * (finishAndUnpersist collapses the executed query to a
-    * LocalTableScan) — factored out so PlanAuditSpec can assert the REAL
-    * plan shape. Returns (result, the persisted signature table the
-    * caller must release once done).
+    * (the declared query collects its result into a LocalTableScan) —
+    * factored out so PlanAuditSpec can assert the REAL plan shape. The
+    * signature table is kept in `c`, so consume the result inside it.
     */
-  private[graft] def simhashHammingPlan(s: SparkSession, d: String)
-      : (DataFrame, DataFrame) = {
-    // reused by both join sides + the block explode; persist (not
-    // localCheckpoint) keeps the lineage, so a lost executor recomputes
-    // the lost blocks instead of failing the query
-    val sh = TextOps.simhash(docs(s, d), "doc_id", "text")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  private[graft] def simhashHammingPlan(c: Cuts.Scope, s: SparkSession,
+      d: String): DataFrame = {
+    // reused by both join sides + the block explode
+    val sh = c.keep(TextOps.simhash(docs(s, d), "doc_id", "text"))
     val blocks = sh.withColumn("b", explode(sequence(lit(0), lit(3))))
       .withColumn("blk", expr("substr(simhash, b * 8 + 1, 8)"))
     val ok = blocks.join(
@@ -167,7 +105,7 @@ object PipelinePack extends QueryPack {
         col("simhash").as("sh_b")), Seq("b", "blk"))
       .filter(col("doc_a") < col("doc_b"))
       .select("doc_a", "doc_b", "sh_a", "sh_b").distinct()
-    val res = cand
+    cand
       // codegen byte-wise compare (functions.HammingDist) — replaces the
       // interpreted aggregate(zip_with(split,split)) HOF chain
       .withColumn("hd",
@@ -176,7 +114,6 @@ object PipelinePack extends QueryPack {
       .groupBy("hd")
       .agg(count(lit(1)).as("n_pairs"),
         sum(col("doc_a") * 7 + col("doc_b")).cast("long").as("pair_checksum"))
-    (res, sh)
   }
 
   // LSH configuration: 8 permutations × 4 bands of 2 rows; buckets larger
@@ -453,8 +390,8 @@ object PipelinePack extends QueryPack {
     // oracle as q_hll. The incremental-cardinality shape: fixed 1024-row
     // state however large the stream.
     "q_stream_hll" -> ((s, d) => {
-      val ss = graft.streaming.StatePartitioning.sessionFor(
-        s, s"$d/events.parquet")
+      val ss = graft.streaming.StatePartitioning.replaySession(
+        s, Seq(s"$d/events.parquet"))
       val schema = GraftSession.table(s, d, "events").schema
       val stream = ss.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet").parquet(d)
@@ -542,14 +479,7 @@ object PipelinePack extends QueryPack {
     // so the oracle checks the whole train loop, not just counting.
     "q_bpe_train" -> ((s, d) => {
       import s.implicits._
-      val words0 = cutRound(BpeOps.wordTable(docs(s, d), "text"))
-      val (merges, _) = BpeOps.train(words0, 6)
-      // train() collected every per-step argmax — the cut is consumed;
-      // release it BEFORE returning so the next invocation recomputes
-      // from parquet (a lingering plan-keyed cache would silently serve
-      // later invocations — the r20 §3 CacheManager hazard)
-      words0.unpersist(false)
-      merges.toDF("step", "t1", "t2", "pair_count")
+      trainMerges(docs(s, d)).toDF("step", "t1", "t2", "pair_count")
     }),
 
     // ENCODE with the trained tokenizer: the same ordered replace() chain
@@ -559,9 +489,7 @@ object PipelinePack extends QueryPack {
     // per-source token totals check the full tokenizer round trip.
     "q_bpe_encode" -> ((s, d) => {
       val dd = docs(s, d)
-      val words0 = cutRound(BpeOps.wordTable(dd, "text"))
-      val (merges, _) = BpeOps.train(words0, 6)
-      words0.unpersist(false) // consumed by train(); see q_bpe_train
+      val merges = trainMerges(dd)
       val words = dd.select(col("source"),
           explode(split(regexp_replace(lower(col("text")), "[^a-z ]", ""),
             " ")).as("w"))
@@ -616,25 +544,27 @@ object PipelinePack extends QueryPack {
     // drift. Each iteration is one keyed join + map-side-combined sum on
     // the edge list; the graph is the LSH-capped pair set, so edge count
     // is linear in corpus size and no iteration ever sees a cross product.
-    "q_pagerank" -> ((s, d) => {
+    "q_pagerank" -> ((s, d) => withCuts { c =>
       val sigs = TextOps.minhashSignatures(
         TextOps.shingleArrays(docs(s, d), "doc_id", "text", 3), "doc_id", NumPerms)
       val bands = TextOps.lshBandRows(sigs, "doc_id", RowsPerBand, NumPerms)
       val pairs = TextOps.jaccardOnCandidates(
           TextOps.candidatePairs(bands, "doc_id", MaxBucket), sigs, "doc_id")
         .filter(col("jaccard") >= 0.5)
-      val e = cutRound(pairs.select(col("doc_a").as("a"), col("doc_b").as("b"))
+      // 3 iterations reuse the edge list: cut it once
+      val e = pairs.select(col("doc_a").as("a"), col("doc_b").as("b"))
         .union(pairs.select(col("doc_b").as("a"), col("doc_a").as("b")))
-        .distinct()) // 3 iterations reuse the edge list; cut the LSH lineage
+        .distinct()
+      c.cut(e)
       val deg = e.groupBy(col("a").as("dn")).agg(count(lit(1)).as("dd"))
-      // fold the degree onto each edge ONCE (persisted with lineage, see
-      // cutRound): the iteration loop then costs one keyed join + one
-      // map-side-combined sum per round instead of re-joining deg every
-      // time (the 10x soak showed the doubled join chain dominating)
-      val ewd0 = cutRound(e.join(deg, col("a") === col("dn"))
-        .select(col("a"), col("b"), col("dd")))
-      // iterations re-plan under a size-derived twin (count reads the cache)
-      val ewd = loopSession(s, ewd0.count())
+      // fold the degree onto each edge ONCE: the iteration loop then costs
+      // one keyed join + one map-side-combined sum per round instead of
+      // re-joining deg every time (the 10x soak showed the doubled join
+      // chain dominating)
+      val ewd0 = e.join(deg, col("a") === col("dn"))
+        .select(col("a"), col("b"), col("dd"))
+      // iterations re-plan under a twin sized from the cut's row count
+      val ewd = Cuts.sized(s, c.cut(ewd0) * 64)
         .createDataFrame(ewd0.rdd, ewd0.schema)
       var scores = deg.select(col("dn").as("node"), lit(1000000L).as("s"))
       for (_ <- 1 to 3) {
@@ -644,60 +574,56 @@ object PipelinePack extends QueryPack {
           .groupBy(col("b").as("node"))
           .agg((lit(150000L) + expr("(85 * sum(c)) div 100")).as("s"))
       }
-      // materialize + release the cuts before returning: the edge cuts'
-      // plans are deterministic, so a lingering cache would silently
-      // serve every later invocation (the r20 §3 CacheManager hazard)
-      finishAndUnpersist(
-        scores
-          .agg(graft.functions.TopK.bottomK(
-            struct(negate(col("s")).as("__o"), col("node"), col("s")), 10).as("__tk"))
-          .select(posexplode(col("__tk")).as(Seq("__p", "__r")))
-          .select((col("__p") + 1).cast("long").as("rank"),
-            col("__r.node").as("doc_id"), col("__r.s").as("score")),
-        e, ewd0)
+      c.local(scores
+        .agg(graft.functions.TopK.bottomK(
+          struct(negate(col("s")).as("__o"), col("node"), col("s")), 10).as("__tk"))
+        .select(posexplode(col("__tk")).as(Seq("__p", "__r")))
+        .select((col("__p") + 1).cast("long").as("rank"),
+          col("__r.node").as("doc_id"), col("__r.s").as("score")))
     }),
 
     // synchronous min-label propagation (3 rounds) over the same capped
     // near-dup graph — the fixed-round community primitive next to the
     // converged CC (q_dedup_clusters): each round is one keyed join + one
-    // map-side-combined min per edge list, lineage cut per round. The
+    // map-side-combined min per edge list, logical plan cut per round. The
     // 3-round labels are oracle-checked exactly (same CTE chain), so the
     // synchronous-update semantics can't drift.
-    "q_label_prop" -> ((s, d) => {
+    "q_label_prop" -> ((s, d) => withCuts { c =>
       val sigs = TextOps.minhashSignatures(
         TextOps.shingleArrays(docs(s, d), "doc_id", "text", 3), "doc_id", NumPerms)
       val bands = TextOps.lshBandRows(sigs, "doc_id", RowsPerBand, NumPerms)
       val pairs = TextOps.jaccardOnCandidates(
           TextOps.candidatePairs(bands, "doc_id", MaxBucket), sigs, "doc_id")
         .filter(col("jaccard") >= 0.5)
-      val e0 = cutRound(pairs.select(col("doc_a").as("a"), col("doc_b").as("b"))
+      val e0 = pairs.select(col("doc_a").as("a"), col("doc_b").as("b"))
         .union(pairs.select(col("doc_b").as("a"), col("doc_a").as("b")))
-        .distinct())
-      // rounds re-plan under a size-derived twin (count reads the cache)
-      val e = loopSession(s, e0.count())
+        .distinct()
+      // rounds re-plan under a twin sized from the cut's row count
+      val e = Cuts.sized(s, c.cut(e0) * 64)
         .createDataFrame(e0.rdd, e0.schema)
       var labels = e.select(col("a").as("node")).distinct()
         .withColumn("lbl", col("node"))
-      var labelsHandle: DataFrame = null
+      var prev = Option.empty[DataFrame]
       for (_ <- 1 to 3) {
         val nbr = e.join(labels, col("a") === col("node"))
           .groupBy(col("b").as("nnode")).agg(min(col("lbl")).as("nl"))
-        val (next, nextHandle) = cutLoopRound(labels
+        val next = labels
           .join(nbr, col("node") === col("nnode"), "left")
           .select(col("node"),
-            least(col("lbl"), coalesce(col("nl"), col("lbl"))).as("lbl")),
-          Option(labelsHandle).toSeq: _*)
-        labels = next
-        labelsHandle = nextHandle
+            least(col("lbl"), coalesce(col("nl"), col("lbl"))).as("lbl"))
+        c.cut(next)
+        prev.foreach(c.release)
+        prev = Some(next)
+        // a fresh LogicalRDD truncates the logical plan every round — fed
+        // back untruncated, the plan multiplies per round and the analyzer
+        // plus the SQL listener's plan stringification come to dominate
+        // (the q_dedup_clusters 6x regression)
+        labels = next.sparkSession.createDataFrame(next.rdd, next.schema)
       }
-      // release the edge cut and the final round handle before returning
-      // (deterministic edge-cut plan — the r20 §3 CacheManager hazard)
-      finishAndUnpersist(
-        labels.groupBy("lbl").agg(count(lit(1)).as("sz"))
-          .agg(count(lit(1)).as("n_clusters"), max(col("sz")).as("max_size"),
-            sum(col("lbl")).cast("long").as("label_checksum"),
-            sum(col("sz")).cast("long").as("n_nodes")),
-        (e0 +: Option(labelsHandle).toSeq): _*)
+      c.local(labels.groupBy("lbl").agg(count(lit(1)).as("sz"))
+        .agg(count(lit(1)).as("n_clusters"), max(col("sz")).as("max_size"),
+          sum(col("lbl")).cast("long").as("label_checksum"),
+          sum(col("sz")).cast("long").as("n_nodes")))
     }),
 
     // triangle counting over the capped near-dup graph (the clustering-
@@ -705,46 +631,36 @@ object PipelinePack extends QueryPack {
     // on the shared low vertex enumerates wedges and ONE more equi-join
     // closes them — never a cartesian, candidate volume bounded by the
     // LSH cap exactly like pair enumeration.
-    "q_triangles" -> ((s, d) => {
+    "q_triangles" -> ((s, d) => withCuts { c =>
       val sigs = TextOps.minhashSignatures(
         TextOps.shingleArrays(docs(s, d), "doc_id", "text", 3), "doc_id", NumPerms)
       val bands = TextOps.lshBandRows(sigs, "doc_id", RowsPerBand, NumPerms)
-      val e = cutRound(TextOps.jaccardOnCandidates(
+      val e = TextOps.jaccardOnCandidates(
           TextOps.candidatePairs(bands, "doc_id", MaxBucket), sigs, "doc_id")
         .filter(col("jaccard") >= 0.5)
-        .select(col("doc_a").as("a"), col("doc_b").as("b"))) // a < b already
+        .select(col("doc_a").as("a"), col("doc_b").as("b")) // a < b already
+      c.cut(e)
       val wedges = e.select(col("a"), col("b").as("b1"))
         .join(e.select(col("a"), col("b").as("b2")), Seq("a"))
         .filter(col("b1") < col("b2"))
       val tri = wedges.join(
         e.select(col("a").as("b1"), col("b").as("b2")), Seq("b1", "b2"))
-      // release the edge cut before returning (deterministic plan — the
-      // r20 §3 CacheManager hazard)
-      finishAndUnpersist(
-        tri.agg(count(lit(1)).as("n_triangles"),
-          countDistinct(col("a")).as("n_apex"),
-          sum(col("a") + col("b1") * 3 + col("b2") * 7).cast("long")
-            .as("tri_checksum")),
-        e)
+      c.local(tri.agg(count(lit(1)).as("n_triangles"),
+        countDistinct(col("a")).as("n_apex"),
+        sum(col("a") + col("b1") * 3 + col("b2") * 7).cast("long")
+          .as("tri_checksum")))
     }),
 
-    "q_dedup_clusters" -> ((s, d) => {
+    "q_dedup_clusters" -> ((s, d) => withCuts { c =>
       val sigs = TextOps.minhashSignatures(
         TextOps.shingleArrays(docs(s, d), "doc_id", "text", 3), "doc_id", NumPerms)
       val bands = TextOps.lshBandRows(sigs, "doc_id", RowsPerBand, NumPerms)
       val pairs = TextOps.jaccardOnCandidates(
           TextOps.candidatePairs(bands, "doc_id", MaxBucket), sigs, "doc_id")
         .filter(col("jaccard") >= 0.5)
-      // materialize + release the CC's converged-round cache before
-      // returning (cached-table hygiene; the handle's plan is RDD-backed
-      // so there is no cross-invocation reuse, but it would leak one
-      // cached table per invocation)
-      val (labels, ccHandle) =
-        ClusterOps.connectedComponentsWithHandle(pairs, "doc_a", "doc_b")
-      finishAndUnpersist(
-        labels.groupBy(col("comp").as("cluster_id"))
-          .agg(count(lit(1)).as("n_docs"), max(col("node")).as("max_doc")),
-        ccHandle)
+      c.local(ClusterOps.connectedComponents(c, pairs, "doc_a", "doc_b")
+        .groupBy(col("comp").as("cluster_id"))
+        .agg(count(lit(1)).as("n_docs"), max(col("node")).as("max_doc")))
     }),
 
     // INCREMENTAL cluster identity: the near-dup pair set splits into an
@@ -769,25 +685,23 @@ object PipelinePack extends QueryPack {
       val base = s"/root/repo/.graft-fixtures/inc_cc_$sfName"
       graft.Fixtures.ensureWritten(base,
         s"perms=$NumPerms,rpb=$RowsPerBand,cap=$MaxBucket,j=0.5,mod5," +
-          "shingle3") {
+          "shingle3") { withCuts { c =>
         val sigs = TextOps.minhashSignatures(
           TextOps.shingleArrays(docs(s, d), "doc_id", "text", 3), "doc_id",
           NumPerms)
         val bands = TextOps.lshBandRows(sigs, "doc_id", RowsPerBand, NumPerms)
-        val pairs = cutRound(TextOps.jaccardOnCandidates(
+        val pairs = TextOps.jaccardOnCandidates(
             TextOps.candidatePairs(bands, "doc_id", MaxBucket), sigs, "doc_id")
           .filter(col("jaccard") >= 0.5)
-          .select(col("doc_a"), col("doc_b")))
+          .select(col("doc_a"), col("doc_b"))
+        c.cut(pairs)
         pairs.filter((col("doc_a") + col("doc_b")) % 5 === 0)
           .write.mode("overwrite").parquet(s"$base/batch_pairs")
-        val (labels, ccHandle) = ClusterOps.connectedComponentsWithHandle(
-          pairs.filter((col("doc_a") + col("doc_b")) % 5 =!= 0),
-          "doc_a", "doc_b")
-        labels.write.mode("overwrite").parquet(s"$base/labels")
-        ccHandle.unpersist(false)
-        pairs.unpersist(false)
-        ()
-      }
+        ClusterOps.connectedComponents(c,
+            pairs.filter((col("doc_a") + col("doc_b")) % 5 =!= 0),
+            "doc_a", "doc_b")
+          .write.mode("overwrite").parquet(s"$base/labels")
+      } }
       val labels = s.read.parquet(s"$base/labels")
       val batch = s.read.parquet(s"$base/batch_pairs")
       ClusterOps.incrementalCC(labels, batch, "doc_a", "doc_b")
@@ -828,7 +742,7 @@ object PipelinePack extends QueryPack {
           .coalesce(1) // ONE file → ONE micro-batch → deterministic greedy
           .write.mode("overwrite").parquet(fixDir)
       }
-      val ss = graft.streaming.StatePartitioning.sessionFor(s, fixDir)
+      val ss = graft.streaming.StatePartitioning.replaySession(s, Seq(fixDir))
       import ss.implicits._
       val rows = ss.readStream
         .schema("docId LONG, bandKey STRING, sig ARRAY<LONG>")
@@ -1413,8 +1327,7 @@ object PipelinePack extends QueryPack {
     // 0.5) → per-source survivor stats. The real pre-training pipeline
     // shape: every stage is the oracle-checked operator above, composed.
     "q_curation" -> ((s, d) => {
-      val (res, sigs) = curationPlan(s, d)
-      finishAndUnpersist(res, sigs)
+      withCuts(c => c.local(curationPlan(c, s, d)))
     }),
 
     // Gopher-style repetition signals (the pre-training quality rules that
@@ -1605,7 +1518,7 @@ object PipelinePack extends QueryPack {
     // the embedded-boilerplate case LSH + containment verification
     // exists for. Candidates from the capped band join, exact shingle
     // intersection on candidates only.
-    "q_containment" -> ((s, d) => {
+    "q_containment" -> ((s, d) => withCuts { c =>
       val dd = docs(s, d).select(col("doc_id"), col("text"))
       val frags = dd.filter(col("doc_id") % 37 === 0)
         .select((col("doc_id") + 7000000L).as("doc_id"),
@@ -1614,19 +1527,16 @@ object PipelinePack extends QueryPack {
       // the shingle table feeds three consumers (the band join path and
       // both containment join sides); persist it once — column pruning
       // alone still re-shingled the corpus per consumer
-      val shArr = TextOps.shingleArrays(corpus, "doc_id", "text", 3)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val shArr = c.keep(TextOps.shingleArrays(corpus, "doc_id", "text", 3))
       val sigs = TextOps.minhashSignatures(shArr, "doc_id", NumPerms)
       val bands = TextOps.lshBandRows(sigs, "doc_id", RowsPerBand, NumPerms)
       val cands = TextOps.candidatePairs(bands, "doc_id", MaxBucket)
-      finishAndUnpersist(
-        TextOps.containmentOnCandidates(cands, shArr, "doc_id")
-          .filter(greatest(col("containment_a"), col("containment_b")) >= 0.9)
-          .agg(count(lit(1)).as("n_pairs"),
-            sum(when(col("containment_a") >= 0.9, 1L).otherwise(0L)).as("n_a_in_b"),
-            sum(when(col("containment_b") >= 0.9, 1L).otherwise(0L)).as("n_b_in_a"),
-            sum(col("doc_a") * 7 + col("doc_b")).cast("long").as("pair_checksum")),
-        shArr)
+      c.local(TextOps.containmentOnCandidates(cands, shArr, "doc_id")
+        .filter(greatest(col("containment_a"), col("containment_b")) >= 0.9)
+        .agg(count(lit(1)).as("n_pairs"),
+          sum(when(col("containment_a") >= 0.9, 1L).otherwise(0L)).as("n_a_in_b"),
+          sum(when(col("containment_b") >= 0.9, 1L).otherwise(0L)).as("n_b_in_a"),
+          sum(col("doc_a") * 7 + col("doc_b")).cast("long").as("pair_checksum")))
     }),
 
     // record-linkage verification by EDIT DISTANCE: the LSH-capped
@@ -1659,8 +1569,7 @@ object PipelinePack extends QueryPack {
     // equi-join (bucket-capped, the LSH discipline) and the exact integer
     // hamming count runs on candidates only — never all pairs.
     "q_simhash_hamming" -> ((s, d) => {
-      val (res, sh) = simhashHammingPlan(s, d)
-      finishAndUnpersist(res, sh)
+      withCuts(c => c.local(simhashHammingPlan(c, s, d)))
     }),
 
     // PMI collocations (pointwise mutual information over adjacent
@@ -1668,7 +1577,7 @@ object PipelinePack extends QueryPack {
     // assembled from per-count micro-nat quantizations, so the ranking is
     // exact integer arithmetic; marginals are map-side-combined sums of
     // the bigram table, top-15 through the bounded heap.
-    "q_pmi" -> ((s, d) => {
+    "q_pmi" -> ((s, d) => withCuts { c =>
       def lnq(c: org.apache.spark.sql.Column) =
         round(log(c.cast("double")) * 1e6).cast("long")
       val tk = docs(s, d).select(split(col("text"), " ").as("w"))
@@ -1677,26 +1586,23 @@ object PipelinePack extends QueryPack {
           "zip_with(slice(w, 1, size(w)-1), slice(w, 2, size(w)-1), " +
             "(a, b) -> struct(a AS w1, b AS w2))")).as(Seq("__p", "pr")))
         .select(col("pr.w1").as("w1"), col("pr.w2").as("w2"))
-      val c12 = cutRound(bi.groupBy("w1", "w2").agg(count(lit(1)).as("c"))
-        ) // marginals + N + the ranked scan all reuse it
+      // marginals + N + the ranked scan all reuse it
+      val c12 = bi.groupBy("w1", "w2").agg(count(lit(1)).as("c"))
+      c.cut(c12)
       val cl = c12.groupBy("w1").agg(sum(col("c")).as("cl"))
       val cr = c12.groupBy("w2").agg(sum(col("c")).as("cr"))
       val n = c12.agg(sum(col("c")).as("n"))
-      // release the bigram cut before returning (deterministic plan —
-      // the r20 §3 CacheManager hazard)
-      finishAndUnpersist(
-        c12.filter(col("c") >= 10)
-          .join(cl, Seq("w1")).join(cr, Seq("w2")).crossJoin(broadcast(n))
-          .withColumn("pmi",
-            lnq(col("c")) + lnq(col("n")) - lnq(col("cl")) - lnq(col("cr")))
-          .agg(graft.functions.TopK.bottomK(
-            struct(negate(col("pmi")).as("__o"), col("w1"), col("w2"),
-              col("c"), col("pmi")), 15).as("__tk"))
-          .select(posexplode(col("__tk")).as(Seq("__p", "__r")))
-          .select((col("__p") + 1).cast("long").as("rank"),
-            col("__r.w1").as("w1"), col("__r.w2").as("w2"),
-            col("__r.c").as("c12"), col("__r.pmi").as("pmi")),
-        c12)
+      c.local(c12.filter(col("c") >= 10)
+        .join(cl, Seq("w1")).join(cr, Seq("w2")).crossJoin(broadcast(n))
+        .withColumn("pmi",
+          lnq(col("c")) + lnq(col("n")) - lnq(col("cl")) - lnq(col("cr")))
+        .agg(graft.functions.TopK.bottomK(
+          struct(negate(col("pmi")).as("__o"), col("w1"), col("w2"),
+            col("c"), col("pmi")), 15).as("__tk"))
+        .select(posexplode(col("__tk")).as(Seq("__p", "__r")))
+        .select((col("__p") + 1).cast("long").as("rank"),
+          col("__r.w1").as("w1"), col("__r.w2").as("w2"),
+          col("__r.c").as("c12"), col("__r.pmi").as("pmi")))
     }),
 
     // ZIPF rank-frequency slope (the corpus-health diagnostic: natural

@@ -44,8 +44,8 @@ object StoragePack extends QueryPack {
     }),
 
     "q_stream_window" -> ((s, d) => {
-      val ss = graft.streaming.StatePartitioning.sessionFor(
-        s, s"$d/events.parquet")
+      val ss = graft.streaming.StatePartitioning.replaySession(
+        s, Seq(s"$d/events.parquet"))
       val schema = GraftSession.table(s, d, "events").schema
       val stream = ss.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet").parquet(d)
@@ -68,8 +68,8 @@ object StoragePack extends QueryPack {
     // O(k) state where a window-rank formulation would buffer everything.
     // Converged AvailableNow output must equal the batch top-k.
     "q_stream_topk" -> ((s, d) => {
-      val ss = graft.streaming.StatePartitioning.sessionFor(
-        s, s"$d/events.parquet")
+      val ss = graft.streaming.StatePartitioning.replaySession(
+        s, Seq(s"$d/events.parquet"))
       val schema = GraftSession.table(s, d, "events").schema
       val stream = ss.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet").parquet(d)
@@ -96,8 +96,8 @@ object StoragePack extends QueryPack {
     // the state transition is arrival-order-independent by construction
     "q_stream_state" -> ((s, d) => {
       import graft.streaming.StatefulOps
-      val ss = graft.streaming.StatePartitioning.sessionFor(
-        s, s"$d/events.parquet")
+      val ss = graft.streaming.StatePartitioning.replaySession(
+        s, Seq(s"$d/events.parquet"))
       import ss.implicits._
       val schema = GraftSession.table(s, d, "events").schema
       val obs = ss.readStream.schema(schema)
@@ -136,8 +136,8 @@ object StoragePack extends QueryPack {
       import graft.operators.SketchOps
       val w = 1024L
       val dep = 4
-      val ss = graft.streaming.StatePartitioning.sessionFor(
-        s, s"$d/events.parquet")
+      val ss = graft.streaming.StatePartitioning.replaySession(
+        s, Seq(s"$d/events.parquet"))
       val schema = GraftSession.table(s, d, "events").schema
       val stream = ss.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet").parquet(d)
@@ -162,8 +162,8 @@ object StoragePack extends QueryPack {
     }),
 
     "q_stream_dedup" -> ((s, d) => {
-      val ss = graft.streaming.StatePartitioning.sessionFor(
-        s, s"$d/events.parquet")
+      val ss = graft.streaming.StatePartitioning.replaySession(
+        s, Seq(s"$d/events.parquet"))
       val schema = GraftSession.table(s, d, "events").schema
       val stream = ss.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet").parquet(d)

@@ -1484,9 +1484,8 @@ object KerchunkSource {
     * metadata rows collect for validation and the metadata doc. */
   private def buildParquetIndex(spark: SparkSession, paths: Seq[String],
                                 concatDim: String, sideDir: String): Unit = {
-    val rows = scanGranuleRows(spark, paths, startIdx = 0)
-    rows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.Cuts.withCuts { c =>
+      val rows = c.keep(scanGranuleRows(spark, paths, startIdx = 0))
       import org.apache.spark.sql.functions.col
       val collected = rows.filter(col("kind") === 0 ||
         (col("kind") === 1 && col("g") === 0)).collect().toSeq
@@ -1503,7 +1502,7 @@ object KerchunkSource {
         .write.mode("overwrite").parquet(s"$sideDir/$ParquetRefsName")
       ByteStore.current.write(s"$sideDir/$IndexFileName",
         archiveMetaDoc(first, concatDim, paths.length).getBytes("UTF-8"))
-    } finally { rows.unpersist(); () }
+    }
   }
 
   /** Incremental parquet-index append: fleet-scan ONLY the new granules,
@@ -1521,9 +1520,8 @@ object KerchunkSource {
     val oldN = openArray(current, concatDim).shape.head
     require(oldN == startIdx,
       s"$indexPath: concat extent $oldN != manifest granule count $startIdx")
-    val rows = scanGranuleRows(spark, newPaths, startIdx)
-    rows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.Cuts.withCuts { c =>
+      val rows = c.keep(scanGranuleRows(spark, newPaths, startIdx))
       import org.apache.spark.sql.functions.col
       val metaRows = rows.filter(col("kind") === 0).collect().toSeq
       // expected granule layout = the combined grid minus its lead dim;
@@ -1563,7 +1561,7 @@ object KerchunkSource {
       ByteStore.current.write(indexPath,
         archiveMetaDoc(expected, concatDim, startIdx + newPaths.length)
           .getBytes("UTF-8"))
-    } finally { rows.unpersist(); () }
+    }
   }
 
   /** Data-chunk ref resolution against the parquet side table: the

@@ -15,35 +15,19 @@ import org.apache.spark.sql.SparkSession
   * identical results.
   *
   * So the partition count is derived from the stream's INPUT SIZE before
-  * the query starts — the same sizing rule AQE applies to batch shuffles
-  * (`advisoryPartitionSizeInBytes`), applied at plan time because runtime
-  * coalescing is unavailable for stateful stages:
-  *
-  *   n = clamp(ceil(inputBytes / advisory), floor, configured shuffle.partitions)
-  *
-  * The configured count stays the CEILING: on a real cluster a 100 TB
-  * replay saturates it and behaves exactly as before — this only sizes
-  * DOWN when the input provably cannot fill the static count, never up.
-  * An input that cannot be sized (unreachable filesystem, missing path)
-  * counts as unbounded, so the derivation fails safe to the ceiling, never
-  * the floor. The default floor is [[MinPartitions]] (8); the stream-stream
-  * join passes 4 (see [[derivedPartitions]]). The floor keeps CPU-dense
-  * stateful stages (per-row hashing, signature folds) off a single core
-  * even for byte-tiny inputs.
+  * the query starts, through [[graft.Cuts.partitions]] (AQE's sizing rule
+  * applied at plan time, because runtime coalescing is unavailable for
+  * stateful stages; the configured count stays the ceiling). An input that
+  * cannot be sized (unreachable filesystem, missing path) counts as
+  * unbounded, so the derivation fails safe to the ceiling, never the floor.
+  * The default floor is [[graft.Cuts.MinPartitions]] (8); the stream-stream
+  * join passes 4 (see [[replaySession]]).
   *
   * Returns a config-twin session ([[org.apache.spark.sql.graft.ConfBridge]])
   * carrying the derived count; the caller must build the stream AND read
   * the memory-sink table through it.
   */
 object StatePartitioning {
-
-  /** Floor for the derived count — parallelism for CPU-dense stateful
-    * stages on small inputs (never above the configured count). Measured
-    * on the r20 streaming family: 8 beats 4 for the per-row-CPU stateful
-    * aggregations (flatMapGroupsWithState folds, CMS/top-k updates) and
-    * beats 32 everywhere the state is small.
-    */
-  val MinPartitions = 8
 
   /** Total bytes under `paths`, resolved through the Hadoop filesystem of
     * each path's scheme (so hdfs://, s3a:// etc. are sized for real, not
@@ -67,37 +51,6 @@ object StatePartitioning {
     }
   }
 
-  /** The derived partition count for `bytes` of input under `spark`'s
-    * advisory partition size, capped at its configured shuffle partitions.
-    * `floor` defaults to [[MinPartitions]]; a stream-stream join should
-    * pass a lower one because it opens FOUR state stores per partition
-    * (two keyToNumValues + two keyWithIndexToValue), so its per-partition
-    * fixed commit cost is ~4x an aggregation's — the r20 probe measured
-    * the interval join at 2.7 s wall with 4 partitions vs 4.0 s with 8
-    * vs 16 s with 32 (summed store commit 0.8 s / 4.8 s / 131 s).
-    */
-  def derivedPartitions(spark: SparkSession, bytes: Long,
-      floor: Int = MinPartitions): Int = {
-    val conf = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val advisory = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m"))
-    val bySize = math.ceil(bytes.toDouble / math.max(advisory, 1L)).toLong
-    math.min(conf.toLong, math.max(math.min(floor, conf).toLong,
-      bySize)).toInt
-  }
-
-  /** The session a streaming query over `paths` should start from: `spark`
-    * itself when the derived count equals the configured one, else the
-    * cached config twin with `spark.sql.shuffle.partitions` overridden.
-    */
-  def sessionFor(spark: SparkSession, paths: String*): SparkSession =
-    sessionForFloor(spark, MinPartitions, paths: _*)
-
-  /** [[sessionFor]] with an explicit floor — see [[derivedPartitions]]. */
-  def sessionForFloor(spark: SparkSession, floor: Int,
-      paths: String*): SparkSession =
-    sessionForFloorWith(spark, floor, Map.empty, paths: _*)
-
   /** Conf overrides every replay twin carries in addition to the derived
     * partition count.
     *
@@ -120,18 +73,23 @@ object StatePartitioning {
   val ReplayConfs: Map[String, String] =
     Map("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
 
-  /** [[sessionForFloor]] with extra query-scoped conf overrides carried by
-    * the same twin (one cached twin per distinct conf map — see
-    * ConfBridge). The twin is returned even when the derived partition
-    * count equals the configured one, so [[ReplayConfs]] and the extra
-    * overrides always apply without mutating the parent session.
+  /** The session a streaming REPLAY over `paths` starts from: the cached
+    * config twin carrying [[ReplayConfs]] and the partition count
+    * [[graft.Cuts.partitions]] derives from the bytes under `paths`, so
+    * neither mutates the parent session.
+    *
+    * `floor` defaults to [[graft.Cuts.MinPartitions]]; a stream-stream join
+    * should pass a lower one because it opens FOUR state stores per
+    * partition (two keyToNumValues + two keyWithIndexToValue), so its
+    * per-partition fixed commit cost is ~4x an aggregation's — the r20
+    * probe measured the interval join at 2.7 s wall with 4 partitions vs
+    * 4.0 s with 8 vs 16 s with 32 (summed store commit 0.8 s / 4.8 s /
+    * 131 s).
     */
-  def sessionForFloorWith(spark: SparkSession, floor: Int,
-      extra: Map[String, String], paths: String*): SparkSession = {
-    val n = derivedPartitions(spark, inputBytes(spark, paths), floor)
-    val overrides = ReplayConfs ++ extra ++
-      (if (n == spark.conf.get("spark.sql.shuffle.partitions").toInt) Map.empty
-       else Map("spark.sql.shuffle.partitions" -> n.toString))
-    org.apache.spark.sql.graft.ConfBridge.twinSession(spark, overrides)
+  def replaySession(spark: SparkSession, paths: Seq[String],
+      floor: Int = graft.Cuts.MinPartitions): SparkSession = {
+    val n = graft.Cuts.partitions(spark, inputBytes(spark, paths), floor)
+    org.apache.spark.sql.graft.ConfBridge.twinSession(spark,
+      ReplayConfs + ("spark.sql.shuffle.partitions" -> n.toString))
   }
 }

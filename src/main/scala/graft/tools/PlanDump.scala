@@ -21,18 +21,15 @@ object PlanDump {
     val dir = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_PLANS_DIR", "plans/r21"))
     java.nio.file.Files.createDirectories(dir)
-    names.foreach { name =>
-      // queries that end in a finishAndUnpersist materialization boundary
-      // return a LocalTableScan — dump the REAL plan from the factored
-      // pre-boundary form instead, releasing its caches afterwards
-      val (df, caches) = name match {
-        case "q_curation" =>
-          val (r, c) = graft.ops.PipelinePack.curationPlan(spark, d)
-          (r, Seq(c))
+    names.foreach { name => graft.Cuts.withCuts { c =>
+      // queries that collect their result inside a Cuts scope return a
+      // LocalTableScan — dump the REAL plan from the factored
+      // pre-boundary form instead, inside this scope
+      val df = name match {
+        case "q_curation" => graft.ops.PipelinePack.curationPlan(c, spark, d)
         case "q_simhash_hamming" =>
-          val (r, c) = graft.ops.PipelinePack.simhashHammingPlan(spark, d)
-          (r, Seq(c))
-        case _ => (graft.SparkEntry.queries(name)(spark, d), Nil)
+          graft.ops.PipelinePack.simhashHammingPlan(c, spark, d)
+        case _ => graft.SparkEntry.queries(name)(spark, d)
       }
       val formatted = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
@@ -55,9 +52,8 @@ object PlanDump {
            |""".stripMargin
       java.nio.file.Files.write(dir.resolve(s"${name}_$tag.txt"),
         body.getBytes("UTF-8"))
-      caches.foreach(_.unpersist(false))
       println(s"[plandump] wrote $dir/${name}_$tag.txt census=$counts")
-    }
+    } }
     spark.stop()
   }
 }

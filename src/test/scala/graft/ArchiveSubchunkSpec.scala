@@ -7,6 +7,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths, StandardOpenOption}
+import graft.TestDirs.tmpDir
 
 /** Sub-chunk zone maps on LARGE-CHUNK granules (round-17): a whole-map
   * NetCDF record is one chunk, so chunk-granular stats can only prune
@@ -21,12 +22,6 @@ class ArchiveSubchunkSpec extends AnyFunSuite {
     val s = GraftSession.builder("4").getOrCreate()
     s.conf.set("spark.sql.files.minPartitionNum", "100000")
     s
-  }
-
-  private def tmpDir(prefix: String): String = {
-    val base = new java.io.File("/root/repo/target/tmp-tests")
-    base.mkdirs()
-    Files.createTempDirectory(base.toPath, prefix).toString
   }
 
   /** 3 whole-map granules (256×512 = 131072 cells each), v = g·1e6 + k

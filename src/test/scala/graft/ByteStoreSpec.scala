@@ -4,18 +4,13 @@ import graft.sources.ByteStore
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.{Files, Paths}
+import graft.TestDirs.tmpDir
 
 /** ByteStore local-path contract: the dispatch layer every chunked source
   * reads/writes through. Remote (s3g) behavior is covered end-to-end in
   * [[S3EmulatorSpec]]; these pin the local fast path and the shared
   * range-read bounds. */
 class ByteStoreSpec extends AnyFunSuite {
-
-  private def tmpDir(prefix: String): String = {
-    val base = new java.io.File("/root/repo/target/tmp-tests")
-    base.mkdirs()
-    Files.createTempDirectory(base.toPath, prefix).toString
-  }
 
   private val bs = ByteStore(Map.empty)
 

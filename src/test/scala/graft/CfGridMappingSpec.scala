@@ -11,15 +11,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * to_regular (base.py:851/787) + the geostationary family. */
 class CfGridMappingSpec extends AnyFunSuite {
 
-  /** tmp-tests may not exist on a fresh target (only full `sbt test`
-    * runs are guaranteed to have another suite create it first). */
-  private def tmpBase: java.nio.file.Path = {
-    val p = java.nio.file.Paths.get("/root/repo/target/tmp-tests")
-    java.nio.file.Files.createDirectories(p)
-    p
-  }
-
-
   lazy val spark: SparkSession = GraftSession.builder("4").getOrCreate()
 
   private def v(name: String, dims: Seq[String],
@@ -293,8 +284,7 @@ class CfGridMappingSpec extends AnyFunSuite {
   test("fromNetcdf: CF-attributed LCC granule auto-derives its grid") {
     import graft.sources.NetcdfSource
     import NetcdfSource.NcDim
-    val dir = java.nio.file.Files.createTempDirectory(
-      tmpBase, "cfnc")
+    val dir = TestDirs.tmpDir("cfnc")
     val path = s"$dir/lcc.nc"
     val xs = Array.tabulate(6)(i => 700000.0 + i * 1000.0)
     val ys = Array.tabulate(5)(j => 6600000.0 - j * 1000.0)
@@ -320,8 +310,7 @@ class CfGridMappingSpec extends AnyFunSuite {
   test("zarr: attachToZarr -> fromZarr round-trips the CF metadata") {
     import spark.implicits._
     import graft.sources.ZarrSource
-    val g = s"${java.nio.file.Files.createTempDirectory(
-      tmpBase, "cfzarr")}/c.zarr"
+    val g = s"${TestDirs.tmpDir("cfzarr")}/c.zarr"
     val xs = Array.tabulate(8)(i => 500000.0 + 10.0 * i)
     val ys = Array.tabulate(6)(j => 5600050.0 - 10.0 * j) // descending
     val cells = (for (j <- 0 until 6; i <- 0 until 8) yield
@@ -362,8 +351,7 @@ class CfGridMappingSpec extends AnyFunSuite {
     "drives the derivation") {
     import spark.implicits._
     import graft.sources.ZarrSource
-    val g = s"${java.nio.file.Files.createTempDirectory(
-      tmpBase, "wktzarr")}/c.zarr"
+    val g = s"${TestDirs.tmpDir("wktzarr")}/c.zarr"
     val xs = Array.tabulate(6)(i => 500000.0 + 20.0 * i)
     val ys = Array.tabulate(4)(j => 5600000.0 - 20.0 * j)
     val cells = (for (j <- 0 until 4; i <- 0 until 6) yield
@@ -394,8 +382,7 @@ class CfGridMappingSpec extends AnyFunSuite {
     "grid; CRS-less files decline") {
     import graft.sources.GeoTiffSource
     import graft.sources.GeoTiffSource.Raster
-    val dir = java.nio.file.Files.createTempDirectory(
-      tmpBase, "geokey")
+    val dir = TestDirs.tmpDir("geokey")
     // multi-band + nodata stresses the external-array offset layout the
     // GeoKey directory shifts
     val p1 = s"$dir/utm.tif"
@@ -464,8 +451,7 @@ class CfGridMappingSpec extends AnyFunSuite {
   test("DataStore.openGrid: one call opens the frame WITH its derived grid") {
     import graft.sources.{DataStore, NetcdfSource}
     import NetcdfSource.NcDim
-    val dir = java.nio.file.Files.createTempDirectory(
-      tmpBase, "opengrid")
+    val dir = TestDirs.tmpDir("opengrid")
     val path = s"$dir/utm.nc"
     NetcdfSource.write(path,
       Seq(NcDim("y", 4), NcDim("x", 5)),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
+import graft.TestDirs.tmpDir
 
 /** The ANALYZE sidecar (`_graft_stats.json`): per-chunk value statistics
   * driving value-predicate chunk pruning and zero-IO aggregate partials
@@ -18,12 +19,6 @@ class ChunkStatsSpec extends AnyFunSuite {
     val s = GraftSession.builder("4").getOrCreate()
     s.conf.set("spark.sql.files.minPartitionNum", "100000")
     s
-  }
-
-  private def tmpDir(prefix: String): String = {
-    val base = new java.io.File("/root/repo/target/tmp-tests")
-    base.mkdirs()
-    Files.createTempDirectory(base.toPath, prefix).toString
   }
 
   /** 3×4×6 cube, 1×2×3 chunks → 12 chunks. v = ti*1000 + yi*10 + xi;

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ConfBridge
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
+import graft.TestDirs.tmpDir
 
 /** Generated code is compiled once per session tree, not once per
   * streaming run or conf twin. Spark caches compiled classes per (task
@@ -26,12 +26,6 @@ class CodeReuseSpec extends AnyFunSuite {
     val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     body
     CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
-  }
-
-  private def tmpDir(prefix: String): String = {
-    val base = new java.io.File("target/tmp-tests")
-    base.mkdirs()
-    Files.createTempDirectory(base.toPath, prefix).toString
   }
 
   /** Identities of the context classloaders the tasks of `df` run under. */

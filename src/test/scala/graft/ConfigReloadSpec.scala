@@ -6,18 +6,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.{Files, Paths}
 import java.nio.file.attribute.FileTime
+import graft.TestDirs.tmpDir
 
 /** Server auto-reload tests (reference `xcube/server/helpers.py`
   * ConfigChangeObserver + webapi dataset context update). */
 class ConfigReloadSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = GraftSession.builder("4").getOrCreate()
-
-  private def tmpDir(prefix: String): String = {
-    val base = new java.io.File("/root/repo/target/tmp-tests")
-    base.mkdirs()
-    Files.createTempDirectory(base.toPath, prefix).toString
-  }
 
   private def writeConfig(path: String, json: String, mtimeMillis: Long): Unit = {
     Files.write(Paths.get(path), json.getBytes("UTF-8"))

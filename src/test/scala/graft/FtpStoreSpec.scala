@@ -11,9 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class FtpStoreSpec extends AnyFunSuite {
 
   private lazy val root: java.io.File = {
-    val f = new java.io.File("/root/repo/target/tmp-tests/ftp-root")
-    f.mkdirs()
-    f
+    new java.io.File(TestDirs.tmpDir("ftp-root"))
   }
   private lazy val emu: FtpEmulator = {
     val e = FtpEmulator.shared

@@ -72,9 +72,7 @@ class GeomOpsSpec extends AnyFunSuite {
 
   test("inGeom compiles to the native codegen expression, not a ScalaUDF") {
     // parquet-backed so ConvertToLocalRelation can't fold the filter away
-    val base = new java.io.File("/root/repo/target/tmp-tests")
-    base.mkdirs()
-    val path = java.nio.file.Files.createTempDirectory(base.toPath, "geom").toString + "/g"
+    val path = TestDirs.tmpDir("geom") + "/g"
     grid().df.write.parquet(path)
     val df = spark.read.parquet(path).filter(
       graft.functions.GeomFunctions.inGeom("POLYGON ((0 0, 6 0, 6 6, 0 6, 0 0))")(

@@ -10,18 +10,12 @@ class Hdf5SourceSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = GraftSession.builder("4").getOrCreate()
 
-  private def tmp(prefix: String): String = {
-    val base = new java.io.File("/root/repo/target/tmp-tests")
-    base.mkdirs()
-    Files.createTempDirectory(base.toPath, prefix).toString
-  }
-
   test("netCDF-4 round-trip: dims via DIMENSION_LIST, chunked deflate+shuffle") {
     val t = Array(0.0, 1.0, 2.0)
     val y = Array(10.0, 20.0)
     val x = Array(0.5, 1.5, 2.5, 3.5)
     val data = Array.tabulate(3 * 2 * 4)(i => i * 1.25 - 3.0)
-    val p = s"${tmp("h5")}/cube.nc"
+    val p = s"${TestDirs.tmpDir("h5")}/cube.nc"
     Hdf5Source.write(p, Seq(NcDim("t", 3), NcDim("y", 2), NcDim("x", 4)),
       Seq("t" -> t, "y" -> y, "x" -> x),
       Seq(("v", Seq("t", "y", "x"), data)),
@@ -48,7 +42,7 @@ class Hdf5SourceSpec extends AnyFunSuite {
   test("uncompressed + default single-chunk layout round-trips bit-for-bit") {
     val y = Array(1.0, 2.0, 3.0, 4.0, 5.0)
     val vals = Array(1.5, Double.NaN, -2.5, 1e300, -1e-300)
-    val p = s"${tmp("h5raw")}/s.nc"
+    val p = s"${TestDirs.tmpDir("h5raw")}/s.nc"
     Hdf5Source.write(p, Seq(NcDim("y", 5)), Seq("y" -> y),
       Seq(("v", Seq("y"), vals)), deflate = false, shuffle = false)
     val v = NetcdfSource.read(p).varByName("v")
@@ -58,7 +52,7 @@ class Hdf5SourceSpec extends AnyFunSuite {
 
   test("property: random cubes round-trip across chunkings and filters (20 files)") {
     val rnd = new scala.util.Random(77)
-    val dir = tmp("h5prop")
+    val dir = TestDirs.tmpDir("h5prop")
     (1 to 20).foreach { i =>
       val ny = 1 + rnd.nextInt(8)
       val nx = 1 + rnd.nextInt(8)
@@ -77,7 +71,7 @@ class Hdf5SourceSpec extends AnyFunSuite {
   }
 
   test("distributed multi-granule read unions HDF5 files one per task") {
-    val dir = tmp("h5many")
+    val dir = TestDirs.tmpDir("h5many")
     val y = Array(0.0, 1.0)
     (0 until 3).foreach { g =>
       Hdf5Source.write(s"$dir/g$g.nc", Seq(NcDim("y", 2)), Seq("y" -> y),
@@ -94,7 +88,7 @@ class Hdf5SourceSpec extends AnyFunSuite {
     val t = Array(0.0, 1.0, 2.0)
     val y = Array(1.5, 2.5)
     val data = Array.tabulate(6)(i => i * 3.5 - 2.0)
-    val dir = tmp("h5kc")
+    val dir = TestDirs.tmpDir("h5kc")
     val p = s"$dir/g.nc"
     Hdf5Source.write(p, Seq(NcDim("t", 3), NcDim("y", 2)),
       Seq("t" -> t, "y" -> y), Seq(("v", Seq("t", "y"), data)),
@@ -116,7 +110,7 @@ class Hdf5SourceSpec extends AnyFunSuite {
     val t = Array(0.0, 1.0, 2.0)
     val y = Array(1.5, 2.5)
     val data = Array.tabulate(6)(i => i * 1.5 + 0.25)
-    val dir = tmp("h5compact")
+    val dir = TestDirs.tmpDir("h5compact")
     val p = s"$dir/c.nc"
     Hdf5Source.write(p, Seq(NcDim("t", 3), NcDim("y", 2)),
       Seq("t" -> t, "y" -> y), Seq(("v", Seq("t", "y"), data)),
@@ -152,7 +146,7 @@ class Hdf5SourceSpec extends AnyFunSuite {
     val y = Array.tabulate(4)(_ * 1.0)
     val vars = (0 until 12).map(i =>
       (f"v$i%02d", Seq("y"), Array.tabulate(4)(_ * 1.0 + i)))
-    val p = s"${tmp("h5tinybt")}/t.nc"
+    val p = s"${TestDirs.tmpDir("h5tinybt")}/t.nc"
     val e = intercept[IllegalArgumentException] {
       Hdf5Source.writeLatest(p, Seq(NcDim("y", 4)), Seq("y" -> y), vars,
         deflate = false, shuffle = false, btNodeSize = 21)
@@ -189,7 +183,7 @@ class Hdf5SourceSpec extends AnyFunSuite {
     val y = Array(10.0, 20.0)
     val x = Array(0.5, 1.5, 2.5, 3.5)
     val data = Array.tabulate(3 * 2 * 4)(i => i * 1.25 - 3.0)
-    val p = s"${tmp("h5latest")}/cube.nc"
+    val p = s"${TestDirs.tmpDir("h5latest")}/cube.nc"
     Hdf5Source.writeLatest(p, Seq(NcDim("t", 3), NcDim("y", 2), NcDim("x", 4)),
       Seq("t" -> t, "y" -> y, "x" -> x),
       Seq(("v", Seq("t", "y", "x"), data)),
@@ -209,7 +203,7 @@ class Hdf5SourceSpec extends AnyFunSuite {
   }
 
   test("libver-latest single-chunk and implicit chunk indexes round-trip") {
-    val dir = tmp("h5lidx")
+    val dir = TestDirs.tmpDir("h5lidx")
     val y = Array.tabulate(6)(_ * 1.0)
     val x = Array.tabulate(5)(_ * 3.0)
     val data = Array.tabulate(30)(i => math.sin(i.toDouble))
@@ -234,7 +228,7 @@ class Hdf5SourceSpec extends AnyFunSuite {
 
   test("property: libver-latest random cubes round-trip (20 files)") {
     val rnd = new scala.util.Random(97)
-    val dir = tmp("h5lprop")
+    val dir = TestDirs.tmpDir("h5lprop")
     (1 to 20).foreach { i =>
       val ny = 1 + rnd.nextInt(8)
       val nx = 1 + rnd.nextInt(8)
@@ -257,7 +251,7 @@ class Hdf5SourceSpec extends AnyFunSuite {
     val t = Array(0.0, 1.0, 2.0)
     val y = Array(1.5, 2.5)
     val data = Array.tabulate(6)(i => i * 3.5 - 2.0)
-    val dir = tmp("h5lkc")
+    val dir = TestDirs.tmpDir("h5lkc")
     val p = s"$dir/g.nc"
     Hdf5Source.writeLatest(p, Seq(NcDim("t", 3), NcDim("y", 2)),
       Seq("t" -> t, "y" -> y), Seq(("v", Seq("t", "y"), data)),
@@ -272,7 +266,7 @@ class Hdf5SourceSpec extends AnyFunSuite {
   }
 
   test("libver-latest DENSE group: >8 links go through fractal heap + v2 B-tree") {
-    val dir = tmp("h5dense")
+    val dir = TestDirs.tmpDir("h5dense")
     val p = s"$dir/many.nc"
     val y = Array.tabulate(4)(_ * 1.0)
     // 1 coord + 11 data vars = 12 links -> dense storage (compact max is 8)
@@ -314,7 +308,7 @@ class Hdf5SourceSpec extends AnyFunSuite {
 
   test("property: dense groups round-trip across random link counts (10 files)") {
     val rnd = new scala.util.Random(61)
-    val dir = tmp("h5denseprop")
+    val dir = TestDirs.tmpDir("h5denseprop")
     (1 to 10).foreach { t =>
       val nVars = 9 + rnd.nextInt(52) // 10..61 links, all past compact
       val n = 2 + rnd.nextInt(6)
@@ -336,7 +330,7 @@ class Hdf5SourceSpec extends AnyFunSuite {
   test("property: BIG dense groups (up to 1.2k links) round-trip through " +
     "indirect heap + depth-1 B-tree") {
     val rnd = new scala.util.Random(93)
-    val dir = tmp("h5bigdense")
+    val dir = TestDirs.tmpDir("h5bigdense")
     // 200..1200 links: past one B-tree leaf (185), so the writer emits a
     // root indirect fractal heap (multiple 512..8192-byte direct blocks)
     // and a depth-1 name B-tree — the layouts the reader's new paths parse
@@ -370,7 +364,7 @@ class Hdf5SourceSpec extends AnyFunSuite {
   test("property: MULTI-LEVEL indirect fractal heaps (child + grandchild " +
     "FHIB) round-trip — tiny heapMaxDirect forces the depth") {
     val rnd = new scala.util.Random(41)
-    val dir = tmp("h5deepheap")
+    val dir = TestDirs.tmpDir("h5deepheap")
     // heapStart=512, heapMaxDirect=1024, width 4: rows 0-2 are direct
     // (8 KiB capacity), row 3+ entries become child indirect blocks, and
     // row 6 (span 16 KiB) holds 2 KiB sub-entries that exceed maxDirect
@@ -409,7 +403,7 @@ class Hdf5SourceSpec extends AnyFunSuite {
     // "total records in subtree" field (absent at depth 1 — without this
     // test that reader path never runs)
     val rnd = new scala.util.Random(77)
-    val dir = tmp("h5depth2")
+    val dir = TestDirs.tmpDir("h5depth2")
     val n = 3
     val y = Array.tabulate(n)(_ * 1.0)
     val vars = (0 until 1500).map { k =>

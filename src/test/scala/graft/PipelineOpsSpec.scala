@@ -444,17 +444,36 @@ class PipelineOpsSpec extends AnyFunSuite {
       (3L, 1L), (1L, 2L), (2L, 3L),                               // triangle
       (7L, 7L)                                                    // self-loop only
     ).toDF("a", "b")
-    val cc = graft.operators.ClusterOps.connectedComponents(edges, "a", "b")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val cc = Cuts.withCuts { c =>
+      graft.operators.ClusterOps.connectedComponents(c, edges, "a", "b")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     assert((10L to 15L).forall(cc(_) == 10L))
     assert((1L to 3L).forall(cc(_) == 1L))
     assert(!cc.contains(7L)) // self-loops carry no connectivity
     assert(cc.size == 9)
     // edge direction is irrelevant: reversing every edge gives same labels
-    val rev = graft.operators.ClusterOps.connectedComponents(
-        edges.select(col("b").as("a"), col("a").as("b")), "a", "b")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val rev = Cuts.withCuts { c =>
+      graft.operators.ClusterOps.connectedComponents(c,
+          edges.select(col("b").as("a"), col("a").as("b")), "a", "b")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     assert(rev == cc)
+  }
+
+  test("connected components: a round cap that is hit throws and leaves nothing persisted") {
+    import spark.implicits._
+    val chain = Seq((10L, 11L), (11L, 12L), (12L, 13L), (13L, 14L), (14L, 15L))
+      .toDF("a", "b")
+    val e = intercept[IllegalStateException] {
+      Cuts.withCuts { c =>
+        graft.operators.ClusterOps.connectedComponents(c, chain, "a", "b",
+          maxIter = 1).collect()
+      }
+    }
+    assert(e.getMessage.contains("did not converge"))
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 
   test("incrementalCC == full CC over the union; untouched ids stable") {
@@ -472,12 +491,15 @@ class PipelineOpsSpec extends AnyFunSuite {
       Seq((300L, 301L), (301L, 5L), (300L, 150L), // bridge via new nodes
         (400L, 401L)))                            // fully new island
       .filter(p => p._1 != p._2).toDF("u", "v")
-    val labels = ClusterOps.connectedComponents(oldPairs, "u", "v")
-    val inc = ClusterOps.incrementalCC(labels, batch)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val full = ClusterOps.connectedComponents(
-        oldPairs.unionByName(batch), "u", "v")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val inc = Cuts.withCuts { c =>
+      val labels = ClusterOps.connectedComponents(c, oldPairs, "u", "v")
+      ClusterOps.incrementalCC(labels, batch)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+    val full = Cuts.withCuts { c =>
+      ClusterOps.connectedComponents(c, oldPairs.unionByName(batch), "u", "v")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     assert(inc == full)
     // the untouched island keeps its canonical id
     assert(inc(902L) == 900L)
@@ -496,13 +518,18 @@ class PipelineOpsSpec extends AnyFunSuite {
       val base = pairs(60, 0, 150)
       val batches = Seq(pairs(25, 100, 250), pairs(25, 0, 300),
         pairs(10, 280, 320))
-      var labels = ClusterOps.connectedComponents(base.toDF("u", "v"), "u", "v")
-      for (b <- batches)
-        labels = ClusterOps.incrementalCC(labels, b.toDF("u", "v"))
-      val inc = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val full = ClusterOps.connectedComponents(
-          (base ++ batches.flatten).toDF("u", "v"), "u", "v")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val inc = Cuts.withCuts { c =>
+        var labels =
+          ClusterOps.connectedComponents(c, base.toDF("u", "v"), "u", "v")
+        for (b <- batches)
+          labels = ClusterOps.incrementalCC(labels, b.toDF("u", "v"))
+        labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
+      val full = Cuts.withCuts { c =>
+        ClusterOps.connectedComponents(c,
+            (base ++ batches.flatten).toDF("u", "v"), "u", "v")
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
       assert(inc == full, s"seed=$seed")
     }
   }

@@ -113,11 +113,13 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("q_simhash_hamming: block join is an equi-join; codegen hamming, no HOF") {
-    // audit the plan BEFORE the query's materialization boundary
-    // (finishAndUnpersist collapses the executed query to a LocalTableScan)
-    val (res, sh) = graft.ops.PipelinePack.simhashHammingPlan(spark, sf)
-    val p = res.queryExecution.executedPlan.toString
-    sh.unpersist()
+    // audit the plan BEFORE the query's materialization boundary (the
+    // declared query collects its result inside its Cuts scope, which
+    // collapses the executed query to a LocalTableScan)
+    val p = Cuts.withCuts { c =>
+      graft.ops.PipelinePack.simhashHammingPlan(c, spark, sf)
+        .queryExecution.executedPlan.toString
+    }
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoop"), p.take(600))
     assert(p.contains("hamming_dist"), "verification must use the codegen expression")
     assert(!p.contains("ArrayTransform") && !p.contains("ZipWith"),
@@ -126,13 +128,15 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("q_curation: corpus scanned twice, signature table cached for 3 readers") {
     // audit the plan BEFORE the materialization boundary (the declared
-    // query collapses to a LocalTableScan via finishAndUnpersist)
-    val (res, sigs) = graft.ops.PipelinePack.curationPlan(spark, sf)
-    res.collect() // materialize the cache and AQE's final shape
-    val fmt = res.queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode)
-    val exec = res.queryExecution.executedPlan.toString
-    sigs.unpersist()
+    // query collects its result inside its Cuts scope, which collapses
+    // it to a LocalTableScan)
+    val (fmt, exec) = Cuts.withCuts { c =>
+      val res = graft.ops.PipelinePack.curationPlan(c, spark, sf)
+      res.collect() // materialize the cache and AQE's final shape
+      (res.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode),
+        res.queryExecution.executedPlan.toString)
+    }
     // the signature consumers (band-bucket branches + both Jaccard sides)
     // read the cache, not the corpus — tree form "InMemoryTableScan (n)"
     val nCacheReads = "InMemoryTableScan \\(\\d+\\)".r.findAllIn(fmt).length

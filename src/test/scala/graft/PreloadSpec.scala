@@ -5,20 +5,14 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.nio.file.Files
 import java.util.concurrent.CountDownLatch
+import graft.TestDirs.tmpDir
 
 /** Preload contract tests (reference `xcube/core/store/preload.py`,
   * `test/core/store/test_preload.py`). */
 class PreloadSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = GraftSession.builder("4").getOrCreate()
-
-  private def tmpDir(prefix: String): String = {
-    val base = new java.io.File("/root/repo/target/tmp-tests")
-    base.mkdirs()
-    Files.createTempDirectory(base.toPath, prefix).toString
-  }
 
   test("PreloadState: str rendering and partial update semantics") {
     val st = new PreloadState("test.zip", status = PreloadStatus.Started,

@@ -6,17 +6,11 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.nio.file.Files
+import graft.TestDirs.tmpDir
 
 class PyramidRewriteSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = GraftSession.builder("4").getOrCreate()
-
-  private def tmpDir(prefix: String): String = {
-    val base = new java.io.File("/root/repo/target/tmp-tests")
-    base.mkdirs()
-    Files.createTempDirectory(base.toPath, prefix).toString
-  }
 
   /** Dense 8×8 single-slice cube with v = row-major index, pyramid L0..L2. */
   private def buildPyramid(): String = {

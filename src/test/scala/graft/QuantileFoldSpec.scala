@@ -7,6 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
+import graft.TestDirs.tmpDir
 
 /** Exact percentile/median THROUGH the connector — the last reference
   * aggregation method without a pushed form (xcube MUST_LOAD the whole
@@ -22,12 +23,6 @@ class QuantileFoldSpec extends AnyFunSuite {
     val s = GraftSession.builder("4").getOrCreate()
     s.conf.set("spark.sql.files.minPartitionNum", "100000")
     s
-  }
-
-  private def tmpDir(prefix: String): String = {
-    val base = new java.io.File("/root/repo/target/tmp-tests")
-    base.mkdirs()
-    Files.createTempDirectory(base.toPath, prefix).toString
   }
 
   /** Spark's own exact percentile over the same rows — the row-path

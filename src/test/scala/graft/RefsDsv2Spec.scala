@@ -6,6 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
+import graft.TestDirs.tmpDir
 
 /** DataSourceV2 over the granule formats — `format("netcdf")`,
   * `format("geotiff")`, `format("kerchunk")` share the zarr connector's
@@ -21,12 +22,6 @@ class RefsDsv2Spec extends AnyFunSuite {
     // (packing itself is exercised in the chunk-packing test)
     s.conf.set("spark.sql.files.minPartitionNum", "100000")
     s
-  }
-
-  private def tmpDir(prefix: String): String = {
-    val base = new java.io.File("/root/repo/target/tmp-tests")
-    base.mkdirs()
-    Files.createTempDirectory(base.toPath, prefix).toString
   }
 
   /** 4×6 grid, chunks 2×3 → 4 HDF5 chunks; two data variables. */

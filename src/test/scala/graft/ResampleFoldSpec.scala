@@ -5,7 +5,7 @@ import graft.sources.zarr.ChunkStats
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
+import graft.TestDirs.tmpDir
 
 /** The last resample_in_time methods re-expressed connector-first:
   * std/var as pushed moment partials, any/all as pushed square
@@ -18,12 +18,6 @@ class ResampleFoldSpec extends AnyFunSuite {
     val s = GraftSession.builder("4").getOrCreate()
     s.conf.set("spark.sql.files.minPartitionNum", "100000")
     s
-  }
-
-  private def tmpDir(prefix: String): String = {
-    val base = new java.io.File("/root/repo/target/tmp-tests")
-    base.mkdirs()
-    Files.createTempDirectory(base.toPath, prefix).toString
   }
 
   /** 4×4×6 cube, 1×2×3 chunks → 16 chunks; t in days. v dyadic with a

@@ -220,8 +220,7 @@ class S3EmulatorSpec extends AnyFunSuite {
 
     // server-side dataset: a LOCAL zarr group (the reference's webapi S3
     // emulation serves datasets as a virtual bucket exactly like this)
-    val base = java.nio.file.Files.createTempDirectory(
-      new java.io.File("/root/repo/target/tmp-tests").toPath, "mount").toString
+    val base = TestDirs.tmpDir("mount")
     val t = Array(0.0, 1.0)
     val y = Array.tabulate(3)(_.toDouble)
     val x = Array.tabulate(5)(_.toDouble)
@@ -287,8 +286,7 @@ class S3EmulatorSpec extends AnyFunSuite {
     import spark.implicits._
     graft.sources.s3.S3Support.enable(spark)
 
-    val base = java.nio.file.Files.createTempDirectory(
-      new java.io.File("/root/repo/target/tmp-tests").toPath, "szs3").toString
+    val base = TestDirs.tmpDir("szs3")
     val y = Array.tabulate(3)(_.toDouble)
     val x = Array.tabulate(4)(_.toDouble)
     def slice(t: Double) = (for { yi <- y; xi <- x }
@@ -315,8 +313,7 @@ class S3EmulatorSpec extends AnyFunSuite {
     import graft.sources.NetcdfSource.NcDim
     graft.sources.s3.S3Support.enable(spark)
 
-    val base = java.nio.file.Files.createTempDirectory(
-      new java.io.File("/root/repo/target/tmp-tests").toPath, "ncs3").toString
+    val base = TestDirs.tmpDir("ncs3")
     val vals = Array.tabulate(12)(_ * 1.5)
     NetcdfSource.write(s"$base/gran.nc", Seq(NcDim("y", 4), NcDim("x", 3)),
       Nil, Seq(("v", Seq("y", "x"), vals)))
@@ -339,8 +336,7 @@ class S3EmulatorSpec extends AnyFunSuite {
     import spark.implicits._
     graft.sources.s3.S3Support.enable(spark)
 
-    val base = java.nio.file.Files.createTempDirectory(
-      new java.io.File("/root/repo/target/tmp-tests").toPath, "open3").toString
+    val base = TestDirs.tmpDir("open3")
 
     // a NetCDF granule, a zarr group, and a Sentinel-3 product dir — all
     // mounted into one read-only bucket and opened by FORMAT INFERENCE on
@@ -379,8 +375,7 @@ class S3EmulatorSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     import spark.implicits._
 
-    val base = java.nio.file.Files.createTempDirectory(
-      new java.io.File("/root/repo/target/tmp-tests").toPath, "kchttp").toString
+    val base = TestDirs.tmpDir("kchttp")
     val local = s"$base/cube.zarr"
     val t = Array(0.0, 1.0)
     val y = Array.tabulate(4)(_.toDouble)
@@ -431,8 +426,7 @@ class S3EmulatorSpec extends AnyFunSuite {
     // a LOCAL zarr group is the granule archive; upload its files as
     // objects, then rewrite the scanned refs' urls to the bucket — the
     // cube must read back identically via ranged GETs, no download step
-    val base = java.nio.file.Files.createTempDirectory(
-      new java.io.File("/root/repo/target/tmp-tests").toPath, "kcs3").toString
+    val base = TestDirs.tmpDir("kcs3")
     val local = s"$base/cube.zarr"
     val t = Array(0.0, 1.0, 2.0)
     val y = Array.tabulate(5)(_.toDouble)

@@ -5,17 +5,11 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.nio.file.Files
+import graft.TestDirs.tmpDir
 
 class Sentinel3SourceSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = GraftSession.builder("4").getOrCreate()
-
-  private def tmpDir(prefix: String): String = {
-    val base = new java.io.File("/root/repo/target/tmp-tests")
-    base.mkdirs()
-    Files.createTempDirectory(base.toPath, prefix).toString
-  }
 
   /** 4×3 grid product: two band granules, one tie-point decoy (wrong dim
     * sizes), one renamed-dims decoy (right sizes, wrong names), one 1-D

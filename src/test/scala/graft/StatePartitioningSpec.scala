@@ -16,12 +16,12 @@ class StatePartitioningSpec extends AnyFunSuite {
     val conf = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val advisory = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
-    assert(StatePartitioning.derivedPartitions(spark, 0L) ===
-      math.min(StatePartitioning.MinPartitions, conf))
-    assert(StatePartitioning.derivedPartitions(spark, advisory * 10) ===
+    assert(Cuts.partitions(spark, 0L) ===
+      math.min(Cuts.MinPartitions, conf))
+    assert(Cuts.partitions(spark, advisory * 10) ===
       math.min(10, conf))
     // a 100 TB input saturates the configured count — never sized up
-    assert(StatePartitioning.derivedPartitions(spark,
+    assert(Cuts.partitions(spark,
       100L * 1024 * 1024 * 1024 * 1024) === conf)
   }
 
@@ -38,8 +38,8 @@ class StatePartitioningSpec extends AnyFunSuite {
         "s3a://no-such-bucket/replay")) === Long.MaxValue)
     // and the derived SESSION keeps the configured partition count
     val conf = spark.conf.get("spark.sql.shuffle.partitions")
-    val ss = StatePartitioning.sessionFor(spark,
-      "hdfs://unresolvable-namenode:8020/replay")
+    val ss = StatePartitioning.replaySession(spark,
+      Seq("hdfs://unresolvable-namenode:8020/replay"))
     assert(ss.conf.get("spark.sql.shuffle.partitions") === conf)
   }
 
@@ -55,8 +55,8 @@ class StatePartitioningSpec extends AnyFunSuite {
   test("sessionFor overrides only the twin, and the stream result matches") {
     val d = "/root/testdata/sf0.001"
     val parentConfBefore = spark.conf.get("spark.sql.shuffle.partitions")
-    val ss = StatePartitioning.sessionFor(spark, s"$d/events.parquet")
-    val expected = StatePartitioning.derivedPartitions(spark,
+    val ss = StatePartitioning.replaySession(spark, Seq(s"$d/events.parquet"))
+    val expected = Cuts.partitions(spark,
       StatePartitioning.inputBytes(spark, Seq(s"$d/events.parquet")))
     assert(ss.conf.get("spark.sql.shuffle.partitions").toInt === expected)
     if (expected != parentConfBefore.toInt) assert(ss ne spark)

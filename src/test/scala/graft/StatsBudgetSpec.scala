@@ -6,6 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths, StandardOpenOption}
+import graft.TestDirs.tmpDir
 
 /** The inline-sidecar size budget: a driver-resident stats document must
   * stay metadata-sized. Past the budget the json form DECLINES LOUDLY
@@ -20,12 +21,6 @@ class StatsBudgetSpec extends AnyFunSuite {
     val s = GraftSession.builder("4").getOrCreate()
     s.conf.set("spark.sql.files.minPartitionNum", "100000")
     s
-  }
-
-  private def tmpDir(prefix: String): String = {
-    val base = new java.io.File("/root/repo/target/tmp-tests")
-    base.mkdirs()
-    Files.createTempDirectory(base.toPath, prefix).toString
   }
 
   /** 1024x512 monotone cube (v = row-major ordinal) in 4 whole-width

@@ -9,8 +9,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 import java.sql.Timestamp
+import graft.TestDirs.tmpDir
 
 class StorageStreamingSpec extends AnyFunSuite {
 
@@ -27,12 +27,6 @@ class StorageStreamingSpec extends AnyFunSuite {
     val rows = for (j <- 0 until 10; i <- 0 until 10)
       yield (t, j * 10 + 0.5, i * 10 + 0.5, v)
     Cube(rows.toDF("time", "y", "x", "v"), gm)
-  }
-
-  private def tmpDir(prefix: String): String = {
-    val base = new java.io.File("/root/repo/target/tmp-tests")
-    base.mkdirs()
-    Files.createTempDirectory(base.toPath, prefix).toString
   }
 
   test("partitioned write + pruned scan: partition filters, same answer") {

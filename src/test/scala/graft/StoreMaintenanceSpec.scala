@@ -8,16 +8,11 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 import java.sql.Timestamp
+import graft.TestDirs.tmpDir
 
 class StoreMaintenanceSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = GraftSession.builder("4").getOrCreate()
-
-  private def tmpDir(prefix: String): String = {
-    val base = new java.io.File("/root/repo/target/tmp-tests")
-    base.mkdirs()
-    Files.createTempDirectory(base.toPath, prefix).toString
-  }
 
   test("FsDataStore: list/describe/open/write with format inference") {
     import spark.implicits._
@@ -149,7 +144,7 @@ class StoreMaintenanceSpec extends AnyFunSuite {
   test("store protocols: file:// parity with plain paths; s3a:// URIs reach Hadoop FS") {
     import graft.sources.FsDataStore
     import spark.implicits._
-    val root = "/root/repo/target/store_proto_test"
+    val root = tmpDir("store_proto")
     val viaUri = new FsDataStore(spark, s"file://$root")
     val viaPath = new FsDataStore(spark, root)
     val df = Seq((1L, "a"), (2L, "b")).toDF("id", "s")

@@ -4,6 +4,7 @@ import graft.sources.StorePool
 import graft.sources.StorePool.{DataStoreConfig, DataStorePool}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.TestDirs.tmpDir
 
 /** Store pool (reference xcube/core/store/storepool.py), mirroring
   * test/core/store/test_storepool.py: empty pool, add/remove configs,
@@ -12,12 +13,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class StorePoolSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = GraftSession.builder("4").getOrCreate()
-
-  private def tmpDir(prefix: String): String = {
-    val base = new java.io.File("/root/repo/target/tmp-tests")
-    base.mkdirs()
-    java.nio.file.Files.createTempDirectory(base.toPath, prefix).toString
-  }
 
   private def writeCatalog(root: String): Unit = {
     import spark.implicits._

@@ -5,6 +5,7 @@ import graft.sources.{DataStore, FsDataStore, MemoryDataStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.TestDirs.tmpDir
 
 /** DataStore.search_data (reference store/store.py via search.py's
   * list-describe-filter default) + the gen1 InputProcessor registry
@@ -12,12 +13,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class StoreSearchSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = GraftSession.builder("4").getOrCreate()
-
-  private def tmpDir(prefix: String): String = {
-    val base = new java.io.File("/root/repo/target/tmp-tests")
-    base.mkdirs()
-    java.nio.file.Files.createTempDirectory(base.toPath, prefix).toString
-  }
 
   test("bbox / time / type / var-name search over a mixed catalog") {
     import spark.implicits._

@@ -5,6 +5,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
+import graft.TestDirs.tmpDir
 
 /** Sub-chunk zone maps (round-16, stats format addition): sharded v3
   * cubes written with `stats = true` carry per-INNER-chunk moment rows
@@ -18,12 +19,6 @@ class SubchunkStatsSpec extends AnyFunSuite {
     val s = GraftSession.builder("4").getOrCreate()
     s.conf.set("spark.sql.files.minPartitionNum", "100000")
     s
-  }
-
-  private def tmpDir(prefix: String): String = {
-    val base = new java.io.File("/root/repo/target/tmp-tests")
-    base.mkdirs()
-    Files.createTempDirectory(base.toPath, prefix).toString
   }
 
   /** 16×16 grid, 8×8 shards (4), 2×2 inner chunks (16 per shard), RAW

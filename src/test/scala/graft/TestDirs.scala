@@ -1,0 +1,17 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+/** Scratch space for specs: `target/tmp-tests` under the working directory,
+  * i.e. the checkout running the suite, so two checkouts never write into
+  * each other's `target/`. */
+object TestDirs {
+
+  /** The absolute scratch root, created on first use. */
+  def base: Path =
+    Files.createDirectories(Paths.get("target", "tmp-tests").toAbsolutePath)
+
+  /** A fresh directory under [[base]] whose name starts with `prefix`. */
+  def tmpDir(prefix: String): String =
+    Files.createTempDirectory(base, prefix).toString
+}

@@ -6,7 +6,6 @@ import graft.sources.LevelStore
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 import java.sql.Timestamp
 
 class TileLevelSpec extends AnyFunSuite {
@@ -21,9 +20,7 @@ class TileLevelSpec extends AnyFunSuite {
     val rows = for (j <- 0 until 8; i <- 0 until 8)
       yield (t0, j + 0.5, i + 0.5, 1.0)
     val cube = Cube(rows.toDF("time", "y", "x", "v"), gm)
-    val base = new java.io.File("/root/repo/target/tmp-tests")
-    base.mkdirs()
-    val root = Files.createTempDirectory(base.toPath, "levels").toString
+    val root = TestDirs.tmpDir("levels")
     val gms = LevelStore.writeLevels(cube, root, 2)
     assert(gms.map(_.width) == Seq(8L, 4L, 2L))
     assert(LevelStore.listLevels(spark, root) == Seq(0, 1, 2))

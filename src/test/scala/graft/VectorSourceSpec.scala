@@ -22,9 +22,7 @@ class VectorSourceSpec extends AnyFunSuite {
          "geometry": {"type": "Point", "coordinates": [5, 5]},
          "properties": {"name": "pt", "cls": 2, "score": 1.5}}
       ]}"""
-    val base = new java.io.File("/root/repo/target/tmp-tests")
-    base.mkdirs()
-    val f = Files.createTempFile(base.toPath, "features", ".geojson")
+    val f = Files.createTempFile(TestDirs.base, "features", ".geojson")
     Files.writeString(f, json)
     val df = GeoJsonSource.readFeatures(spark, f.toString)
     assert(df.columns.toSeq == Seq("geometry", "name", "cls", "score"))
@@ -42,9 +40,7 @@ class VectorSourceSpec extends AnyFunSuite {
   test("Shapefile round-trip: points, polygons, typed dbf attributes, nulls") {
     import graft.sources.ShapefileSource
     import ShapefileSource.{DbfField, ShpPoint, ShpPolygon}
-    val base = new java.io.File("/root/repo/target/tmp-tests")
-    base.mkdirs()
-    val dir = Files.createTempDirectory(base.toPath, "shp").toFile
+    val dir = new java.io.File(TestDirs.tmpDir("shp"))
     val fields = Seq(DbfField("name", 'C', 8, 0), DbfField("pop", 'N', 10, 0),
       DbfField("score", 'N', 12, 3))
     val pts = new java.io.File(dir, "pts.shp").getAbsolutePath
@@ -76,9 +72,7 @@ class VectorSourceSpec extends AnyFunSuite {
     import graft.sources.ShapefileSource
     import ShapefileSource.{DbfField, ShpPoint, ShpPolygon}
     import java.nio.{ByteBuffer, ByteOrder}
-    val base = new java.io.File("/root/repo/target/tmp-tests")
-    base.mkdirs()
-    val dir = Files.createTempDirectory(base.toPath, "shx").toFile
+    val dir = new java.io.File(TestDirs.tmpDir("shx"))
     val shp = new java.io.File(dir, "mixed.shp").getAbsolutePath
     ShapefileSource.writeFeatures(shp,
       Seq(ShpPolygon(Seq(Seq((0.0, 0.0), (4.0, 0.0), (4.0, 4.0), (0.0, 0.0)))),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
+import graft.TestDirs.tmpDir
 
 /** DataSourceV2 zarr connector: chunk pruning from pushed dimension
   * predicates, variable-level column pruning, protocol transparency. */
@@ -17,12 +18,6 @@ class ZarrDsv2Spec extends AnyFunSuite {
     // (packing itself is exercised in the chunk-packing test)
     s.conf.set("spark.sql.files.minPartitionNum", "100000")
     s
-  }
-
-  private def tmpDir(prefix: String): String = {
-    val base = new java.io.File("/root/repo/target/tmp-tests")
-    base.mkdirs()
-    Files.createTempDirectory(base.toPath, prefix).toString
   }
 
   /** 3×4×6 cube, 1×2×3 chunks → 2·2·2 = 12 chunk keys; two variables. */

@@ -6,16 +6,11 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Paths}
+import graft.TestDirs.tmpDir
 
 class ZarrSourceSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = GraftSession.builder("4").getOrCreate()
-
-  private def tmpDir(prefix: String): String = {
-    val base = new java.io.File("/root/repo/target/tmp-tests")
-    base.mkdirs()
-    Files.createTempDirectory(base.toPath, prefix).toString
-  }
 
   test("distributed write → read round-trip with edge chunks and fill") {
     import spark.implicits._

@@ -4,7 +4,7 @@ import graft.sources.ZarrSource
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
+import graft.TestDirs.tmpDir
 
 /** Consumed DATA-VARIABLE predicates in the DSv2 scan engine: `v > c`
   * style filters translate to interval sets the cursor re-evaluates per
@@ -19,12 +19,6 @@ class ZarrValuePushSpec extends AnyFunSuite {
     val s = GraftSession.builder("4").getOrCreate()
     s.conf.set("spark.sql.files.minPartitionNum", "100000")
     s
-  }
-
-  private def tmpDir(prefix: String): String = {
-    val base = new java.io.File("/root/repo/target/tmp-tests")
-    base.mkdirs()
-    Files.createTempDirectory(base.toPath, prefix).toString
   }
 
   /** 3×4×6 cube, 1×2×3 chunks; v = ti*1000 + yi*10 + xi, w has NaN at

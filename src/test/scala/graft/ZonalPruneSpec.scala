@@ -7,6 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
+import graft.TestDirs.tmpDir
 
 /** Or-of-rectangles geometry pruning (round-16): a feature layer's
   * per-dim bbox unions ship as consumed same-column Or filters — chunk
@@ -20,12 +21,6 @@ class ZonalPruneSpec extends AnyFunSuite {
     val s = GraftSession.builder("4").getOrCreate()
     s.conf.set("spark.sql.files.minPartitionNum", "100000")
     s
-  }
-
-  private def tmpDir(prefix: String): String = {
-    val base = new java.io.File("/root/repo/target/tmp-tests")
-    base.mkdirs()
-    Files.createTempDirectory(base.toPath, prefix).toString
   }
 
   /** 1×8×8 grid in 1×2×2 chunks (16 chunks), v = row-major ordinal. */
