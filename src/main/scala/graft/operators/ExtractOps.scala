@@ -90,17 +90,19 @@ object ExtractOps {
     * broadcast-small side by the API's own contract (a sensor list, a
     * user query), so collecting its distinct snapped indexes is
     * driver-metadata-sized — exactly what DPP's InSubqueryExec would
-    * have collected.
+    * have collected. The keys are deduplicated on the driver, not by a
+    * `distinct()` shuffle: a points table that is a local relation then
+    * collects through a local scan and runs no Spark job.
     */
   def pruneCellsForIndexes(cells: DataFrame, gm: GridMapping,
                            indexed: DataFrame,
                            yCol: String = "y", xCol: String = "x"): DataFrame = {
     val keys = indexed
       .filter(col("x_index") >= 0L && col("y_index") >= 0L)
-      .select(col("x_index"), col("y_index")).distinct().collect()
+      .select(col("x_index"), col("y_index")).collect()
     if (keys.isEmpty) return cells.filter(lit(false))
-    val xs = keys.map(r => gm.xForI(r.getLong(0))).distinct.toSeq
-    val ys = keys.map(r => gm.yForJ(r.getLong(1))).distinct.toSeq
+    val xs = keys.map(_.getLong(0)).distinct.map(gm.xForI).toSeq
+    val ys = keys.map(_.getLong(1)).distinct.map(gm.yForJ).toSeq
     cells.filter(col(xCol).isin(xs: _*) && col(yCol).isin(ys: _*))
   }
 

@@ -41,7 +41,7 @@ object AggPack extends QueryPack {
     */
   private def levelsFixture(s: SparkSession, d: String): String = {
     val root = s"/root/repo/.graft-fixtures/levels_${new java.io.File(d).getName}"
-    graft.Fixtures.ensureWritten(root, "levels=3,agg=mean,meta") {
+    graft.Fixtures.ensureWritten(root, "levels=3,agg=mean,meta,schema") {
       graft.sources.LevelStore.writeLevels(cellCube(s, d), root, 3)
     }
     root
@@ -51,7 +51,7 @@ object AggPack extends QueryPack {
     * `_levels.json` sidecar), for the aggregator-aware rewrite gate. */
   private def minLevelsFixture(s: SparkSession, d: String): String = {
     val root = s"/root/repo/.graft-fixtures/levelsmin_${new java.io.File(d).getName}"
-    graft.Fixtures.ensureWritten(root, "levels=3,agg=min,meta") {
+    graft.Fixtures.ensureWritten(root, "levels=3,agg=min,meta,schema") {
       graft.sources.LevelStore.writeLevels(cellCube(s, d), root, 3,
         methods = Seq("v" -> "min"))
     }

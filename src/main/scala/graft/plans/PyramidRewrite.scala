@@ -166,7 +166,7 @@ class PyramidRewrite(session: SparkSession) extends Rule[LogicalPlan] {
       // pyramid cell straddles two blocks
       if isMultiple(cur.xMin - x0, sx) && isMultiple(cur.yMin - y0, sy) &&
         isMultiple(cur.yMax - y0, sy)
-      nr <- session.read.parquet(s"$root/L${tgt.level}")
+      nr <- LevelStore.openLevel(session, root, tgt.level, Some(meta))
         .queryExecution.analyzed.collectFirst { case r: LogicalRelation => r }
       byName = nr.output.map(a => a.name -> a).toMap
       if lr.output.forall(o =>

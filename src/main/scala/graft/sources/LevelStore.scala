@@ -4,15 +4,23 @@ import graft.cube.{Cube, GridMapping}
 import graft.operators.SubsampleOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** `.levels`-style multi-resolution pyramid store (reference
   * mldataset/fs.py, level.py:139-258): one Parquet table per level,
   * `L0..Ln`, each level a 2×2 mean aggregation of the previous — the
   * materialized-aggregate form of MultiLevelDataset.
   *
-  * Levels are built progressively (L2 from L1, not from L0) so each build
-  * step shuffles only the previous level's already-reduced cell count; the
-  * whole pyramid costs ~4/3 of one pass over L0.
+  * Level k+1's plan aggregates level k's plan (progressive 2×2 blocks),
+  * but no written level is read back: each level write replays the whole
+  * lineage from the input cube, so writing Ln scans the input once more
+  * and runs n aggregations — L1 costs 2 jobs, L2 3.
+  *
+  * The `_levels.json` sidecar records each level's schema (every field
+  * nullable, as Parquet schema inference returns it), and every level is
+  * written in L0's column order, so levels that share L0's types share
+  * one recorded schema. [[openLevel]] reads with it and so runs no
+  * inference job; open a level only through it.
   */
 object LevelStore {
 
@@ -25,28 +33,50 @@ object LevelStore {
     */
   val MetaFileName = "_levels.json"
 
+  /** `schema` is set only where this level's schema differs from the
+    * pyramid's shared one (a variable whose aggregate changes its type, or
+    * one no level aggregation keeps). */
   final case class LevelMeta(level: Int, xMin: Double, yMin: Double,
                              yMax: Double, xRes: Double, yRes: Double,
-                             yDown: Boolean)
+                             yDown: Boolean, schema: Option[StructType] = None)
   /** `agg` records the per-variable level aggregation (mean/min/max/...)
     * so [[graft.plans.PyramidRewrite]] can retarget exactly the matching
     * aggregate and bail on any other; absent entries mean "mean" (the
-    * pre-aggregator-aware sidecar format). */
+    * pre-aggregator-aware sidecar format). `schema` is L0's schema, shared
+    * by every level without its own; None for a sidecar written before
+    * schemas were recorded. */
   final case class PyramidMeta(xCol: String, yCol: String, timeCol: String,
                                levels: Seq[LevelMeta],
-                               agg: Map[String, String] = Map.empty)
+                               agg: Map[String, String] = Map.empty,
+                               schema: Option[StructType] = None) {
+    /** The recorded schema of `level`, None when the sidecar has none. */
+    def levelSchema(level: Int): Option[StructType] =
+      levels.lift(level).flatMap(_.schema).orElse(schema)
+  }
+
+  /** The schema Parquet inference returns for a file written from `t`. */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType),
+      valueContainsNull = true)
+    case o => o
+  }
 
   private def writeMeta(root: String, cube: Cube, gms: Seq[GridMapping],
+                        schemas: Seq[StructType],
                         agg: Map[String, String]): Unit = {
-    val levels = gms.zipWithIndex.map { case (g, l) =>
+    val levels = gms.zip(schemas).zipWithIndex.map { case ((g, sc), l) =>
+      val own = if (sc == schemas.head) "" else s""","schema":${sc.json}"""
       s"""{"level":$l,"xMin":${g.xMin},"yMin":${g.yMin},"yMax":${g.yMax},""" +
-        s""""xRes":${g.xRes},"yRes":${g.yRes},"yDown":${g.yDown}}"""
+        s""""xRes":${g.xRes},"yRes":${g.yRes},"yDown":${g.yDown}$own}"""
     }
     val aggJson = agg.toSeq.sortBy(_._1)
       .map { case (v, m) => s""""$v":"$m"""" }.mkString(",")
     val json =
       s"""{"xCol":"${cube.xCol}","yCol":"${cube.yCol}","timeCol":"${cube.timeCol}",""" +
-        s""""agg":{$aggJson},""" +
+        s""""agg":{$aggJson},"schema":${schemas.head.json},""" +
         s""""levels":[${levels.mkString(",")}]}"""
     // through ByteStore: local pyramids keep the java.nio path, scheme'd
     // roots (s3g://...) write the sidecar as an object next to the levels
@@ -68,19 +98,22 @@ object LevelStore {
     val bytes = try in.readAllBytes() finally in.close()
     val m = new com.fasterxml.jackson.databind.ObjectMapper()
     val n = m.readTree(bytes)
+    def schemaOf(node: com.fasterxml.jackson.databind.JsonNode) =
+      Option(node.get("schema")).map(s =>
+        DataType.fromJson(s.toString).asInstanceOf[StructType])
     val levels = (0 until n.get("levels").size()).map { i =>
       val l = n.get("levels").get(i)
       LevelMeta(l.get("level").asInt, l.get("xMin").asDouble,
         l.get("yMin").asDouble, l.get("yMax").asDouble,
         l.get("xRes").asDouble, l.get("yRes").asDouble,
-        l.get("yDown").asBoolean)
+        l.get("yDown").asBoolean, schemaOf(l))
     }
     val agg = Option(n.get("agg")).filter(_.isObject).map { a =>
       import scala.jdk.CollectionConverters._
       a.properties.iterator.asScala.map(e => e.getKey -> e.getValue.asText).toMap
     }.getOrElse(Map.empty[String, String])
     Some(PyramidMeta(n.get("xCol").asText, n.get("yCol").asText,
-      n.get("timeCol").asText, levels, agg))
+      n.get("timeCol").asText, levels, agg, schemaOf(n)))
   }
 
   /** Build and write levels 0..maxLevel; returns the per-level grid
@@ -104,29 +137,38 @@ object LevelStore {
     require(!chosen.exists(_._2 == "count"),
       "count does not compose progressively (level k+1 would count level-k " +
         "cells, not base rows) — record counts as a summed variable instead")
-    var cur = cube
-    cur.df.write.mode("overwrite").parquet(levelPath(root, 0))
-    val gms = Seq.newBuilder[GridMapping]
-    gms += cur.gm
-    for (_ <- 1 to maxLevel) {
+    val order = cube.df.columns
+    val levels = (1 to maxLevel).scanLeft(cube) { (cur, _) =>
       val (agg, gm2) = SubsampleOps.subsample(cur, 2, chosen)
       val df2 = chosen.foldLeft(agg) { case (d, (v, m)) =>
         d.withColumnRenamed(s"${v}_$m", v)
       }
         .withColumn(cur.xCol, gm2.xExpr(col("block_i")))
         .withColumn(cur.yCol, gm2.yExpr(col("block_j")))
-        .drop("block_i", "block_j")
-      cur = Cube(df2, gm2, cur.timeCol, cur.yCol, cur.xCol)
-      cur.df.write.mode("overwrite").parquet(levelPath(root, gms.result().size))
-      gms += gm2
+      Cube(df2.select(order.filter(df2.columns.contains).map(col).toIndexedSeq: _*),
+        gm2, cur.timeCol, cur.yCol, cur.xCol)
     }
-    val out = gms.result()
-    writeMeta(root, cube, out, chosen.toMap)
-    out
+    levels.zipWithIndex.foreach { case (c, l) =>
+      c.df.write.mode("overwrite").parquet(levelPath(root, l))
+    }
+    val gms = levels.map(_.gm)
+    writeMeta(root, cube, gms,
+      levels.map(c => nullable(c.df.schema).asInstanceOf[StructType]),
+      chosen.toMap)
+    gms
   }
 
-  def openLevel(spark: SparkSession, root: String, level: Int): DataFrame =
-    spark.read.parquet(levelPath(root, level))
+  /** Level `level` of the pyramid at `root`, read with the schema its
+    * sidecar records, so opening runs no Spark job; Parquet schema
+    * inference (one job) only for a sidecar without a recorded schema.
+    * `meta` is the sidecar when the caller has already read it.
+    */
+  def openLevel(spark: SparkSession, root: String, level: Int,
+                meta: Option[PyramidMeta] = None): DataFrame = {
+    val schema = meta.orElse(readMeta(root, spark.sparkContext.hadoopConfiguration))
+      .flatMap(_.levelSchema(level))
+    schema.fold(spark.read)(spark.read.schema).parquet(levelPath(root, level))
+  }
 
   def listLevels(spark: SparkSession, root: String): Seq[Int] = {
     val fs = org.apache.hadoop.fs.FileSystem.get(

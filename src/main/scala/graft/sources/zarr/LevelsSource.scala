@@ -58,7 +58,7 @@ final class LevelsSource extends RelationProvider with DataSourceRegister {
           meta.levels.map(l => (l.xRes, l.yRes)), r.toDouble)
       case (None, None) => 0
     }
-    spark.read.parquet(s"$root/L$level").queryExecution.analyzed
+    LevelStore.openLevel(spark, root, level, Some(meta)).queryExecution.analyzed
       .collectFirst { case lr: LogicalRelation => lr.relation }
       .getOrElse(throw new IllegalStateException(
         s"$root/L$level: parquet level did not resolve to a relation"))

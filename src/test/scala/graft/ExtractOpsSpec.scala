@@ -36,4 +36,21 @@ class ExtractOpsSpec extends AnyFunSuite {
     assert(out(2L).isNaN) // in-range cell with no data
     assert(out(3L).isNaN) // out of range
   }
+
+  test("pruneCellsForIndexes over a local points table runs no Spark job") {
+    import spark.implicits._
+    val cells = (for (j <- 0 until 5; i <- 0 until 10)
+      yield (j + 0.5, i + 0.5, (j * 10 + i).toDouble)).toDF("y", "x", "v")
+    // two points share a cell; one is out of range
+    val pts = Seq((1L, 2.5, 3.5), (2L, 2.7, 3.2), (3L, 7.5, 0.5), (4L, -1.0, 1.0))
+      .toDF("id", "px", "py")
+    val indexed = ExtractOps.pointIndexes(pts, gm, "px", "py")
+    val (pruned, jobs) = JobCount.of(spark)(
+      ExtractOps.pruneCellsForIndexes(cells, gm, indexed))
+    assert(jobs == 0, s"$jobs jobs to collect the prune keys")
+    // x in {2.5, 7.5} × y in {3.5, 0.5}: the In filters keep their product
+    assert(pruned.select("v").as[Double].collect().sorted.toSeq ==
+      Seq(2.0, 7.0, 32.0, 37.0))
+  }
 }
+

@@ -249,4 +249,51 @@ class PyramidRewriteSpec extends AnyFunSuite {
     val sum = rows.map(_.getDouble(2)).sum
     assert(math.abs(sum - (0 until 64).map(_.toDouble).sum / 4) < 1e-9)
   }
+
+  test("planning a filtered overview opens the target level without a job") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val root = buildPyramid()
+    val base = spark.read.parquet(s"$root/L0")
+    val (plan, jobs) = JobCount.of(spark) {
+      base.filter(col("time") === lit("2024-01-01").cast("timestamp") &&
+          col("x") >= 4.0 && col("y") < 4.0)
+        .groupBy(floor(col("x") / 4.0).as("bi"), floor(col("y") / 4.0).as("bj"))
+        .agg(avg(col("v")).as("v"))
+        .queryExecution.executedPlan
+    }
+    assert(jobs == 0, s"$jobs jobs to plan the overview")
+    val scans = (plan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }).collect { case f: FileSourceScanExec =>
+      f.relation.location.rootPaths.mkString(",")
+    }
+    assert(scans.length == 1 && scans.head.endsWith("/L2"), scans)
+  }
+
+  test("a sidecar without a recorded schema still opens and rewrites") {
+    import com.fasterxml.jackson.databind.ObjectMapper
+    import com.fasterxml.jackson.databind.node.ObjectNode
+    val root = buildPyramid()
+    // the sidecar format written before schemas were recorded
+    val f = new java.io.File(root, LevelStore.MetaFileName)
+    val mapper = new ObjectMapper()
+    val doc = mapper.readTree(f).asInstanceOf[ObjectNode]
+    doc.remove("schema")
+    doc.get("levels").forEach(l => { l.asInstanceOf[ObjectNode].remove("schema"); () })
+    mapper.writeValue(f, doc)
+    val meta = LevelStore.readMeta(root).get
+    assert((0 to 2).forall(meta.levelSchema(_).isEmpty), meta)
+    for (l <- 0 to 2) {
+      val df = LevelStore.openLevel(spark, root, l)
+      assert(df.schema == spark.read.parquet(s"$root/L$l").schema)
+      assert(df.count() == 64 >> (2 * l))
+    }
+    val q = spark.read.parquet(s"$root/L0")
+      .groupBy(floor(col("x") / 4.0).as("bi"), floor(col("y") / 4.0).as("bj"))
+      .agg(avg(col("v")).as("v"))
+    assert(planOf(q).contains("/L2"), planOf(q))
+    assert(q.count() == 4)
+  }
 }

@@ -274,6 +274,13 @@ class S3EmulatorSpec extends AnyFunSuite {
     // the sidecar landed as an object and parses back
     val meta = LevelStore.readMeta(root, spark.sparkContext.hadoopConfiguration)
     assert(meta.exists(_.levels.size === 2))
+    // each level opens with its recorded schema, the one inference returns
+    // (L1 has its own: the string variable is not aggregated)
+    for (l <- 0 to 1) {
+      assert(meta.get.levelSchema(l).isDefined)
+      assert(LevelStore.openLevel(spark, root, l).schema ===
+        spark.read.parquet(s"$root/L$l").schema)
+    }
     val l0 = LevelStore.openLevel(spark, root, 0).count()
     val l1 = LevelStore.openLevel(spark, root, 1).count()
     assert(l0 > 0 && l1 > 0 && l1 <= l0)

@@ -34,6 +34,29 @@ class TileLevelSpec extends AnyFunSuite {
     assert(LevelStore.levelForResolution(gms, 100.0) == 2)
   }
 
+  test("LevelStore: openLevel reads the recorded schema and runs no Spark job") {
+    import spark.implicits._
+    val gm = GridMapping(8, 8, 0.0, 0.0, 1.0, 1.0)
+    val rows = for (j <- 0 until 8; i <- 0 until 8)
+      yield (t0, j + 0.5, i + 0.5, (j * 8 + i).toDouble, (64 - j * 8 - i).toDouble)
+    val cube = Cube(rows.toDF("time", "y", "x", "v", "w"), gm)
+    for (methods <- Seq(Seq.empty, Seq("v" -> "min", "w" -> "min"))) {
+      val root = TestDirs.tmpDir("levels_schema")
+      LevelStore.writeLevels(cube, root, 2, methods)
+      val meta = LevelStore.readMeta(root).get
+      // one shared schema: every level in L0's column order and types
+      assert(meta.schema.isDefined && meta.levels.forall(_.schema.isEmpty),
+        meta)
+      for (l <- 0 to 2) {
+        val (df, jobs) = JobCount.of(spark)(LevelStore.openLevel(spark, root, l))
+        assert(jobs == 0, s"$methods L$l: $jobs jobs to open the level")
+        assert(df.schema == spark.read.parquet(s"$root/L$l").schema,
+          s"$methods L$l")
+        assert(df.count() == 64 >> (2 * l))
+      }
+    }
+  }
+
   test("level-for-resolution advances only when BOTH axes exceed the ask") {
     // the reference rule (mldataset/abc.py:136-149): a level is passed
     // over only when x_res AND y_res both exceed the request — an x-only
