@@ -24,10 +24,29 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    no per-session jars or files, so isolation has nothing to isolate.
   *    A session built outside this builder pays a full code-generation
   *    pass on every such run.
+  *  - `file:` through [[graft.sources.NioLocalFileSystem]] (FileSystem)
+  *    and [[graft.sources.NioLocalFs]] (FileContext), which start no OS
+  *    process. Without Hadoop's native library the stock local
+  *    filesystem forks `chmod` for every file or directory it creates with
+  *    a permission (each Parquet part file, its `.crc`, each `_temporary`
+  *    directory) and `readlink` for every `FileContext.rename` (each
+  *    streaming checkpoint commit), at 2.4–3.5 ms a fork on 4 cores. One
+  *    JFR-recorded `ingest` benchmark run on 4 cores started 984
+  *    processes this way (458 `chmod`, 520 `readlink`; a streaming append
+  *    about 46, a three-level pyramid write 35); now it starts 6, all once
+  *    per JVM (Hadoop's `setsid` probe, Spark's `getconf PAGESIZE` and its
+  *    `rm -rf` of temp directories at shutdown). Hadoop's `FileSystem`
+  *    cache is JVM-wide and keyed by scheme and user, not by
+  *    configuration, so the first `file:` instance created wins; the
+  *    builder therefore also replaces a stock instance already cached
+  *    (see [[graft.sources.NioRawLocalFileSystem.claimCache]]), and the
+  *    install holds whatever ran before it. `FileContext` instances are
+  *    not cached.
   */
 object GraftSession {
   def builder(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")): SparkSession.Builder = {
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
+    graft.sources.NioRawLocalFileSystem.claimCache()
     SparkSession.builder()
       .master(master)
       .appName("graft")
@@ -68,14 +87,21 @@ object GraftSession {
       // overwrite only the partitions present in the written data — the
       // time-slice insert/replace primitive (graft.streaming.TimeSliceOps)
       .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      // catalog warehouse (bucketed tables) pinned inside the repo
-      .config("spark.sql.warehouse.dir", "/root/repo/target/spark-warehouse")
+      // catalog warehouse (bucketed tables) under the working directory's
+      // target/, i.e. inside the checkout running the program
+      .config("spark.sql.warehouse.dir",
+        java.nio.file.Paths.get("target", "spark-warehouse").toAbsolutePath.toString)
       // testdata parquet stores TIMESTAMP(NANOS) which Spark can't decode;
       // read as Long nanos and convert (see GraftSession.events).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // one executor classloader, and so one compiled-code cache, for the
       // root session and all its clones (see the scaladoc above)
       .config("spark.sql.artifact.isolation.enabled", "false")
+      // the fork-free local filesystem (see the scaladoc above)
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.sources.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.sources.NioLocalFs].getName)
   }
 
   def get(): SparkSession = {

@@ -52,7 +52,10 @@ object SubsampleOps {
 
   /** k×k block subsample: returns the aggregated DataFrame keyed by
     * (time, block_j, block_i) plus the derived level GridMapping. Output
-    * columns are named `<var>_<method>`.
+    * columns are named `<var>_<method>`. `first` of a non-numeric variable
+    * (a string class label, say) is the block's first non-null value in
+    * row-major cell order, taken without [[blockAgg]]'s NaN guard, whose
+    * cast to double would null a string out (or throw under ANSI).
     */
   def subsample(cube: Cube, k: Int, methods: Seq[(String, String)]): (DataFrame, GridMapping) = {
     val gm = cube.gm
@@ -60,7 +63,13 @@ object SubsampleOps {
     val bj = (gm.jExpr(cube.y) / k).cast("long").as("block_j")
     // row-major cell order: deterministic first/last within a block
     val ord = gm.jExpr(cube.y) * gm.width + gm.iExpr(cube.x)
-    val aggs = methods.map { case (v, m) => blockAgg(m, col(v), ord).as(s"${v}_$m") }
+    def numeric(v: String) = cube.df.schema(v).dataType
+      .isInstanceOf[org.apache.spark.sql.types.NumericType]
+    val aggs = methods.map {
+      case (v, "first") if !numeric(v) =>
+        min_by(col(v), when(col(v).isNotNull, ord)).as(s"${v}_first")
+      case (v, m) => blockAgg(m, col(v), ord).as(s"${v}_$m")
+    }
     val out = cube.df.groupBy(cube.time.as(cube.timeCol), bj, bi)
       .agg(aggs.head, aggs.tail: _*)
     (out, gm.scale(k.toDouble))

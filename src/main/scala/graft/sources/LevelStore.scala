@@ -121,17 +121,19 @@ object LevelStore {
     * subsampling.py AGG_METHODS — must compose progressively, since level
     * k+1 derives from level k: mean/min/max/sum/first qualify, count does
     * not); empty = `mean` for every numeric variable (the float default —
-    * subsampling.py auto rule). The chosen aggregators are recorded in
-    * the `_levels.json` sidecar so the pyramid-rewrite rule retargets
-    * only MATCHING aggregates.
+    * subsampling.py auto rule) and `first` in row-major block order for
+    * every other one (a string class label is carried, not dropped). The
+    * chosen aggregators are recorded in the `_levels.json` sidecar so the
+    * pyramid-rewrite rule retargets only MATCHING aggregates.
     */
   def writeLevels(cube: Cube, root: String, maxLevel: Int,
                   methods: Seq[(String, String)] = Seq.empty): Seq[GridMapping] = {
     val chosen: Seq[(String, String)] =
       if (methods.nonEmpty) methods
-      else cube.varNames.filter(v =>
-        cube.df.schema(v).dataType.isInstanceOf[org.apache.spark.sql.types.NumericType])
-        .map(_ -> "mean")
+      else cube.varNames.map(v => v -> (cube.df.schema(v).dataType match {
+        case _: org.apache.spark.sql.types.NumericType => "mean"
+        case _ => "first"
+      }))
     require(chosen.map(_._1).distinct.length == chosen.length,
       "one aggregation method per variable")
     require(!chosen.exists(_._2 == "count"),

@@ -28,9 +28,11 @@ import graft.sources.zarr.ChunkStats
   * reference's dask model: the CHUNK is the unit of parallelism in both
   * directions. [[readCube]] schedules one task per chunk (a 100 TB cube is
   * millions of chunk files decoded independently; coordinate arrays are
-  * 1-D driver-sized, broadcast). [[writeCube]] shuffles rows once by target
-  * chunk id and assembles/compresses/writes each chunk in its task with
-  * memory bounded by the chunk size — no driver gather, no global sort.
+  * 1-D driver-sized, broadcast). [[writeCube]] maps coordinate values to
+  * indices by binary search over the driver-held coordinates, shuffles
+  * rows once by target chunk id and assembles/compresses/writes each
+  * chunk in its task with memory bounded by the chunk size — no driver
+  * gather, no global sort.
   */
 object ZarrSource {
 
@@ -869,11 +871,14 @@ object ZarrSource {
   }
 
   /** The shared write-side layout step ([[writeCubeVars]], [[appendCube]]
-    * and [[ZarrV3Source.writeCube]]): broadcast-join each dim's (value →
-    * index) lookup, then compute (row-major chunk id over `grid`, in-chunk
-    * offset) with integer arithmetic. The per-row payload is the array of
-    * all variable values, so one shuffle by `__cid` downstream moves each
-    * input row exactly once.
+    * and [[ZarrV3Source.writeCube]]): map each dim's value to its index
+    * with [[graft.functions.CoordIndex]] (binary search over the
+    * driver-held `lookups`, no Spark job; a row whose value is not among
+    * them is dropped, as the inner join this replaces dropped it), then
+    * compute (row-major chunk id over `grid`, in-chunk offset) with
+    * integer arithmetic. The per-row payload is the array of all variable
+    * values, so one shuffle by `__cid` downstream moves each input row
+    * exactly once. Each dim's lookup values must be distinct.
     */
   private[sources] def cellsByChunkVars(df: DataFrame, dimNames: Seq[String],
                                         lookups: Seq[Seq[(Double, Int)]],
@@ -881,15 +886,17 @@ object ZarrSource {
                                         varNames: Seq[String]): org.apache.spark.sql.Dataset[(Long, Int, Seq[Double])] = {
     val spark = df.sparkSession
     import spark.implicits._
-    val withIdx = dimNames.zipWithIndex.foldLeft(df) { case (acc, (name, k)) =>
-      val lookup = lookups(k).toDF(s"__v$k", s"__i$k")
-      acc.join(broadcast(lookup), col(name) === col(s"__v$k"))
-    }
+    val idx = dimNames.indices.map(k => col(s"__i$k"))
+    val withIdx = df.select(dimNames.zip(lookups).zipWithIndex.map {
+        case ((name, lookup), k) =>
+          graft.functions.CoordIndex.col(col(name), lookup).as(s"__i$k")
+      } ++ varNames.map(col): _*)
+      .where(idx.map(_.isNotNull).reduce(_ && _))
     val cid = dimNames.indices.foldLeft(lit(0L)) { (acc, k) =>
-      acc * grid(k) + floor(col(s"__i$k") / chunks(k)).cast("long")
+      acc * grid(k) + floor(idx(k) / chunks(k)).cast("long")
     }
     val off = dimNames.indices.foldLeft(lit(0L)) { (acc, k) =>
-      acc * chunks(k) + (col(s"__i$k") % chunks(k))
+      acc * chunks(k) + (idx(k) % chunks(k))
     }
     withIdx.select(cid.as("__cid"), off.cast("int").as("__off"),
         array(varNames.map(col(_).cast("double")): _*).as("__vs"))
@@ -907,13 +914,18 @@ object ZarrSource {
 
   /** Distributed Zarr group writer: `df` holds one row per non-fill cell
     * with a column per dimension (values drawn EXACTLY from `dims`' coord
-    * arrays — the join below is an equality on doubles) plus `varName`.
+    * arrays — the lookup below is an equality on doubles; a row with a
+    * value not among them is dropped) plus `varName`. Each coord array
+    * holds distinct values.
     *
-    * Plan shape: broadcast-join each dim's (value → index) table, compute
-    * (chunk id, in-chunk offset) with integer arithmetic, shuffle ONCE by
-    * chunk id, assemble + zlib + write each chunk inside its task (memory
-    * bounded by chunk size). Cells with no row get the NaN fill; chunks
-    * with no rows at all are not written (spec: missing chunk = fill).
+    * Plan shape: map each dim's value to its index by binary search over
+    * the sorted coord array ([[graft.functions.CoordIndex]], evaluated in
+    * the scan's stage), compute (chunk id, in-chunk offset) with integer
+    * arithmetic, shuffle ONCE by chunk id, assemble + zlib + write each
+    * chunk inside its task (memory bounded by chunk size): two Spark jobs,
+    * the shuffle's map stage and the chunk writes. Cells with no row get
+    * the NaN fill; chunks with no rows at all are not written (spec:
+    * missing chunk = fill).
     */
   def writeCube(df: DataFrame, groupDir: String, varName: String,
                 dims: Seq[(String, Array[Double])], chunks: Seq[Int],
@@ -945,6 +957,12 @@ object ZarrSource {
     require(dims.length == chunks.length, "one chunk extent per dimension")
     require(varNames.nonEmpty, "at least one data variable")
     val shape = dims.map(_._2.length)
+    // ---- (value → index) lookups, chunk id + offset via integer
+    // arithmetic (shared layout step; checks the coords before any write),
+    // ONE shuffle by chunk id below
+    val grid = shape.zip(chunks).map { case (s0, c) => (s0 + c - 1) / c }
+    val cells = cellsByChunkVars(df, dims.map(_._1),
+      dims.map(_._2.zipWithIndex.toSeq), grid, chunks, varNames)
 
     // ---- metadata + driver-sized coordinate arrays
     val bs = ByteStore.current
@@ -1001,12 +1019,6 @@ object ZarrSource {
       ()
     }
     writeJson(s"$groupDir/.zmetadata", mapper.writeValueAsString(metaDoc))
-
-    // ---- (value → index) lookups broadcast-joined, chunk id + offset via
-    // integer arithmetic (shared layout step), ONE shuffle by chunk id
-    val grid = shape.zip(chunks).map { case (s0, c) => (s0 + c - 1) / c }
-    val cells = cellsByChunkVars(df, dims.map(_._1),
-      dims.map(_._2.zipWithIndex.toSeq), grid, chunks, varNames)
 
     // ---- each task materializes + writes one chunk object PER VARIABLE
     val chunkElems = chunks.product
@@ -1092,8 +1104,8 @@ object ZarrSource {
     val otherCoords: Seq[Array[Double]] = za.dims.tail.map(dim =>
       readAll(s"$groupDir/$dim", openArray(s"$groupDir/$dim")))
 
-    // (value → index) joins: dim 0 against the NEW coordinates only (global
-    // index = oldLen + position), the rest against the store's coords
+    // (value → index) lookups: dim 0 against the NEW coordinates only
+    // (global index = oldLen + position), the rest against the store's
     val lookups = (newCoord.zipWithIndex.map { case (v, i) => (v, oldLen + i) }.toSeq
       +: otherCoords.map(_.zipWithIndex.toSeq))
     val grid = shape.zip(chunks).map { case (s0, c) => (s0 + c - 1) / c }

@@ -488,7 +488,7 @@ object ZarrV3Source {
   }
 
   /** Distributed Zarr v3 group writer — same contract and plan shape as
-    * [[ZarrSource.writeCube]] (broadcast dim lookups, ONE shuffle by
+    * [[ZarrSource.writeCube]] (binary-search dim lookups, ONE shuffle by
     * stored-object id, per-task encode bounded by one object), with v3
     * metadata and, when `shardInner` is set, `sharding_indexed` objects:
     * the shuffle key is the SHARD id and each task encodes its inner
@@ -514,10 +514,15 @@ object ZarrV3Source {
     shardInner.foreach(inner => require(inner.length == chunks.length &&
       chunks.zip(inner).forall { case (c, i) => i > 0 && c % i == 0 },
       s"shard shape $chunks must be divisible by inner chunk shape $shardInner"))
+    val shape = dims.map(_._2.length)
+    // ---- one shuffle by stored-object (chunk or shard) id; the layout step
+    // checks the coords before any write
+    val grid = shape.zip(chunks).map { case (s0, c) => (s0 + c - 1) / c }
+    val cells = ZarrSource.cellsByChunkVars(df, dims.map(_._1),
+      dims.map(_._2.zipWithIndex.toSeq), grid, chunks, Seq(varName))
     // overwriting chunk objects of an existing identical grid is the one
     // mutation a stale ANALYZE sidecar would survive shape-checking
     ChunkStats.invalidate(groupDir)
-    val shape = dims.map(_._2.length)
 
     // ---- metadata: per-node zarr.json + inline consolidated metadata on
     // the group document (one GET opens every array)
@@ -544,10 +549,6 @@ object ZarrV3Source {
     cmMeta.set[JsonNode](varName, varDoc)
     writeJson(s"$groupDir/zarr.json", groupDoc)
 
-    // ---- one shuffle by stored-object (chunk or shard) id
-    val grid = shape.zip(chunks).map { case (s0, c) => (s0 + c - 1) / c }
-    val cells = ZarrSource.cellsByChunkVars(df, dims.map(_._1),
-      dims.map(_._2.zipWithIndex.toSeq), grid, chunks, Seq(varName))
     val chunkElems = chunks.product
     val arrayDir = s"$groupDir/$varName"
     val chain = if (steps.isEmpty) Raw else V3Chain(steps)

@@ -122,8 +122,10 @@ object TimeSliceOps {
     * is exactly arrival order; the distributed chunk-assembly shuffle
     * happens inside the batch, per slice.
     *
-    * A micro-batch is one labels job (a distinct per partition, no
-    * shuffle; a batch without labels is skipped) plus one write. Each run
+    * A micro-batch runs three Spark jobs: the labels job (a distinct per
+    * partition, no shuffle; a batch without labels is skipped), then the
+    * write's chunk-shuffle map stage and its chunk-write stage (the
+    * coordinate → index lookups run inside the map stage). Each run
     * clones the session: under [[graft.GraftSession.builder]] the clone
     * reuses the root's compiled code, while a session built outside it
     * (artifact isolation on) pays a full code-generation pass on every

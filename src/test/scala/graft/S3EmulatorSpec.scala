@@ -275,7 +275,7 @@ class S3EmulatorSpec extends AnyFunSuite {
     val meta = LevelStore.readMeta(root, spark.sparkContext.hadoopConfiguration)
     assert(meta.exists(_.levels.size === 2))
     // each level opens with its recorded schema, the one inference returns
-    // (L1 has its own: the string variable is not aggregated)
+    // (L1 carries the string variable with `first`, so shares L0's)
     for (l <- 0 to 1) {
       assert(meta.get.levelSchema(l).isDefined)
       assert(LevelStore.openLevel(spark, root, l).schema ===

@@ -182,10 +182,10 @@ class StorageStreamingSpec extends AnyFunSuite {
       BusDrain.drain(spark.sparkContext)
       q
     } finally spark.sparkContext.removeSparkListener(listener)
-    // the labels job, then the write: one collect job per broadcast
-    // (t, y, x) → index lookup, the chunk shuffle and the chunk-write stage
+    // the labels job, then the write: the chunk shuffle's map stage (which
+    // also maps (t, y, x) to indices) and the chunk-write stage
     val jobs = groups.toArray.count(_ == q.runId.toString)
-    assert(jobs == 6, s"$jobs jobs in the append micro-batch")
+    assert(jobs == 3, s"$jobs jobs in the append micro-batch")
     assert(zarrContents(group) == ((Seq(0.0, 1.0), zvals(0.0) ++ zvals(1.0))))
   }
 

@@ -34,6 +34,29 @@ class TileLevelSpec extends AnyFunSuite {
     assert(LevelStore.levelForResolution(gms, 100.0) == 2)
   }
 
+  test("LevelStore: a string variable is carried to every level as each block's first") {
+    import spark.implicits._
+    val gm = GridMapping(8, 8, 0.0, 0.0, 1.0, 1.0)
+    def label(j: Long, i: Long) = s"c$j.$i"
+    val rows = for (j <- 0L until 8L; i <- 0L until 8L)
+      yield (t0, gm.yForJ(j), gm.xForI(i), (j * 8 + i).toDouble, label(j, i))
+    val cube = Cube(rows.toDF("time", "y", "x", "v", "kind"), gm)
+    val root = TestDirs.tmpDir("levels_first")
+    val gms = LevelStore.writeLevels(cube, root, 2)
+    val meta = LevelStore.readMeta(root).get
+    assert(meta.agg == Map("v" -> "mean", "kind" -> "first"))
+    for (l <- 1 to 2) {
+      val k = 1L << l
+      val got = LevelStore.openLevel(spark, root, l, Some(meta))
+        .select(gms(l).jExpr(col("y")), gms(l).iExpr(col("x")), col("kind"))
+        .as[(Long, Long, String)].collect().toSet
+      // row-major block order: a block's first cell is its top-left one
+      val want = for (bj <- 0L until 8L / k; bi <- 0L until 8L / k)
+        yield (bj, bi, label(bj * k, bi * k))
+      assert(got == want.toSet, s"L$l")
+    }
+  }
+
   test("LevelStore: openLevel reads the recorded schema and runs no Spark job") {
     import spark.implicits._
     val gm = GridMapping(8, 8, 0.0, 0.0, 1.0, 1.0)
