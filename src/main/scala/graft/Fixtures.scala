@@ -15,6 +15,37 @@ package graft
 object Fixtures {
   private val marker = "_GRAFT_DONE"
 
+  /** `.graft-fixtures` under the working directory — the checkout running
+    * the queries, the same rule as the session's `spark.sql.warehouse.dir`.
+    * Outside `target/`, so `sbt clean` keeps the layouts. */
+  def root: String = new java.io.File(".graft-fixtures").getAbsolutePath
+
+  /** `<root>/<name>_<sf>`, where sf is the last component of `sfDir`. */
+  def path(sfDir: String, name: String): String =
+    s"$root/${name}_${new java.io.File(sfDir).getName}"
+
+  /** The write-once layout [[path]]`(sfDir, name)`: built by `write`, which
+    * is handed the created (empty) directory, unless it already carries
+    * `fingerprint` (see [[ensureWritten]]). Returns the directory. */
+  def layout(sfDir: String, name: String, fingerprint: String)(
+      write: String => Unit): String = {
+    val dir = path(sfDir, name)
+    ensureWritten(dir, fingerprint) {
+      new java.io.File(dir).mkdirs()
+      write(dir)
+    }
+    dir
+  }
+
+  /** A per-run scratch directory [[path]]`(sfDir, name)`, emptied and
+    * created afresh on every call. */
+  def scratch(sfDir: String, name: String): String = {
+    val dir = new java.io.File(path(sfDir, name))
+    deleteRecursively(dir)
+    dir.mkdirs()
+    dir.getPath
+  }
+
   private def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
     f.delete(); ()

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The query registry: every declared query with its oracle SQL.
   *
   * Queries are contributed by operator packs (graft.ops.*); each pack pairs
   * Spark DataFrame implementations with DuckDB oracle SQL over the same

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{GraftSession, QueryPack}
+import graft.{Fixtures, GraftSession, QueryPack}
 import graft.cube.Cube
 import graft.operators.{QuantileOps, StatsOps, SubsampleOps, TimeSeriesOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -39,24 +39,18 @@ object AggPack extends QueryPack {
   /** The materialized pyramid fixture (L0..L3 + `_levels.json` sidecar),
     * shared by q_pyramid and q_pyramid_rewrite.
     */
-  private def levelsFixture(s: SparkSession, d: String): String = {
-    val root = s"/root/repo/.graft-fixtures/levels_${new java.io.File(d).getName}"
-    graft.Fixtures.ensureWritten(root, "levels=3,agg=mean,meta,schema") {
+  private def levelsFixture(s: SparkSession, d: String): String =
+    Fixtures.layout(d, "levels", "levels=3,agg=mean,meta,schema") { root =>
       graft.sources.LevelStore.writeLevels(cellCube(s, d), root, 3)
     }
-    root
-  }
 
   /** A MIN-built pyramid over the same cells (aggregator recorded in the
     * `_levels.json` sidecar), for the aggregator-aware rewrite gate. */
-  private def minLevelsFixture(s: SparkSession, d: String): String = {
-    val root = s"/root/repo/.graft-fixtures/levelsmin_${new java.io.File(d).getName}"
-    graft.Fixtures.ensureWritten(root, "levels=3,agg=min,meta,schema") {
+  private def minLevelsFixture(s: SparkSession, d: String): String =
+    Fixtures.layout(d, "levelsmin", "levels=3,agg=min,meta,schema") { root =>
       graft.sources.LevelStore.writeLevels(cellCube(s, d), root, 3,
         methods = Seq("v" -> "min"))
     }
-    root
-  }
 
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -1,7 +1,8 @@
 package graft.ops
 
-import graft.{GraftSession, QueryPack}
+import graft.{Fixtures, GraftSession, QueryPack}
 import graft.operators.EventOps
+import graft.streaming.StatePartitioning.drain
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -21,8 +22,6 @@ object AnalyticsPack extends QueryPack {
   private val FunnelStages = Seq("view", "click", "purchase")
   private val WeekSec = 604800L
   private val GapSec = 1800L
-
-  private val streamCounter = new java.util.concurrent.atomic.AtomicInteger(0)
 
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -45,9 +44,8 @@ object AnalyticsPack extends QueryPack {
     // operator row-for-row — the oracle is literally q_sessionize's SQL
     "q_stream_sessionize" -> ((s, d) => {
       import graft.streaming.StatefulOps
-      val sfName = new java.io.File(d).getName
-      val fixDir = s"/root/repo/.graft-fixtures/sess_events_$sfName"
-      graft.Fixtures.ensureWritten(fixDir, "events(user,tsMicros,id),1file") {
+      val fixDir = Fixtures.layout(d, "sess_events",
+        "events(user,tsMicros,id),1file") { fixDir =>
         ev(s, d)
           .select(col("user_id").as("userId"),
             unix_micros(col("ts")).as("tsMicros"),
@@ -61,13 +59,7 @@ object AnalyticsPack extends QueryPack {
         .schema("userId LONG, tsMicros LONG, eventId LONG")
         .parquet(fixDir)
         .as[StatefulOps.SessEvent]
-      val tbl = s"q_stream_sessionize_${streamCounter.incrementAndGet()}"
-      val q = StatefulOps.streamingSessionize(rows, GapSec)
-        .toDF().writeStream.format("memory").queryName(tbl)
-        .outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      ss.table(tbl)
+      drain(StatefulOps.streamingSessionize(rows, GapSec), "update")
     }),
 
     // LAST-TOUCH attribution: each purchase credits the user's most
@@ -103,9 +95,8 @@ object AnalyticsPack extends QueryPack {
     // recent view + running totals); oracle = q_attribution's SQL verbatim
     "q_stream_attribution" -> ((s, d) => {
       import graft.streaming.StatefulOps
-      val sfName = new java.io.File(d).getName
-      val fixDir = s"/root/repo/.graft-fixtures/attr_events_$sfName"
-      graft.Fixtures.ensureWritten(fixDir, "events(user,type,tsMicros,id),1file") {
+      val fixDir = Fixtures.layout(d, "attr_events",
+        "events(user,type,tsMicros,id),1file") { fixDir =>
         ev(s, d)
           .filter(col("event_type").isin("view", "purchase"))
           .select(col("user_id").as("userId"),
@@ -121,13 +112,7 @@ object AnalyticsPack extends QueryPack {
         .schema("userId LONG, eventType STRING, tsMicros LONG, eventId LONG")
         .parquet(fixDir)
         .as[StatefulOps.AttrEvent]
-      val tbl = s"q_stream_attribution_${streamCounter.incrementAndGet()}"
-      val q = StatefulOps.streamingAttribution(rows, 7L * 86400L)
-        .toDF().writeStream.format("memory").queryName(tbl)
-        .outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      ss.table(tbl)
+      drain(StatefulOps.streamingAttribution(rows, 7L * 86400L), "update")
         .groupBy("user_id")
         .agg(max(col("n_purchases")).as("np"),
           max(col("n_attributed")).as("na"),
@@ -162,9 +147,8 @@ object AnalyticsPack extends QueryPack {
     // aggregate to the batch q_interarrival exactly
     "q_stream_interarrival" -> ((s, d) => {
       import graft.streaming.StatefulOps
-      val sfName = new java.io.File(d).getName
-      val fixDir = s"/root/repo/.graft-fixtures/gap_events_$sfName"
-      graft.Fixtures.ensureWritten(fixDir, "events(user,type,tsMicros,id),1file") {
+      val fixDir = Fixtures.layout(d, "gap_events",
+        "events(user,type,tsMicros,id),1file") { fixDir =>
         ev(s, d)
           .select(col("user_id").as("userId"),
             col("event_type").as("eventType"),
@@ -179,13 +163,7 @@ object AnalyticsPack extends QueryPack {
         .schema("userId LONG, eventType STRING, tsMicros LONG, eventId LONG")
         .parquet(fixDir)
         .as[StatefulOps.GapEvent]
-      val tbl = s"q_stream_interarrival_${streamCounter.incrementAndGet()}"
-      val q = StatefulOps.streamingInterarrival(rows)
-        .toDF().writeStream.format("memory").queryName(tbl)
-        .outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      ss.table(tbl)
+      drain(StatefulOps.streamingInterarrival(rows), "update")
         .groupBy("user_id", "event_type")
         .agg(max(col("n_gaps")).as("n"), max(col("sum_gap_micros")).as("sg"),
           min(col("min_gap")).as("mn"), max(col("max_gap")).as("mx"))
@@ -249,12 +227,7 @@ object AnalyticsPack extends QueryPack {
         .join(broadcast(weights), Seq("event_type"))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), sum(col("weight")).as("sum_weight"))
-      val tbl = s"q_stream_enrich_${streamCounter.incrementAndGet()}"
-      val q = stream.writeStream.format("memory").queryName(tbl)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      ss.table(tbl)
+      drain(stream, "complete")
     }),
 
     // SLIDING window frames, both kinds in one pass: a 4-row ROWS frame
@@ -300,9 +273,8 @@ object AnalyticsPack extends QueryPack {
     // holding the pair, n = sum of their converged counters)
     "q_stream_transitions" -> ((s, d) => {
       import graft.streaming.StatefulOps
-      val sfName = new java.io.File(d).getName
-      val fixDir = s"/root/repo/.graft-fixtures/trans_events_$sfName"
-      graft.Fixtures.ensureWritten(fixDir, "events(user,type,tsMicros,id),1file") {
+      val fixDir = Fixtures.layout(d, "trans_events",
+        "events(user,type,tsMicros,id),1file") { fixDir =>
         ev(s, d)
           .select(col("user_id").as("userId"),
             col("event_type").as("eventType"),
@@ -317,13 +289,7 @@ object AnalyticsPack extends QueryPack {
         .schema("userId LONG, eventType STRING, tsMicros LONG, eventId LONG")
         .parquet(fixDir)
         .as[StatefulOps.TransEvent]
-      val tbl = s"q_stream_transitions_${streamCounter.incrementAndGet()}"
-      val q = StatefulOps.streamingTransitions(rows)
-        .toDF().writeStream.format("memory").queryName(tbl)
-        .outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      ss.table(tbl)
+      drain(StatefulOps.streamingTransitions(rows), "update")
         .groupBy("user_id", "prev_type", "next_type")
         .agg(max(col("n")).as("nn")) // converged value per key
         .groupBy(col("prev_type"), col("next_type"))
@@ -359,12 +325,7 @@ object AnalyticsPack extends QueryPack {
       // late-click drop + state eviction the parameter exists for
       val joined = graft.streaming.StreamJoinOps.viewClickIntervalJoin(
         side("view", "v"), side("click", "c"), watermark = "40 days")
-      val tbl = s"q_stream_join_${streamCounter.incrementAndGet()}"
-      val q = joined.writeStream.format("memory").queryName(tbl)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      ss.table(tbl).groupBy(col("v_user").as("user_id"))
+      drain(joined, "append").groupBy(col("v_user").as("user_id"))
         .agg(count(lit(1)).as("n_pairs"),
           sum(unix_micros(col("c_ts")) - unix_micros(col("v_ts")))
             .as("sum_lag_micros"),
@@ -406,10 +367,9 @@ object AnalyticsPack extends QueryPack {
     // update-sink appends)
     "q_stream_retention" -> ((s, d) => {
       import graft.streaming.StatefulOps
-      val sfName = new java.io.File(d).getName
       val busec = WeekSec * 1000000L
-      val fixDir = s"/root/repo/.graft-fixtures/ret_events_$sfName"
-      graft.Fixtures.ensureWritten(fixDir, "events(user,weekbucket),1file") {
+      val fixDir = Fixtures.layout(d, "ret_events",
+        "events(user,weekbucket),1file") { fixDir =>
         ev(s, d)
           .select(col("user_id").as("userId"),
             expr(s"unix_micros(ts) div ${busec}L").as("bucket"))
@@ -422,13 +382,7 @@ object AnalyticsPack extends QueryPack {
         .schema("userId LONG, bucket LONG")
         .parquet(fixDir)
         .as[StatefulOps.RetEvent]
-      val tbl = s"q_stream_retention_${streamCounter.incrementAndGet()}"
-      val q = StatefulOps.streamingRetention(rows)
-        .toDF().writeStream.format("memory").queryName(tbl)
-        .outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      ss.table(tbl)
+      drain(StatefulOps.streamingRetention(rows), "update")
         .groupBy("user_id", "cohort_bk", "offset")
         .agg(max(col("n_events")).as("n"))
         .groupBy(timestamp_micros(col("cohort_bk") * busec).as("cohort_start"),
@@ -442,9 +396,8 @@ object AnalyticsPack extends QueryPack {
     // sequential per-user mins — oracle is q_funnel's SQL verbatim
     "q_stream_funnel" -> ((s, d) => {
       import graft.streaming.StatefulOps
-      val sfName = new java.io.File(d).getName
-      val fixDir = s"/root/repo/.graft-fixtures/funnel_events_$sfName"
-      graft.Fixtures.ensureWritten(fixDir, "events(user,type,tsMicros,id),1file") {
+      val fixDir = Fixtures.layout(d, "funnel_events",
+        "events(user,type,tsMicros,id),1file") { fixDir =>
         ev(s, d)
           .select(col("user_id").as("userId"),
             col("event_type").as("eventType"),
@@ -459,13 +412,7 @@ object AnalyticsPack extends QueryPack {
         .schema("userId LONG, eventType STRING, tsMicros LONG, eventId LONG")
         .parquet(fixDir)
         .as[StatefulOps.FunnelEvent]
-      val tbl = s"q_stream_funnel_${streamCounter.incrementAndGet()}"
-      val q = StatefulOps.streamingFunnel(rows, FunnelStages)
-        .toDF().writeStream.format("memory").queryName(tbl)
-        .outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val st = ss.table(tbl)
+      val st = drain(StatefulOps.streamingFunnel(rows, FunnelStages), "update")
       FunnelStages.zipWithIndex.map { case (stName, i) =>
         val stepSum =
           if (i == 0) sum(lit(0L))

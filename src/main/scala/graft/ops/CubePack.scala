@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{GraftSession, QueryPack}
+import graft.{Fixtures, GraftSession, QueryPack}
 import graft.cube.{Cube, GridMapping}
 import graft.functions.MaskSet
 import graft.operators.{Evaluate, GeomOps, SelectOps}
@@ -154,13 +154,10 @@ object CubePack extends QueryPack {
       import graft.gen.{DefaultInputProcessor, InputProcessors}
       import graft.sources.NetcdfSource
       import NetcdfSource.NcDim
-      val sfName = new java.io.File(d).getName
-      val base = s"/root/repo/.graft-fixtures/geniproc_$sfName"
-      val paths = (0 to 1).map(g => s"$base/granule$g.nc")
-      graft.Fixtures.ensureWritten(base, "2 granules, 10x20, day-stamped") {
-        new java.io.File(base).mkdirs()
+      val base = Fixtures.layout(d, "geniproc",
+        "2 granules, 10x20, day-stamped") { base =>
         (0 to 1).foreach { g =>
-          NetcdfSource.write(paths(g),
+          NetcdfSource.write(s"$base/granule$g.nc",
             Seq(NcDim("time", 1), NcDim("y", 10), NcDim("x", 20)),
             Seq(("time", Array(g * 86400.0)),
               ("y", Array.tabulate(10)(_ + 0.5)),
@@ -169,6 +166,7 @@ object CubePack extends QueryPack {
               Array.tabulate(200)(c => ((c + g) % 32).toDouble / 4.0))))
         }
       }
+      val paths = (0 to 1).map(g => s"$base/granule$g.nc")
       val srcGm = GridMapping(20, 10, 0.0, 0.0, 1.0, 1.0)
       val tgtGm = GridMapping(10, 5, 0.0, 0.0, 2.0, 2.0)
       InputProcessors.register(new DefaultInputProcessor("netcdf", "time") {

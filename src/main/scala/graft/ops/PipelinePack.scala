@@ -1,8 +1,9 @@
 package graft.ops
 
-import graft.{Cuts, GraftSession, QueryPack}
+import graft.{Cuts, Fixtures, GraftSession, QueryPack}
 import graft.Cuts.withCuts
 import graft.operators.{BloomOps, BpeOps, ClassifierOps, ClusterOps, EmbeddingOps, IndexOps, IvfOps, LmOps, MediaCodecs, MultimodalOps, PcaOps, SampleOps, SketchOps, TextOps}
+import graft.streaming.StatePartitioning.drain
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -145,8 +146,6 @@ object PipelinePack extends QueryPack {
   private val SemDegCap = 200
   private val SubstrClones = 3000
   private val SubstrBoiler = (0 until 20).map(i => s"boiler$i").mkString(" ")
-
-  private val streamCounter = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** q_hll's oracle — also gates the streamed register fold. */
   private val hllSql: String =
@@ -397,12 +396,7 @@ object PipelinePack extends QueryPack {
         .option("pathGlobFilter", "events.parquet").parquet(d)
         .transform(GraftSession.normalizeTs(_))
       val regs = hllRegisters(stream.select(col("user_id")))
-      val tbl = s"q_stream_hll_${streamCounter.incrementAndGet()}"
-      val q = regs.writeStream.format("memory").queryName(tbl)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      hllEstimate(ss.table(tbl),
+      hllEstimate(drain(regs, "complete"),
         GraftSession.events(s, d).agg(countDistinct(col("user_id")).as("nd")))
     }),
 
@@ -681,11 +675,9 @@ object PipelinePack extends QueryPack {
     // change (perms/bands/cap/threshold/split) rebuilds the fixture, so
     // the oracle semantics are unchanged.
     "q_dedup_clusters_incremental" -> ((s, d) => {
-      val sfName = new java.io.File(d).getName
-      val base = s"/root/repo/.graft-fixtures/inc_cc_$sfName"
-      graft.Fixtures.ensureWritten(base,
+      val base = Fixtures.layout(d, "inc_cc",
         s"perms=$NumPerms,rpb=$RowsPerBand,cap=$MaxBucket,j=0.5,mod5," +
-          "shingle3") { withCuts { c =>
+          "shingle3") { base => withCuts { c =>
         val sigs = TextOps.minhashSignatures(
           TextOps.shingleArrays(docs(s, d), "doc_id", "text", 3), "doc_id",
           NumPerms)
@@ -721,10 +713,8 @@ object PipelinePack extends QueryPack {
     // per-bucket docId-ordered fold is the same greedy the oracle computes.
     "q_stream_neardup" -> ((s, d) => {
       import graft.streaming.StatefulOps
-      val sfName = new java.io.File(d).getName
-      val fixDir = s"/root/repo/.graft-fixtures/neardup_bands_$sfName"
-      graft.Fixtures.ensureWritten(fixDir,
-        s"perms=$NumPerms,rpb=$RowsPerBand,clones=5,shingle3") {
+      val fixDir = Fixtures.layout(d, "neardup_bands",
+        s"perms=$NumPerms,rpb=$RowsPerBand,clones=5,shingle3") { fixDir =>
         val dd = docs(s, d).select(col("doc_id"), col("text"))
         val tmpl = dd.agg(min(col("doc_id")).as("doc_id")).join(dd, Seq("doc_id"))
           .select(col("text"))
@@ -748,13 +738,8 @@ object PipelinePack extends QueryPack {
         .schema("docId LONG, bandKey STRING, sig ARRAY<LONG>")
         .parquet(fixDir)
         .as[StatefulOps.BandRow]
-      val tbl = s"q_stream_neardup_${streamCounter.incrementAndGet()}"
-      val q = StatefulOps.streamingNearDup(rows, threshold = 1.0, maxBucket = 100)
-        .toDF().writeStream.format("memory").queryName(tbl)
-        .outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      ss.table(tbl).agg(
+      drain(StatefulOps.streamingNearDup(rows, threshold = 1.0, maxBucket = 100),
+        "update").agg(
         count(lit(1)).as("n_hits"),
         countDistinct(col("doc_id")).as("n_flagged"),
         sum(col("doc_id")).cast("long").as("doc_sum"),
@@ -1434,9 +1419,8 @@ object PipelinePack extends QueryPack {
     // incremental == rebuild bit for bit.
     "q_bm25_incremental" -> ((s, d) => {
       val terms = Bm25QueryTerms.map(_._2).distinct
-      val sfName = new java.io.File(d).getName
-      val base = s"/root/repo/.graft-fixtures/bm25idx_$sfName"
-      graft.Fixtures.ensureWritten(base, s"split=mod10,terms=${terms.length}") {
+      val base = Fixtures.layout(d, "bm25idx",
+        s"split=mod10,terms=${terms.length}") { base =>
         val b = IndexOps.buildBmIndex(
           docs(s, d).filter(col("doc_id") % 10 =!= 0), "doc_id", "text", terms)
         b.tf.write.mode("overwrite").parquet(s"$base/tf")

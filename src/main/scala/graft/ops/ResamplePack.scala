@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{GraftSession, QueryPack}
+import graft.{Fixtures, GraftSession, QueryPack}
 import graft.cube.GridMapping
 import graft.operators.{AffineOps, PolarOps, RectifyExactOps, RectifyOps, ReprojectOps, SpatialOps, UtmOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -465,15 +465,12 @@ object ResamplePack extends QueryPack {
       import graft.cube.CfGridMapping
       import graft.sources.NetcdfSource
       import NetcdfSource.NcDim
-      val sfName = new java.io.File(d).getName
-      val base = s"/root/repo/.graft-fixtures/cfgrid_$sfName"
-      val path = s"$base/lcc.nc"
-      graft.Fixtures.ensureWritten(base, "lcc-granule,20x16,cf-attrs") {
-        new java.io.File(base).mkdirs()
+      val base = Fixtures.layout(d, "cfgrid",
+        "lcc-granule,20x16,cf-attrs") { base =>
         val xs = Array.tabulate(20)(i => 700000.0 + 4000.0 * i)
         val ys = Array.tabulate(16)(j => 6600000.0 - 4000.0 * j)
         val vv = Array.tabulate(16 * 20)(k => (k % 97).toDouble / 4.0)
-        NetcdfSource.write(path, Seq(NcDim("y", 16), NcDim("x", 20)),
+        NetcdfSource.write(s"$base/lcc.nc", Seq(NcDim("y", 16), NcDim("x", 20)),
           Seq(("y", ys), ("x", xs)),
           Seq(("lambert_conformal_conic", Nil, Array(0.0)),
             ("v", Seq("y", "x"), vv)),
@@ -484,6 +481,7 @@ object ResamplePack extends QueryPack {
             "x" -> Seq("standard_name" -> "projection_x_coordinate"),
             "y" -> Seq("standard_name" -> "projection_y_coordinate")))
       }
+      val path = s"$base/lcc.nc"
       val nc = NetcdfSource.read(path)
       val cm = CfGridMapping.fromNetcdf(nc)
       require(cm.isRegular && cm.gm.crs == "EPSG:2154" && cm.gm.yDown,
@@ -506,11 +504,8 @@ object ResamplePack extends QueryPack {
     "q_cf_gridmapping_zarr" -> ((s, d) => {
       import graft.cube.CfGridMapping
       import graft.sources.ZarrSource
-      val sfName = new java.io.File(d).getName
-      val base = s"/root/repo/.graft-fixtures/cfgridzarr_$sfName"
-      val g = s"$base/lcc.zarr"
-      graft.Fixtures.ensureWritten(base, "lcc-zarr,20x16,cf-attached") {
-        new java.io.File(base).mkdirs()
+      val base = Fixtures.layout(d, "cfgridzarr",
+        "lcc-zarr,20x16,cf-attached") { base =>
         val xs = Array.tabulate(20)(i => 700000.0 + 4000.0 * i)
         val ys = Array.tabulate(16)(j => 6600000.0 - 4000.0 * j)
         val cells = s.range(320).select(
@@ -520,10 +515,11 @@ object ResamplePack extends QueryPack {
             (lit(700000.0) + col("i").cast("double") * 4000.0).as("x"),
             (((col("j") * 20 + col("i")) % 97).cast("double") / 4.0)
               .as("v"))
-        ZarrSource.writeCubeVars(cells, g, Seq("v"),
+        ZarrSource.writeCubeVars(cells, s"$base/lcc.zarr", Seq("v"),
           Seq("y" -> ys, "x" -> xs), chunks = Seq(8, 10))
-        CfGridMapping.attachToZarr(g, "EPSG:2154", "x", "y")
+        CfGridMapping.attachToZarr(s"$base/lcc.zarr", "EPSG:2154", "x", "y")
       }
+      val g = s"$base/lcc.zarr"
       val cm = CfGridMapping.fromZarr(g)
       require(cm.isRegular && cm.gm.crs == "EPSG:2154" && cm.gm.yDown,
         s"zarr CF derivation drifted: ${cm.gm}")
@@ -544,17 +540,15 @@ object ResamplePack extends QueryPack {
     // serves FOUR discovery routes (CF attrs, zarr attrs, WKT, GeoKeys)
     "q_cf_gridmapping_tiff" -> ((s, d) => {
       import graft.sources.{DataStore, GeoTiffSource}
-      val sfName = new java.io.File(d).getName
-      val base = s"/root/repo/.graft-fixtures/cfgridtiff_$sfName"
-      val path = s"$base/lcc.tif"
-      graft.Fixtures.ensureWritten(base, "lcc-granule,20x16,geokeys") {
-        new java.io.File(base).mkdirs()
+      val base = Fixtures.layout(d, "cfgridtiff",
+        "lcc-granule,20x16,geokeys") { base =>
         val vv = Array.tabulate(16 * 20)(k => (k % 97).toDouble / 4.0)
-        GeoTiffSource.write(path,
+        GeoTiffSource.write(s"$base/lcc.tif",
           GeoTiffSource.Raster(20, 16, vv, 4000.0, 4000.0,
             698000.0, 6602000.0),
           crs = Some("EPSG:2154"))
       }
+      val path = s"$base/lcc.tif"
       val (df, cm) = DataStore.openGrid(s, path)
       require(cm.isRegular && cm.gm.crs == "EPSG:2154" && cm.gm.yDown,
         s"GeoKey derivation drifted: ${cm.gm}")
@@ -577,9 +571,6 @@ object ResamplePack extends QueryPack {
       import graft.cube.CfGridMapping
       import graft.sources.NetcdfSource
       import NetcdfSource.NcDim
-      val sfName = new java.io.File(d).getName
-      val base = s"/root/repo/.graft-fixtures/cfgridwkt_$sfName"
-      val path = s"$base/lcc_wkt.nc"
       val wkt = """PROJCS["RGF93 / Lambert-93",GEOGCS["RGF93",""" +
         """DATUM["Reseau_Geodesique_Francais_1993",""" +
         """SPHEROID["GRS 1980",6378137,298.257222101]],""" +
@@ -591,12 +582,12 @@ object ResamplePack extends QueryPack {
         """PARAMETER["central_meridian",3],""" +
         """PARAMETER["false_easting",700000],""" +
         """PARAMETER["false_northing",6600000],UNIT["metre",1]]"""
-      graft.Fixtures.ensureWritten(base, "lcc-granule,20x16,wkt-only") {
-        new java.io.File(base).mkdirs()
+      val base = Fixtures.layout(d, "cfgridwkt",
+        "lcc-granule,20x16,wkt-only") { base =>
         val xs = Array.tabulate(20)(i => 700000.0 + 4000.0 * i)
         val ys = Array.tabulate(16)(j => 6600000.0 - 4000.0 * j)
         val vv = Array.tabulate(16 * 20)(k => (k % 97).toDouble / 4.0)
-        NetcdfSource.write(path, Seq(NcDim("y", 16), NcDim("x", 20)),
+        NetcdfSource.write(s"$base/lcc_wkt.nc", Seq(NcDim("y", 16), NcDim("x", 20)),
           Seq(("y", ys), ("x", xs)),
           Seq(("crs", Nil, Array(0.0)),
             ("v", Seq("y", "x"), vv)),
@@ -606,6 +597,7 @@ object ResamplePack extends QueryPack {
             "x" -> Seq("standard_name" -> "projection_x_coordinate"),
             "y" -> Seq("standard_name" -> "projection_y_coordinate")))
       }
+      val path = s"$base/lcc_wkt.nc"
       val nc = NetcdfSource.read(path)
       val cm = CfGridMapping.fromNetcdf(nc)
       require(cm.isRegular && cm.gm.crs == "EPSG:2154" && cm.gm.yDown,

@@ -24,6 +24,13 @@ object ServingPack extends QueryPack {
 
   private def embs(s: SparkSession, d: String) = GraftSession.table(s, d, "embeddings")
 
+  /** The IVF index over the whole corpus, shared by q_ivf_ann and
+    * q_ivf_ann_batch; returns its directory. */
+  private def ivfFixture(s: SparkSession, d: String): String =
+    Fixtures.layout(d, "ivf", "cells=4,seed=42,iter=5") { path =>
+      IvfOps.save(IvfOps.build(embs(s, d), "vec_id", "embedding", nCells = 4), path)
+    }
+
   /** Daily decimal-mean grid of the events cube for one day: dense 100×360
     * row-major [j * 360 + i], NaN where the day has no events in a cell —
     * the shared raster-fixture builder for q_netcdf / q_geotiff (one
@@ -48,11 +55,8 @@ object ServingPack extends QueryPack {
     */
   private def netcdfFixture(s: SparkSession, d: String): Seq[String] = {
     import NetcdfSource.NcDim
-    val sfName = new java.io.File(d).getName
-    val base = s"/root/repo/.graft-fixtures/netcdf_$sfName"
     val days = Seq("2024-01-01", "2024-01-02")
-    Fixtures.ensureWritten(base, "days=2,grid=360x100,mean6") {
-      new java.io.File(base).mkdirs()
+    val base = Fixtures.layout(d, "netcdf", "days=2,grid=360x100,mean6") { base =>
       for (day <- days) {
         NetcdfSource.write(s"$base/$day.nc",
           Seq(NcDim("y", 100), NcDim("x", 360)),
@@ -65,16 +69,14 @@ object ServingPack extends QueryPack {
   }
 
   /** Build (once per sf) the two daily-mean NetCDF-4 (HDF5) granules —
-    * chunked 50×90 with shuffle+deflate. Shared by q_netcdf4 and
-    * q_netcdf_dsv2. Returns the fixture dir.
+    * chunked 50×90 with shuffle+deflate. Shared by q_netcdf4,
+    * q_kerchunk_hdf5 and q_netcdf_dsv2. Returns the fixture dir.
     */
   private def netcdf4Fixture(s: SparkSession, d: String): String = {
     import NetcdfSource.NcDim
-    val sfName = new java.io.File(d).getName
-    val base = s"/root/repo/.graft-fixtures/netcdf4_$sfName"
     val days = Seq("2024-01-01", "2024-01-02")
-    Fixtures.ensureWritten(base, "days=2,grid=360x100,hdf5,chunks=50x90,shuffle+deflate,mean6") {
-      new java.io.File(base).mkdirs()
+    val base = Fixtures.layout(d, "netcdf4",
+      "days=2,grid=360x100,hdf5,chunks=50x90,shuffle+deflate,mean6") { base =>
       for (day <- days) {
         Hdf5Source.write(s"$base/$day.nc",
           Seq(NcDim("y", 100), NcDim("x", 360)),
@@ -96,10 +98,10 @@ object ServingPack extends QueryPack {
     */
   private def sentinel3Fixture(s: SparkSession, d: String): String = {
     import NetcdfSource.NcDim
-    val sfName = new java.io.File(d).getName
-    val base = s"/root/repo/.graft-fixtures/sentinel3_$sfName"
-    val prod = s"$base/S3A_OL_2_TEST.SEN3"
-    Fixtures.ensureWritten(base, "grid=360x100,bands=chl+tsm,decoys=tp+named+1d,mean6") {
+    val product = "S3A_OL_2_TEST.SEN3"
+    val base = Fixtures.layout(d, "sentinel3",
+      "grid=360x100,bands=chl+tsm,decoys=tp+named+1d,mean6") { base =>
+      val prod = s"$base/$product"
       new java.io.File(prod).mkdirs()
       val grid = Seq(NcDim("rows", 100), NcDim("columns", 360))
       NetcdfSource.write(s"$prod/geo_coordinates.nc", grid, Nil,
@@ -120,7 +122,7 @@ object ServingPack extends QueryPack {
         Seq(("TP_latitude", Seq("tp_rows", "tp_columns"), Array.fill(360)(1.0)),
           ("fake_band", Seq("lines", "samples"), Array.fill(36000)(2.0))))
     }
-    prod
+    s"$base/$product"
   }
 
   /** Build (once per sf) the 4x100x360 dyadic-valued zarr cube (chunks
@@ -130,11 +132,8 @@ object ServingPack extends QueryPack {
     */
   private def zarrAggPushFixture(s: SparkSession, d: String,
                                  tag: String = "zarraggpush"): String = {
-    val base =
-      s"/root/repo/.graft-fixtures/${tag}_${new java.io.File(d).getName}"
-    val group = s"$base/cube.zarr"
-    Fixtures.ensureWritten(base, "t=4,grid=100x360,chunks=1x50x90,dyadic64") {
-      new java.io.File(base).mkdirs()
+    val base = Fixtures.layout(d, tag,
+      "t=4,grid=100x360,chunks=1x50x90,dyadic64") { base =>
       val cells = s.range(4L * 100 * 360).select(
         (col("id") / (100L * 360)).cast("long").as("ti"),
         ((col("id") / 360) % 100).cast("long").as("j"),
@@ -143,13 +142,13 @@ object ServingPack extends QueryPack {
           (col("j") + 0.5).cast("double").as("y"),
           (col("i") + 0.5).cast("double").as("x"),
           (((col("j") * 360 + col("i") + col("ti") * 7) % 4096) / 64.0).as("v"))
-      ZarrSource.writeCube(cells, group, "v",
+      ZarrSource.writeCube(cells, s"$base/cube.zarr", "v",
         Seq("t" -> Array.tabulate(4)(_.toDouble),
           "y" -> Array.tabulate(100)(_ + 0.5),
           "x" -> Array.tabulate(360)(_ + 0.5)),
         chunks = Seq(1, 50, 90))
     }
-    group
+    s"$base/cube.zarr"
   }
 
   /** [[zarrAggPushFixture]]'s cell formula plus a spatially-monotone
@@ -160,12 +159,8 @@ object ServingPack extends QueryPack {
     * a handful of chunks; `v` cycles everywhere, so aggregates on it
     * exercise the mixed decode path. */
   private def zarrStatsFixture(s: SparkSession, d: String): String = {
-    val base =
-      s"/root/repo/.graft-fixtures/zarrstats_${new java.io.File(d).getName}"
-    val group = s"$base/cube.zarr"
-    Fixtures.ensureWritten(base,
-      "t=4,grid=100x360,chunks=1x50x90,dyadic64+monotone,analyzed") {
-      new java.io.File(base).mkdirs()
+    val base = Fixtures.layout(d, "zarrstats",
+      "t=4,grid=100x360,chunks=1x50x90,dyadic64+monotone,analyzed") { base =>
       val cells = s.range(4L * 100 * 360).select(
         col("id"),
         (col("id") / (100L * 360)).cast("long").as("ti"),
@@ -176,15 +171,15 @@ object ServingPack extends QueryPack {
           (col("i") + 0.5).cast("double").as("x"),
           (((col("j") * 360 + col("i") + col("ti") * 7) % 4096) / 64.0).as("v"),
           (col("id") / 64.0).as("m"))
-      ZarrSource.writeCubeVars(cells, group, Seq("v", "m"),
+      ZarrSource.writeCubeVars(cells, s"$base/cube.zarr", Seq("v", "m"),
         Seq("t" -> Array.tabulate(4)(_.toDouble),
           "y" -> Array.tabulate(100)(_ + 0.5),
           "x" -> Array.tabulate(360)(_ + 0.5)),
         chunks = Seq(1, 50, 90))
-      graft.sources.zarr.ChunkStats.analyze(s, group)
+      graft.sources.zarr.ChunkStats.analyze(s, s"$base/cube.zarr")
       ()
     }
-    group
+    s"$base/cube.zarr"
   }
 
   /** Serving-shaped SHARDED v3 cube — 1×2048×2048 in 1×512×512 shards
@@ -195,12 +190,8 @@ object ServingPack extends QueryPack {
     * inner-chunk granularity while shard ranges overlap (the case
     * chunk-granular zone maps cannot prune). */
   private def zarrSubchunkFixture(s: SparkSession, d: String): String = {
-    val base =
-      s"/root/repo/.graft-fixtures/zarrsubchunk_${new java.io.File(d).getName}"
-    val group = s"$base/cube.zarr"
-    Fixtures.ensureWritten(base,
-      "grid=1x2048x2048,shards=512,inner=128,blockaligned,stats") {
-      new java.io.File(base).mkdirs()
+    val base = Fixtures.layout(d, "zarrsubchunk",
+      "grid=1x2048x2048,shards=512,inner=128,blockaligned,stats") { base =>
       val cells = s.range(2048L * 2048).select(
         (col("id") / 2048L).cast("long").as("j"),
         (col("id") % 2048L).cast("long").as("i"))
@@ -210,14 +201,14 @@ object ServingPack extends QueryPack {
           (expr("(j div 128) * 16 + (i div 128)").cast("double") +
             expr("(j % 128) * 128 + (i % 128)").cast("double") / 32768.0)
             .as("v"))
-      graft.sources.ZarrV3Source.writeCube(cells, group, "v",
+      graft.sources.ZarrV3Source.writeCube(cells, s"$base/cube.zarr", "v",
         Seq("t" -> Array(0.0),
           "y" -> Array.tabulate(2048)(_ + 0.5),
           "x" -> Array.tabulate(2048)(_ + 0.5)),
         chunks = Seq(1, 512, 512), shardInner = Some(Seq(1, 128, 128)),
         stats = true)
     }
-    group
+    s"$base/cube.zarr"
   }
 
   /** Build (once per sf) the 2-D cell-mean field of the events cube as a
@@ -225,22 +216,19 @@ object ServingPack extends QueryPack {
     * parquet-path q_points_extract joins against; eventless cells are
     * NaN-fill). */
   private def pointsZarrFixture(s: SparkSession, d: String): String = {
-    val base =
-      s"/root/repo/.graft-fixtures/pointszarr_${new java.io.File(d).getName}"
-    val group = s"$base/cells.zarr"
-    Fixtures.ensureWritten(base, "grid=100x360,cellmeans6,chunks=50x90") {
-      new java.io.File(base).mkdirs()
+    val base = Fixtures.layout(d, "pointszarr",
+      "grid=100x360,cellmeans6,chunks=50x90") { base =>
       val cube = CubePack.eventsCube(s, d)
       val cells = graft.operators.ExtractOps.cellMeans(
         cube.copy(df = cube.df.drop("event_type")), Seq("v"))
       val df = cells.select((col("j").cast("double") + 0.5).as("y"),
         (col("i").cast("double") + 0.5).as("x"), col("v"))
-      ZarrSource.writeCube(df, group, "v",
+      ZarrSource.writeCube(df, s"$base/cells.zarr", "v",
         Seq("y" -> Array.tabulate(100)(_ + 0.5),
           "x" -> Array.tabulate(360)(_ + 0.5)),
         chunks = Seq(50, 90))
     }
-    group
+    s"$base/cells.zarr"
   }
 
   /** Shared oracle of q_sentinel3 AND q_sentinel3_dsv2 — the two openers
@@ -298,17 +286,22 @@ object ServingPack extends QueryPack {
   private def zarrFixture(s: SparkSession, d: String,
                           codec: ZarrSource.Codec = ZarrSource.Zlib(),
                           tag: String = ""): String = {
-    val sfName = new java.io.File(d).getName
-    val base = s"/root/repo/.graft-fixtures/zarr$tag" + s"_$sfName"
-    val group = s"$base/cube.zarr"
     val days = Seq("2024-01-01", "2024-01-02")
-    Fixtures.ensureWritten(base, s"days=2,grid=2x100x360,chunks=1x50x90,$codec,mean6") {
-      new java.io.File(base).mkdirs()
-      ZarrSource.writeCube(dailyCubeDf(s, d, days), group, "v",
+    val base = Fixtures.layout(d, s"zarr$tag",
+      s"days=2,grid=2x100x360,chunks=1x50x90,$codec,mean6") { base =>
+      ZarrSource.writeCube(dailyCubeDf(s, d, days), s"$base/cube.zarr", "v",
         cubeDims, chunks = Seq(1, 50, 90), codec = codec)
     }
-    group
+    s"$base/cube.zarr"
   }
+
+  /** The consolidated 2-day cube that q_zarr_http and q_zarr_ftp mount on
+    * their emulators; returns the directory holding `cube.zarr`. */
+  private def zarrServedFixture(s: SparkSession, d: String): String =
+    Fixtures.layout(d, "zarrhttp", "days=2,chunks=1x50x90,mean6,consolidated") { base =>
+      ZarrSource.writeCube(dailyCubeDf(s, d, Seq("2024-01-01", "2024-01-02")),
+        s"$base/cube.zarr", "v", cubeDims, chunks = Seq(1, 50, 90))
+    }
 
   /** v3 variant of [[zarrFixture]] — same payload, v3 metadata + codec
     * chains; `shardInner` switches on `sharding_indexed` objects.
@@ -316,37 +309,30 @@ object ServingPack extends QueryPack {
   private def zarrV3Fixture(s: SparkSession, d: String,
                             steps: Seq[ZarrSource.Codec], chunks: Seq[Int],
                             shardInner: Option[Seq[Int]], tag: String): String = {
-    val sfName = new java.io.File(d).getName
-    val base = s"/root/repo/.graft-fixtures/zarrv3$tag" + s"_$sfName"
-    val group = s"$base/cube.zarr"
     val days = Seq("2024-01-01", "2024-01-02")
-    Fixtures.ensureWritten(base,
-      s"days=2,grid=2x100x360,chunks=${chunks.mkString("x")},v3,$steps,shard=$shardInner,mean6") {
-      new java.io.File(base).mkdirs()
-      ZarrV3Source.writeCube(dailyCubeDf(s, d, days), group, "v",
+    val base = Fixtures.layout(d, s"zarrv3$tag",
+      s"days=2,grid=2x100x360,chunks=${chunks.mkString("x")},v3,$steps,shard=$shardInner,mean6") { base =>
+      ZarrV3Source.writeCube(dailyCubeDf(s, d, days), s"$base/cube.zarr", "v",
         cubeDims, chunks = chunks, steps = steps, shardInner = shardInner)
     }
-    group
+    s"$base/cube.zarr"
   }
 
   /** Build (once per sf) the day-1 daily-mean GeoTIFF; returns its path.
     * Shared by q_geotiff and q_kerchunk.
     */
   private def geotiffFixture(s: SparkSession, d: String): String = {
-    val sfName = new java.io.File(d).getName
-    val base = s"/root/repo/.graft-fixtures/geotiff_$sfName"
-    val path = s"$base/day1.tif"
-    Fixtures.ensureWritten(base, "day=2024-01-01,grid=360x100,deflate,mean6") {
-      new java.io.File(base).mkdirs()
+    val base = Fixtures.layout(d, "geotiff",
+      "day=2024-01-01,grid=360x100,deflate,mean6") { base =>
       val grid = dailyMeanGrid(s, d, "2024-01-01")
       // north-up: raster row 0 is the TOP (max y) grid row
       val arr = Array.tabulate(100 * 360)(k =>
         grid((99 - k / 360) * 360 + k % 360))
-      GeoTiffSource.write(path,
+      GeoTiffSource.write(s"$base/day1.tif",
         GeoTiffSource.Raster(360, 100, arr, 1.0, 1.0, 0.0, 100.0),
         deflate = true)
     }
-    path
+    s"$base/day1.tif"
   }
 
   /** Build (once per sf) the day-1 event-COUNT grid as a lossless
@@ -356,11 +342,8 @@ object ServingPack extends QueryPack {
     * Shared with q_store_catalog's extension map.
     */
   private def jp2Fixture(s: SparkSession, d: String): String = {
-    val sfName = new java.io.File(d).getName
-    val base = s"/root/repo/.graft-fixtures/jp2_$sfName"
-    val path = s"$base/day1_counts.jp2"
-    Fixtures.ensureWritten(base, "day=2024-01-01,grid=360x100,counts,tiles=90x50,rev53") {
-      new java.io.File(base).mkdirs()
+    val base = Fixtures.layout(d, "jp2",
+      "day=2024-01-01,grid=360x100,counts,tiles=90x50,rev53") { base =>
       val rows = CubePack.eventsCube(s, d).df
         .filter(to_date(col("time")) === lit("2024-01-01").cast("date"))
         .groupBy(floor(col("y")).cast("int").as("j"),
@@ -371,21 +354,19 @@ object ServingPack extends QueryPack {
       rows.foreach(r => grid(r.getInt(0) * 360 + r.getInt(1)) = r.getInt(2))
       val maxN = grid.max
       val depth = math.max(8, 33 - Integer.numberOfLeadingZeros(math.max(1, maxN)))
-      graft.sources.jp2.Jp2Source.write(path, 360, 100, depth, signed = false,
+      graft.sources.jp2.Jp2Source.write(s"$base/day1_counts.jp2", 360, 100, depth, signed = false,
         Vector(grid), nLevels = 3, tileW = 90, tileH = 50)
     }
-    path
+    s"$base/day1_counts.jp2"
   }
 
   /** Build (once per sf) THREE daily count-grid granules for the
     * collection-ingest query; returns the paths (file name = the day).
     */
   private def jp2SeriesFixture(s: SparkSession, d: String): Seq[String] = {
-    val sfName = new java.io.File(d).getName
-    val base = s"/root/repo/.graft-fixtures/jp2s_$sfName"
     val days = Seq("2024-01-01", "2024-01-02", "2024-01-03")
-    Fixtures.ensureWritten(base, "days=3,grid=360x100,counts,tiles=90x50,rev53") {
-      new java.io.File(base).mkdirs()
+    val base = Fixtures.layout(d, "jp2s",
+      "days=3,grid=360x100,counts,tiles=90x50,rev53") { base =>
       val rows = CubePack.eventsCube(s, d).df
         .filter(to_date(col("time")).isin(days.map(lit(_).cast("date")): _*))
         .groupBy(to_date(col("time")).cast("string").as("day"),
@@ -409,34 +390,27 @@ object ServingPack extends QueryPack {
     * and a reader that ignores the tag poisons every aggregate.
     */
   private def geotiffNodataFixture(s: SparkSession, d: String): String = {
-    val sfName = new java.io.File(d).getName
-    val base = s"/root/repo/.graft-fixtures/geotiff_nd_$sfName"
-    val path = s"$base/day1_nd.tif"
-    Fixtures.ensureWritten(base,
-      "day=2024-01-01,grid=360x100,deflate,mean6,nodata=-9999,drop97") {
-      new java.io.File(base).mkdirs()
+    val base = Fixtures.layout(d, "geotiff_nd",
+      "day=2024-01-01,grid=360x100,deflate,mean6,nodata=-9999,drop97") { base =>
       val grid = dailyMeanGrid(s, d, "2024-01-01")
       // north-up: raster row 0 is the TOP (max y) grid row
       val arr = Array.tabulate(100 * 360) { k =>
         val j = 99 - k / 360; val i = k % 360
         if ((j * 360 + i) % 97 == 0) Double.NaN else grid(j * 360 + i)
       }
-      GeoTiffSource.write(path,
+      GeoTiffSource.write(s"$base/day1_nd.tif",
         GeoTiffSource.Raster(360, 100, arr, 1.0, 1.0, 0.0, 100.0),
         deflate = true, nodata = Some(-9999.0))
     }
-    path
+    s"$base/day1_nd.tif"
   }
 
   /** Fixed per-sf scratch dir for regenerated kerchunk refs documents
     * (overwritten per run, never cached — see q_kerchunk).
     */
-  private def refsDir(d: String): java.nio.file.Path = {
-    val sfName = new java.io.File(d).getName
-    val p = java.nio.file.Paths.get(s"/root/repo/.graft-fixtures/kerchunk_refs_$sfName")
-    java.nio.file.Files.createDirectories(p)
-    p
-  }
+  private def refsDir(d: String): java.nio.file.Path =
+    java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(Fixtures.path(d, "kerchunk_refs")))
 
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -557,9 +531,8 @@ object ServingPack extends QueryPack {
     // optimize_dataset / unchunk (optimize.py:15-79): compact a daily
     // aggregate layout to 2 files; data unchanged, file count = target.
     "q_optimize" -> ((s, d) => {
-      val sfName = new java.io.File(d).getName
-      val path = s"/root/repo/.graft-fixtures/optimize_$sfName"
-      Fixtures.ensureWritten(path, "daily-agg,files=2,repartition") {
+      val path = Fixtures.layout(d, "optimize",
+        "daily-agg,files=2,repartition") { path =>
         val daily = GraftSession.events(s, d)
           .groupBy(date_trunc("DAY", col("ts")).as("day"), col("event_type"))
           .agg(count(lit(1)).as("n"), round(sum(col("value")), 6).as("sum_value"))
@@ -582,12 +555,7 @@ object ServingPack extends QueryPack {
     // ONE plan via searchBatch (the single-query IvfOps.search stays for
     // point-lookup serving and its unit spec).
     "q_ivf_ann" -> ((s, d) => {
-      val sfName = new java.io.File(d).getName
-      val path = s"/root/repo/.graft-fixtures/ivf_$sfName"
-      graft.Fixtures.ensureWritten(path, "cells=4,seed=42,iter=5") {
-        IvfOps.save(IvfOps.build(embs(s, d), "vec_id", "embedding", nCells = 4), path)
-      }
-      val idx = IvfOps.load(s, path)
+      val idx = IvfOps.load(s, ivfFixture(s, d))
       val qs = embs(s, d).filter(col("vec_id") < 3)
       IvfOps.searchBatch(idx, qs, "vec_id", "embedding", "vec_id", "embedding",
           k = 5, nProbe = 4)
@@ -600,12 +568,7 @@ object ServingPack extends QueryPack {
     // exact brute-force top-k. Cell pruning (nProbe < nCells) is covered
     // by the unit spec.
     "q_ivf_ann_batch" -> ((s, d) => {
-      val sfName = new java.io.File(d).getName
-      val path = s"/root/repo/.graft-fixtures/ivf_$sfName"
-      graft.Fixtures.ensureWritten(path, "cells=4,seed=42,iter=5") {
-        IvfOps.save(IvfOps.build(embs(s, d), "vec_id", "embedding", nCells = 4), path)
-      }
-      val idx = IvfOps.load(s, path)
+      val idx = IvfOps.load(s, ivfFixture(s, d))
       val qs = embs(s, d).filter(col("vec_id") < 10)
       IvfOps.searchBatch(idx, qs, "vec_id", "embedding", "vec_id", "embedding",
         k = 5, nProbe = 4)
@@ -624,9 +587,8 @@ object ServingPack extends QueryPack {
     // itself a delta row, so appended vectors are exercised as corpus
     // AND as queries.
     "q_ivf_incremental" -> ((s, d) => {
-      val sfName = new java.io.File(d).getName
-      val path = s"/root/repo/.graft-fixtures/ivfbase_$sfName"
-      graft.Fixtures.ensureWritten(path, "cells=4,seed=42,iter=5,split=mod10") {
+      val path = Fixtures.layout(d, "ivfbase",
+        "cells=4,seed=42,iter=5,split=mod10") { path =>
         IvfOps.save(IvfOps.build(
           embs(s, d).filter(col("vec_id") % 10 =!= 0),
           "vec_id", "embedding", nCells = 4), path)
@@ -755,11 +717,9 @@ object ServingPack extends QueryPack {
     // compact-layout decode bug shows up as a coordinate-sum mismatch.
     "q_netcdf4_compact" -> ((s, d) => {
       import NetcdfSource.NcDim
-      val sfName = new java.io.File(d).getName
-      val base = s"/root/repo/.graft-fixtures/netcdf4_compact_$sfName"
       val days = Seq("2024-01-01", "2024-01-02")
-      Fixtures.ensureWritten(base, "days=2,grid=360x100,hdf5,compact-coords,mean6") {
-        new java.io.File(base).mkdirs()
+      val base = Fixtures.layout(d, "netcdf4_compact",
+        "days=2,grid=360x100,hdf5,compact-coords,mean6") { base =>
         for (day <- days) {
           Hdf5Source.write(s"$base/$day.nc",
             Seq(NcDim("y", 100), NcDim("x", 360)),
@@ -789,11 +749,9 @@ object ServingPack extends QueryPack {
     // checksums.
     "q_netcdf4_latest" -> ((s, d) => {
       import NetcdfSource.NcDim
-      val sfName = new java.io.File(d).getName
-      val base = s"/root/repo/.graft-fixtures/netcdf4latest_$sfName"
       val days = Seq("2024-01-01", "2024-01-02")
-      Fixtures.ensureWritten(base, "days=2,grid=360x100,hdf5-latest,chunks=50x90,shuffle+deflate,mean6") {
-        new java.io.File(base).mkdirs()
+      val base = Fixtures.layout(d, "netcdf4latest",
+        "days=2,grid=360x100,hdf5-latest,chunks=50x90,shuffle+deflate,mean6") { base =>
         for (day <- days) {
           Hdf5Source.writeLatest(s"$base/$day.nc",
             Seq(NcDim("y", 100), NcDim("x", 360)),
@@ -821,11 +779,9 @@ object ServingPack extends QueryPack {
     // through the heap/B-tree path cannot reproduce the sums.
     "q_netcdf4_dense" -> ((s, d) => {
       import NetcdfSource.NcDim
-      val sfName = new java.io.File(d).getName
-      val base = s"/root/repo/.graft-fixtures/netcdf4dense_$sfName"
       val day = "2024-01-01"
-      Fixtures.ensureWritten(base, "grid=360x100,hdf5-latest-dense,12vars,chunks=50x90,mean6") {
-        new java.io.File(base).mkdirs()
+      val base = Fixtures.layout(d, "netcdf4dense",
+        "grid=360x100,hdf5-latest-dense,12vars,chunks=50x90,mean6") { base =>
         val g = dailyMeanGrid(s, d, day)
         Hdf5Source.writeLatest(s"$base/$day.nc",
           Seq(NcDim("y", 100), NcDim("x", 360)),
@@ -852,22 +808,8 @@ object ServingPack extends QueryPack {
     // payload copied) and read back THROUGH the refs. Oracle identical to
     // q_netcdf4, so a wrong chunk offset/size/codec mapping cannot pass.
     "q_kerchunk_hdf5" -> ((s, d) => {
-      import NetcdfSource.NcDim
-      val sfName = new java.io.File(d).getName
-      val base = s"/root/repo/.graft-fixtures/netcdf4_$sfName"
-      val days = Seq("2024-01-01", "2024-01-02")
-      Fixtures.ensureWritten(base, "days=2,grid=360x100,hdf5,chunks=50x90,shuffle+deflate,mean6") {
-        new java.io.File(base).mkdirs()
-        for (day <- days) {
-          Hdf5Source.write(s"$base/$day.nc",
-            Seq(NcDim("y", 100), NcDim("x", 360)),
-            Seq(("y", Array.tabulate(100)(_ + 0.5)),
-              ("x", Array.tabulate(360)(_ + 0.5))),
-            Seq(("v", Seq("y", "x"), dailyMeanGrid(s, d, day))),
-            chunkOf = Map("v" -> Seq(50, 90)))
-        }
-      }
-      days.map { day =>
+      val base = netcdf4Fixture(s, d)
+      Seq("2024-01-01", "2024-01-02").map { day =>
         val refsPath = s"$base/$day.refs.json"
         if (!new java.io.File(refsPath).exists())
           java.nio.file.Files.writeString(java.nio.file.Paths.get(refsPath),
@@ -906,11 +848,8 @@ object ServingPack extends QueryPack {
     // flips the hash.
     "q_zarr_multivar" -> ((s, d) => {
       val days = Seq("2024-01-01", "2024-01-02")
-      val sfName = new java.io.File(d).getName
-      val base = s"/root/repo/.graft-fixtures/zarr_multivar_$sfName"
-      val group = s"$base/cube.zarr"
-      Fixtures.ensureWritten(base, "days=2,vars=v+w,chunks=1x50x90,mean6") {
-        new java.io.File(base).mkdirs()
+      val base = Fixtures.layout(d, "zarr_multivar",
+        "days=2,vars=v+w,chunks=1x50x90,mean6") { base =>
         val df = CubePack.eventsCube(s, d).df
           .filter(to_date(col("time")) === lit(days(0)).cast("date") ||
                   to_date(col("time")) === lit(days(1)).cast("date"))
@@ -925,9 +864,10 @@ object ServingPack extends QueryPack {
             (col("j").cast("double") + 0.5).as("y"),
             (col("i").cast("double") + 0.5).as("x"),
             col("v"), col("w"))
-        ZarrSource.writeCubeVars(df, group, Seq("v", "w"),
+        ZarrSource.writeCubeVars(df, s"$base/cube.zarr", Seq("v", "w"),
           cubeDims, chunks = Seq(1, 50, 90))
       }
+      val group = s"$base/cube.zarr"
       // readCubeVars: both variables decoded by the SAME chunk task — one
       // pass over the chunk grid, no per-variable re-scan, no join
       ZarrSource.readCubeVars(s, group, Seq("v", "w"))
@@ -988,10 +928,9 @@ object ServingPack extends QueryPack {
     // elides granule 0's chunks via concat-dim pruning).
     "q_archive_dsv2" -> ((s, d) => {
       import NetcdfSource.NcDim
-      val sfName = new java.io.File(d).getName
-      val base = s"/root/repo/.graft-fixtures/archive_$sfName"
-      val dir = s"$base/daily.archive"
-      Fixtures.ensureWritten(base, "granules=3+1,x=24,incremental-merge") {
+      val base = Fixtures.layout(d, "archive",
+        "granules=3+1,x=24,incremental-merge") { base =>
+        val dir = s"$base/daily.archive"
         new java.io.File(dir).mkdirs()
         def granule(i: Int): Unit =
           NetcdfSource.write(s"$dir/day$i.nc", Seq(NcDim("x", 24)),
@@ -1001,6 +940,7 @@ object ServingPack extends QueryPack {
         KerchunkSource.ensureArchiveIndex(s, dir) // fleet scan -> index
         granule(3) // lands after the index: picked up incrementally
       }
+      val dir = s"$base/daily.archive"
       s.read.format("kerchunk").load(dir)
         .filter(col("t") >= 1.0)
         .groupBy(col("t").cast("long").as("t"))
@@ -1019,10 +959,9 @@ object ServingPack extends QueryPack {
     // by the decoded-cell counter). This gate pins the arithmetic.
     "q_archive_subchunk" -> ((s, d) => {
       import NetcdfSource.NcDim
-      val sfName = new java.io.File(d).getName
-      val base = s"/root/repo/.graft-fixtures/archivesub_$sfName"
-      val dir = s"$base/maps.archive"
-      Fixtures.ensureWritten(base, "granules=3,maps=256x512,block-analyzed") {
+      val base = Fixtures.layout(d, "archivesub",
+        "granules=3,maps=256x512,block-analyzed") { base =>
+        val dir = s"$base/maps.archive"
         new java.io.File(dir).mkdirs()
         def granule(g: Int): Unit =
           NetcdfSource.write(s"$dir/map$g.nc",
@@ -1035,6 +974,7 @@ object ServingPack extends QueryPack {
         graft.sources.zarr.ChunkStats.analyzeArchive(s, dir)
         ()
       }
+      val dir = s"$base/maps.archive"
       s.read.format("kerchunk").load(dir)
         .filter(col("v") >= 1010000.0 && col("v") < 1014096.0)
         .agg(count(lit(1)).as("n"), sum(col("v")).as("sum_v"),
@@ -1049,10 +989,9 @@ object ServingPack extends QueryPack {
     // drops a 4th, so a green result certifies the parquet append path.
     "q_archive_parquet" -> ((s, d) => {
       import NetcdfSource.NcDim
-      val sfName = new java.io.File(d).getName
-      val base = s"/root/repo/.graft-fixtures/archivepq_$sfName"
-      val dir = s"$base/daily.archive"
-      Fixtures.ensureWritten(base, "granules=3+1,x=24,parquet-index") {
+      val base = Fixtures.layout(d, "archivepq",
+        "granules=3+1,x=24,parquet-index") { base =>
+        val dir = s"$base/daily.archive"
         new java.io.File(dir).mkdirs()
         def granule(i: Int): Unit =
           NetcdfSource.write(s"$dir/day$i.nc", Seq(NcDim("x", 24)),
@@ -1063,6 +1002,7 @@ object ServingPack extends QueryPack {
           indexFormat = "parquet") // fleet scan -> distributed index
         granule(3) // lands after the index: appended as new part files
       }
+      val dir = s"$base/daily.archive"
       s.read.format("kerchunk").option("indexFormat", "parquet").load(dir)
         .filter(col("t") >= 1.0)
         .groupBy(col("t").cast("long").as("t"))
@@ -1601,7 +1541,7 @@ object ServingPack extends QueryPack {
     // open is rejected loudly (asserted in ZarrDsv2Spec); here both
     // grids' aggregates come back from one store through two tables.
     "q_zarr_vars" -> ((s, d) => {
-      val tmp = java.nio.file.Files.createTempDirectory("zvars").toString
+      val tmp = Fixtures.scratch(d, "zvars")
       val g = s"$tmp/mixed.zarr"
       val t = Array.tabulate(6)(_.toDouble)
       val xa = Array.tabulate(4)(_.toDouble)
@@ -1629,12 +1569,12 @@ object ServingPack extends QueryPack {
     }),
 
     // SQL DELETE as trailing-slice truncation (the rolling-archive
-    // maintenance op): a fresh temp group loses its t >= 6 slices through
+    // maintenance op): a fresh group loses its t >= 6 slices through
     // the catalog, in place — shapes shrink, beyond-cut chunks delete —
     // and the connector reads back exactly the surviving cells. Dyadic
     // values keep the sum exact.
     "q_zarr_delete" -> ((s, d) => {
-      val tmp = java.nio.file.Files.createTempDirectory("zdelq").toString
+      val tmp = Fixtures.scratch(d, "zdelq")
       val g = s"$tmp/series.zarr"
       val t = Array.tabulate(10)(_.toDouble)
       val x = Array.tabulate(5)(_.toDouble)
@@ -1661,7 +1601,7 @@ object ServingPack extends QueryPack {
     // a replayed or skipped slice flips n_cells and the hash.
     "q_zarr_stream_read" -> ((s, d) => {
       val days = Seq("2024-01-01", "2024-01-02")
-      val tmp = java.nio.file.Files.createTempDirectory("zstreamread").toString
+      val tmp = Fixtures.scratch(d, "zstreamread")
       val group = s"$tmp/cube.zarr"
       val sink = s"$tmp/sink"
       val ckpt = s"$tmp/ckpt"
@@ -1699,8 +1639,7 @@ object ServingPack extends QueryPack {
     // IS the measured operation.
     "q_zarr_dsv2_write" -> ((s, d) => {
       val days = Seq("2024-01-01", "2024-01-02")
-      val sfName = new java.io.File(d).getName
-      val group = s"/root/repo/.graft-fixtures/zarr_dsv2w_$sfName/cube.zarr"
+      val group = s"${Fixtures.path(d, "zarr_dsv2w")}/cube.zarr"
       val df = CubePack.eventsCube(s, d).df
         .filter(to_date(col("time")) === lit(days(0)).cast("date") ||
                 to_date(col("time")) === lit(days(1)).cast("date"))
@@ -1756,15 +1695,8 @@ object ServingPack extends QueryPack {
     // fsspec's HTTPFileSystem). Same oracle as q_zarr_s3, so a wrong byte
     // anywhere in the http path flips the hash.
     "q_zarr_http" -> ((s, d) => {
-      val days = Seq("2024-01-01", "2024-01-02")
+      val base = zarrServedFixture(s, d)
       val sfName = new java.io.File(d).getName
-      val base = s"/root/repo/.graft-fixtures/zarrhttp_$sfName"
-      val group = s"$base/cube.zarr"
-      Fixtures.ensureWritten(base, "days=2,chunks=1x50x90,mean6,consolidated") {
-        new java.io.File(base).mkdirs()
-        ZarrSource.writeCube(dailyCubeDf(s, d, days), group, "v",
-          cubeDims, chunks = Seq(1, 50, 90))
-      }
       val emu = graft.sources.s3.S3Emulator.shared
       emu.mountDir(s"zarrhttp-$sfName", base)
       val url = s"${emu.endpoint}/zarrhttp-$sfName/cube.zarr"
@@ -1785,15 +1717,8 @@ object ServingPack extends QueryPack {
     // closes it). Same oracle as q_zarr_http, so a wrong byte anywhere
     // in the protocol path flips the hash.
     "q_zarr_ftp" -> ((s, d) => {
-      val days = Seq("2024-01-01", "2024-01-02")
+      val base = zarrServedFixture(s, d)
       val sfName = new java.io.File(d).getName
-      val base = s"/root/repo/.graft-fixtures/zarrhttp_$sfName"
-      val group = s"$base/cube.zarr"
-      Fixtures.ensureWritten(base, "days=2,chunks=1x50x90,mean6,consolidated") {
-        new java.io.File(base).mkdirs()
-        ZarrSource.writeCube(dailyCubeDf(s, d, days), group, "v",
-          cubeDims, chunks = Seq(1, 50, 90))
-      }
       val emu = graft.sources.ftp.FtpEmulator.shared
       emu.mountDir(s"zarrftp-$sfName", base)
       val url = s"${emu.endpoint}/zarrftp-$sfName/cube.zarr"
@@ -1815,14 +1740,12 @@ object ServingPack extends QueryPack {
     // cube elides chunks via Catalyst, not via a bespoke subset API.
     "q_zarr_dsv2" -> ((s, d) => {
       val days = Seq("2024-01-01", "2024-01-02")
-      val sfName = new java.io.File(d).getName
-      val base = s"/root/repo/.graft-fixtures/zarrdsv2_$sfName"
-      val group = s"$base/cube.zarr"
-      Fixtures.ensureWritten(base, "days=2,chunks=1x50x90,mean6,t-as-index") {
-        new java.io.File(base).mkdirs()
-        ZarrSource.writeCube(dailyCubeDf(s, d, days), group, "v",
+      val base = Fixtures.layout(d, "zarrdsv2",
+        "days=2,chunks=1x50x90,mean6,t-as-index") { base =>
+        ZarrSource.writeCube(dailyCubeDf(s, d, days), s"$base/cube.zarr", "v",
           cubeDims, chunks = Seq(1, 50, 90))
       }
+      val group = s"$base/cube.zarr"
       s.read.format("zarr").load(group)
         .filter(col("t") === 0.0 && !isnan(col("v")))
         .agg(count(lit(1)).as("n_cells"),
@@ -1857,18 +1780,16 @@ object ServingPack extends QueryPack {
     // family as q_geotiff, restricted to the unpruned rows, so a wrong
     // tile-grid → chunk mapping or an over-eager prune cannot hash-match.
     "q_geotiff_dsv2" -> ((s, d) => {
-      val sfName = new java.io.File(d).getName
-      val base = s"/root/repo/.graft-fixtures/geotifftiled_$sfName"
-      val path = s"$base/day1.tif"
-      Fixtures.ensureWritten(base, "day=2024-01-01,grid=360x100,tiles=64,deflate,mean6") {
-        new java.io.File(base).mkdirs()
+      val base = Fixtures.layout(d, "geotifftiled",
+        "day=2024-01-01,grid=360x100,tiles=64,deflate,mean6") { base =>
         val grid = dailyMeanGrid(s, d, "2024-01-01")
         val arr = Array.tabulate(100 * 360)(k =>
           grid((99 - k / 360) * 360 + k % 360))
-        GeoTiffSource.write(path,
+        GeoTiffSource.write(s"$base/day1.tif",
           GeoTiffSource.Raster(360, 100, arr, 1.0, 1.0, 0.0, 100.0),
           deflate = true, tileSize = 64)
       }
+      val path = s"$base/day1.tif"
       s.read.format("geotiff").load(path)
         .filter(col("y") < 36.0 && !isnan(col("v")))
         .groupBy((col("y") / 10).cast("long").as("jband"))
@@ -1887,15 +1808,13 @@ object ServingPack extends QueryPack {
     // prunes whole granules through Catalyst.
     "q_kerchunk_dsv2" -> ((s, d) => {
       val paths = netcdfFixture(s, d)
-      val sfName = new java.io.File(d).getName
-      val base = s"/root/repo/.graft-fixtures/kerchunkdsv2_$sfName"
-      val refsPath = s"$base/combined.json"
-      Fixtures.ensureWritten(base, "granules=2,concat=t,classic") {
-        new java.io.File(base).mkdirs()
+      val base = Fixtures.layout(d, "kerchunkdsv2",
+        "granules=2,concat=t,classic") { base =>
         val docs = paths.map(KerchunkSource.scanNetcdf(_))
-        java.nio.file.Files.write(java.nio.file.Paths.get(refsPath),
+        java.nio.file.Files.write(java.nio.file.Paths.get(s"$base/combined.json"),
           KerchunkSource.combineRefs(docs, "t", Array(0.0, 1.0)).getBytes("UTF-8"))
       }
+      val refsPath = s"$base/combined.json"
       s.read.format("kerchunk").load(refsPath)
         .filter(col("t") === 1.0 && !isnan(col("v")))
         .agg(count(lit(1)).as("n_cells"),
@@ -1911,16 +1830,14 @@ object ServingPack extends QueryPack {
     // q_zarr: a wrong rewrite (lost edge chunk, stale .zarray/.zmetadata)
     // cannot hash-match.
     "q_unchunk" -> ((s, d) => {
-      val sfName = new java.io.File(d).getName
-      val base = s"/root/repo/.graft-fixtures/zarrunchunk_$sfName"
-      val group = s"$base/cube.zarr"
       val days = Seq("2024-01-01", "2024-01-02")
-      Fixtures.ensureWritten(base, "days=2,chunks=1x50x90,then-unchunked,mean6") {
-        new java.io.File(base).mkdirs()
-        ZarrSource.writeCube(dailyCubeDf(s, d, days), group, "v",
+      val base = Fixtures.layout(d, "zarrunchunk",
+        "days=2,chunks=1x50x90,then-unchunked,mean6") { base =>
+        ZarrSource.writeCube(dailyCubeDf(s, d, days), s"$base/cube.zarr", "v",
           cubeDims, chunks = Seq(1, 50, 90), codec = ZarrSource.Zlib())
-        ZarrSource.unchunkGroup(group)
+        ZarrSource.unchunkGroup(s"$base/cube.zarr")
       }
+      val group = s"$base/cube.zarr"
       ZarrSource.readCube(s, group, "v")
         .filter(!isnan(col("v")))
         .groupBy(col("t").cast("long").as("day_idx"))
@@ -1936,11 +1853,8 @@ object ServingPack extends QueryPack {
     // consolidated metadata patched. The oracle is the SAME 2-day aggregate
     // as q_zarr, so a lost/duplicated slice or a stale shape cannot pass.
     "q_zarr_append" -> ((s, d) => {
-      val sfName = new java.io.File(d).getName
-      val base = s"/root/repo/.graft-fixtures/zarrappend_$sfName"
-      val group = s"$base/cube.zarr"
-      Fixtures.ensureWritten(base, "day1-write,day2-append,blosc-lz4,mean6") {
-        new java.io.File(base).mkdirs()
+      val base = Fixtures.layout(d, "zarrappend",
+        "day1-write,day2-append,blosc-lz4,mean6") { base =>
         def daily(day: String, tIdx: Double) = CubePack.eventsCube(s, d).df
           .filter(to_date(col("time")) === lit(day).cast("date"))
           .groupBy(floor(col("y")).cast("int").as("j"),
@@ -1949,13 +1863,14 @@ object ServingPack extends QueryPack {
             count(lit(1)), 6).as("v"))
           .select(lit(tIdx).as("t"), (col("j").cast("double") + 0.5).as("y"),
             (col("i").cast("double") + 0.5).as("x"), col("v"))
-        ZarrSource.writeCube(daily("2024-01-01", 0.0), group, "v",
+        ZarrSource.writeCube(daily("2024-01-01", 0.0), s"$base/cube.zarr", "v",
           Seq("t" -> Array(0.0),
             "y" -> Array.tabulate(100)(_ + 0.5),
             "x" -> Array.tabulate(360)(_ + 0.5)),
           chunks = Seq(1, 50, 90), codec = ZarrSource.Blosc("lz4"))
-        ZarrSource.appendCube(daily("2024-01-02", 1.0), group, "v", Array(1.0))
+        ZarrSource.appendCube(daily("2024-01-02", 1.0), s"$base/cube.zarr", "v", Array(1.0))
       }
+      val group = s"$base/cube.zarr"
       ZarrSource.readCube(s, group, "v")
         .filter(!isnan(col("v")))
         .groupBy(col("t").cast("long").as("day_idx"))
@@ -2188,20 +2103,18 @@ object ServingPack extends QueryPack {
     // is the closed-form DC reconstruction the oracle computes exactly
     // (the q_jpeg discipline) — integer sums, untoleranced hash match.
     "q_geotiff_jpeg" -> ((s, d) => {
-      val sfName = new java.io.File(d).getName
-      val base = s"/root/repo/.graft-fixtures/geotiff_jpeg_$sfName"
-      val p = s"$base/blocks.tif"
-      Fixtures.ensureWritten(base, "96x64,block8-constant,tile16,q85,tables") {
-        new java.io.File(base).mkdirs()
+      val base = Fixtures.layout(d, "geotiff_jpeg",
+        "96x64,block8-constant,tile16,q85,tables") { base =>
         val (w, h) = (96, 64)
         val data = Array.tabulate(w * h) { i =>
           val (bx, by) = ((i % w) / 8, (i / w) / 8)
           ((bx * 7 + by * 13) % 256).toDouble
         }
-        GeoTiffSource.writeJpegTiled(p,
+        GeoTiffSource.writeJpegTiled(s"$base/blocks.tif",
           GeoTiffSource.Raster(w, h, IndexedSeq(data), 1.0, 1.0, 0.0, 0.0),
           tileSize = 16, quality = 85, useTablesTag = true)
       }
+      val p = s"$base/blocks.tif"
       GeoTiffSource.readRaster(s, p)
         .groupBy(expr("row div 8").as("by"))
         .agg(count(lit(1)).as("n_cells"),
@@ -2247,18 +2160,16 @@ object ServingPack extends QueryPack {
     // pixel centers at block centers) — a mis-chained, mis-decimated or
     // mis-georeferenced overview cannot pass.
     "q_cog_levels" -> ((s, d) => {
-      val sfName = new java.io.File(d).getName
-      val base = s"/root/repo/.graft-fixtures/cog_$sfName"
-      val path = s"$base/day1_cog.tif"
-      Fixtures.ensureWritten(base, "day=2024-01-01,grid=360x100,ov=2,tiled16,deflate,mean6") {
-        new java.io.File(base).mkdirs()
+      val base = Fixtures.layout(d, "cog",
+        "day=2024-01-01,grid=360x100,ov=2,tiled16,deflate,mean6") { base =>
         val grid = dailyMeanGrid(s, d, "2024-01-01")
         val arr = Array.tabulate(100 * 360)(k =>
           grid((99 - k / 360) * 360 + k % 360))
-        GeoTiffSource.writeWithOverviews(path,
+        GeoTiffSource.writeWithOverviews(s"$base/day1_cog.tif",
           GeoTiffSource.Raster(360, 100, arr, 1.0, 1.0, 0.0, 100.0),
           nOverviews = 2, deflate = true, tileSize = 16)
       }
+      val path = s"$base/day1_cog.tif"
       GeoTiffSource.readRasterLevels(s, path)
         .filter(!isnan(col("v")))
         .groupBy(col("level"))
@@ -2274,7 +2185,7 @@ object ServingPack extends QueryPack {
     // typed dbf attribute columns, same contract as q_geojson.
     "q_shapefile" -> ((s, d) => {
       import ShapefileSource.{DbfField, ShpPoint, ShpPolygon}
-      val dir = "/root/repo/.graft-fixtures/shapefile"
+      val dir = s"${Fixtures.root}/shapefile"
       val pts = s"$dir/pts.shp"
       val polys = s"$dir/polys.shp"
       Fixtures.ensureWritten(dir, "pts=3,polys=2,v1") {
@@ -2413,14 +2324,16 @@ object ServingPack extends QueryPack {
     }),
 
     // in-memory store round-trip (dsio.py:308-356): write an aggregate as a
-    // temp view, open it back through the store API.
+    // temp view, open it back through the store API. The opened DataFrame
+    // holds the view's plan, so the view is dropped before returning.
     "q_memory_store" -> ((s, d) => {
       val store = new MemoryDataStore(s)
       val agg = GraftSession.events(s, d)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 6).as("sum_value"))
       store.write("mem_events_agg", agg, mode = "overwrite")
-      store.open("mem_events_agg")
+      try store.open("mem_events_agg")
+      finally s.catalog.dropTempView("mem_events_agg")
     }),
 
     // OWS coverage request composition (controllers.py:54-178): variable
@@ -2478,10 +2391,9 @@ object ServingPack extends QueryPack {
     // place (+1000), v and day 2 must keep their stored values — only the
     // touched partitions are rewritten (dynamic partition overwrite).
     "q_update_slice" -> ((s, d) => {
-      val sfName = new java.io.File(d).getName
-      val base = s"/root/repo/.graft-fixtures/update_slice_$sfName"
-      val dest = s"$base/cube"
-      Fixtures.ensureWritten(base, "days=2;v2=v*10;day1:v2+=1000") {
+      val base = Fixtures.layout(d, "update_slice",
+        "days=2;v2=v*10;day1:v2+=1000") { base =>
+        val dest = s"$base/cube"
         val c0 = CubePack.eventsCube(s, d)
         val gm = c0.gm.copy(tileWidth = 64, tileHeight = 64)
         val daily = c0.df
@@ -2495,7 +2407,7 @@ object ServingPack extends QueryPack {
           .select(col("time"), col("y"), col("x"), (col("v2") + 1000.0).as("v2"))
         TimeSliceOps.updateTimeSlice(s, dest, Cube(upd, gm), Seq("v2"))
       }
-      s.read.parquet(dest)
+      s.read.parquet(s"$base/cube")
         .groupBy(col("p_date").cast("string").as("day"))
         .agg(count(lit(1)).as("n"),
           round(sum(col("v").cast("decimal(28,10)")), 6).cast("double").as("sum_v"),
@@ -2507,10 +2419,7 @@ object ServingPack extends QueryPack {
     // replacement (v×2) — converge via dynamic partition overwrite; the
     // stored cube must equal replace-then-union semantics.
     "q_stream_upsert" -> ((s, d) => {
-      val sfName = new java.io.File(d).getName
-      val base = s"/root/repo/.graft-fixtures/stream_upsert_$sfName"
-      val dest = s"$base/cube"
-      Fixtures.ensureWritten(base, "slices=d1,d2,d1x2") {
+      val base = Fixtures.layout(d, "stream_upsert", "slices=d1,d2,d1x2") { base =>
         val cube = CubePack.eventsCube(s, d)
         val gm = cube.gm.copy(tileWidth = 64, tileHeight = 64)
         val schema = cube.df.schema
@@ -2519,7 +2428,7 @@ object ServingPack extends QueryPack {
             .withColumn("v", col("v") * scale)
         def push(n: Int, df: DataFrame): Unit = {
           df.write.mode("overwrite").parquet(s"$base/src/slice_$n")
-          val q = TimeSliceOps.streamUpsert(s, schema, s"$base/src", dest,
+          val q = TimeSliceOps.streamUpsert(s, schema, s"$base/src", s"$base/cube",
             b => Cube(b, gm))
           q.awaitTermination()
         }
@@ -2527,7 +2436,7 @@ object ServingPack extends QueryPack {
         push(2, slice("2024-01-02", 1.0))
         push(3, slice("2024-01-01", 2.0))
       }
-      s.read.parquet(dest)
+      s.read.parquet(s"$base/cube")
         .groupBy(col("p_date").cast("string").as("day"), col("event_type"))
         .agg(count(lit(1)).as("n"), round(sum(col("v")), 6).as("sum_v"))
     }),
@@ -2538,11 +2447,8 @@ object ServingPack extends QueryPack {
     // appends along time in place — then the stored Zarr store must equal
     // the same 2-day aggregate as q_zarr/q_zarr_append.
     "q_stream_zarr" -> ((s, d) => {
-      val sfName = new java.io.File(d).getName
-      val base = s"/root/repo/.graft-fixtures/stream_zarr_$sfName"
-      val group = s"$base/cube.zarr"
-      Fixtures.ensureWritten(base, "slices=d1,d2,append,blosc-zstd,mean6") {
-        new java.io.File(base).mkdirs()
+      val base = Fixtures.layout(d, "stream_zarr",
+        "slices=d1,d2,append,blosc-zstd,mean6") { base =>
         def daily(day: String, tIdx: Double) = CubePack.eventsCube(s, d).df
           .filter(to_date(col("time")) === lit(day).cast("date"))
           .groupBy(floor(col("y")).cast("int").as("j"),
@@ -2554,7 +2460,7 @@ object ServingPack extends QueryPack {
         val schema = daily("2024-01-01", 0.0).schema
         def push(n: Int, df: DataFrame): Unit = {
           df.write.mode("overwrite").parquet(s"$base/src/slice_$n")
-          TimeSliceOps.streamZarrAppend(s, schema, s"$base/src", group, "v", "t",
+          TimeSliceOps.streamZarrAppend(s, schema, s"$base/src", s"$base/cube.zarr", "v", "t",
             Seq("y" -> Array.tabulate(100)(_ + 0.5),
               "x" -> Array.tabulate(360)(_ + 0.5)),
             chunks = Seq(1, 50, 90), codec = ZarrSource.Blosc("zstd", 3))
@@ -2563,6 +2469,7 @@ object ServingPack extends QueryPack {
         push(1, daily("2024-01-01", 0.0))
         push(2, daily("2024-01-02", 1.0))
       }
+      val group = s"$base/cube.zarr"
       ZarrSource.readCube(s, group, "v")
         .filter(!isnan(col("v")))
         .groupBy(col("t").cast("long").as("day_idx"))

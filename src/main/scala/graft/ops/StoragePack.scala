@@ -1,11 +1,11 @@
 package graft.ops
 
-import graft.{GraftSession, QueryPack}
+import graft.{Fixtures, GraftSession, QueryPack}
 import graft.operators.MaintenanceOps
 import graft.sources.{CachedDataStore, CubeWriter, DataStore, FsDataStore}
+import graft.streaming.StatePartitioning.drain
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Physical-layout + streaming pack (SURVEY §2.1/§2.9).
   *
@@ -21,8 +21,6 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object StoragePack extends QueryPack {
 
-  private val queryCounter = new java.util.concurrent.atomic.AtomicInteger(0)
-
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     "q_pruned_scan" -> ((s, d) => {
@@ -30,10 +28,9 @@ object StoragePack extends QueryPack {
       // 64x64 tiles → 6x2 blocks on the 360x100 grid
       val gm = cube0.gm.copy(tileWidth = 64, tileHeight = 64)
       val cube = cube0.copy(gm = gm)
-      val sfName = new java.io.File(d).getName
-      val path = s"/root/repo/.graft-fixtures/cube_parts_$sfName"
       // layout build is a one-time fixture: the query measures the pruned READ
-      graft.Fixtures.ensureWritten(path, "tile=64x64,partitioned") {
+      val path = Fixtures.layout(d, "cube_parts",
+        "tile=64x64,partitioned") { path =>
         CubeWriter.writePartitioned(cube, path)
       }
       CubeWriter.prunedScan(s, path, gm,
@@ -55,11 +52,7 @@ object StoragePack extends QueryPack {
         .groupBy(window(col("ts"), "1 day"), col("event_type"))
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 6).as("sum_value"))
         .select(col("window.start").as("t"), col("event_type"), col("n"), col("sum_value"))
-      val tbl = s"q_stream_window_${queryCounter.incrementAndGet()}"
-      val q = agg.writeStream.format("memory").queryName(tbl)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      ss.table(tbl)
+      drain(agg, "complete")
     }),
 
     // streaming grouped top-k: the bounded-heap CollectTopK aggregate
@@ -80,11 +73,7 @@ object StoragePack extends QueryPack {
         .agg(graft.functions.TopK.bottomK(
           struct(negate(col("value")).as("__o"), col("event_id"),
             col("value")), 5).as("__tk"))
-      val tbl = s"q_stream_topk_${queryCounter.incrementAndGet()}"
-      val q = agg.writeStream.format("memory").queryName(tbl)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      ss.table(tbl)
+      drain(agg, "complete")
         .select(col("event_type"), posexplode(col("__tk")).as(Seq("__p", "__r")))
         .select(col("event_type"), (col("__p") + 1).cast("long").as("rank"),
           col("__r.event_id").as("event_id"), col("__r.value").as("value"))
@@ -107,12 +96,8 @@ object StoragePack extends QueryPack {
           col("value"), col("event_id").as("eventId"))
         .as[StatefulOps.Obs]
       val tracked = StatefulOps.trackKeys(obs)
-      val tbl = s"q_stream_state_${queryCounter.incrementAndGet()}"
-      val q = tracked.writeStream.format("memory").queryName(tbl)
-        .outputMode("update").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
       // single AvailableNow batch → exactly one Update row per key
-      ss.table(tbl).groupBy((col("key") % 10).as("bucket"))
+      drain(tracked, "update").groupBy((col("key") % 10).as("bucket"))
         .agg(count(lit(1)).as("n_keys"), sum(col("n")).as("n_events"),
           round(sum(col("sum_value")), 6).as("sum_value"),
           round(sum(col("last_value")), 6).as("sum_last"))
@@ -144,10 +129,6 @@ object StoragePack extends QueryPack {
         .transform(GraftSession.normalizeTs(_))
         .select(col("user_id"))
       val cmsStream = SketchOps.buildCms(stream, "user_id", w, dep)
-      val tbl = s"q_stream_cms_${queryCounter.incrementAndGet()}"
-      val q = cmsStream.writeStream.format("memory").queryName(tbl)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
       val ev = GraftSession.table(s, d, "events").select(col("user_id"))
       val top = ev.groupBy("user_id").agg(count(lit(1)).as("exact_n"))
         .agg(graft.functions.TopK.bottomK(
@@ -156,7 +137,7 @@ object StoragePack extends QueryPack {
         .select(explode(col("__tk")).as("__r"))
         .select(col("__r.user_id").as("user_id"),
           col("__r.exact_n").as("exact_n"))
-      SketchOps.probeCms(top, "user_id", ss.table(tbl), w, dep)
+      SketchOps.probeCms(top, "user_id", drain(cmsStream, "complete"), w, dep)
         .select(col("user_id"), col("exact_n"), col("est_n"),
           (col("est_n") - col("exact_n")).as("overcount"))
     }),
@@ -171,11 +152,7 @@ object StoragePack extends QueryPack {
         .withColumn("dup_key", col("event_id") % 5000)
         .withWatermark("ts", "40 days")
         .dropDuplicatesWithinWatermark("dup_key")
-      val tbl = s"q_stream_dedup_${queryCounter.incrementAndGet()}"
-      val q = stream.writeStream.format("memory").queryName(tbl)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      ss.table(tbl).groupBy((col("dup_key") % 10).as("bucket"))
+      drain(stream, "append").groupBy((col("dup_key") % 10).as("bucket"))
         .agg(count(lit(1)).as("n_keys"))
     }),
 
@@ -212,10 +189,8 @@ object StoragePack extends QueryPack {
     // out-of-bbox cube must drop. Each hit re-opens and checksums, so a
     // wrong hit set or wrong derived extent cannot hash-match.
     "q_store_search" -> ((s, d) => {
-      val sfName = new java.io.File(d).getName
-      val base = s"/root/repo/.graft-fixtures/storesearch_$sfName"
-      graft.Fixtures.ensureWritten(base, "3 cubes @ x+100k offsets, 1 table") {
-        new java.io.File(base).mkdirs()
+      val base = Fixtures.layout(d, "storesearch",
+        "3 cubes @ x+100k offsets, 1 table") { base =>
         import graft.sources.ZarrSource
         (0 to 2).foreach { k =>
           val y = Array.tabulate(10)(_ + 0.5)
@@ -255,17 +230,14 @@ object StoragePack extends QueryPack {
     // "@" resolution, or a dropped config cannot hash-match
     "q_store_pool" -> ((s, d) => {
       import graft.sources.StorePool
-      val sfName = new java.io.File(d).getName
-      val base = s"/root/repo/.graft-fixtures/storepool_$sfName"
-      val cfg = s"$base/pool.json"
-      graft.Fixtures.ensureWritten(base, "pool.json -> file store at sf dir") {
-        new java.io.File(base).mkdirs()
-        java.nio.file.Files.writeString(java.nio.file.Paths.get(cfg),
+      val base = Fixtures.layout(d, "storepool",
+        "pool.json -> file store at sf dir") { base =>
+        java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$base/pool.json"),
           s"""{"main": {"store_id": "file",
              |  "store_params": {"root": "$d"},
              |  "title": "sf catalog"}}""".stripMargin)
       }
-      val pool = StorePool.fromFile(s, cfg)
+      val pool = StorePool.fromFile(s, s"$base/pool.json")
       val store = StorePool.getDataStoreInstance(s, "@main",
         pool = Some(pool))
       Seq("nation", "region").map { t =>
@@ -283,9 +255,8 @@ object StoragePack extends QueryPack {
       val agg = GraftSession.events(s, d)
         .groupBy(date_trunc("DAY", col("ts")).as("day"), col("event_type"))
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 6).as("sum_value"))
-      val sfName = new java.io.File(d).getName
-      val path = s"/root/repo/.graft-fixtures/csv_roundtrip_$sfName.csv"
-      graft.Fixtures.ensureWritten(path, "daily-agg,csv") {
+      val path = Fixtures.path(d, "csv_roundtrip") + ".csv"
+      Fixtures.ensureWritten(path, "daily-agg,csv") {
         DataStore.writeDataset(agg, path)
       }
       DataStore.openDataset(s, path).select(
@@ -303,9 +274,8 @@ object StoragePack extends QueryPack {
         .agg(count(lit(1)).as("n"),
           round(sum(col("value").cast("decimal(18,6)")), 6).cast("double")
             .as("sum_value"))
-      val sfName = new java.io.File(d).getName
-      val path = s"/root/repo/.graft-fixtures/orc_roundtrip_$sfName.orc"
-      graft.Fixtures.ensureWritten(path, "daily-agg,orc") {
+      val path = Fixtures.path(d, "orc_roundtrip") + ".orc"
+      Fixtures.ensureWritten(path, "daily-agg,orc") {
         DataStore.writeDataset(agg, path)
       }
       DataStore.openDataset(s, path)
@@ -319,9 +289,8 @@ object StoragePack extends QueryPack {
     // asserted here so the oracle row proves the preload path, not the
     // origin fallthrough.
     "q_preload" -> ((s, d) => {
-      val sfName = new java.io.File(d).getName
-      val cacheDir = s"/root/repo/.graft-fixtures/preload_cache_$sfName"
-      val store = new CachedDataStore(s, new FsDataStore(s, d), cacheDir)
+      val store = new CachedDataStore(s, new FsDataStore(s, d),
+        Fixtures.path(d, "preload_cache"))
       val ids = Seq("nation.parquet", "region.parquet")
       val handle = store.preloadData(ids, blocking = true)
       val bad = ids.filter(id =>
@@ -344,7 +313,7 @@ object StoragePack extends QueryPack {
     // the reload path end-to-end (the pre-reload registry would be missing
     // the region dataset entirely).
     "q_auto_reload" -> ((s, d) => {
-      val dir = java.nio.file.Files.createTempDirectory("graft_reload").toString
+      val dir = Fixtures.scratch(d, "reload")
       val cfg = s"$dir/config.json"
       def putConfig(json: String, mtime: Long): Unit = {
         java.nio.file.Files.write(java.nio.file.Paths.get(cfg), json.getBytes("UTF-8"))

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.streaming.Trigger
 
 /** Scale-adaptive shuffle/state partitioning for STREAMING queries.
   *
@@ -24,8 +25,8 @@ import org.apache.spark.sql.SparkSession
   * join passes 4 (see [[replaySession]]).
   *
   * Returns a config-twin session ([[org.apache.spark.sql.graft.ConfBridge]])
-  * carrying the derived count; the caller must build the stream AND read
-  * the memory-sink table through it.
+  * carrying the derived count; the caller builds the stream through it and
+  * runs it with [[drain]].
   */
 object StatePartitioning {
 
@@ -91,5 +92,24 @@ object StatePartitioning {
     val n = graft.Cuts.partitions(spark, inputBytes(spark, paths), floor)
     org.apache.spark.sql.graft.ConfBridge.twinSession(spark,
       ReplayConfs + ("spark.sql.shuffle.partitions" -> n.toString))
+  }
+
+  private val drains = new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** Run `stream` in one AvailableNow pass into a memory sink and return
+    * the sink's rows. The sink's temp view is dropped before returning (on
+    * failure too): the returned DataFrame already holds the sink, while a
+    * view left on a cached replay twin would keep every run's rows
+    * reachable for the twin's lifetime.
+    */
+  def drain(stream: Dataset[_], outputMode: String): DataFrame = {
+    val name = s"graft_drain_${drains.incrementAndGet()}"
+    val ss = stream.sparkSession
+    try {
+      stream.writeStream.format("memory").queryName(name)
+        .outputMode(outputMode).trigger(Trigger.AvailableNow()).start()
+        .awaitTermination()
+      ss.table(name)
+    } finally ss.catalog.dropTempView(name)
   }
 }

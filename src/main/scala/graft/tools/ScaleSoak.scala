@@ -317,7 +317,7 @@ object ScaleSoak {
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
     val skewMode = args.lift(3).contains("skew")
     val out = args.lift(2).getOrElse(
-      s"/root/repo/.graft-fixtures/soak${if (skewMode) "skew" else ""}_x$factor")
+      s"${Fixtures.root}/soak${if (skewMode) "skew" else ""}_x$factor")
     val selected = args.lift(3) match {
       case Some("deep") => DeepSoakQueries
       case Some("skew") => SkewSoakQueries
@@ -329,7 +329,7 @@ object ScaleSoak {
       buildScaled(spark, baseRaw, out, factor, skew = skewMode)
     }
     val base = if (!skewMode) baseRaw else {
-      val b1 = s"/root/repo/.graft-fixtures/soakskew_x1"
+      val b1 = s"${Fixtures.root}/soakskew_x1"
       Fixtures.ensureWritten(b1, s"base=$baseRaw,factor=1,salt=v2,skew=true") {
         buildScaled(spark, baseRaw, b1, 1, skew = true)
       }

@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 
 /** Scratch main: where do the seconds of the streaming bench rows go?
   * Runs q_stream_join's pipeline once and prints every micro-batch's
@@ -24,15 +25,26 @@ object StreamProbe {
             col("event_id").as(s"${pfx}_id"), col("ts").as(s"${pfx}_ts"))
       val joined = graft.streaming.StreamJoinOps.viewClickIntervalJoin(
         side("view", "v"), side("click", "c"), watermark = "40 days")
-      val tbl = s"probe_join_${System.nanoTime()}"
+      // progress events reach listeners asynchronously; the termination
+      // event follows the run's last progress event on the same bus
+      val progress = new java.util.concurrent.ConcurrentLinkedQueue[StreamingQueryProgress]()
+      val terminated = new java.util.concurrent.CountDownLatch(1)
+      val listener = new StreamingQueryListener {
+        override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+        override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
+          progress.add(e.progress); ()
+        }
+        override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+          terminated.countDown()
+      }
+      s.streams.addListener(listener)
       val t0 = System.nanoTime()
-      val q = joined.writeStream.format("memory").queryName(tbl)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      val result = graft.streaming.StatePartitioning.drain(joined, "append")
       val total = (System.nanoTime() - t0) / 1e9
-      println(f"[$label] wall $total%.2f s, batches=${q.recentProgress.length}")
-      q.recentProgress.foreach { p =>
+      terminated.await(60, java.util.concurrent.TimeUnit.SECONDS)
+      s.streams.removeListener(listener)
+      println(f"[$label] wall $total%.2f s, batches=${progress.size}")
+      progress.forEach { p =>
         println(s"[$label] batch ${p.batchId} rows=${p.numInputRows} " +
           s"durationMs=${p.durationMs}")
         p.stateOperators.foreach { so =>
@@ -41,8 +53,7 @@ object StreamProbe {
             s"mem=${so.memoryUsedBytes}")
         }
       }
-      val cnt = s.table(tbl).count()
-      println(f"[$label] result rows=$cnt")
+      println(f"[$label] result rows=${result.count()}")
     }
 
     runOnce(spark, "p32-warm")

@@ -5,7 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** No declared query leaves a cache behind. Every query of
   * [[SparkEntry.queries]] runs at sf0.001; afterwards the persistent RDDs
-  * and the CacheManager must be empty. A query that opens a [[Cuts]] scope
+  * and the CacheManager must be empty, and the session's temporary views
+  * must be those it had before the query. A query that opens a [[Cuts]] scope
   * runs a second time and must return the same sorted rows, so nothing the
   * first run cached can have served or skewed the second.
   */
@@ -33,11 +34,16 @@ class QueryCacheSweepSpec extends AnyFunSuite {
       s"$q left CacheManager entries")
   }
 
+  private def tempViews: Set[String] =
+    spark.sessionState.catalog.getTempViewNames().toSet
+
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (q, fn) =>
     test(s"$q leaves nothing cached") {
       val opened = Cuts.scopesOpened
+      val views = tempViews
       val first = rows(fn(spark, sf))
       assertNothingCached(q)
+      assert(tempViews === views, s"$q changed the temporary views")
       if (Cuts.scopesOpened > opened) {
         assert(rows(fn(spark, sf)) === first, q)
         assertNothingCached(q)

@@ -74,15 +74,30 @@ class StatePartitioningSpec extends AnyFunSuite {
       .withWatermark("ts", "1 day")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"))
-    val tbl = s"state_part_spec_${System.nanoTime()}"
-    val q = stream.writeStream.format("memory").queryName(tbl)
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val got = ss.table(tbl).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val got = StatePartitioning.drain(stream, "complete").collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
     val exp = GraftSession.events(spark, d).groupBy(col("event_type"))
       .agg(count(lit(1)).as("n")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got === exp)
+  }
+
+  test("drain leaves no temp view, and every drained DataFrame keeps its rows") {
+    val d = "/root/testdata/sf0.001"
+    val ss = StatePartitioning.replaySession(spark, Seq(s"$d/events.parquet"))
+    def views = ss.sessionState.catalog.getTempViewNames().toSet
+    val before = views
+    val schema = GraftSession.table(spark, d, "events").schema
+    def events = ss.readStream.schema(schema)
+      .option("pathGlobFilter", "events.parquet").parquet(d)
+    val perType = StatePartitioning.drain(
+      events.groupBy(col("event_type")).agg(count(lit(1)).as("n")), "complete")
+    val ids = StatePartitioning.drain(events.select(col("event_id")), "append")
+    assert(views === before)
+    val batch = GraftSession.table(spark, d, "events")
+    assert(perType.collect().map(r => r.getString(0) -> r.getLong(1)).toMap ===
+      batch.groupBy(col("event_type")).agg(count(lit(1)).as("n")).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap)
+    assert(ids.count() === batch.count())
   }
 }

@@ -6,7 +6,7 @@ import graft.sources.{DataStore, FsDataStore, MemoryDataStore}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 import graft.TestDirs.tmpDir
 
@@ -409,8 +409,7 @@ class StoreMaintenanceSpec extends AnyFunSuite {
   }
 
   test("fixture markers fingerprint their config: changed config rebuilds, same reuses") {
-    val dir = Files.createTempDirectory("graft_fixture").toFile
-    val path = new java.io.File(dir, "layout").getAbsolutePath
+    val path = new java.io.File(tmpDir("graft_fixture"), "layout").getAbsolutePath
     var builds = 0
     def build(fp: String): Unit = Fixtures.ensureWritten(path, fp) {
       builds += 1
@@ -425,5 +424,32 @@ class StoreMaintenanceSpec extends AnyFunSuite {
     val files = new java.io.File(path).list().toSeq
     assert(files.contains("data_2.txt") && !files.contains("data_1.txt"), files)
     build("tile=128"); assert(builds == 2)
+  }
+
+  test("layout places <name>_<sf> under the working directory's .graft-fixtures") {
+    val sfDir = tmpDir("sf")
+    val sf = new java.io.File(sfDir).getName
+    val name = "layout_spec"
+    val expected = Paths.get(".graft-fixtures", s"${name}_$sf").toAbsolutePath.toString
+    assert(Fixtures.root === Paths.get(".graft-fixtures").toAbsolutePath.toString)
+    var handed = Seq.empty[String]
+    def build(fp: String): String = Fixtures.layout(sfDir, name, fp) { dir =>
+      assert(new java.io.File(dir).isDirectory, s"$dir was not created")
+      assert(new java.io.File(dir).list().isEmpty, s"$dir is not empty")
+      handed :+= dir
+      Files.writeString(Paths.get(dir, "data.txt"), fp)
+    }
+    try {
+      assert(build("tile=64") === expected)
+      assert(build("tile=64") === expected)
+      assert(handed === Seq(expected), "same fingerprint must not rebuild")
+      assert(build("tile=128") === expected)
+      assert(handed === Seq(expected, expected), "changed fingerprint must rebuild")
+      assert(Files.readString(Paths.get(expected, "data.txt")) === "tile=128")
+    } finally {
+      Seq(Paths.get(expected, "_GRAFT_DONE"), Paths.get(expected, "data.txt"),
+        Paths.get(expected), Paths.get(Fixtures.root, s".${name}_$sf.lock"))
+        .foreach(Files.deleteIfExists)
+    }
   }
 }
