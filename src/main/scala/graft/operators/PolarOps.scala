@@ -1,28 +1,28 @@
 package graft.operators
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
+import Projection.{atan2, exp, ge, greatest, gt, least, log, pow}
 
-/** Polar-stereographic and Lambert-azimuthal-equal-area reprojection —
-  * the two most common non-mercator satellite-product CRS families
-  * (reference accepts ANY pyproj CRS, xcube/core/gridmapping/base.py:94,
-  * resampling/reproject.py:27-500): NSIDC sea-ice grids EPSG:3413
-  * (north, lat_ts 70°N, lon_0 −45°) / EPSG:3031 (south, lat_ts 71°S),
-  * the European LAEA grid EPSG:3035 (oblique, lat_0 52°, lon_0 10°) and
-  * the EASE-Grid 2.0 polar LAEA pair EPSG:6931/6932.
+/** The closed-form projections beyond UTM and web mercator, one
+  * [[Projection]] per family: polar stereographic (NSIDC sea-ice grids
+  * EPSG:3413/3031/3976, UPS), Lambert azimuthal equal-area (EPSG:3035,
+  * the EASE-Grid 2.0 polar pair EPSG:6931/6932), MODIS sinusoidal, LCC,
+  * Albers, rotated pole, geostationary, EASE-Grid 2.0 global, orthographic,
+  * Mollweide, Equal Earth, Hotine oblique Mercator, oblique stereographic,
+  * ellipsoidal Mercator, equidistant cylindrical and general transverse
+  * Mercator (the reference accepts ANY pyproj CRS,
+  * xcube/core/gridmapping/base.py:94, resampling/reproject.py:27-500).
   *
-  * Forward and inverse are the standard WGS84 closed forms (Snyder,
-  * "Map Projections — A Working Manual", USGS PP 1395: polar
-  * stereographic eqs. 21-33..21-41 + 15-9 with the conformal-latitude
-  * inverse series 3-5; LAEA eqs. 24-17..24-19 + 25-16..25-18 with the
-  * authalic-latitude series 3-18), the formulations proj uses.
-  * Everything is plain column arithmetic + trig — codegen'd, no external
-  * CRS library, and mirrorable in an SQL oracle because every constant
-  * below is a shared Scala double (the [[UtmOps]] series discipline).
+  * Forward and inverse are the standard closed forms (Snyder, "Map
+  * Projections — A Working Manual", USGS PP 1395, and EPSG Guidance Note
+  * 7-2), the formulations proj uses. Each family's parameters are a case
+  * class whose derived constants are plain Scala doubles computed once,
+  * so SQL oracles mirror them bit for bit; its kernels keep Spark's
+  * function semantics ([[Projection]]), the operations the query path has
+  * always run.
   */
 object PolarOps {
 
-  // WGS84 ellipsoid (same constants as UtmOps)
+  // WGS84 ellipsoid (the UTM zones use the same constants)
   val A: Double = 6378137.0
   val F: Double = 1.0 / 298.257223563
   val E2: Double = F * (2 - F)
@@ -46,7 +46,76 @@ object PolarOps {
   val Qp: Double =
     (1 - E2) * (1.0 / (1 - E2) - (1.0 / (2 * E)) * math.log((1 - E) / (1 + E)))
 
-  // ------------------------------------------------------ CRS registries
+  // ------------------------------------------------- shared kernel parts
+
+  /** Snyder 15-9: t(φ) = tan(π/4 − φ/2) · [(1+e sinφ)/(1−e sinφ)]^(e/2). */
+  private def isoT(phi: Double, e: Double): Double = {
+    val es = e * math.sin(phi)
+    math.tan(math.Pi / 4 - phi / 2) * pow((1.0 + es) / (1.0 - es), e / 2)
+  }
+
+  /** Snyder 3-12: the WGS84 authalic q over s = sinφ. The log argument is
+    * positive for |s| ≤ 1. */
+  private def authalicQ(s: Double): Double =
+    (1 - E2) * (s / (1.0 - E2 * s * s) -
+      (1.0 / (2 * E)) * log((1.0 - E * s) / (1.0 + E * s)))
+
+  /** The conformal-latitude inverse for an ellipsoid of eccentricity `e`:
+    * series seed (Snyder 3-5, coefficients c2..c8) plus one pass of the
+    * exact fixed-point iteration (Snyder 7-9) — closes forward∘inverse to
+    * ≲1e-12°; the series seed alone truncates at ~e¹⁰. */
+  private def conformalPhi(t: Double, e: Double, c2: Double,
+      c4: Double, c6: Double, c8: Double): Double = {
+    val chi = math.Pi / 2 - 2.0 * math.atan(t)
+    val phi0 = chi + c2 * math.sin(2.0 * chi) + c4 * math.sin(4.0 * chi) +
+      c6 * math.sin(6.0 * chi) + c8 * math.sin(8.0 * chi)
+    val es = e * math.sin(phi0)
+    math.Pi / 2 - 2.0 * math.atan(t * pow((1.0 - es) / (1.0 + es), e / 2))
+  }
+
+  /** [[conformalPhi]] on WGS84. */
+  private def conformalPhi(t: Double): Double =
+    conformalPhi(t, E, C2, C4, C6, C8)
+
+  /** The authalic-latitude inverse: series seed (Snyder 3-18) plus one
+    * Newton step (Snyder 3-16) — the e⁶-truncated series alone leaves
+    * ~6e-10 rad, above a 1e-9° round-trip budget. Pole-guarded (the
+    * series is exact at β = ±π/2, where Newton's 1/cosφ blows up). */
+  private def authalicPhi(beta: Double, q: Double): Double = {
+    val phi0 = beta + B2 * math.sin(2.0 * beta) +
+      B4 * math.sin(4.0 * beta) + B6 * math.sin(6.0 * beta)
+    val s = math.sin(phi0)
+    val om = 1.0 - E2 * s * s
+    val corr = om * om / (2.0 * math.cos(phi0)) *
+      (q / (1 - E2) - s / om + (1.0 / (2 * E)) *
+        log((1.0 - E * s) / (1.0 + E * s)))
+    if (gt(math.abs(math.cos(phi0)), 1e-8)) phi0 + corr else phi0
+  }
+
+  // Plan-time constants of the case classes below (Scala math, computed
+  // once per CRS; the kernels run Spark's semantics per point).
+
+  /** Snyder 15-9 at plan time. */
+  private def tFn(phi: Double): Double = {
+    val es = E * math.sin(phi)
+    math.tan(math.Pi / 4 - phi / 2) *
+      math.pow((1 + es) / (1 - es), E / 2)
+  }
+
+  /** Snyder 14-15: m(φ) = cosφ / sqrt(1 − e² sin²φ). */
+  private def mFn(phi: Double): Double = {
+    val s = math.sin(phi)
+    math.cos(phi) / math.sqrt(1 - E2 * s * s)
+  }
+
+  /** Snyder 3-12: the authalic q. */
+  private def qFn(phi: Double): Double = {
+    val s = math.sin(phi)
+    (1 - E2) * (s / (1 - E2 * s * s) -
+      (1.0 / (2 * E)) * math.log((1 - E * s) / (1 + E * s)))
+  }
+
+  // ------------------------------------------------ polar stereographic
 
   /** A polar stereographic CRS: hemisphere, standard parallel (lat_ts,
     * degrees, signed), central meridian, false easting/northing. A
@@ -54,7 +123,7 @@ object PolarOps {
     * factor at the pole, EPSG method 9810 — the UPS family). */
   final case class PolarStereo(north: Boolean, latTs: Double, lon0: Double,
                                x0: Double, y0: Double,
-                               k0: Double = Double.NaN) {
+                               k0: Double = Double.NaN) extends Projection {
     /** tc, mc at the standard parallel (north-aspect magnitudes). */
     val tsAbs: Double = math.abs(latTs)
     val tc: Double = tFn(math.toRadians(tsAbs))
@@ -68,6 +137,30 @@ object PolarOps {
       if (k0.isNaN) A * mc / tc
       else 2.0 * A * k0 / math.sqrt(
         math.pow(1 + E, 1 + E) * math.pow(1 - E, 1 - E))
+
+    /** South aspect runs the north equations on the mirrored
+      * (−φ, −(λ−λ0)) and negates both outputs (Snyder p. 161). */
+    private val sgn = if (north) 1.0 else -1.0
+
+    def forward(lon: Double, lat: Double, out: Array[Double]): Int = {
+      val phi = math.toRadians(lat * sgn)
+      val lam = math.toRadians((lon - lon0) * sgn)
+      val rho = rhoK * isoT(phi, E)
+      out(0) = rho * math.sin(lam) * sgn + x0
+      out(1) = -(rho * math.cos(lam)) * sgn + y0
+      0
+    }
+
+    /** Via the conformal latitude (Snyder 21-39/40 + [[conformalPhi]]). */
+    def inverse(x: Double, y: Double, out: Array[Double]): Int = {
+      val xn = (x - x0) * sgn
+      val yn = (y - y0) * sgn
+      val rho = math.sqrt(xn * xn + yn * yn)
+      val phi = conformalPhi(rho / rhoK)
+      out(0) = math.toDegrees(atan2(xn, -yn)) * sgn + lon0
+      out(1) = math.toDegrees(phi) * sgn
+      0
+    }
   }
 
   def stereoForCrs(crs: String): Option[PolarStereo] = crs match {
@@ -106,9 +199,11 @@ object PolarOps {
     case _ => None
   }
 
+  // ------------------------------------------ Lambert azimuthal equal-area
+
   /** A Lambert azimuthal equal-area CRS: center, false origin. Polar
     * aspects (|lat0| = 90) use the simpler polar equations. */
-  final case class Laea(lat0: Double, lon0: Double, x0: Double, y0: Double) {
+  final case class Laea(lat0: Double, lon0: Double, x0: Double, y0: Double) extends Projection {
     val polarNorth: Boolean = lat0 >= 89.999999
     val polarSouth: Boolean = lat0 <= -89.999999
     val phi0: Double = math.toRadians(lat0)
@@ -117,6 +212,59 @@ object PolarOps {
     val m1: Double = mFn(phi0)
     val d: Double = if (polarNorth || polarSouth) 1.0
       else A * m1 / (rq * math.cos(beta1))
+    private val sinB1 = math.sin(beta1)
+    private val cosB1 = math.cos(beta1)
+
+    /** Polar aspects use Snyder 24-23/24 (ρ = a·sqrt(qp ∓ q)); the oblique
+      * aspect uses 24-17..24-19 with the D stretch. */
+    def forward(lon: Double, lat: Double, out: Array[Double]): Int = {
+      val q = authalicQ(math.sin(math.toRadians(lat)))
+      val lam = math.toRadians(lon - lon0)
+      if (polarNorth || polarSouth) {
+        val sgn = if (polarNorth) 1.0 else -1.0
+        val rho = A * math.sqrt(Qp - q * sgn)
+        out(0) = rho * math.sin(lam) + x0
+        out(1) = -(rho * math.cos(lam)) * sgn + y0
+      } else {
+        val beta = math.asin(q / Qp)
+        val b = rq * math.sqrt(2.0 / (1.0 + sinB1 * math.sin(beta) +
+          cosB1 * math.cos(beta) * math.cos(lam)))
+        out(0) = b * d * math.cos(beta) * math.sin(lam) + x0
+        out(1) = (b / d) * (cosB1 * math.sin(beta) -
+          sinB1 * math.cos(beta) * math.cos(lam)) + y0
+      }
+      0
+    }
+
+    /** Via the authalic latitude (Snyder 25-16..25-18 + [[authalicPhi]]).
+      * The exact center point (ρ = 0) returns (lon0, lat0). */
+    def inverse(x: Double, y: Double, out: Array[Double]): Int = {
+      val xr = x - x0
+      val yr = y - y0
+      var rho = 0.0
+      var lam = 0.0
+      var phi = 0.0
+      if (polarNorth || polarSouth) {
+        val sgn = if (polarNorth) 1.0 else -1.0
+        rho = math.sqrt(xr * xr + yr * yr)
+        val q = (Qp - (rho / A) * (rho / A)) * sgn
+        phi = authalicPhi(math.asin(q / Qp), q)
+        lam = atan2(xr, -yr * sgn)
+      } else {
+        val xd = xr / d
+        val yd = yr * d
+        rho = math.sqrt(xd * xd + yd * yd)
+        val ce = 2.0 * math.asin(rho / (2 * rq))
+        val beta = math.asin(math.cos(ce) * sinB1 +
+          yd * math.sin(ce) * cosB1 / rho)
+        phi = authalicPhi(beta, Qp * math.sin(beta))
+        lam = atan2(xd * math.sin(ce),
+          rho * cosB1 * math.cos(ce) - yd * sinB1 * math.sin(ce))
+      }
+      if (rho == 0.0) { out(0) = lon0; out(1) = lat0 }
+      else { out(0) = math.toDegrees(lam) + lon0; out(1) = math.toDegrees(phi) }
+      0
+    }
   }
 
   def laeaForCrs(crs: String): Option[Laea] = crs match {
@@ -148,25 +296,20 @@ object PolarOps {
   def isSinusoidal(crs: String): Boolean =
     crs == "SR-ORG:6974" || crs == "MODIS:SIN"
 
-  def sinuForward(lonDeg: Column, latDeg: Column): (Column, Column) = {
-    val phi = radians(latDeg)
-    (lit(ModisSphereR) * radians(lonDeg) * cos(phi),
-      lit(ModisSphereR) * phi)
-  }
+  case object Sinusoidal extends Projection {
+    def forward(lon: Double, lat: Double, out: Array[Double]): Int = {
+      val phi = math.toRadians(lat)
+      out(0) = ModisSphereR * math.toRadians(lon) * math.cos(phi)
+      out(1) = ModisSphereR * phi
+      0
+    }
 
-  def sinuInverse(x: Column, y: Column): (Column, Column) = {
-    val phi = y / lit(ModisSphereR)
-    (degrees(x / (lit(ModisSphereR) * cos(phi))), degrees(phi))
-  }
-
-  def sinuForwardScalar(lonDeg: Double, latDeg: Double): (Double, Double) = {
-    val phi = math.toRadians(latDeg)
-    (ModisSphereR * math.toRadians(lonDeg) * math.cos(phi), ModisSphereR * phi)
-  }
-
-  def sinuInverseScalar(x: Double, y: Double): (Double, Double) = {
-    val phi = y / ModisSphereR
-    (math.toDegrees(x / (ModisSphereR * math.cos(phi))), math.toDegrees(phi))
+    def inverse(x: Double, y: Double, out: Array[Double]): Int = {
+      val phi = y / ModisSphereR
+      out(0) = math.toDegrees(x / (ModisSphereR * math.cos(phi)))
+      out(1) = math.toDegrees(phi)
+      0
+    }
   }
 
   // ------------------------------------ Lambert conformal conic (2SP)
@@ -175,7 +318,7 @@ object PolarOps {
     * have n > 0 (northern standard parallels); the derived constants
     * are shared Scala doubles so SQL oracles mirror them bit-for-bit. */
   final case class Lcc(lat1: Double, lat2: Double, lat0: Double,
-                       lon0: Double, x0: Double, y0: Double) {
+                       lon0: Double, x0: Double, y0: Double) extends Projection {
     private val m1 = mFn(math.toRadians(lat1))
     private val m2 = mFn(math.toRadians(lat2))
     private val t1 = tFn(math.toRadians(lat1))
@@ -185,6 +328,25 @@ object PolarOps {
     val f: Double = m1 / (n * math.pow(t1, n))
     val rho0: Double = A * f * math.pow(tFn(math.toRadians(lat0)), n)
     require(n > 0, s"southern-aspect LCC unsupported (n = $n)")
+    private val af = A * f
+
+    def forward(lon: Double, lat: Double, out: Array[Double]): Int = {
+      val rho = af * pow(isoT(math.toRadians(lat), E), n)
+      val th = n * math.toRadians(lon - lon0)
+      out(0) = rho * math.sin(th) + x0
+      out(1) = rho0 - rho * math.cos(th) + y0
+      0
+    }
+
+    def inverse(x: Double, y: Double, out: Array[Double]): Int = {
+      val xr = x - x0
+      val yr = rho0 - (y - y0)
+      val rho = math.sqrt(xr * xr + yr * yr)
+      val t = pow(rho / af, 1.0 / n)
+      out(0) = math.toDegrees(atan2(xr, yr) / n) + lon0
+      out(1) = math.toDegrees(conformalPhi(t))
+      0
+    }
   }
 
   /** Registered LCC instances — EPSG:2154 (RGF93 / Lambert-93, the
@@ -208,46 +370,12 @@ object PolarOps {
     case _ => None
   }
 
-  def lccForward(lonDeg: Column, latDeg: Column, lc: Lcc)
-      : (Column, Column) = {
-    val rho = lit(A * lc.f) * pow(tExpr(radians(latDeg)), lit(lc.n))
-    val th = lit(lc.n) * radians(lonDeg - lit(lc.lon0))
-    (rho * sin(th) + lit(lc.x0),
-      lit(lc.rho0) - rho * cos(th) + lit(lc.y0))
-  }
-
-  def lccInverse(easting: Column, northing: Column, lc: Lcc)
-      : (Column, Column) = {
-    val xr = easting - lit(lc.x0)
-    val yr = lit(lc.rho0) - (northing - lit(lc.y0))
-    val rho = sqrt(xr * xr + yr * yr)
-    val t = pow(rho / lit(A * lc.f), lit(1.0 / lc.n))
-    val lam = atan2(xr, yr) / lit(lc.n)
-    (degrees(lam) + lit(lc.lon0), degrees(conformalPhi(t)))
-  }
-
-  def lccForwardScalar(lonDeg: Double, latDeg: Double, lc: Lcc)
-      : (Double, Double) = {
-    val rho = A * lc.f * math.pow(tFn(math.toRadians(latDeg)), lc.n)
-    val th = lc.n * math.toRadians(lonDeg - lc.lon0)
-    (rho * math.sin(th) + lc.x0, lc.rho0 - rho * math.cos(th) + lc.y0)
-  }
-
-  def lccInverseScalar(x: Double, y: Double, lc: Lcc): (Double, Double) = {
-    val xr = x - lc.x0
-    val yr = lc.rho0 - (y - lc.y0)
-    val rho = math.hypot(xr, yr)
-    val t = math.pow(rho / (A * lc.f), 1.0 / lc.n)
-    (math.toDegrees(math.atan2(xr, yr) / lc.n) + lc.lon0,
-      math.toDegrees(conformalPhiScalar(t)))
-  }
-
   // ------------------------------------------ Albers equal-area conic
 
   /** An Albers 2SP CRS (Snyder 14-1..14-11, ellipsoidal via the
     * authalic q). */
   final case class Albers(lat1: Double, lat2: Double, lat0: Double,
-                          lon0: Double, x0: Double, y0: Double) {
+                          lon0: Double, x0: Double, y0: Double) extends Projection {
     private val m1 = mFn(math.toRadians(lat1))
     private val m2 = mFn(math.toRadians(lat2))
     private val q1 = qFn(math.toRadians(lat1))
@@ -256,6 +384,25 @@ object PolarOps {
     val c: Double = m1 * m1 + n * q1
     val rho0: Double = A * math.sqrt(c - n * qFn(math.toRadians(lat0))) / n
     require(n > 0, s"southern-aspect Albers unsupported (n = $n)")
+
+    def forward(lon: Double, lat: Double, out: Array[Double]): Int = {
+      val q = authalicQ(math.sin(math.toRadians(lat)))
+      val rho = A * math.sqrt(c - n * q) / n
+      val th = n * math.toRadians(lon - lon0)
+      out(0) = rho * math.sin(th) + x0
+      out(1) = rho0 - rho * math.cos(th) + y0
+      0
+    }
+
+    def inverse(x: Double, y: Double, out: Array[Double]): Int = {
+      val xr = x - x0
+      val yr = rho0 - (y - y0)
+      val rho = math.sqrt(xr * xr + yr * yr)
+      val q = (c - (rho * n / A) * (rho * n / A)) / n
+      out(0) = math.toDegrees(atan2(xr, yr) / n) + lon0
+      out(1) = math.toDegrees(authalicPhi(math.asin(q / Qp), q))
+      0
+    }
   }
 
   /** EPSG:5070 — NAD83 / Conus Albers, the US national equal-area grid
@@ -274,45 +421,6 @@ object PolarOps {
     case _ => None
   }
 
-  def albersForward(lonDeg: Column, latDeg: Column, ab: Albers)
-      : (Column, Column) = {
-    val q = qExpr(sin(radians(latDeg)))
-    val rho = lit(A) * sqrt(lit(ab.c) - lit(ab.n) * q) / lit(ab.n)
-    val th = lit(ab.n) * radians(lonDeg - lit(ab.lon0))
-    (rho * sin(th) + lit(ab.x0),
-      lit(ab.rho0) - rho * cos(th) + lit(ab.y0))
-  }
-
-  def albersInverse(easting: Column, northing: Column, ab: Albers)
-      : (Column, Column) = {
-    val xr = easting - lit(ab.x0)
-    val yr = lit(ab.rho0) - (northing - lit(ab.y0))
-    val rho = sqrt(xr * xr + yr * yr)
-    val q = (lit(ab.c) - (rho * lit(ab.n) / lit(A)) * (rho * lit(ab.n) / lit(A))) / lit(ab.n)
-    val beta = asin(q / lit(Qp))
-    (degrees(atan2(xr, yr) / lit(ab.n)) + lit(ab.lon0),
-      degrees(authalicPhi(beta, q)))
-  }
-
-  def albersForwardScalar(lonDeg: Double, latDeg: Double, ab: Albers)
-      : (Double, Double) = {
-    val q = qFn(math.toRadians(latDeg))
-    val rho = A * math.sqrt(ab.c - ab.n * q) / ab.n
-    val th = ab.n * math.toRadians(lonDeg - ab.lon0)
-    (rho * math.sin(th) + ab.x0, ab.rho0 - rho * math.cos(th) + ab.y0)
-  }
-
-  def albersInverseScalar(x: Double, y: Double, ab: Albers)
-      : (Double, Double) = {
-    val xr = x - ab.x0
-    val yr = ab.rho0 - (y - ab.y0)
-    val rho = math.hypot(xr, yr)
-    val q = (ab.c - math.pow(rho * ab.n / A, 2)) / ab.n
-    val beta = math.asin(q / Qp)
-    (math.toDegrees(math.atan2(xr, yr) / ab.n) + ab.lon0,
-      math.toDegrees(authalicPhiScalar(beta, q)))
-  }
-
   // --------------------------------------------------- rotated pole
 
   /** A rotated-pole geographic CRS — the COSMO/HIRLAM regional-weather
@@ -322,12 +430,47 @@ object PolarOps {
     * by construction (the rotation is exact; these grids are defined on
     * a sphere). Named "ROTPOLE:<poleLat>:<poleLon>" to stay free of the
     * proj ob_tran parameter-convention ambiguity. */
-  final case class RotPole(poleLatDeg: Double, poleLonDeg: Double) {
+  final case class RotPole(poleLatDeg: Double, poleLonDeg: Double) extends Projection {
     // v' = Rz(π) · Ry(φp − π/2) · Rz(−λp) · v maps the pole to +z with
     // the COSMO zero-meridian convention: the true meridian λp ± 180°
     // (the grid center's meridian) reads as rotated lon 0
     val sinT: Double = math.sin(math.toRadians(poleLatDeg) - math.Pi / 2)
     val cosT: Double = math.cos(math.toRadians(poleLatDeg) - math.Pi / 2)
+
+    /** TRUE (lon, lat) → ROTATED (lon', lat') in degrees. */
+    def forward(lon: Double, lat: Double, out: Array[Double]): Int = {
+      val phi = math.toRadians(lat)
+      val lam = math.toRadians(lon - poleLonDeg) // Rz(−λp) folded in
+      // v1 = Rz-rotated unit vector; v' = Ry(θ)·v1 with θ = φp − π/2
+      val x1 = math.cos(phi) * math.cos(lam)
+      val y1 = math.cos(phi) * math.sin(lam)
+      val z1 = math.sin(phi)
+      val x2 = x1 * cosT + z1 * sinT
+      val z2 = -(x1 * sinT) + z1 * cosT
+      out(0) = math.toDegrees(atan2(-y1, -x2))
+      out(1) = math.toDegrees(math.asin(z2))
+      0
+    }
+
+    /** ROTATED (lon', lat') → TRUE (lon, lat): the transposed rotations. */
+    def inverse(lonR: Double, latR: Double, out: Array[Double]): Int = {
+      val phi = math.toRadians(latR)
+      val lam = math.toRadians(lonR)
+      // undo Rz(π) first: (x, y) → (−x, −y)
+      val x1 = -(math.cos(phi) * math.cos(lam))
+      val y1 = -(math.cos(phi) * math.sin(lam))
+      val z1 = math.sin(phi)
+      val x2 = x1 * cosT - z1 * sinT
+      val z2 = x1 * sinT + z1 * cosT
+      val lonT = math.toDegrees(atan2(y1, x2)) + poleLonDeg
+      // normalize to (−180, 180] (atan2 + pole lon can leave the range)
+      out(0) = lonT - 360.0 * Projection.ceil((lonT - 180.0) / 360.0)
+      out(1) = math.toDegrees(math.asin(z2))
+      0
+    }
+
+    /** The frame is in degrees. */
+    override def unitsPerDegree: Double = 1.0
   }
 
   def rotPoleForCrs(crs: String): Option[RotPole] =
@@ -339,305 +482,6 @@ object PolarOps {
           yield RotPole(la, lo)
       case _ => None
     }
-
-  /** TRUE (lonDeg, latDeg) → ROTATED (lon', lat') in degrees. */
-  def rotPoleForward(lonDeg: Column, latDeg: Column, rp: RotPole)
-      : (Column, Column) = {
-    val phi = radians(latDeg)
-    val lam = radians(lonDeg - lit(rp.poleLonDeg)) // Rz(−λp) folded in
-    // v1 = Rz-rotated unit vector; v' = Ry(θ)·v1 with θ = φp − π/2
-    val x1 = cos(phi) * cos(lam)
-    val y1 = cos(phi) * sin(lam)
-    val z1 = sin(phi)
-    val x2 = x1 * lit(rp.cosT) + z1 * lit(rp.sinT)
-    val z2 = negate(x1 * lit(rp.sinT)) + z1 * lit(rp.cosT)
-    (degrees(atan2(negate(y1), negate(x2))), degrees(asin(z2)))
-  }
-
-  /** ROTATED (lon', lat') → TRUE (lonDeg, latDeg): the transposed
-    * rotations. */
-  def rotPoleInverse(lonDeg: Column, latDeg: Column, rp: RotPole)
-      : (Column, Column) = {
-    val phi = radians(latDeg)
-    val lam = radians(lonDeg)
-    // undo Rz(π) first: (x, y) → (−x, −y)
-    val x1 = negate(cos(phi) * cos(lam))
-    val y1 = negate(cos(phi) * sin(lam))
-    val z1 = sin(phi)
-    val x2 = x1 * lit(rp.cosT) - z1 * lit(rp.sinT)
-    val z2 = x1 * lit(rp.sinT) + z1 * lit(rp.cosT)
-    val lonT = degrees(atan2(y1, x2)) + lit(rp.poleLonDeg)
-    // normalize to (−180, 180] (atan2 + pole lon can leave the range)
-    (lonT - lit(360.0) * ceil((lonT - lit(180.0)) / lit(360.0)),
-      degrees(asin(z2)))
-  }
-
-  def rotPoleForwardScalar(lonDeg: Double, latDeg: Double, rp: RotPole)
-      : (Double, Double) = {
-    val phi = math.toRadians(latDeg)
-    val lam = math.toRadians(lonDeg - rp.poleLonDeg)
-    val x1 = math.cos(phi) * math.cos(lam)
-    val y1 = math.cos(phi) * math.sin(lam)
-    val z1 = math.sin(phi)
-    val x2 = x1 * rp.cosT + z1 * rp.sinT
-    val z2 = -x1 * rp.sinT + z1 * rp.cosT
-    (math.toDegrees(math.atan2(-y1, -x2)), math.toDegrees(math.asin(z2)))
-  }
-
-  def rotPoleInverseScalar(lonDeg: Double, latDeg: Double, rp: RotPole)
-      : (Double, Double) = {
-    val phi = math.toRadians(latDeg)
-    val lam = math.toRadians(lonDeg)
-    val x1 = -math.cos(phi) * math.cos(lam) // undo Rz(π)
-    val y1 = -math.cos(phi) * math.sin(lam)
-    val z1 = math.sin(phi)
-    val x2 = x1 * rp.cosT - z1 * rp.sinT
-    val z2 = x1 * rp.sinT + z1 * rp.cosT
-    val lonT = math.toDegrees(math.atan2(y1, x2)) + rp.poleLonDeg
-    (lonT - 360.0 * math.ceil((lonT - 180.0) / 360.0),
-      math.toDegrees(math.asin(z2)))
-  }
-
-  // --------------------------------------------------- scalar primitives
-
-  /** Snyder 15-9: t(φ) = tan(π/4 − φ/2) · [(1+e sinφ)/(1−e sinφ)]^(e/2). */
-  private def tFn(phi: Double): Double = {
-    val es = E * math.sin(phi)
-    math.tan(math.Pi / 4 - phi / 2) *
-      math.pow((1 + es) / (1 - es), E / 2)
-  }
-
-  /** Column twin of [[tFn]] (same IEEE op order). */
-  private def tExpr(phi: Column): Column = {
-    val es = lit(E) * sin(phi)
-    tan(lit(math.Pi / 4) - phi / 2) *
-      pow((lit(1.0) + es) / (lit(1.0) - es), lit(E / 2))
-  }
-
-  /** Column twin of [[qFn]] over s = sinφ. */
-  private def qExpr(s: Column): Column =
-    lit(1 - E2) * (s / (lit(1.0) - lit(E2) * s * s) -
-      lit(1.0 / (2 * E)) *
-        log((lit(1.0) - lit(E) * s) / (lit(1.0) + lit(E) * s)))
-
-  /** The conformal-latitude inverse: series seed (Snyder 3-5) plus one
-    * pass of the exact fixed-point iteration (Snyder 7-9) — closes
-    * forward∘inverse to ≲1e-12°. */
-  private def conformalPhi(t: Column): Column = {
-    val chi = lit(math.Pi / 2) - lit(2.0) * atan(t)
-    val phi0 = chi + lit(C2) * sin(lit(2.0) * chi) +
-      lit(C4) * sin(lit(4.0) * chi) + lit(C6) * sin(lit(6.0) * chi) +
-      lit(C8) * sin(lit(8.0) * chi)
-    val es = lit(E) * sin(phi0)
-    lit(math.Pi / 2) - lit(2.0) *
-      atan(t * pow((lit(1.0) - es) / (lit(1.0) + es), lit(E / 2)))
-  }
-
-  private def conformalPhiScalar(t: Double): Double = {
-    val chi = math.Pi / 2 - 2 * math.atan(t)
-    val phi0 = chi + C2 * math.sin(2 * chi) + C4 * math.sin(4 * chi) +
-      C6 * math.sin(6 * chi) + C8 * math.sin(8 * chi)
-    val es = E * math.sin(phi0)
-    math.Pi / 2 - 2 * math.atan(t * math.pow((1 - es) / (1 + es), E / 2))
-  }
-
-  /** Snyder 14-15: m(φ) = cosφ / sqrt(1 − e² sin²φ). */
-  private def mFn(phi: Double): Double = {
-    val s = math.sin(phi)
-    math.cos(phi) / math.sqrt(1 - E2 * s * s)
-  }
-
-  /** Snyder 3-12: the authalic q. */
-  private def qFn(phi: Double): Double = {
-    val s = math.sin(phi)
-    (1 - E2) * (s / (1 - E2 * s * s) -
-      (1.0 / (2 * E)) * math.log((1 - E * s) / (1 + E * s)))
-  }
-
-  // ------------------------------------- polar stereographic, column form
-
-  /** Forward: (lonDeg, latDeg) → (easting, northing). South aspect runs
-    * the north equations on the mirrored (−φ, −(λ−λ0)) and negates both
-    * outputs (Snyder p. 161 sign-reversal rule). */
-  def stereoForward(lonDeg: Column, latDeg: Column, ps: PolarStereo)
-      : (Column, Column) = {
-    val sgn = if (ps.north) 1.0 else -1.0
-    val phi = radians(latDeg * sgn)
-    val lam = radians((lonDeg - lit(ps.lon0)) * sgn)
-    val es = lit(E) * sin(phi)
-    val t = tan(lit(math.Pi / 4) - phi / 2) *
-      pow((lit(1.0) + es) / (lit(1.0) - es), lit(E / 2))
-    val rho = lit(ps.rhoK) * t
-    val x = rho * sin(lam) * sgn + lit(ps.x0)
-    val y = negate(rho * cos(lam)) * sgn + lit(ps.y0)
-    (x, y)
-  }
-
-  /** Inverse: (easting, northing) → (lonDeg, latDeg) via the conformal
-    * latitude series (Snyder 21-39/40 + 3-5), tightened by one pass of
-    * the exact fixed-point iteration (Snyder 7-9) so forward∘inverse
-    * closes to ≲1e-12° — the series seed alone truncates at ~e¹⁰. */
-  def stereoInverse(easting: Column, northing: Column, ps: PolarStereo)
-      : (Column, Column) = {
-    val sgn = if (ps.north) 1.0 else -1.0
-    val xn = (easting - lit(ps.x0)) * sgn
-    val yn = (northing - lit(ps.y0)) * sgn
-    val rho = sqrt(xn * xn + yn * yn)
-    val phi = conformalPhi(rho / lit(ps.rhoK))
-    val lam = atan2(xn, negate(yn))
-    (degrees(lam) * sgn + lit(ps.lon0), degrees(phi) * sgn)
-  }
-
-  def stereoForwardScalar(lonDeg: Double, latDeg: Double, ps: PolarStereo)
-      : (Double, Double) = {
-    val sgn = if (ps.north) 1.0 else -1.0
-    val phi = math.toRadians(latDeg * sgn)
-    val lam = math.toRadians((lonDeg - ps.lon0) * sgn)
-    val rho = ps.rhoK * tFn(phi)
-    (rho * math.sin(lam) * sgn + ps.x0, -rho * math.cos(lam) * sgn + ps.y0)
-  }
-
-  def stereoInverseScalar(x: Double, y: Double, ps: PolarStereo)
-      : (Double, Double) = {
-    val sgn = if (ps.north) 1.0 else -1.0
-    val xn = (x - ps.x0) * sgn
-    val yn = (y - ps.y0) * sgn
-    val rho = math.hypot(xn, yn)
-    val phi = conformalPhiScalar(rho / ps.rhoK)
-    (math.toDegrees(math.atan2(xn, -yn)) * sgn + ps.lon0,
-      math.toDegrees(phi) * sgn)
-  }
-
-  // ------------------------------------------------- LAEA, column form
-
-  /** Forward LAEA. Polar aspects use Snyder 24-23/24 (ρ = a·sqrt(qp ∓ q));
-    * the oblique aspect uses 24-17..24-19 with the D stretch. */
-  def laeaForward(lonDeg: Column, latDeg: Column, la: Laea)
-      : (Column, Column) = {
-    val phi = radians(latDeg)
-    val q = qExpr(sin(phi))
-    val lam = radians(lonDeg - lit(la.lon0))
-    if (la.polarNorth || la.polarSouth) {
-      val sgn = if (la.polarNorth) 1.0 else -1.0
-      val rho = lit(A) * sqrt(lit(Qp) - q * sgn)
-      (rho * sin(lam) + lit(la.x0),
-        negate(rho * cos(lam)) * sgn + lit(la.y0))
-    } else {
-      val beta = asin(q / lit(Qp))
-      val b = lit(la.rq) * sqrt(lit(2.0) /
-        (lit(1.0) + lit(math.sin(la.beta1)) * sin(beta) +
-          lit(math.cos(la.beta1)) * cos(beta) * cos(lam)))
-      val x = b * lit(la.d) * cos(beta) * sin(lam) + lit(la.x0)
-      val y = (b / lit(la.d)) * (lit(math.cos(la.beta1)) * sin(beta) -
-        lit(math.sin(la.beta1)) * cos(beta) * cos(lam)) + lit(la.y0)
-      (x, y)
-    }
-  }
-
-  /** The authalic-latitude inverse: series seed (Snyder 3-18) plus one
-    * Newton step (Snyder 3-16) — the e⁶-truncated series alone leaves
-    * ~6e-10 rad, above a 1e-9° round-trip budget. Pole-guarded (the
-    * series is exact at β = ±π/2, where Newton's 1/cosφ blows up). */
-  private def authalicPhi(beta: Column, q: Column): Column = {
-    val phi0 = beta + lit(B2) * sin(lit(2.0) * beta) +
-      lit(B4) * sin(lit(4.0) * beta) + lit(B6) * sin(lit(6.0) * beta)
-    val s = sin(phi0)
-    val om = lit(1.0) - lit(E2) * s * s
-    val corr = om * om / (lit(2.0) * cos(phi0)) *
-      (q / lit(1 - E2) - s / om + lit(1.0 / (2 * E)) *
-        log((lit(1.0) - lit(E) * s) / (lit(1.0) + lit(E) * s)))
-    when(abs(cos(phi0)) > 1e-8, phi0 + corr).otherwise(phi0)
-  }
-
-  private def authalicPhiScalar(beta: Double, q: Double): Double = {
-    val phi0 = beta + B2 * math.sin(2 * beta) + B4 * math.sin(4 * beta) +
-      B6 * math.sin(6 * beta)
-    val c = math.cos(phi0)
-    if (math.abs(c) <= 1e-8) return phi0
-    val s = math.sin(phi0)
-    val om = 1 - E2 * s * s
-    phi0 + om * om / (2 * c) * (q / (1 - E2) - s / om +
-      1.0 / (2 * E) * math.log((1 - E * s) / (1 + E * s)))
-  }
-
-  /** Inverse LAEA via the authalic latitude (Snyder 25-16..25-18 +
-    * [[authalicPhi]]). The exact center point (ρ = 0) returns
-    * (lon0, lat0). */
-  def laeaInverse(easting: Column, northing: Column, la: Laea)
-      : (Column, Column) = {
-    val xr = easting - lit(la.x0)
-    val yr = northing - lit(la.y0)
-    if (la.polarNorth || la.polarSouth) {
-      val sgn = if (la.polarNorth) 1.0 else -1.0
-      val rho = sqrt(xr * xr + yr * yr)
-      val q = (lit(Qp) - (rho / lit(A)) * (rho / lit(A))) * sgn
-      val beta = asin(q / lit(Qp))
-      val phi = authalicPhi(beta, q)
-      val lam = atan2(xr, negate(yr) * sgn)
-      (when(rho === 0.0, lit(la.lon0)).otherwise(degrees(lam) + lit(la.lon0)),
-        when(rho === 0.0, lit(la.lat0)).otherwise(degrees(phi)))
-    } else {
-      val xd = xr / lit(la.d)
-      val yd = yr * lit(la.d)
-      val rho = sqrt(xd * xd + yd * yd)
-      val ce = lit(2.0) * asin(rho / lit(2 * la.rq))
-      val beta = asin(cos(ce) * lit(math.sin(la.beta1)) +
-        yd * sin(ce) * lit(math.cos(la.beta1)) / rho)
-      val phi = authalicPhi(beta, lit(Qp) * sin(beta))
-      val lam = atan2(xd * sin(ce),
-        rho * lit(math.cos(la.beta1)) * cos(ce) -
-          yd * lit(math.sin(la.beta1)) * sin(ce))
-      (when(rho === 0.0, lit(la.lon0)).otherwise(degrees(lam) + lit(la.lon0)),
-        when(rho === 0.0, lit(la.lat0)).otherwise(degrees(phi)))
-    }
-  }
-
-  def laeaForwardScalar(lonDeg: Double, latDeg: Double, la: Laea)
-      : (Double, Double) = {
-    val q = qFn(math.toRadians(latDeg))
-    val lam = math.toRadians(lonDeg - la.lon0)
-    if (la.polarNorth || la.polarSouth) {
-      val sgn = if (la.polarNorth) 1.0 else -1.0
-      val rho = A * math.sqrt(Qp - q * sgn)
-      (rho * math.sin(lam) + la.x0, -rho * math.cos(lam) * sgn + la.y0)
-    } else {
-      val beta = math.asin(q / Qp)
-      val b = la.rq * math.sqrt(2.0 /
-        (1 + math.sin(la.beta1) * math.sin(beta) +
-          math.cos(la.beta1) * math.cos(beta) * math.cos(lam)))
-      (b * la.d * math.cos(beta) * math.sin(lam) + la.x0,
-        (b / la.d) * (math.cos(la.beta1) * math.sin(beta) -
-          math.sin(la.beta1) * math.cos(beta) * math.cos(lam)) + la.y0)
-    }
-  }
-
-  def laeaInverseScalar(x: Double, y: Double, la: Laea): (Double, Double) = {
-    val xr = x - la.x0
-    val yr = y - la.y0
-    if (la.polarNorth || la.polarSouth) {
-      val sgn = if (la.polarNorth) 1.0 else -1.0
-      val rho = math.hypot(xr, yr)
-      if (rho == 0.0) return (la.lon0, la.lat0)
-      val q = (Qp - (rho / A) * (rho / A)) * sgn
-      val beta = math.asin(q / Qp)
-      val phi = authalicPhiScalar(beta, q)
-      (math.toDegrees(math.atan2(xr, -yr * sgn)) + la.lon0,
-        math.toDegrees(phi))
-    } else {
-      val xd = xr / la.d
-      val yd = yr * la.d
-      val rho = math.hypot(xd, yd)
-      if (rho == 0.0) return (la.lon0, la.lat0)
-      val ce = 2 * math.asin(rho / (2 * la.rq))
-      val beta = math.asin(math.cos(ce) * math.sin(la.beta1) +
-        yd * math.sin(ce) * math.cos(la.beta1) / rho)
-      val phi = authalicPhiScalar(beta, Qp * math.sin(beta))
-      val lam = math.atan2(xd * math.sin(ce),
-        rho * math.cos(la.beta1) * math.cos(ce) -
-          yd * math.sin(la.beta1) * math.sin(ce))
-      (math.toDegrees(lam) + la.lon0, math.toDegrees(phi))
-    }
-  }
 
   // ------------------------------------ EASE-Grid 2.0 (EPSG:6933)
 
@@ -657,29 +501,21 @@ object PolarOps {
 
   def isEase2(crs: String): Boolean = crs == "EPSG:6933"
 
-  def ease2Forward(lonDeg: Column, latDeg: Column): (Column, Column) = {
-    val q = qExpr(sin(radians(latDeg)))
-    (lit(A * Ease2K0) * radians(lonDeg),
-      lit(A / (2.0 * Ease2K0)) * q)
-  }
+  case object Ease2 extends Projection {
+    def forward(lon: Double, lat: Double, out: Array[Double]): Int = {
+      val q = authalicQ(math.sin(math.toRadians(lat)))
+      out(0) = A * Ease2K0 * math.toRadians(lon)
+      out(1) = A / (2.0 * Ease2K0) * q
+      0
+    }
 
-  def ease2Inverse(x: Column, y: Column): (Column, Column) = {
-    val q = y * lit(2.0 * Ease2K0 / A)
-    val beta = asin(q / lit(Qp)) // |q| > Qp (off-grid) → NaN
-    (degrees(x / lit(A * Ease2K0)), degrees(authalicPhi(beta, q)))
-  }
-
-  def ease2ForwardScalar(lonDeg: Double, latDeg: Double): (Double, Double) =
-    (A * Ease2K0 * math.toRadians(lonDeg),
-      A / (2.0 * Ease2K0) * qFn(math.toRadians(latDeg)))
-
-  def ease2InverseScalar(x: Double, y: Double): (Double, Double) = {
-    val q = y * (2.0 * Ease2K0 / A)
-    val r = q / Qp
-    if (math.abs(r) > 1.0) return (Double.NaN, Double.NaN)
-    val beta = math.asin(r)
-    (math.toDegrees(x / (A * Ease2K0)),
-      math.toDegrees(authalicPhiScalar(beta, q)))
+    def inverse(x: Double, y: Double, out: Array[Double]): Int = {
+      val q = y * (2.0 * Ease2K0 / A)
+      val beta = math.asin(q / Qp) // |q| > Qp (off-grid) → NaN
+      out(0) = math.toDegrees(x / (A * Ease2K0))
+      out(1) = math.toDegrees(authalicPhi(beta, q))
+      0
+    }
   }
 
   // -------------------------------------------------- orthographic
@@ -689,9 +525,38 @@ object PolarOps {
     * "ORTHO:<lat0>:<lon0>". Spherical by convention like the sinusoidal
     * and rotated-pole families (the MODIS authalic sphere radius);
     * points beyond the visible hemisphere read NaN. */
-  final case class Ortho(lat0Deg: Double, lon0Deg: Double) {
+  final case class Ortho(lat0Deg: Double, lon0Deg: Double) extends Projection {
     val sin0: Double = math.sin(math.toRadians(lat0Deg))
     val cos0: Double = math.cos(math.toRadians(lat0Deg))
+    private val phi0 = math.toRadians(lat0Deg)
+
+    def forward(lon: Double, lat: Double, out: Array[Double]): Int = {
+      val phi = math.toRadians(lat)
+      val dl = math.toRadians(lon - lon0Deg)
+      // hemisphere test: cos(c) = sinφ0 sinφ + cosφ0 cosφ cosΔλ ≥ 0
+      val cosc = sin0 * math.sin(phi) + cos0 * math.cos(phi) * math.cos(dl)
+      val vis = if (ge(cosc, 0.0)) 1.0 else Double.NaN
+      out(0) = vis * ModisSphereR * math.cos(phi) * math.sin(dl)
+      out(1) = vis * ModisSphereR *
+        (cos0 * math.sin(phi) - sin0 * math.cos(phi) * math.cos(dl))
+      0
+    }
+
+    def inverse(x: Double, y: Double, out: Array[Double]): Int = {
+      val rho = math.sqrt(x * x + y * y)
+      val c = math.asin(rho / ModisSphereR) // ρ > R (off-disk) → NaN
+      // ρ = 0 (the tangent point) makes y·sin(c)/ρ a 0/0 — guard to center
+      if (rho == 0.0) {
+        out(0) = math.toDegrees(0.0) + lon0Deg
+        out(1) = math.toDegrees(phi0)
+      } else {
+        out(0) = math.toDegrees(atan2(x * math.sin(c),
+          rho * cos0 * math.cos(c) - y * sin0 * math.sin(c))) + lon0Deg
+        out(1) = math.toDegrees(
+          math.asin(math.cos(c) * sin0 + y * math.sin(c) * cos0 / rho))
+      }
+      0
+    }
   }
 
   def orthoForCrs(crs: String): Option[Ortho] =
@@ -704,64 +569,57 @@ object PolarOps {
       case _ => None
     }
 
-  def orthoForward(lonDeg: Column, latDeg: Column, o: Ortho)
-      : (Column, Column) = {
-    val phi = radians(latDeg)
-    val dl = radians(lonDeg - lit(o.lon0Deg))
-    // hemisphere test: cos(c) = sinφ0 sinφ + cosφ0 cosφ cosΔλ ≥ 0
-    val cosc = lit(o.sin0) * sin(phi) + lit(o.cos0) * cos(phi) * cos(dl)
-    val vis = when(cosc >= 0.0, lit(1.0)).otherwise(lit(Double.NaN))
-    (vis * lit(ModisSphereR) * cos(phi) * sin(dl),
-      vis * lit(ModisSphereR) *
-        (lit(o.cos0) * sin(phi) - lit(o.sin0) * cos(phi) * cos(dl)))
-  }
-
-  def orthoInverse(x: Column, y: Column, o: Ortho): (Column, Column) = {
-    val rho = sqrt(x * x + y * y)
-    val c = asin(rho / lit(ModisSphereR)) // ρ > R (off-disk) → NaN
-    // ρ = 0 (the tangent point) makes y·sin(c)/ρ a 0/0 — guard to center
-    val phi = when(rho === 0.0, lit(math.toRadians(o.lat0Deg)))
-      .otherwise(asin(cos(c) * lit(o.sin0) +
-        y * sin(c) * lit(o.cos0) / rho))
-    val lam = when(rho === 0.0, lit(0.0))
-      .otherwise(atan2(x * sin(c),
-        rho * lit(o.cos0) * cos(c) - y * lit(o.sin0) * sin(c)))
-    (degrees(lam) + lit(o.lon0Deg), degrees(phi))
-  }
-
-  def orthoForwardScalar(lonDeg: Double, latDeg: Double, o: Ortho)
-      : (Double, Double) = {
-    val phi = math.toRadians(latDeg)
-    val dl = math.toRadians(lonDeg - o.lon0Deg)
-    val cosc = o.sin0 * math.sin(phi) + o.cos0 * math.cos(phi) * math.cos(dl)
-    if (cosc < 0.0) return (Double.NaN, Double.NaN)
-    (ModisSphereR * math.cos(phi) * math.sin(dl),
-      ModisSphereR *
-        (o.cos0 * math.sin(phi) - o.sin0 * math.cos(phi) * math.cos(dl)))
-  }
-
-  def orthoInverseScalar(x: Double, y: Double, o: Ortho): (Double, Double) = {
-    val rho = math.sqrt(x * x + y * y)
-    if (rho > ModisSphereR) return (Double.NaN, Double.NaN)
-    if (rho == 0.0) return (o.lon0Deg, o.lat0Deg)
-    val c = math.asin(rho / ModisSphereR)
-    val phi = math.asin(math.cos(c) * o.sin0 +
-      y * math.sin(c) * o.cos0 / rho)
-    val lam = math.atan2(x * math.sin(c),
-      rho * o.cos0 * math.cos(c) - y * o.sin0 * math.sin(c))
-    (math.toDegrees(lam) + o.lon0Deg, math.toDegrees(phi))
-  }
-
   // ---------------------------------------------------- Mollweide
 
   /** Spherical Mollweide (Snyder eq. 31-1..31-8) — the classic equal-
     * area world-map projection ("MOLL:<lon0>"), on the same authalic
     * sphere as the sinusoidal/orthographic families. The auxiliary
-    * angle satisfies 2θ + sin 2θ = π sin φ; both the Column and the
-    * scalar (and the SQL oracle twin) run the SAME fixed-count
-    * pole-guarded Newton iteration, so results are bit-identical across
-    * forms — a converged-loop would be engine-order-dependent. */
-  final case class Mollweide(lon0Deg: Double)
+    * angle satisfies 2θ + sin 2θ = π sin φ; the kernel and the SQL oracle
+    * twin run the SAME fixed-count pole-guarded Newton iteration
+    * ([[mollTheta]]), so results are bit-identical — a converged loop
+    * would be engine-order-dependent. */
+  final case class Mollweide(lon0Deg: Double) extends Projection {
+    def forward(lon: Double, lat: Double, out: Array[Double]): Int = {
+      val theta = mollTheta(math.toRadians(lat))
+      out(0) = ModisSphereR * MollXScale * math.toRadians(lon - lon0Deg) *
+        math.cos(theta)
+      out(1) = ModisSphereR * MollSqrt2 * math.sin(theta)
+      0
+    }
+
+    def inverse(x: Double, y: Double, out: Array[Double]): Int = {
+      val theta = math.asin(y / (ModisSphereR * MollSqrt2)) // off-map → NaN
+      val phi = math.asin((2.0 * theta + math.sin(2.0 * theta)) / math.Pi)
+      val lam = // the poles collapse to the central meridian
+        if (gt(math.abs(math.cos(theta)), 1e-14))
+          x / (ModisSphereR * MollXScale * math.cos(theta))
+        else 0.0
+      out(0) = math.toDegrees(lam) + lon0Deg
+      out(1) = math.toDegrees(phi)
+      0
+    }
+  }
+
+  /** Newton steps of [[mollTheta]]: quadratic convergence from the θ = φ
+    * seed lands past machine precision everywhere the guarded
+    * denominator admits a step; the poles are exact at the seed. */
+  private val MollSteps: Int = 8
+
+  /** The Mollweide auxiliary angle θ(φ) solving 2θ + sin 2θ = π sin φ
+    * (Snyder eq. 31-2..31-4): a FIXED-COUNT pole-guarded Newton iteration
+    * from the θ = φ seed. */
+  private def mollTheta(phi: Double): Double = {
+    val target = math.Pi * math.sin(phi)
+    var theta = phi
+    var k = 0
+    while (k < MollSteps) {
+      val dn = 2.0 + 2.0 * math.cos(2.0 * theta)
+      if (dn > 1e-14)
+        theta = theta - (2.0 * theta + math.sin(2.0 * theta) - target) / dn
+      k += 1
+    }
+    theta
+  }
 
   val MollSqrt2: Double = math.sqrt(2.0)
   val MollXScale: Double = 2.0 * math.sqrt(2.0) / math.Pi
@@ -769,60 +627,6 @@ object PolarOps {
   def mollForCrs(crs: String): Option[Mollweide] =
     if (!crs.startsWith("MOLL:")) None
     else crs.stripPrefix("MOLL:").toDoubleOption.map(Mollweide(_))
-
-  def mollForward(lonDeg: Column, latDeg: Column, m: Mollweide)
-      : (Column, Column) = {
-    // the iteration lives in a native Expression: an unrolled Column
-    // `when` chain re-substitutes θ four times per step — an O(4^steps)
-    // tree that OOMed the driver at 8 steps
-    import org.apache.spark.sql.graft.ColumnBridge
-    val theta = ColumnBridge.column(graft.functions.MollTheta(
-      ColumnBridge.expression(radians(latDeg))))
-    (lit(ModisSphereR * MollXScale) * radians(lonDeg - lit(m.lon0Deg)) *
-      cos(theta),
-      lit(ModisSphereR * MollSqrt2) * sin(theta))
-  }
-
-  def mollInverse(x: Column, y: Column, m: Mollweide): (Column, Column) = {
-    val theta = asin(y / lit(ModisSphereR * MollSqrt2)) // off-map → NaN
-    val phi = asin((lit(2.0) * theta + sin(lit(2.0) * theta)) /
-      lit(math.Pi))
-    val lam = when(abs(cos(theta)) > 1e-14,
-      x / (lit(ModisSphereR * MollXScale) * cos(theta)))
-      .otherwise(lit(0.0)) // the poles collapse to the central meridian
-    (degrees(lam) + lit(m.lon0Deg), degrees(phi))
-  }
-
-  def mollForwardScalar(lonDeg: Double, latDeg: Double, m: Mollweide)
-      : (Double, Double) = {
-    val phi = math.toRadians(latDeg)
-    val target = math.Pi * math.sin(phi)
-    var theta = phi
-    var k = 0
-    while (k < graft.functions.MollTheta.Steps) {
-      val dn = 2.0 + 2.0 * math.cos(2.0 * theta)
-      if (dn > 1e-14)
-        theta = theta -
-          (2.0 * theta + math.sin(2.0 * theta) - target) / dn
-      k += 1
-    }
-    (ModisSphereR * MollXScale * math.toRadians(lonDeg - m.lon0Deg) *
-      math.cos(theta),
-      ModisSphereR * MollSqrt2 * math.sin(theta))
-  }
-
-  def mollInverseScalar(x: Double, y: Double, m: Mollweide)
-      : (Double, Double) = {
-    val sy = y / (ModisSphereR * MollSqrt2)
-    if (math.abs(sy) > 1.0) return (Double.NaN, Double.NaN)
-    val theta = math.asin(sy)
-    val phi = math.asin((2.0 * theta + math.sin(2.0 * theta)) / math.Pi)
-    val lam =
-      if (math.abs(math.cos(theta)) > 1e-14)
-        x / (ModisSphereR * MollXScale * math.cos(theta))
-      else 0.0
-    (math.toDegrees(lam) + m.lon0Deg, math.toDegrees(phi))
-  }
 
   // --------------------------------------------------- geostationary
 
@@ -839,12 +643,63 @@ object PolarOps {
     * published GOES-R Product Definition and Users' Guide worked
     * example (lon −84.690932, lat 33.846162 ↔ scan angles −0.024052,
     * 0.095340 rad at lon0 −75, sweep x). */
-  final case class Geos(lon0Deg: Double, h: Double, sweepX: Boolean) {
+  final case class Geos(lon0Deg: Double, h: Double, sweepX: Boolean) extends Projection {
     val rEq: Double = 6378137.0
     val rPol: Double = 6356752.31414
     val bigH: Double = h + rEq
     val e2: Double = (rEq * rEq - rPol * rPol) / (rEq * rEq)
     val invFlat2: Double = (rEq * rEq) / (rPol * rPol)
+    private val cq = bigH * bigH - rEq * rEq
+
+    /** (lon, lat) → geostationary (x, y) metres. Points not visible from
+      * the satellite (behind the limb) read NaN — the quadratic the
+      * inverse solves has no real root there, and the forward's own
+      * geometry produces angles only for the near hemisphere. */
+    def forward(lon: Double, lat: Double, out: Array[Double]): Int = {
+      val latc = math.atan((1.0 / invFlat2) * math.tan(math.toRadians(lat)))
+      val rc = rPol / math.sqrt(1.0 - e2 * math.cos(latc) * math.cos(latc))
+      val dlon = math.toRadians(lon - lon0Deg)
+      val sx0 = bigH - rc * math.cos(latc) * math.cos(dlon)
+      val sy = -(rc * math.cos(latc) * math.sin(dlon))
+      val sz = rc * math.sin(latc)
+      // limb visibility: the satellite sees the point iff the view ray is
+      // outside the local horizon — the PUG test sx·(sx − H) + sy² + sz²·
+      // (rEq/rPol)² < 0 (violations → NaN, the masked-cell convention)
+      val vis = sx0 * (sx0 - bigH) + sy * sy + invFlat2 * sz * sz < 0.0
+      val sx = if (vis) sx0 else Double.NaN
+      val r = math.sqrt(sx * sx + sy * sy + sz * sz)
+      if (sweepX) {
+        out(0) = h * math.asin(-sy / r)
+        out(1) = h * math.atan(sz / sx)
+      } else {
+        out(0) = h * math.atan(-sy / sx)
+        out(1) = h * math.asin(sz / r)
+      }
+      0
+    }
+
+    /** Geostationary (x, y) metres → (lon, lat); off-disk points (no
+      * ellipsoid intersection) read NaN via the negative discriminant. */
+    def inverse(x: Double, y: Double, out: Array[Double]): Int = {
+      val xa = x / h
+      val ya = y / h
+      // unit view ray u from the satellite, by sweep geometry
+      val u1 = if (sweepX) math.cos(xa) * math.cos(ya)
+        else math.cos(ya) * math.cos(xa)
+      val u2 = if (sweepX) -math.sin(xa) else -(math.cos(ya) * math.sin(xa))
+      val u3 = if (sweepX) math.cos(xa) * math.sin(ya) else math.sin(ya)
+      val aq = u1 * u1 + u2 * u2 + invFlat2 * u3 * u3
+      val bq = -2.0 * bigH * u1
+      val rs = (-bq - math.sqrt(bq * bq - 4.0 * aq * cq)) / (2.0 * aq)
+      val sx = rs * u1
+      val sy = rs * u2
+      val sz = rs * u3
+      val lat = math.atan(invFlat2 * sz /
+        math.sqrt((bigH - sx) * (bigH - sx) + sy * sy))
+      out(0) = lon0Deg - math.toDegrees(math.atan(sy / (bigH - sx)))
+      out(1) = math.toDegrees(lat)
+      0
+    }
   }
 
   def geosForCrs(crs: String): Option[Geos] =
@@ -858,102 +713,6 @@ object PolarOps {
       case _ => None
     }
 
-  /** (lonDeg, latDeg) → geostationary (x, y) metres. Points not visible
-    * from the satellite (behind the limb) read NaN — the quadratic the
-    * inverse solves has no real root there, and the forward's own
-    * geometry produces angles only for the near hemisphere, which the
-    * ±90° dlon guard enforces. */
-  def geosForward(lonDeg: Column, latDeg: Column, g: Geos)
-      : (Column, Column) = {
-    val latc = atan(lit(1.0 / g.invFlat2) * tan(radians(latDeg)))
-    val rc = lit(g.rPol) / sqrt(lit(1.0) - lit(g.e2) * cos(latc) * cos(latc))
-    val dlon = radians(lonDeg - lit(g.lon0Deg))
-    val sx0 = lit(g.bigH) - rc * cos(latc) * cos(dlon)
-    val sy0 = negate(rc * cos(latc) * sin(dlon))
-    val sz0 = rc * sin(latc)
-    // limb visibility: the satellite sees the point iff the view ray is
-    // outside the local horizon — the PUG test sx·(sx − H) + sy² + sz²·
-    // (rEq/rPol)² < 0 (violations → NaN, the masked-cell convention)
-    val vis = sx0 * (sx0 - lit(g.bigH)) + sy0 * sy0 +
-      lit(g.invFlat2) * sz0 * sz0 < lit(0.0)
-    val nan = lit(Double.NaN)
-    val sx = when(vis, sx0).otherwise(nan)
-    val sy = sy0
-    val sz = sz0
-    val r = sqrt(sx * sx + sy * sy + sz * sz)
-    if (g.sweepX)
-      (lit(g.h) * asin(negate(sy) / r), lit(g.h) * atan(sz / sx))
-    else
-      (lit(g.h) * atan(negate(sy) / sx), lit(g.h) * asin(sz / r))
-  }
-
-  /** geostationary (x, y) metres → (lonDeg, latDeg); off-disk points
-    * (no ellipsoid intersection) read NaN via the negative discriminant. */
-  def geosInverse(x: Column, y: Column, g: Geos): (Column, Column) = {
-    val xa = x / lit(g.h)
-    val ya = y / lit(g.h)
-    // unit view ray u from the satellite, by sweep geometry
-    val (u1, u2, u3) =
-      if (g.sweepX)
-        (cos(xa) * cos(ya), negate(sin(xa)), cos(xa) * sin(ya))
-      else
-        (cos(ya) * cos(xa), negate(cos(ya) * sin(xa)), sin(ya))
-    val aq = u1 * u1 + u2 * u2 + lit(g.invFlat2) * u3 * u3
-    val bq = lit(-2.0 * g.bigH) * u1
-    val cq = lit(g.bigH * g.bigH - g.rEq * g.rEq)
-    val rs = (negate(bq) - sqrt(bq * bq - lit(4.0) * aq * cq)) /
-      (lit(2.0) * aq)
-    val sx = rs * u1
-    val sy = rs * u2
-    val sz = rs * u3
-    val lat = atan(lit(g.invFlat2) * sz /
-      sqrt((lit(g.bigH) - sx) * (lit(g.bigH) - sx) + sy * sy))
-    val lon = lit(g.lon0Deg) - degrees(atan(sy / (lit(g.bigH) - sx)))
-    (lon, degrees(lat))
-  }
-
-  def geosForwardScalar(lonDeg: Double, latDeg: Double, g: Geos)
-      : (Double, Double) = {
-    val latc = math.atan((1.0 / g.invFlat2) * math.tan(math.toRadians(latDeg)))
-    val rc = g.rPol / math.sqrt(1.0 - g.e2 * math.cos(latc) * math.cos(latc))
-    val dlon = math.toRadians(lonDeg - g.lon0Deg)
-    val sx = g.bigH - rc * math.cos(latc) * math.cos(dlon)
-    val sy = -rc * math.cos(latc) * math.sin(dlon)
-    val sz = rc * math.sin(latc)
-    if (sx * (sx - g.bigH) + sy * sy + g.invFlat2 * sz * sz >= 0.0)
-      return (Double.NaN, Double.NaN)
-    val r = math.sqrt(sx * sx + sy * sy + sz * sz)
-    if (g.sweepX)
-      (g.h * math.asin(-sy / r), g.h * math.atan(sz / sx))
-    else
-      (g.h * math.atan(-sy / sx), g.h * math.asin(sz / r))
-  }
-
-  def geosInverseScalar(x: Double, y: Double, g: Geos): (Double, Double) = {
-    val xa = x / g.h
-    val ya = y / g.h
-    val (u1, u2, u3) =
-      if (g.sweepX)
-        (math.cos(xa) * math.cos(ya), -math.sin(xa),
-          math.cos(xa) * math.sin(ya))
-      else
-        (math.cos(ya) * math.cos(xa), -math.cos(ya) * math.sin(xa),
-          math.sin(ya))
-    val aq = u1 * u1 + u2 * u2 + g.invFlat2 * u3 * u3
-    val bq = -2.0 * g.bigH * u1
-    val cq = g.bigH * g.bigH - g.rEq * g.rEq
-    val disc = bq * bq - 4.0 * aq * cq
-    if (disc < 0.0) return (Double.NaN, Double.NaN)
-    val rs = (-bq - math.sqrt(disc)) / (2.0 * aq)
-    val sx = rs * u1
-    val sy = rs * u2
-    val sz = rs * u3
-    val lat = math.atan(g.invFlat2 * sz /
-      math.sqrt((g.bigH - sx) * (g.bigH - sx) + sy * sy))
-    (g.lon0Deg - math.toDegrees(math.atan(sy / (g.bigH - sx))),
-      math.toDegrees(lat))
-  }
-
   // ----------------------------------------------------- Equal Earth
 
   /** Equal Earth (Šavrič, Patterson & Jenny 2019; EPSG:8857 "WGS 84 /
@@ -962,10 +721,71 @@ object PolarOps {
     * through the AUTHALIC latitude and authalic radius (the proj
     * formulation) — the same Snyder 3-12/3-18 machinery as LAEA/EASE —
     * so areas are exact on WGS84. θ solves the published polynomial by
-    * Newton; the inverse's solve lives in a native codegen Expression
-    * ([[graft.functions.EqEarthTheta]], the [[graft.functions.MollTheta]]
-    * lesson). */
-  final case class EqualEarth(lon0Deg: Double)
+    * Newton ([[eqEarthTheta]]). */
+  final case class EqualEarth(lon0Deg: Double) extends Projection {
+    def forward(lon: Double, lat: Double, out: Array[Double]): Int = {
+      val beta = math.asin(authalicQ(math.sin(math.toRadians(lat))) / Qp)
+      val theta = math.asin(EqEarthM * math.sin(beta))
+      val t2 = theta * theta
+      val t6 = t2 * t2 * t2
+      val dp = EqEarthA1 + 3.0 * EqEarthA2 * t2 +
+        t6 * (7.0 * EqEarthA3 + 9.0 * EqEarthA4 * t2)
+      out(0) = AuthalicR * math.toRadians(lon - lon0Deg) * math.cos(theta) /
+        (EqEarthM * dp)
+      out(1) = AuthalicR * theta * (EqEarthA1 + EqEarthA2 * t2 +
+        t6 * (EqEarthA3 + EqEarthA4 * t2))
+      0
+    }
+
+    def inverse(x: Double, y: Double, out: Array[Double]): Int = {
+      val theta = eqEarthTheta(y / AuthalicR)
+      val t2 = theta * theta
+      val t6 = t2 * t2 * t2
+      val dp = EqEarthA1 + 3.0 * EqEarthA2 * t2 +
+        t6 * (7.0 * EqEarthA3 + 9.0 * EqEarthA4 * t2)
+      val beta = math.asin(math.sin(theta) / EqEarthM) // |sinθ|>M → NaN
+      // series seed + one exact Snyder 3-16 refinement (authalicPhi) —
+      // the bare series truncates at ~1e-8 degrees
+      val phi = authalicPhi(beta, Qp * math.sin(beta))
+      // an off-map northing reads NaN in both coordinates, like the other
+      // bounded families (the bare quotient keeps a finite longitude)
+      out(0) = if (beta.isNaN) Double.NaN
+        else math.toDegrees(x * EqEarthM * dp /
+          (AuthalicR * math.cos(theta))) + lon0Deg
+      out(1) = math.toDegrees(phi)
+      0
+    }
+  }
+
+  /** Published polynomial coefficients (Šavrič et al. 2019, eq. 1-3). */
+  val EqEarthA1: Double = 1.340264
+  val EqEarthA2: Double = -0.081106
+  val EqEarthA3: Double = 0.000893
+  val EqEarthA4: Double = 0.003796
+
+  /** Newton steps of [[eqEarthTheta]] from the y/(R·A1) seed: quadratic
+    * convergence, well past machine precision on-map in far fewer. */
+  private val EqEarthSteps: Int = 8
+
+  /** The parametric angle θ solving θ·(A1 + A2θ² + θ⁶(A3 + A4θ²)) = yn
+    * for the NORMALIZED northing yn = y/R_q. The on-map denominator
+    * A1 + 3A2θ² + θ⁶(7A3 + 9A4θ²) stays ≥ ~1.13, so the guard only
+    * shields pathological off-map inputs. */
+  private def eqEarthTheta(yn: Double): Double = {
+    var theta = yn / EqEarthA1
+    var k = 0
+    while (k < EqEarthSteps) {
+      val t2 = theta * theta
+      val t6 = t2 * t2 * t2
+      val f = theta * (EqEarthA1 + EqEarthA2 * t2 +
+        t6 * (EqEarthA3 + EqEarthA4 * t2)) - yn
+      val df = EqEarthA1 + 3.0 * EqEarthA2 * t2 +
+        t6 * (7.0 * EqEarthA3 + 9.0 * EqEarthA4 * t2)
+      if (math.abs(df) > 1e-14) theta = theta - f / df
+      k += 1
+    }
+    theta
+  }
 
   /** √3/2 — the parametric-latitude scale (eq. 2). */
   val EqEarthM: Double = math.sqrt(3.0) / 2.0
@@ -977,75 +797,6 @@ object PolarOps {
     case s if s.startsWith("EQEARTH:") =>
       s.stripPrefix("EQEARTH:").toDoubleOption.map(EqualEarth(_))
     case _ => None
-  }
-
-  import graft.functions.EqEarthTheta.{A1 => EA1, A2 => EA2, A3 => EA3, A4 => EA4}
-
-  def eqEarthForward(lonDeg: Column, latDeg: Column, ee: EqualEarth)
-      : (Column, Column) = {
-    val beta = asin(qExpr(sin(radians(latDeg))) / lit(Qp))
-    val theta = asin(lit(EqEarthM) * sin(beta))
-    val t2 = theta * theta
-    val t6 = t2 * t2 * t2
-    val dp = lit(EA1) + lit(3.0 * EA2) * t2 +
-      t6 * (lit(7.0 * EA3) + lit(9.0 * EA4) * t2)
-    (lit(AuthalicR) * radians(lonDeg - lit(ee.lon0Deg)) * cos(theta) /
-      (lit(EqEarthM) * dp),
-      lit(AuthalicR) * theta * (lit(EA1) + lit(EA2) * t2 +
-        t6 * (lit(EA3) + lit(EA4) * t2)))
-  }
-
-  def eqEarthInverse(x: Column, y: Column, ee: EqualEarth)
-      : (Column, Column) = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    val theta = ColumnBridge.column(graft.functions.EqEarthTheta(
-      ColumnBridge.expression(y / lit(AuthalicR))))
-    val t2 = theta * theta
-    val t6 = t2 * t2 * t2
-    val dp = lit(EA1) + lit(3.0 * EA2) * t2 +
-      t6 * (lit(7.0 * EA3) + lit(9.0 * EA4) * t2)
-    val beta = asin(sin(theta) / lit(EqEarthM)) // |sinθ|>M → off-map NaN
-    // series seed + one exact Snyder 3-16 refinement (authalicPhi) —
-    // the bare series truncates at ~1e-8 degrees
-    val phi = authalicPhi(beta, lit(Qp) * sin(beta))
-    val lam = x * lit(EqEarthM) * dp / (lit(AuthalicR) * cos(theta))
-    (degrees(lam) + lit(ee.lon0Deg), degrees(phi))
-  }
-
-  def eqEarthForwardScalar(lonDeg: Double, latDeg: Double, ee: EqualEarth)
-      : (Double, Double) = {
-    val beta = math.asin(qFn(math.toRadians(latDeg)) / Qp)
-    val theta = math.asin(EqEarthM * math.sin(beta))
-    val t2 = theta * theta
-    val t6 = t2 * t2 * t2
-    val dp = EA1 + 3.0 * EA2 * t2 + t6 * (7.0 * EA3 + 9.0 * EA4 * t2)
-    (AuthalicR * math.toRadians(lonDeg - ee.lon0Deg) * math.cos(theta) /
-      (EqEarthM * dp),
-      AuthalicR * theta * (EA1 + EA2 * t2 + t6 * (EA3 + EA4 * t2)))
-  }
-
-  def eqEarthInverseScalar(x: Double, y: Double, ee: EqualEarth)
-      : (Double, Double) = {
-    var theta = y / AuthalicR / EA1
-    var k = 0
-    while (k < graft.functions.EqEarthTheta.Steps) {
-      val t2 = theta * theta
-      val t6 = t2 * t2 * t2
-      val f = theta * (EA1 + EA2 * t2 + t6 * (EA3 + EA4 * t2)) -
-        y / AuthalicR
-      val df = EA1 + 3.0 * EA2 * t2 + t6 * (7.0 * EA3 + 9.0 * EA4 * t2)
-      if (math.abs(df) > 1e-14) theta = theta - f / df
-      k += 1
-    }
-    val s = math.sin(theta) / EqEarthM
-    if (math.abs(s) > 1.0) return (Double.NaN, Double.NaN)
-    val t2 = theta * theta
-    val t6 = t2 * t2 * t2
-    val dp = EA1 + 3.0 * EA2 * t2 + t6 * (7.0 * EA3 + 9.0 * EA4 * t2)
-    val beta = math.asin(s)
-    val phi = authalicPhiScalar(beta, Qp * math.sin(beta))
-    (math.toDegrees(x * EqEarthM * dp /
-      (AuthalicR * math.cos(theta))) + ee.lon0Deg, math.toDegrees(phi))
   }
 
   // ------------------- Hotine oblique Mercator (EPSG methods 9812/9815)
@@ -1062,7 +813,7 @@ object PolarOps {
                             k0: Double, x0: Double, y0: Double,
                             a: Double = A,
                             invF: Double = 298.257223563,
-                            variantB: Boolean = true) {
+                            variantB: Boolean = true) extends Projection {
     val fE: Double = 1.0 / invF
     val e2: Double = fE * (2 - fE)
     val e: Double = math.sqrt(e2)
@@ -1105,6 +856,43 @@ object PolarOps {
     val c4: Double = 7 * e4 / 48 + 29 * e6 / 240 + 811 * e8 / 11520
     val c6: Double = 7 * e6 / 120 + 81 * e8 / 1120
     val c8: Double = 4279 * e8 / 161280
+
+    def forward(lon: Double, lat: Double, out: Array[Double]): Int = {
+      val phi = least(greatest(math.toRadians(lat), -HotinePoleClamp),
+        HotinePoleClamp)
+      val dl = bB * (math.toRadians(lon) - lam0) // B(λ−λ0)
+      val es = e * math.sin(phi)
+      val t = math.tan(math.Pi / 4 - phi / 2) /
+        pow((1.0 - es) / (1.0 + es), e / 2)
+      val q = hH / pow(t, bB)
+      val sQ = (q - 1.0 / q) / 2.0
+      val tQ = (q + 1.0 / q) / 2.0
+      val vS = math.sin(dl)
+      val uU = (-vS * cosG0 + sQ * sinG0) / tQ
+      val l = (1.0 - uU) / (1.0 + uU)
+      if (l <= 0.0) return Projection.BothNull
+      val v = bA * log(l) / (2.0 * bB)
+      val u = bA * atan2(sQ * cosG0 + vS * sinG0, math.cos(dl)) / bB - uC
+      out(0) = v * cosGc + u * sinGc + x0
+      out(1) = u * cosGc - v * sinGc + y0
+      0
+    }
+
+    def inverse(x: Double, y: Double, out: Array[Double]): Int = {
+      val vp = (x - x0) * cosGc - (y - y0) * sinGc
+      val up = (y - y0) * cosGc + (x - x0) * sinGc + uC
+      val q = exp(-(bB * vp / bA))
+      val sQ = (q - 1.0 / q) / 2.0
+      val tQ = (q + 1.0 / q) / 2.0
+      val vS = math.sin(bB * up / bA)
+      val uU = (vS * cosG0 + sQ * sinG0) / tQ
+      val t = pow(hH / math.sqrt((1.0 + uU) / (1.0 - uU)), 1.0 / bB)
+      val lam = lam0 -
+        atan2(sQ * cosG0 - vS * sinG0, math.cos(bB * up / bA)) / bB
+      out(0) = math.toDegrees(lam)
+      out(1) = math.toDegrees(conformalPhi(t, e, c2, c4, c6, c8))
+      0
+    }
   }
 
   /** Registered: the two real-world variant-B grids with published
@@ -1136,95 +924,9 @@ object PolarOps {
 
   /** Forward clamp: t(φ) → 0 at the poles makes Q = H/t^B overflow to
     * ∞ and U to NaN; one ulp inside keeps the (off-grid) pole images
-    * finite. */
+    * finite. A NaN latitude clamps to the north limit (Spark's ordering:
+    * NaN is the largest value). */
   private val HotinePoleClamp = math.Pi / 2 - 1e-12
-
-  def hotineForward(lonDeg: Column, latDeg: Column, h: HotineOm)
-      : (Column, Column) = {
-    val phi = least(greatest(radians(latDeg), lit(-HotinePoleClamp)),
-      lit(HotinePoleClamp))
-    val dl = lit(h.bB) * (radians(lonDeg) - lit(h.lam0)) // B(λ−λ0)
-    val es = lit(h.e) * sin(phi)
-    val t = tan(lit(math.Pi / 4) - phi / 2) /
-      pow((lit(1.0) - es) / (lit(1.0) + es), lit(h.e / 2))
-    val q = lit(h.hH) / pow(t, lit(h.bB))
-    val sQ = (q - lit(1.0) / q) / lit(2.0)
-    val tQ = (q + lit(1.0) / q) / lit(2.0)
-    val vS = sin(dl)
-    val uU = (negate(vS) * lit(h.cosG0) + sQ * lit(h.sinG0)) / tQ
-    val v = lit(h.bA) * log((lit(1.0) - uU) / (lit(1.0) + uU)) /
-      lit(2.0 * h.bB)
-    val u = lit(h.bA) * atan2(sQ * lit(h.cosG0) + vS * lit(h.sinG0),
-      cos(dl)) / lit(h.bB) - lit(h.uC)
-    (v * lit(h.cosGc) + u * lit(h.sinGc) + lit(h.x0),
-      u * lit(h.cosGc) - v * lit(h.sinGc) + lit(h.y0))
-  }
-
-  def hotineInverse(easting: Column, northing: Column, h: HotineOm)
-      : (Column, Column) = {
-    val vp = (easting - lit(h.x0)) * lit(h.cosGc) -
-      (northing - lit(h.y0)) * lit(h.sinGc)
-    val up = (northing - lit(h.y0)) * lit(h.cosGc) +
-      (easting - lit(h.x0)) * lit(h.sinGc) + lit(h.uC)
-    val q = exp(negate(lit(h.bB) * vp / lit(h.bA)))
-    val sQ = (q - lit(1.0) / q) / lit(2.0)
-    val tQ = (q + lit(1.0) / q) / lit(2.0)
-    val vS = sin(lit(h.bB) * up / lit(h.bA))
-    val uU = (vS * lit(h.cosG0) + sQ * lit(h.sinG0)) / tQ
-    val t = pow(lit(h.hH) / sqrt((lit(1.0) + uU) / (lit(1.0) - uU)),
-      lit(1.0 / h.bB))
-    val chi = lit(math.Pi / 2) - lit(2.0) * atan(t)
-    val phiSeed = chi + lit(h.c2) * sin(lit(2.0) * chi) +
-      lit(h.c4) * sin(lit(4.0) * chi) + lit(h.c6) * sin(lit(6.0) * chi) +
-      lit(h.c8) * sin(lit(8.0) * chi)
-    val esF = lit(h.e) * sin(phiSeed)
-    val phi = lit(math.Pi / 2) - lit(2.0) * atan(
-      t * pow((lit(1.0) - esF) / (lit(1.0) + esF), lit(h.e / 2)))
-    val lam = lit(h.lam0) -
-      atan2(sQ * lit(h.cosG0) - vS * lit(h.sinG0),
-        cos(lit(h.bB) * up / lit(h.bA))) / lit(h.bB)
-    (degrees(lam), degrees(phi))
-  }
-
-  def hotineForwardScalar(lonDeg: Double, latDeg: Double, h: HotineOm)
-      : (Double, Double) = {
-    val phi = math.min(math.max(math.toRadians(latDeg), -HotinePoleClamp),
-      HotinePoleClamp)
-    val dl = h.bB * (math.toRadians(lonDeg) - h.lam0)
-    val es = h.e * math.sin(phi)
-    val t = math.tan(math.Pi / 4 - phi / 2) /
-      math.pow((1 - es) / (1 + es), h.e / 2)
-    val q = h.hH / math.pow(t, h.bB)
-    val sQ = (q - 1 / q) / 2
-    val tQ = (q + 1 / q) / 2
-    val vS = math.sin(dl)
-    val uU = (-vS * h.cosG0 + sQ * h.sinG0) / tQ
-    val v = h.bA * math.log((1 - uU) / (1 + uU)) / (2 * h.bB)
-    val u = h.bA * math.atan2(sQ * h.cosG0 + vS * h.sinG0,
-      math.cos(dl)) / h.bB - h.uC
-    (v * h.cosGc + u * h.sinGc + h.x0, u * h.cosGc - v * h.sinGc + h.y0)
-  }
-
-  def hotineInverseScalar(x: Double, y: Double, h: HotineOm)
-      : (Double, Double) = {
-    val vp = (x - h.x0) * h.cosGc - (y - h.y0) * h.sinGc
-    val up = (y - h.y0) * h.cosGc + (x - h.x0) * h.sinGc + h.uC
-    val q = math.exp(-h.bB * vp / h.bA)
-    val sQ = (q - 1 / q) / 2
-    val tQ = (q + 1 / q) / 2
-    val vS = math.sin(h.bB * up / h.bA)
-    val uU = (vS * h.cosG0 + sQ * h.sinG0) / tQ
-    val t = math.pow(h.hH / math.sqrt((1 + uU) / (1 - uU)), 1.0 / h.bB)
-    val chi = math.Pi / 2 - 2 * math.atan(t)
-    val phiSeed = chi + h.c2 * math.sin(2 * chi) + h.c4 * math.sin(4 * chi) +
-      h.c6 * math.sin(6 * chi) + h.c8 * math.sin(8 * chi)
-    val esF = h.e * math.sin(phiSeed)
-    val phi = math.Pi / 2 - 2 * math.atan(
-      t * math.pow((1 - esF) / (1 + esF), h.e / 2))
-    val lam = h.lam0 - math.atan2(sQ * h.cosG0 - vS * h.sinG0,
-      math.cos(h.bB * up / h.bA)) / h.bB
-    (math.toDegrees(lam), math.toDegrees(phi))
-  }
 
   // ---------------------------- oblique stereographic (EPSG method 9809)
 
@@ -1237,7 +939,7 @@ object PolarOps {
   final case class ObliqueStereo(lat0Deg: Double, lon0Deg: Double,
                                  k0: Double, x0: Double, y0: Double,
                                  a: Double = A,
-                                 invF: Double = 298.257223563) {
+                                 invF: Double = 298.257223563) extends Projection {
     val fE: Double = 1.0 / invF
     val e2: Double = fE * (2 - fE)
     val e: Double = math.sqrt(e2)
@@ -1270,6 +972,40 @@ object PolarOps {
     val c4: Double = 7 * e4 / 48 + 29 * e6 / 240 + 811 * e8 / 11520
     val c6: Double = 7 * e6 / 120 + 81 * e8 / 1120
     val c8: Double = 4279 * e8 / 161280
+
+    def forward(lon: Double, lat: Double, out: Array[Double]): Int = {
+      val phi = math.toRadians(lat)
+      val dLam = n * (math.toRadians(lon) - lam0) // Λ − Λ0
+      val sp = least(greatest(math.sin(phi), -ObliqueStereoPoleClamp),
+        ObliqueStereoPoleClamp)
+      val es = e * sp
+      val w = c * pow(((1.0 + sp) / (1.0 - sp)) *
+        pow((1.0 - es) / (1.0 + es), e), n)
+      val sinChi = (w - 1.0) / (w + 1.0)
+      val cosChi = math.sqrt(1.0 - sinChi * sinChi)
+      val b = 1.0 + sinChi * sinChi0 + cosChi * cosChi0 * math.cos(dLam)
+      out(0) = x0 + twoRk * cosChi * math.sin(dLam) / b
+      out(1) = y0 + twoRk * (sinChi * cosChi0 -
+        cosChi * sinChi0 * math.cos(dLam)) / b
+      0
+    }
+
+    def inverse(x: Double, y: Double, out: Array[Double]): Int = {
+      val xp = x - x0
+      val yp = y - y0
+      val iC = atan2(xp, hC + yp)
+      val jC = atan2(xp, gC - yp) - iC
+      val chi = chi0 + 2.0 * math.atan((yp - xp * math.tan(jC / 2)) / twoRk)
+      out(0) = math.toDegrees((jC + 2.0 * iC) / n + lam0)
+      // isometric latitude ψ off the conformal sphere, then the
+      // per-ellipsoid conformal inverse via t = e^{−ψ}
+      val sinChi = math.sin(chi)
+      val l = (1.0 + sinChi) / (c * (1.0 - sinChi))
+      if (l <= 0.0) return Projection.YNull
+      val psi = 0.5 * log(l) / n
+      out(1) = math.toDegrees(conformalPhi(exp(-psi), e, c2, c4, c6, c8))
+      0
+    }
   }
 
   /** EPSG:28992 (Amersfoort / RD New, Bessel 1841) + the generic
@@ -1303,90 +1039,6 @@ object PolarOps {
     * ±1 — identical bits everywhere else. */
   val ObliqueStereoPoleClamp: Double = 1.0 - 1e-15
 
-  def obliqueStereoForward(lonDeg: Column, latDeg: Column,
-                           os: ObliqueStereo): (Column, Column) = {
-    val phi = radians(latDeg)
-    val dLam = lit(os.n) * (radians(lonDeg) - lit(os.lam0)) // Λ − Λ0
-    val sp = least(greatest(sin(phi), lit(-ObliqueStereoPoleClamp)),
-      lit(ObliqueStereoPoleClamp))
-    val es = lit(os.e) * sp
-    val w = lit(os.c) * pow(
-      ((lit(1.0) + sp) / (lit(1.0) - sp)) *
-        pow((lit(1.0) - es) / (lit(1.0) + es), lit(os.e)), lit(os.n))
-    val sinChi = (w - lit(1.0)) / (w + lit(1.0))
-    val cosChi = sqrt(lit(1.0) - sinChi * sinChi)
-    val b = lit(1.0) + sinChi * lit(os.sinChi0) +
-      cosChi * lit(os.cosChi0) * cos(dLam)
-    (lit(os.x0) + lit(os.twoRk) * cosChi * sin(dLam) / b,
-      lit(os.y0) + lit(os.twoRk) * (sinChi * lit(os.cosChi0) -
-        cosChi * lit(os.sinChi0) * cos(dLam)) / b)
-  }
-
-  def obliqueStereoInverse(easting: Column, northing: Column,
-                           os: ObliqueStereo): (Column, Column) = {
-    val xp = easting - lit(os.x0)
-    val yp = northing - lit(os.y0)
-    val iC = atan2(xp, lit(os.hC) + yp)
-    val jC = atan2(xp, lit(os.gC) - yp) - iC
-    val chi = lit(os.chi0) +
-      lit(2.0) * atan((yp - xp * tan(jC / 2)) / lit(os.twoRk))
-    val lam = (jC + lit(2.0) * iC) / lit(os.n) + lit(os.lam0)
-    // isometric latitude ψ off the conformal sphere, then the
-    // per-ellipsoid conformal inverse via t = e^{−ψ} (series seed +
-    // one exact fixed-point pass, the stereoInverse discipline)
-    val sinChi = sin(chi)
-    val psi = lit(0.5) *
-      log((lit(1.0) + sinChi) / (lit(os.c) * (lit(1.0) - sinChi))) /
-      lit(os.n)
-    val t = exp(negate(psi))
-    val chiS = lit(math.Pi / 2) - lit(2.0) * atan(t)
-    val phiSeed = chiS + lit(os.c2) * sin(lit(2.0) * chiS) +
-      lit(os.c4) * sin(lit(4.0) * chiS) + lit(os.c6) * sin(lit(6.0) * chiS) +
-      lit(os.c8) * sin(lit(8.0) * chiS)
-    val esF = lit(os.e) * sin(phiSeed)
-    val phi = lit(math.Pi / 2) - lit(2.0) * atan(
-      t * pow((lit(1.0) - esF) / (lit(1.0) + esF), lit(os.e / 2)))
-    (degrees(lam), degrees(phi))
-  }
-
-  def obliqueStereoForwardScalar(lonDeg: Double, latDeg: Double,
-                                 os: ObliqueStereo): (Double, Double) = {
-    val phi = math.toRadians(latDeg)
-    val dLam = os.n * (math.toRadians(lonDeg) - os.lam0)
-    val sp = math.min(math.max(math.sin(phi), -ObliqueStereoPoleClamp),
-      ObliqueStereoPoleClamp)
-    val es = os.e * sp
-    val w = os.c * math.pow(((1 + sp) / (1 - sp)) *
-      math.pow((1 - es) / (1 + es), os.e), os.n)
-    val sinChi = (w - 1) / (w + 1)
-    val cosChi = math.sqrt(1 - sinChi * sinChi)
-    val b = 1 + sinChi * os.sinChi0 + cosChi * os.cosChi0 * math.cos(dLam)
-    (os.x0 + os.twoRk * cosChi * math.sin(dLam) / b,
-      os.y0 + os.twoRk * (sinChi * os.cosChi0 -
-        cosChi * os.sinChi0 * math.cos(dLam)) / b)
-  }
-
-  def obliqueStereoInverseScalar(x: Double, y: Double,
-                                 os: ObliqueStereo): (Double, Double) = {
-    val xp = x - os.x0
-    val yp = y - os.y0
-    val iC = math.atan2(xp, os.hC + yp)
-    val jC = math.atan2(xp, os.gC - yp) - iC
-    val chi = os.chi0 + 2 * math.atan((yp - xp * math.tan(jC / 2)) / os.twoRk)
-    val lam = (jC + 2 * iC) / os.n + os.lam0
-    val sinChi = math.sin(chi)
-    val psi = 0.5 * math.log((1 + sinChi) / (os.c * (1 - sinChi))) / os.n
-    val t = math.exp(-psi)
-    val chiS = math.Pi / 2 - 2 * math.atan(t)
-    val phiSeed = chiS + os.c2 * math.sin(2 * chiS) +
-      os.c4 * math.sin(4 * chiS) + os.c6 * math.sin(6 * chiS) +
-      os.c8 * math.sin(8 * chiS)
-    val esF = os.e * math.sin(phiSeed)
-    val phi = math.Pi / 2 - 2 * math.atan(
-      t * math.pow((1 - esF) / (1 + esF), os.e / 2))
-    (math.toDegrees(lam), math.toDegrees(phi))
-  }
-
   // ----------------------- general (ellipsoidal) Mercator, EPSG 9804/9805
 
   /** Ellipsoidal Mercator — EPSG method 9804 (variant A, scale factor at
@@ -1403,7 +1055,7 @@ object PolarOps {
                         x0: Double, y0: Double,
                         a: Double = A,
                         invF: Double = 298.257223563,
-                        variantB: Boolean = false) {
+                        variantB: Boolean = false) extends Projection {
     val fE: Double = 1.0 / invF
     val e2: Double = fE * (2 - fE)
     val e: Double = math.sqrt(e2)
@@ -1423,6 +1075,23 @@ object PolarOps {
     val c4: Double = 7 * e4 / 48 + 29 * e6 / 240 + 811 * e8 / 11520
     val c6: Double = 7 * e6 / 120 + 81 * e8 / 1120
     val c8: Double = 4279 * e8 / 161280
+
+    def forward(lon: Double, lat: Double, out: Array[Double]): Int = {
+      val phi = least(greatest(math.toRadians(lat), -MercPoleClamp),
+        MercPoleClamp)
+      val t = isoT(phi, e)
+      out(0) = x0 + aK * (math.toRadians(lon) - lam0)
+      if (t <= 0.0) return Projection.YNull
+      out(1) = y0 - aK * log(t)
+      0
+    }
+
+    def inverse(x: Double, y: Double, out: Array[Double]): Int = {
+      val t = exp(-((y - y0) / aK))
+      out(0) = math.toDegrees(lam0 + (x - x0) / aK)
+      out(1) = math.toDegrees(conformalPhi(t, e, c2, c4, c6, c8))
+      0
+    }
   }
 
   /** Registered: EPSG:3395 (WGS 84 / World Mercator, variant A k0=1),
@@ -1466,53 +1135,6 @@ object PolarOps {
     * the (off-chart) pole rows finite, identical bits elsewhere. */
   private val MercPoleClamp = math.Pi / 2 - 1e-12
 
-  def mercForward(lonDeg: Column, latDeg: Column, mc: Merc)
-      : (Column, Column) = {
-    val phi = least(greatest(radians(latDeg), lit(-MercPoleClamp)),
-      lit(MercPoleClamp))
-    val es = lit(mc.e) * sin(phi)
-    val t = tan(lit(math.Pi / 4) - phi / 2) *
-      pow((lit(1.0) + es) / (lit(1.0) - es), lit(mc.e / 2))
-    (lit(mc.x0) + lit(mc.aK) * (radians(lonDeg) - lit(mc.lam0)),
-      lit(mc.y0) - lit(mc.aK) * log(t))
-  }
-
-  def mercInverse(easting: Column, northing: Column, mc: Merc)
-      : (Column, Column) = {
-    val t = exp(negate((northing - lit(mc.y0)) / lit(mc.aK)))
-    val chi = lit(math.Pi / 2) - lit(2.0) * atan(t)
-    val phiSeed = chi + lit(mc.c2) * sin(lit(2.0) * chi) +
-      lit(mc.c4) * sin(lit(4.0) * chi) + lit(mc.c6) * sin(lit(6.0) * chi) +
-      lit(mc.c8) * sin(lit(8.0) * chi)
-    val esF = lit(mc.e) * sin(phiSeed)
-    val phi = lit(math.Pi / 2) - lit(2.0) * atan(
-      t * pow((lit(1.0) - esF) / (lit(1.0) + esF), lit(mc.e / 2)))
-    (degrees(lit(mc.lam0) + (easting - lit(mc.x0)) / lit(mc.aK)),
-      degrees(phi))
-  }
-
-  def mercForwardScalar(lonDeg: Double, latDeg: Double, mc: Merc)
-      : (Double, Double) = {
-    val phi = math.min(math.max(math.toRadians(latDeg), -MercPoleClamp),
-      MercPoleClamp)
-    val es = mc.e * math.sin(phi)
-    val t = math.tan(math.Pi / 4 - phi / 2) *
-      math.pow((1 + es) / (1 - es), mc.e / 2)
-    (mc.x0 + mc.aK * (math.toRadians(lonDeg) - mc.lam0),
-      mc.y0 - mc.aK * math.log(t))
-  }
-
-  def mercInverseScalar(x: Double, y: Double, mc: Merc): (Double, Double) = {
-    val t = math.exp(-(y - mc.y0) / mc.aK)
-    val chi = math.Pi / 2 - 2 * math.atan(t)
-    val phiSeed = chi + mc.c2 * math.sin(2 * chi) + mc.c4 * math.sin(4 * chi) +
-      mc.c6 * math.sin(6 * chi) + mc.c8 * math.sin(8 * chi)
-    val esF = mc.e * math.sin(phiSeed)
-    val phi = math.Pi / 2 - 2 * math.atan(
-      t * math.pow((1 - esF) / (1 + esF), mc.e / 2))
-    (math.toDegrees(mc.lam0 + (x - mc.x0) / mc.aK), math.toDegrees(phi))
-  }
-
   // ------------------------------ equidistant cylindrical, EPSG 1028
 
   /** Equidistant cylindrical (plate carrée in meters) — EPSG method 1028
@@ -1524,7 +1146,7 @@ object PolarOps {
   final case class Eqc(lat1Deg: Double, lon0Deg: Double,
                        x0: Double, y0: Double,
                        a: Double = A,
-                       invF: Double = 298.257223563) {
+                       invF: Double = 298.257223563) extends Projection {
     val fE: Double = 1.0 / invF
     val e2: Double = fE * (2 - fE)
     private val e4 = e2 * e2
@@ -1545,6 +1167,30 @@ object PolarOps {
     /** ν1·cosφ1 — the easting scale (GN7-2 1028 forward). */
     val nu1Cos: Double = a * math.cos(phi1) / math.sqrt(1 - e2 * s1 * s1)
     val lam0: Double = math.toRadians(lon0Deg)
+
+    def forward(lon: Double, lat: Double, out: Array[Double]): Int = {
+      val phi = math.toRadians(lat)
+      out(0) = x0 + nu1Cos * (math.toRadians(lon) - lam0)
+      out(1) = y0 + a * (m0 * phi - m2 * math.sin(2.0 * phi) +
+        m4 * math.sin(4.0 * phi) - m6 * math.sin(6.0 * phi))
+      0
+    }
+
+    def inverse(x: Double, y: Double, out: Array[Double]): Int = {
+      val mTgt = (y - y0) / a
+      val mu = mTgt / m0
+      val seed = mu + p2 * math.sin(2.0 * mu) + p4 * math.sin(4.0 * mu) +
+        p6 * math.sin(6.0 * mu) + p8 * math.sin(8.0 * mu)
+      // one Newton pass against the forward's OWN (truncated) arc series —
+      // the footpoint seed alone leaves ~4e-9° at high latitude
+      val mSeed = m0 * seed - m2 * math.sin(2.0 * seed) +
+        m4 * math.sin(4.0 * seed) - m6 * math.sin(6.0 * seed)
+      val dM = m0 - 2.0 * m2 * math.cos(2.0 * seed) +
+        4.0 * m4 * math.cos(4.0 * seed) - 6.0 * m6 * math.cos(6.0 * seed)
+      out(0) = math.toDegrees(lam0 + (x - x0) / nu1Cos)
+      out(1) = math.toDegrees(seed + (mTgt - mSeed) / dM)
+      0
+    }
   }
 
   /** Registered: EPSG:4087 (WGS 84 / World Equidistant Cylindrical) and
@@ -1567,67 +1213,19 @@ object PolarOps {
     case _ => None
   }
 
-  def eqcForward(lonDeg: Column, latDeg: Column, q: Eqc): (Column, Column) = {
-    val phi = radians(latDeg)
-    (lit(q.x0) + lit(q.nu1Cos) * (radians(lonDeg) - lit(q.lam0)),
-      lit(q.y0) + lit(q.a) * (lit(q.m0) * phi -
-        lit(q.m2) * sin(lit(2.0) * phi) + lit(q.m4) * sin(lit(4.0) * phi) -
-        lit(q.m6) * sin(lit(6.0) * phi)))
-  }
-
-  def eqcInverse(easting: Column, northing: Column, q: Eqc)
-      : (Column, Column) = {
-    val mTgt = (northing - lit(q.y0)) / lit(q.a)
-    val mu = mTgt / lit(q.m0)
-    val seed = mu + lit(q.p2) * sin(lit(2.0) * mu) +
-      lit(q.p4) * sin(lit(4.0) * mu) + lit(q.p6) * sin(lit(6.0) * mu) +
-      lit(q.p8) * sin(lit(8.0) * mu)
-    // one Newton pass against the forward's OWN (truncated) arc series —
-    // the footpoint seed alone leaves ~4e-9° at high latitude
-    val mSeed = lit(q.m0) * seed - lit(q.m2) * sin(lit(2.0) * seed) +
-      lit(q.m4) * sin(lit(4.0) * seed) - lit(q.m6) * sin(lit(6.0) * seed)
-    val dM = lit(q.m0) - lit(2.0) * lit(q.m2) * cos(lit(2.0) * seed) +
-      lit(4.0) * lit(q.m4) * cos(lit(4.0) * seed) -
-      lit(6.0) * lit(q.m6) * cos(lit(6.0) * seed)
-    val phi = seed + (mTgt - mSeed) / dM
-    (degrees(lit(q.lam0) + (easting - lit(q.x0)) / lit(q.nu1Cos)),
-      degrees(phi))
-  }
-
-  def eqcForwardScalar(lonDeg: Double, latDeg: Double, q: Eqc)
-      : (Double, Double) = {
-    val phi = math.toRadians(latDeg)
-    (q.x0 + q.nu1Cos * (math.toRadians(lonDeg) - q.lam0),
-      q.y0 + q.a * (q.m0 * phi - q.m2 * math.sin(2 * phi) +
-        q.m4 * math.sin(4 * phi) - q.m6 * math.sin(6 * phi)))
-  }
-
-  def eqcInverseScalar(x: Double, y: Double, q: Eqc): (Double, Double) = {
-    val mTgt = (y - q.y0) / q.a
-    val mu = mTgt / q.m0
-    val seed = mu + q.p2 * math.sin(2 * mu) + q.p4 * math.sin(4 * mu) +
-      q.p6 * math.sin(6 * mu) + q.p8 * math.sin(8 * mu)
-    val mSeed = q.m0 * seed - q.m2 * math.sin(2 * seed) +
-      q.m4 * math.sin(4 * seed) - q.m6 * math.sin(6 * seed)
-    val dM = q.m0 - 2 * q.m2 * math.cos(2 * seed) +
-      4 * q.m4 * math.cos(4 * seed) - 6 * q.m6 * math.cos(6 * seed)
-    val phi = seed + (mTgt - mSeed) / dM
-    (math.toDegrees(q.lam0 + (x - q.x0) / q.nu1Cos), math.toDegrees(phi))
-  }
-
   // ------------------- general transverse Mercator (Gauss-Kruger), 9807
 
   /** Transverse Mercator on an arbitrary ellipsoid with arbitrary natural
     * origin — the Gauss-Krüger / national-grid generalization of
     * [[UtmOps]] (same Snyder PP-1395 8-9..8-25 series, constants derived
     * per CRS instead of the WGS84 object constants; accurate to
-    * millimeters within ~3° of the central meridian). Closes Missing #1c:
-    * non-WGS84 tmerc granules (DHDN Gauss-Krüger, OSGB) the reference
-    * reaches via pyproj. */
+    * millimeters within ~3° of the central meridian): non-WGS84 tmerc
+    * granules (DHDN Gauss-Krüger, OSGB) the reference reaches via pyproj,
+    * and every UTM zone ([[UtmOps.UtmZone]]). */
   final case class Tmerc(lat0Deg: Double, lon0Deg: Double, k0: Double,
                          x0: Double, y0: Double,
                          a: Double = A,
-                         invF: Double = 298.257223563) {
+                         invF: Double = 298.257223563) extends Projection {
     val fE: Double = 1.0 / invF
     val e2: Double = fE * (2 - fE)
     private val e4 = e2 * e2
@@ -1648,6 +1246,65 @@ object PolarOps {
       val phi0 = math.toRadians(lat0Deg)
       a * (m0 * phi0 - m2 * math.sin(2 * phi0) + m4 * math.sin(4 * phi0) -
         m6 * math.sin(6 * phi0))
+    }
+    private val am0 = a * m0
+    private val a1e2 = a * (1 - e2)
+
+    /** Snyder 8-9..8-14. */
+    def forward(lon: Double, lat: Double, out: Array[Double]): Int = {
+      val phi = math.toRadians(lat)
+      val lam = math.toRadians(lon - lon0)
+      val sinPhi = math.sin(phi)
+      val cosPhi = math.cos(phi)
+      val tanPhi = math.tan(phi)
+      val n = a / math.sqrt(1.0 - e2 * sinPhi * sinPhi)
+      val t = tanPhi * tanPhi
+      val c = ep2 * cosPhi * cosPhi
+      val a1 = lam * cosPhi
+      val a2 = a1 * a1
+      val a3 = a2 * a1
+      val a4 = a2 * a2
+      val a5 = a4 * a1
+      val a6 = a4 * a2
+      val m = a * (m0 * phi - m2 * math.sin(2.0 * phi) +
+        m4 * math.sin(4.0 * phi) - m6 * math.sin(6.0 * phi))
+      out(0) = k0 * n * (a1 + (1.0 - t + c) * a3 / 6.0 +
+        (5.0 - 18.0 * t + t * t + 72.0 * c - 58.0 * ep2) * a5 / 120.0) + x0
+      out(1) = k0 * (m - mArc0 + n * tanPhi * (a2 / 2.0 +
+        (5.0 - t + 9.0 * c + 4.0 * c * c) * a4 / 24.0 +
+        (61.0 - 58.0 * t + t * t + 600.0 * c - 330.0 * ep2) * a6 / 720.0)) +
+        y0
+      0
+    }
+
+    /** Snyder 8-17..8-25 via the footpoint latitude. */
+    def inverse(x: Double, y: Double, out: Array[Double]): Int = {
+      val m = (y - y0) / k0 + mArc0
+      val mu = m / am0
+      val phi1 = mu + p2 * math.sin(2.0 * mu) + p4 * math.sin(4.0 * mu) +
+        p6 * math.sin(6.0 * mu) + p8 * math.sin(8.0 * mu)
+      val sinP = math.sin(phi1)
+      val cosP = math.cos(phi1)
+      val tanP = math.tan(phi1)
+      val c1 = ep2 * cosP * cosP
+      val t1 = tanP * tanP
+      val oneMinus = 1.0 - e2 * sinP * sinP
+      val n1 = a / math.sqrt(oneMinus)
+      val r1 = a1e2 / pow(oneMinus, 1.5)
+      val d = (x - x0) / (n1 * k0)
+      val d2 = d * d
+      val d3 = d2 * d
+      val d4 = d2 * d2
+      val d5 = d4 * d
+      val d6 = d4 * d2
+      out(1) = math.toDegrees(phi1 - (n1 * tanP / r1) * (d2 / 2.0 -
+        (5.0 + 3.0 * t1 + 10.0 * c1 - 4.0 * c1 * c1 - 9.0 * ep2) * d4 / 24.0 +
+        (61.0 + 90.0 * t1 + 298.0 * c1 + 45.0 * t1 * t1 - 252.0 * ep2 -
+          3.0 * c1 * c1) * d6 / 720.0))
+      out(0) = lon0 + math.toDegrees((d - (1.0 + 2.0 * t1 + c1) * d3 / 6.0 +
+        (5.0 - 2.0 * c1 + 28.0 * t1 - 3.0 * c1 * c1 + 8.0 * ep2 +
+          24.0 * t1 * t1) * d5 / 120.0) / cosP)
+      0
     }
   }
 
@@ -1670,114 +1327,5 @@ object PolarOps {
         case _ => None
       }
     case _ => None
-  }
-
-  def tmercForward(lonDeg: Column, latDeg: Column, tm: Tmerc)
-      : (Column, Column) = {
-    val phi = radians(latDeg)
-    val lam = radians(lonDeg - lit(tm.lon0))
-    val sinPhi = sin(phi)
-    val cosPhi = cos(phi)
-    val tanPhi = tan(phi)
-    val n = lit(tm.a) / sqrt(lit(1.0) - lit(tm.e2) * sinPhi * sinPhi)
-    val t = tanPhi * tanPhi
-    val c = lit(tm.ep2) * cosPhi * cosPhi
-    val a1 = lam * cosPhi
-    val a2 = a1 * a1
-    val a3 = a2 * a1
-    val a4 = a2 * a2
-    val a5 = a4 * a1
-    val a6 = a4 * a2
-    val m = lit(tm.a) * (lit(tm.m0) * phi - lit(tm.m2) * sin(lit(2.0) * phi) +
-      lit(tm.m4) * sin(lit(4.0) * phi) - lit(tm.m6) * sin(lit(6.0) * phi))
-    val x = lit(tm.k0) * n * (a1 + (lit(1.0) - t + c) * a3 / lit(6.0) +
-      (lit(5.0) - lit(18.0) * t + t * t + lit(72.0) * c -
-        lit(58.0) * lit(tm.ep2)) * a5 / lit(120.0)) + lit(tm.x0)
-    val y = lit(tm.k0) * (m - lit(tm.mArc0) + n * tanPhi * (a2 / lit(2.0) +
-      (lit(5.0) - t + lit(9.0) * c + lit(4.0) * c * c) * a4 / lit(24.0) +
-      (lit(61.0) - lit(58.0) * t + t * t + lit(600.0) * c -
-        lit(330.0) * lit(tm.ep2)) * a6 / lit(720.0))) + lit(tm.y0)
-    (x, y)
-  }
-
-  def tmercInverse(easting: Column, northing: Column, tm: Tmerc)
-      : (Column, Column) = {
-    val m = (northing - lit(tm.y0)) / lit(tm.k0) + lit(tm.mArc0)
-    val mu = m / lit(tm.a * tm.m0)
-    val phi1 = mu + lit(tm.p2) * sin(lit(2.0) * mu) +
-      lit(tm.p4) * sin(lit(4.0) * mu) + lit(tm.p6) * sin(lit(6.0) * mu) +
-      lit(tm.p8) * sin(lit(8.0) * mu)
-    val sinP = sin(phi1)
-    val cosP = cos(phi1)
-    val tanP = tan(phi1)
-    val c1 = lit(tm.ep2) * cosP * cosP
-    val t1 = tanP * tanP
-    val oneMinus = lit(1.0) - lit(tm.e2) * sinP * sinP
-    val n1 = lit(tm.a) / sqrt(oneMinus)
-    val r1 = lit(tm.a * (1 - tm.e2)) / pow(oneMinus, lit(1.5))
-    val d = (easting - lit(tm.x0)) / (n1 * lit(tm.k0))
-    val d2 = d * d
-    val d3 = d2 * d
-    val d4 = d2 * d2
-    val d5 = d4 * d
-    val d6 = d4 * d2
-    val lat = degrees(phi1 - (n1 * tanP / r1) * (d2 / lit(2.0) -
-      (lit(5.0) + lit(3.0) * t1 + lit(10.0) * c1 - lit(4.0) * c1 * c1 -
-        lit(9.0) * lit(tm.ep2)) * d4 / lit(24.0) +
-      (lit(61.0) + lit(90.0) * t1 + lit(298.0) * c1 + lit(45.0) * t1 * t1 -
-        lit(252.0) * lit(tm.ep2) - lit(3.0) * c1 * c1) * d6 / lit(720.0)))
-    val lon = lit(tm.lon0) + degrees((d - (lit(1.0) + lit(2.0) * t1 + c1) *
-      d3 / lit(6.0) +
-      (lit(5.0) - lit(2.0) * c1 + lit(28.0) * t1 - lit(3.0) * c1 * c1 +
-        lit(8.0) * lit(tm.ep2) + lit(24.0) * t1 * t1) * d5 / lit(120.0)) / cosP)
-    (lon, lat)
-  }
-
-  def tmercForwardScalar(lonDeg: Double, latDeg: Double, tm: Tmerc)
-      : (Double, Double) = {
-    val phi = math.toRadians(latDeg)
-    val lam = math.toRadians(lonDeg - tm.lon0)
-    val sinPhi = math.sin(phi); val cosPhi = math.cos(phi)
-    val tanPhi = math.tan(phi)
-    val n = tm.a / math.sqrt(1 - tm.e2 * sinPhi * sinPhi)
-    val t = tanPhi * tanPhi
-    val c = tm.ep2 * cosPhi * cosPhi
-    val a1 = lam * cosPhi
-    val m = tm.a * (tm.m0 * phi - tm.m2 * math.sin(2 * phi) +
-      tm.m4 * math.sin(4 * phi) - tm.m6 * math.sin(6 * phi))
-    val x = tm.k0 * n * (a1 + (1 - t + c) * math.pow(a1, 3) / 6 +
-      (5 - 18 * t + t * t + 72 * c - 58 * tm.ep2) * math.pow(a1, 5) / 120) +
-      tm.x0
-    val y = tm.k0 * (m - tm.mArc0 + n * tanPhi * (a1 * a1 / 2 +
-      (5 - t + 9 * c + 4 * c * c) * math.pow(a1, 4) / 24 +
-      (61 - 58 * t + t * t + 600 * c - 330 * tm.ep2) *
-        math.pow(a1, 6) / 720)) + tm.y0
-    (x, y)
-  }
-
-  def tmercInverseScalar(x: Double, y: Double, tm: Tmerc)
-      : (Double, Double) = {
-    val m = (y - tm.y0) / tm.k0 + tm.mArc0
-    val mu = m / (tm.a * tm.m0)
-    val phi1 = mu + tm.p2 * math.sin(2 * mu) + tm.p4 * math.sin(4 * mu) +
-      tm.p6 * math.sin(6 * mu) + tm.p8 * math.sin(8 * mu)
-    val sinP = math.sin(phi1); val cosP = math.cos(phi1)
-    val tanP = math.tan(phi1)
-    val c1 = tm.ep2 * cosP * cosP
-    val t1 = tanP * tanP
-    val oneMinus = 1 - tm.e2 * sinP * sinP
-    val n1 = tm.a / math.sqrt(oneMinus)
-    val r1 = tm.a * (1 - tm.e2) / math.pow(oneMinus, 1.5)
-    val d = (x - tm.x0) / (n1 * tm.k0)
-    val lat = math.toDegrees(phi1 - (n1 * tanP / r1) * (d * d / 2 -
-      (5 + 3 * t1 + 10 * c1 - 4 * c1 * c1 - 9 * tm.ep2) *
-        math.pow(d, 4) / 24 +
-      (61 + 90 * t1 + 298 * c1 + 45 * t1 * t1 - 252 * tm.ep2 -
-        3 * c1 * c1) * math.pow(d, 6) / 720))
-    val lon = tm.lon0 + math.toDegrees((d - (1 + 2 * t1 + c1) *
-      math.pow(d, 3) / 6 +
-      (5 - 2 * c1 + 28 * t1 - 3 * c1 * c1 + 8 * tm.ep2 + 24 * t1 * t1) *
-        math.pow(d, 5) / 120) / cosP)
-    (lon, lat)
   }
 }

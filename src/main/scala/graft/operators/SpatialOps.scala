@@ -19,8 +19,9 @@ import org.apache.spark.sql.functions._
   *        coords and values onto the target resolution) then rectify —
   *        spatial.py:198-223's downscale-first branch.
   *  3. different CRS → transform the source coordinates to the target CRS
-  *     (closed-form geographic ↔ web-mercator; anything else raises, the
-  *     documented CRS scope of v0) and recurse — the coords become irregular
+  *     through the [[Projection]] registry (geographic ↔ any of its 18
+  *     projected families, projected ↔ projected through geographic; an
+  *     unregistered CRS raises) and recurse — the coords become irregular
   *     2-D, so this always lands in a rectify branch (spatial.py:225-261).
   *
   * Output is normalized to one row per populated target cell: (i, j, vars…).
@@ -54,100 +55,14 @@ object SpatialOps {
       math.abs(a.xMin - b.xMin) < tol && math.abs(a.yMin - b.yMin) < tol &&
       math.abs(a.xRes - b.xRes) < tol && math.abs(a.yRes - b.yRes) < tol
 
-  /** Closed-form coordinate transform between the supported CRS pairs —
-    * geographic ↔ each registered PROJECTED family: web-mercator
-    * (EPSG:3857), any UTM zone (EPSG:326xx/327xx, [[UtmOps]]), polar
-    * stereographic (EPSG:3413/3031/3976), LAEA (EPSG:3035/6931/6932),
-    * MODIS sinusoidal (SR-ORG:6974), Lambert conformal conic
-    * (EPSG:2154/3978) and Albers equal-area (EPSG:5070), all in
-    * [[PolarOps]] unless noted.
-    */
-  /** Public coordinate transform between two registered CRSs —
-    * geographic ↔ projected directly, projected → projected through the
-    * geographic pivot. Loud decline for unregistered families. */
+  /** Coordinate transform between two CRSs the [[Projection]] registry
+    * holds — geographic ↔ projected directly, projected → projected
+    * through the geographic pivot — as one `project_xy` expression. Loud
+    * decline for an unregistered family. */
   def transformXY(crsFrom: String, crsTo: String,
                   x: Column, y: Column): (Column, Column) =
-    transformCols(crsFrom, crsTo, x, y)
-
-  private def transformCols(crsFrom: String, crsTo: String,
-                            x: Column, y: Column): (Column, Column) = {
-    /** (forward from geographic, inverse to geographic) of a projected
-      * CRS, when registered. */
-    def family(crs: String): Option[((Column, Column) => (Column, Column),
-        (Column, Column) => (Column, Column))] =
-      if (crs == "EPSG:3857") Some((
-        (a, b) => (ReprojectOps.lonToMercX(a), ReprojectOps.latToMercY(b)),
-        (a, b) => (ReprojectOps.mercXToLon(a), ReprojectOps.mercYToLat(b))))
-      else UtmOps.zoneForCrs(crs).map(z => (
-        (a: Column, b: Column) => UtmOps.forward(a, b, z),
-        (a: Column, b: Column) => UtmOps.inverse(a, b, z)))
-      .orElse(PolarOps.stereoForCrs(crs).map(ps => (
-        (a: Column, b: Column) => PolarOps.stereoForward(a, b, ps),
-        (a: Column, b: Column) => PolarOps.stereoInverse(a, b, ps))))
-      .orElse(PolarOps.laeaForCrs(crs).map(la => (
-        (a: Column, b: Column) => PolarOps.laeaForward(a, b, la),
-        (a: Column, b: Column) => PolarOps.laeaInverse(a, b, la))))
-      .orElse(PolarOps.lccForCrs(crs).map(lc => (
-        (a: Column, b: Column) => PolarOps.lccForward(a, b, lc),
-        (a: Column, b: Column) => PolarOps.lccInverse(a, b, lc))))
-      .orElse(PolarOps.albersForCrs(crs).map(ab => (
-        (a: Column, b: Column) => PolarOps.albersForward(a, b, ab),
-        (a: Column, b: Column) => PolarOps.albersInverse(a, b, ab))))
-      .orElse(if (PolarOps.isSinusoidal(crs)) Some((
-        (a: Column, b: Column) => PolarOps.sinuForward(a, b),
-        (a: Column, b: Column) => PolarOps.sinuInverse(a, b))) else None)
-      .orElse(PolarOps.rotPoleForCrs(crs).map(rp => (
-        (a: Column, b: Column) => PolarOps.rotPoleForward(a, b, rp),
-        (a: Column, b: Column) => PolarOps.rotPoleInverse(a, b, rp))))
-      .orElse(PolarOps.geosForCrs(crs).map(g => (
-        (a: Column, b: Column) => PolarOps.geosForward(a, b, g),
-        (a: Column, b: Column) => PolarOps.geosInverse(a, b, g))))
-      .orElse(if (PolarOps.isEase2(crs)) Some((
-        (a: Column, b: Column) => PolarOps.ease2Forward(a, b),
-        (a: Column, b: Column) => PolarOps.ease2Inverse(a, b))) else None)
-      .orElse(PolarOps.orthoForCrs(crs).map(o => (
-        (a: Column, b: Column) => PolarOps.orthoForward(a, b, o),
-        (a: Column, b: Column) => PolarOps.orthoInverse(a, b, o))))
-      .orElse(PolarOps.mollForCrs(crs).map(mw => (
-        (a: Column, b: Column) => PolarOps.mollForward(a, b, mw),
-        (a: Column, b: Column) => PolarOps.mollInverse(a, b, mw))))
-      .orElse(PolarOps.obliqueStereoForCrs(crs).map(os => (
-        (a: Column, b: Column) => PolarOps.obliqueStereoForward(a, b, os),
-        (a: Column, b: Column) => PolarOps.obliqueStereoInverse(a, b, os))))
-      .orElse(PolarOps.eqEarthForCrs(crs).map(ee => (
-        (a: Column, b: Column) => PolarOps.eqEarthForward(a, b, ee),
-        (a: Column, b: Column) => PolarOps.eqEarthInverse(a, b, ee))))
-      .orElse(PolarOps.hotineForCrs(crs).map(hm => (
-        (a: Column, b: Column) => PolarOps.hotineForward(a, b, hm),
-        (a: Column, b: Column) => PolarOps.hotineInverse(a, b, hm))))
-      .orElse(PolarOps.mercForCrs(crs).map(mc => (
-        (a: Column, b: Column) => PolarOps.mercForward(a, b, mc),
-        (a: Column, b: Column) => PolarOps.mercInverse(a, b, mc))))
-      .orElse(PolarOps.eqcForCrs(crs).map(q => (
-        (a: Column, b: Column) => PolarOps.eqcForward(a, b, q),
-        (a: Column, b: Column) => PolarOps.eqcInverse(a, b, q))))
-      .orElse(PolarOps.tmercForCrs(crs).map(tmr => (
-        (a: Column, b: Column) => PolarOps.tmercForward(a, b, tmr),
-        (a: Column, b: Column) => PolarOps.tmercInverse(a, b, tmr))))
     if (sameCrs(crsFrom, crsTo)) (x, y)
-    else (family(crsTo), family(crsFrom)) match {
-      case (Some((fwd, _)), _) if isGeographic(crsFrom) => fwd(x, y)
-      case (_, Some((_, inv))) if isGeographic(crsTo) => inv(x, y)
-      case (Some((fwd, _)), Some((_, inv))) =>
-        // projected -> projected: pivot through geographic (the same
-        // route pyproj's pipeline takes for two non-geographic CRSs)
-        val (lon, lat) = inv(x, y)
-        fwd(lon, lat)
-      case _ => throw new IllegalArgumentException(
-        s"unsupported CRS pair $crsFrom -> $crsTo " +
-          "(supported: geographic <-> EPSG:3857, UTM EPSG:326xx/327xx, " +
-          "polar stereographic EPSG:3413/3031/3976, LAEA " +
-          "EPSG:3035/6931/6932, MODIS sinusoidal SR-ORG:6974, " +
-          "LCC EPSG:2154/3978, Albers EPSG:5070, ROTPOLE:<lat>:<lon>, " +
-          "GEOS:<lon0>[:<h>:<x|y>], EASE-2.0 EPSG:6933, " +
-          "ORTHO:<lat0>:<lon0>, MOLL:<lon0>)")
-    }
-  }
+    else graft.functions.ProjectXY.col(x, y, Projection.transform(crsFrom, crsTo))
 
   /** Resample `src` onto the regular grid `tgtGm`.
     *
@@ -205,7 +120,7 @@ object SpatialOps {
 
     case RegularSource(cells, gm) =>
       // 3: different CRS — project the cell centers, recurse as irregular
-      val (tx, ty) = transformCols(gm.crs, tgtGm.crs,
+      val (tx, ty) = transformXY(gm.crs, tgtGm.crs,
         gm.xExpr(col("i")), gm.yExpr(col("j")))
       val swath = cells.withColumn("__tx", tx).withColumn("__ty", ty)
       val (bx1, by1, bx2, by2) = transformedBbox(gm, tgtGm.crs)
@@ -239,7 +154,7 @@ object SpatialOps {
 
     case IrregularSource(df, xc, yc, xRes, yRes, crs) =>
       // 3: different CRS — transform the 2-D coords and recurse
-      val (tx, ty) = transformCols(crs, tgtGm.crs, col(xc), col(yc))
+      val (tx, ty) = transformXY(crs, tgtGm.crs, col(xc), col(yc))
       val swath = df.withColumn("__tx", tx).withColumn("__ty", ty)
       // resolution estimate in the target CRS via the linear scale of the
       // transform at the extent (good enough for the route decision)
@@ -249,91 +164,13 @@ object SpatialOps {
   }
 
   /** Bbox of a grid after transforming to `crsTo` (driver-side planning):
-    * the min/max of the four transformed corners — exact for the conformal
-    * cylindrical pair, a close planning estimate for transverse mercator.
+    * the min/max of the four transformed corners — exact for the
+    * cylindrical families, a close planning estimate for the others.
     */
   def transformedBbox(gm: GridMapping, crsTo: String): (Double, Double, Double, Double) =
     if (sameCrs(gm.crs, crsTo)) gm.xyBbox
-    else if (isGeographic(gm.crs) && crsTo == "EPSG:3857")
-      ReprojectOps.mercatorBbox(gm)
-    else if (gm.crs == "EPSG:3857" && isGeographic(crsTo)) {
-      def lon(x: Double) = math.toDegrees(x / ReprojectOps.EarthRadius)
-      def lat(y: Double) = math.toDegrees(
-        2.0 * math.atan(math.exp(y / ReprojectOps.EarthRadius)) - math.Pi / 2)
-      (lon(gm.xMin), lat(gm.yMin), lon(gm.xMax), lat(gm.yMax))
-    } else {
-      def familyScalar(crs: String)
-          : Option[((Double, Double) => (Double, Double),
-            (Double, Double) => (Double, Double))] =
-        UtmOps.zoneForCrs(crs).map(z => (
-          (a: Double, b: Double) => UtmOps.forwardScalar(a, b, z),
-          (a: Double, b: Double) => UtmOps.inverseScalar(a, b, z)))
-        .orElse(PolarOps.stereoForCrs(crs).map(ps => (
-          (a: Double, b: Double) => PolarOps.stereoForwardScalar(a, b, ps),
-          (a: Double, b: Double) => PolarOps.stereoInverseScalar(a, b, ps))))
-        .orElse(PolarOps.laeaForCrs(crs).map(la => (
-          (a: Double, b: Double) => PolarOps.laeaForwardScalar(a, b, la),
-          (a: Double, b: Double) => PolarOps.laeaInverseScalar(a, b, la))))
-        .orElse(PolarOps.lccForCrs(crs).map(lc => (
-          (a: Double, b: Double) => PolarOps.lccForwardScalar(a, b, lc),
-          (a: Double, b: Double) => PolarOps.lccInverseScalar(a, b, lc))))
-        .orElse(PolarOps.albersForCrs(crs).map(ab => (
-          (a: Double, b: Double) => PolarOps.albersForwardScalar(a, b, ab),
-          (a: Double, b: Double) => PolarOps.albersInverseScalar(a, b, ab))))
-        .orElse(if (PolarOps.isSinusoidal(crs)) Some((
-          (a: Double, b: Double) => PolarOps.sinuForwardScalar(a, b),
-          (a: Double, b: Double) => PolarOps.sinuInverseScalar(a, b)))
-        else None)
-        .orElse(PolarOps.rotPoleForCrs(crs).map(rp => (
-          (a: Double, b: Double) => PolarOps.rotPoleForwardScalar(a, b, rp),
-          (a: Double, b: Double) => PolarOps.rotPoleInverseScalar(a, b, rp))))
-        .orElse(PolarOps.geosForCrs(crs).map(g => (
-          (a: Double, b: Double) => PolarOps.geosForwardScalar(a, b, g),
-          (a: Double, b: Double) => PolarOps.geosInverseScalar(a, b, g))))
-        .orElse(if (PolarOps.isEase2(crs)) Some((
-          (a: Double, b: Double) => PolarOps.ease2ForwardScalar(a, b),
-          (a: Double, b: Double) => PolarOps.ease2InverseScalar(a, b)))
-        else None)
-        .orElse(PolarOps.orthoForCrs(crs).map(o => (
-          (a: Double, b: Double) => PolarOps.orthoForwardScalar(a, b, o),
-          (a: Double, b: Double) => PolarOps.orthoInverseScalar(a, b, o))))
-        .orElse(PolarOps.mollForCrs(crs).map(mw => (
-          (a: Double, b: Double) => PolarOps.mollForwardScalar(a, b, mw),
-          (a: Double, b: Double) => PolarOps.mollInverseScalar(a, b, mw))))
-        .orElse(PolarOps.obliqueStereoForCrs(crs).map(os => (
-          (a: Double, b: Double) =>
-            PolarOps.obliqueStereoForwardScalar(a, b, os),
-          (a: Double, b: Double) =>
-            PolarOps.obliqueStereoInverseScalar(a, b, os))))
-        .orElse(PolarOps.eqEarthForCrs(crs).map(ee => (
-          (a: Double, b: Double) => PolarOps.eqEarthForwardScalar(a, b, ee),
-          (a: Double, b: Double) =>
-            PolarOps.eqEarthInverseScalar(a, b, ee))))
-        .orElse(PolarOps.hotineForCrs(crs).map(hm => (
-          (a: Double, b: Double) => PolarOps.hotineForwardScalar(a, b, hm),
-          (a: Double, b: Double) =>
-            PolarOps.hotineInverseScalar(a, b, hm))))
-        .orElse(PolarOps.mercForCrs(crs).map(mc => (
-          (a: Double, b: Double) => PolarOps.mercForwardScalar(a, b, mc),
-          (a: Double, b: Double) => PolarOps.mercInverseScalar(a, b, mc))))
-        .orElse(PolarOps.eqcForCrs(crs).map(q => (
-          (a: Double, b: Double) => PolarOps.eqcForwardScalar(a, b, q),
-          (a: Double, b: Double) => PolarOps.eqcInverseScalar(a, b, q))))
-        .orElse(PolarOps.tmercForCrs(crs).map(tmr => (
-          (a: Double, b: Double) => PolarOps.tmercForwardScalar(a, b, tmr),
-          (a: Double, b: Double) =>
-            PolarOps.tmercInverseScalar(a, b, tmr))))
-      val f: (Double, Double) => (Double, Double) =
-        (familyScalar(crsTo), familyScalar(gm.crs)) match {
-          case (Some((fwd, _)), _) if isGeographic(gm.crs) => fwd
-          case (_, Some((_, inv))) if isGeographic(crsTo) => inv
-          case (Some((fwd, _)), Some((_, inv))) =>
-            // projected -> projected via the geographic pivot, matching
-            // transformCols' column route
-            (a: Double, b: Double) => { val (lo, la) = inv(a, b); fwd(lo, la) }
-          case _ => throw new IllegalArgumentException(
-            s"unsupported CRS pair ${gm.crs} -> $crsTo")
-        }
+    else {
+      val f = Projection.transform(gm.crs, crsTo)
       val corners = Seq(
         f(gm.xMin, gm.yMin), f(gm.xMin, gm.yMax),
         f(gm.xMax, gm.yMin), f(gm.xMax, gm.yMax))
@@ -341,37 +178,13 @@ object SpatialOps {
        corners.map(_._1).max, corners.map(_._2).max)
     }
 
-  /** Mean linear scale of the supported transforms (for res estimates —
-    * the route decision only; ~unity projection scale factors suffice
-    * for the stereographic/LAEA families). */
-  private def scaleFactor(crsFrom: String, crsTo: String): Double = {
-    val degToMeters = ReprojectOps.EarthRadius * math.Pi / 180.0
-    def metric(crs: String): Boolean =
-      crs == "EPSG:3857" || UtmOps.zoneForCrs(crs).isDefined ||
-        PolarOps.stereoForCrs(crs).isDefined ||
-        PolarOps.laeaForCrs(crs).isDefined || PolarOps.isSinusoidal(crs) ||
-        PolarOps.lccForCrs(crs).isDefined ||
-        PolarOps.albersForCrs(crs).isDefined ||
-        PolarOps.geosForCrs(crs).isDefined ||
-        PolarOps.isEase2(crs) || PolarOps.orthoForCrs(crs).isDefined ||
-        PolarOps.mollForCrs(crs).isDefined ||
-        PolarOps.obliqueStereoForCrs(crs).isDefined ||
-        PolarOps.eqEarthForCrs(crs).isDefined ||
-        PolarOps.hotineForCrs(crs).isDefined ||
-        PolarOps.mercForCrs(crs).isDefined ||
-        PolarOps.eqcForCrs(crs).isDefined ||
-        PolarOps.tmercForCrs(crs).isDefined
-    // rotated-pole frames are DEGREES: unit linear scale either way
-    if (PolarOps.rotPoleForCrs(crsFrom).isDefined ||
-      PolarOps.rotPoleForCrs(crsTo).isDefined) 1.0
-    else if (isGeographic(crsFrom) && crsTo == "EPSG:3857") degToMeters
-    else if (crsFrom == "EPSG:3857" && isGeographic(crsTo)) 1.0 / degToMeters
-    else if (isGeographic(crsFrom) && UtmOps.zoneForCrs(crsTo).isDefined)
-      degToMeters * UtmOps.K0
-    else if (UtmOps.zoneForCrs(crsFrom).isDefined && isGeographic(crsTo))
-      1.0 / (degToMeters * UtmOps.K0)
-    else if (isGeographic(crsFrom) && metric(crsTo)) degToMeters
-    else if (metric(crsFrom) && isGeographic(crsTo)) 1.0 / degToMeters
-    else 1.0
-  }
+  /** Linear scale of a transform (for res estimates — the route decision
+    * only): the projection's units per degree from geographic, its
+    * reciprocal back, 1 between two projections. */
+  private def scaleFactor(crsFrom: String, crsTo: String): Double =
+    (Projection.forCrs(crsFrom), Projection.forCrs(crsTo)) match {
+      case (_, Some(p)) if isGeographic(crsFrom) => p.unitsPerDegree
+      case (Some(p), _) if isGeographic(crsTo) => 1.0 / p.unitsPerDegree
+      case _ => 1.0
+    }
 }

@@ -1,54 +1,36 @@
 package graft.operators
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
-
 /** UTM (transverse-mercator) reprojection — closing the most common
   * real-world CRS gap beyond the geographic ↔ web-mercator pair
   * (reference: any pyproj CRS, xcube/core/gridmapping/base.py:94; UTM zones
   * EPSG:326xx north / 327xx south).
   *
-  * Forward and inverse are the standard WGS84 transverse-mercator series
-  * (Snyder, "Map Projections — A Working Manual", USGS PP 1395, eqs.
-  * 8-9..8-25; the formulation proj uses for UTM), accurate to millimeters
-  * inside a zone. Everything is plain column arithmetic + trig — codegen'd,
-  * no external CRS library, and mirrorable in an SQL oracle because every
-  * series constant below is a shared Scala double.
+  * A zone is the WGS84 transverse Mercator ([[PolarOps.Tmerc]], the
+  * Snyder PP 1395 8-9..8-25 series proj uses for UTM, accurate to
+  * millimetres inside a zone) with the zone's central meridian, k0 0.9996
+  * and the UTM false origin.
   */
 object UtmOps {
 
-  // WGS84 ellipsoid
-  val A: Double = 6378137.0
-  val F: Double = 1.0 / 298.257223563
   val K0: Double = 0.9996
   val FalseEasting: Double = 500000.0
   val FalseNorthingSouth: Double = 10000000.0
 
-  val E2: Double = F * (2 - F)
-  val E4: Double = E2 * E2
-  val E6: Double = E4 * E2
-  val Ep2: Double = E2 / (1 - E2)
-
-  // meridian-arc series coefficients (Snyder 3-21)
-  val M0: Double = 1 - E2 / 4 - 3 * E4 / 64 - 5 * E6 / 256
-  val M2: Double = 3 * E2 / 8 + 3 * E4 / 32 + 45 * E6 / 1024
-  val M4: Double = 15 * E4 / 256 + 45 * E6 / 1024
-  val M6: Double = 35 * E6 / 3072
-
-  // footprint-latitude series coefficients (Snyder 3-26)
-  val E1: Double = (1 - math.sqrt(1 - E2)) / (1 + math.sqrt(1 - E2))
-  val P2: Double = 3 * E1 / 2 - 27 * E1 * E1 * E1 / 32
-  val P4: Double = 21 * E1 * E1 / 16 - 55 * math.pow(E1, 4) / 32
-  val P6: Double = 151 * E1 * E1 * E1 / 96
-  val P8: Double = 1097 * math.pow(E1, 4) / 512
-
   /** A UTM zone: EPSG:326zz (north) / EPSG:327zz (south). */
-  final case class UtmZone(zone: Int, north: Boolean) {
+  final case class UtmZone(zone: Int, north: Boolean) extends Projection {
     require(zone >= 1 && zone <= 60, s"UTM zone out of range: $zone")
     /** Central meridian in degrees. */
     def lon0Deg: Double = zone * 6.0 - 183.0
     def falseNorthing: Double = if (north) 0.0 else FalseNorthingSouth
     def epsg: String = s"EPSG:${if (north) 32600 + zone else 32700 + zone}"
+    /** The zone's transverse Mercator. */
+    val tm: PolarOps.Tmerc =
+      PolarOps.Tmerc(0.0, lon0Deg, K0, FalseEasting, falseNorthing)
+    def forward(lon: Double, lat: Double, out: Array[Double]): Int =
+      tm.forward(lon, lat, out)
+    def inverse(x: Double, y: Double, out: Array[Double]): Int =
+      tm.inverse(x, y, out)
+    override def unitsPerDegree: Double = Projection.DegToMeters * K0
   }
 
   /** Parse "EPSG:326zz"/"EPSG:327zz" → zone, or None for non-UTM codes. */
@@ -62,117 +44,4 @@ object UtmOps {
   /** Zone a longitude falls into (for choosing a target CRS). */
   def zoneForLonLat(lon: Double, lat: Double): UtmZone =
     UtmZone(math.min(60, math.max(1, ((lon + 180.0) / 6.0).toInt + 1)), lat >= 0)
-
-  /** Meridian arc length from the equator (column form, Snyder 3-21). */
-  def meridianArc(latRad: Column): Column =
-    lit(A) * (lit(M0) * latRad - lit(M2) * sin(lit(2.0) * latRad) +
-      lit(M4) * sin(lit(4.0) * latRad) - lit(M6) * sin(lit(6.0) * latRad))
-
-  /** Forward: (lonDeg, latDeg) → (easting, northing) in `zone`
-    * (Snyder 8-9..8-14).
-    */
-  def forward(lonDeg: Column, latDeg: Column, zone: UtmZone): (Column, Column) = {
-    val phi = radians(latDeg)
-    val lam = radians(lonDeg - lit(zone.lon0Deg))
-    val sinPhi = sin(phi)
-    val cosPhi = cos(phi)
-    val tanPhi = tan(phi)
-    val n = lit(A) / sqrt(lit(1.0) - lit(E2) * sinPhi * sinPhi)
-    val t = tanPhi * tanPhi
-    val c = lit(Ep2) * cosPhi * cosPhi
-    val a1 = lam * cosPhi
-    val a2 = a1 * a1
-    val a3 = a2 * a1
-    val a4 = a2 * a2
-    val a5 = a4 * a1
-    val a6 = a4 * a2
-    val m = meridianArc(phi)
-    val x = lit(K0) * n * (a1 + (lit(1.0) - t + c) * a3 / lit(6.0) +
-      (lit(5.0) - lit(18.0) * t + t * t + lit(72.0) * c - lit(58.0) * lit(Ep2)) *
-        a5 / lit(120.0)) + lit(FalseEasting)
-    val y = lit(K0) * (m + n * tanPhi * (a2 / lit(2.0) +
-      (lit(5.0) - t + lit(9.0) * c + lit(4.0) * c * c) * a4 / lit(24.0) +
-      (lit(61.0) - lit(58.0) * t + t * t + lit(600.0) * c - lit(330.0) * lit(Ep2)) *
-        a6 / lit(720.0))) + lit(zone.falseNorthing)
-    (x, y)
-  }
-
-  /** Inverse: (easting, northing) in `zone` → (lonDeg, latDeg)
-    * (Snyder 8-17..8-25 via the footprint latitude).
-    */
-  def inverse(easting: Column, northing: Column, zone: UtmZone): (Column, Column) = {
-    val m = (northing - lit(zone.falseNorthing)) / lit(K0)
-    val mu = m / lit(A * M0)
-    val phi1 = mu + lit(P2) * sin(lit(2.0) * mu) + lit(P4) * sin(lit(4.0) * mu) +
-      lit(P6) * sin(lit(6.0) * mu) + lit(P8) * sin(lit(8.0) * mu)
-    val sinP = sin(phi1)
-    val cosP = cos(phi1)
-    val tanP = tan(phi1)
-    val c1 = lit(Ep2) * cosP * cosP
-    val t1 = tanP * tanP
-    val oneMinus = lit(1.0) - lit(E2) * sinP * sinP
-    val n1 = lit(A) / sqrt(oneMinus)
-    val r1 = lit(A * (1 - E2)) / pow(oneMinus, lit(1.5))
-    val d = (easting - lit(FalseEasting)) / (n1 * lit(K0))
-    val d2 = d * d
-    val d3 = d2 * d
-    val d4 = d2 * d2
-    val d5 = d4 * d
-    val d6 = d4 * d2
-    val lat = degrees(phi1 - (n1 * tanP / r1) * (d2 / lit(2.0) -
-      (lit(5.0) + lit(3.0) * t1 + lit(10.0) * c1 - lit(4.0) * c1 * c1 -
-        lit(9.0) * lit(Ep2)) * d4 / lit(24.0) +
-      (lit(61.0) + lit(90.0) * t1 + lit(298.0) * c1 + lit(45.0) * t1 * t1 -
-        lit(252.0) * lit(Ep2) - lit(3.0) * c1 * c1) * d6 / lit(720.0)))
-    val lon = lit(zone.lon0Deg) + degrees((d - (lit(1.0) + lit(2.0) * t1 + c1) *
-      d3 / lit(6.0) +
-      (lit(5.0) - lit(2.0) * c1 + lit(28.0) * t1 - lit(3.0) * c1 * c1 +
-        lit(8.0) * lit(Ep2) + lit(24.0) * t1 * t1) * d5 / lit(120.0)) / cosP)
-    (lon, lat)
-  }
-
-  // ------------------------------------------------------- scalar variants
-  // (driver-side planning: bbox transforms, resolution estimates)
-
-  def forwardScalar(lonDeg: Double, latDeg: Double, zone: UtmZone): (Double, Double) = {
-    val phi = math.toRadians(latDeg)
-    val lam = math.toRadians(lonDeg - zone.lon0Deg)
-    val sinPhi = math.sin(phi); val cosPhi = math.cos(phi); val tanPhi = math.tan(phi)
-    val n = A / math.sqrt(1 - E2 * sinPhi * sinPhi)
-    val t = tanPhi * tanPhi
-    val c = Ep2 * cosPhi * cosPhi
-    val a1 = lam * cosPhi
-    val m = A * (M0 * phi - M2 * math.sin(2 * phi) + M4 * math.sin(4 * phi) -
-      M6 * math.sin(6 * phi))
-    val x = K0 * n * (a1 + (1 - t + c) * math.pow(a1, 3) / 6 +
-      (5 - 18 * t + t * t + 72 * c - 58 * Ep2) * math.pow(a1, 5) / 120) + FalseEasting
-    val y = K0 * (m + n * tanPhi * (a1 * a1 / 2 +
-      (5 - t + 9 * c + 4 * c * c) * math.pow(a1, 4) / 24 +
-      (61 - 58 * t + t * t + 600 * c - 330 * Ep2) * math.pow(a1, 6) / 720)) +
-      zone.falseNorthing
-    (x, y)
-  }
-
-  def inverseScalar(easting: Double, northing: Double, zone: UtmZone): (Double, Double) = {
-    val m = (northing - zone.falseNorthing) / K0
-    val mu = m / (A * M0)
-    val phi1 = mu + P2 * math.sin(2 * mu) + P4 * math.sin(4 * mu) +
-      P6 * math.sin(6 * mu) + P8 * math.sin(8 * mu)
-    val sinP = math.sin(phi1); val cosP = math.cos(phi1); val tanP = math.tan(phi1)
-    val c1 = Ep2 * cosP * cosP
-    val t1 = tanP * tanP
-    val oneMinus = 1 - E2 * sinP * sinP
-    val n1 = A / math.sqrt(oneMinus)
-    val r1 = A * (1 - E2) / math.pow(oneMinus, 1.5)
-    val d = (easting - FalseEasting) / (n1 * K0)
-    val lat = math.toDegrees(phi1 - (n1 * tanP / r1) * (d * d / 2 -
-      (5 + 3 * t1 + 10 * c1 - 4 * c1 * c1 - 9 * Ep2) * math.pow(d, 4) / 24 +
-      (61 + 90 * t1 + 298 * c1 + 45 * t1 * t1 - 252 * Ep2 - 3 * c1 * c1) *
-        math.pow(d, 6) / 720))
-    val lon = zone.lon0Deg + math.toDegrees((d - (1 + 2 * t1 + c1) *
-      math.pow(d, 3) / 6 +
-      (5 - 2 * c1 + 28 * t1 - 3 * c1 * c1 + 8 * Ep2 + 24 * t1 * t1) *
-        math.pow(d, 5) / 120) / cosP)
-    (lon, lat)
-  }
 }

@@ -343,8 +343,8 @@ object ResamplePack extends QueryPack {
 
     // dispatcher EQUAL-EARTH route (EPSG:8857 — the equal-area pseudo-
     // cylindrical world projection, Savric/Patterson/Jenny 2019, proj
-    // +proj=eqearth): authalic-latitude composition on WGS84, Newton
-    // theta in a native codegen Expression (EqEarthTheta)
+    // +proj=eqearth): authalic-latitude composition on WGS84 (the
+    // PolarOps.EqualEarth kernel)
     "q_resample_space_eqearth" -> ((s, d) => {
       val geoGm = GridMapping(360, 100, 5.0, 48.0, 0.01, 0.02, crs = "CRS84")
       val eeGm = GridMapping(72, 52, 396000.0, 5774000.0, 4000.0, 4000.0,
@@ -792,9 +792,11 @@ object ResamplePack extends QueryPack {
          WHERE ax >= -20037600.0 AND ax < 20037600.0
            AND ay >= -5621600.0 AND ay < 5621600.0""",
     "q_resample_space_utm" -> {
-      // the SAME Scala doubles the Column expression embeds, interpolated
+      // the SAME Scala doubles the projection kernel uses, interpolated
       // into the SQL so both engines share every series constant bit-for-bit
-      import UtmOps.{A => UA, E2, Ep2, K0, M0, M2, M4, M6}
+      val utm = UtmOps.UtmZone(32, north = true).tm
+      import utm.{a => UA, e2 => E2, ep2 => Ep2, k0 => K0, m0 => M0,
+        m2 => M2, m4 => M4, m6 => M6}
       s"""WITH $cellsCte,
          g AS (SELECT 6.0 + (i + 0.5) * 0.01 AS lon,
                       44.0 + (j + 0.5) * 0.02 AS lat, v
@@ -834,8 +836,8 @@ object ResamplePack extends QueryPack {
            AND ay >= 4860000.0 AND ay < 5100000.0"""
     },
     "q_resample_space_ps" -> {
-      // the SAME Scala doubles the Column expression embeds
-      // (PolarOps.stereoForward on EPSG:3413), interpolated so both
+      // the SAME Scala doubles the projection kernel uses
+      // (PolarOps.PolarStereo forward on EPSG:3413), interpolated so both
       // engines share every series constant bit-for-bit
       val ps = PolarOps.stereoForCrs("EPSG:3413").get
       import PolarOps.{E => PE}
@@ -1466,11 +1468,12 @@ object ResamplePack extends QueryPack {
                 round(sum(v), 6) AS sum_v
          FROM cells GROUP BY jband""",
     "q_resample_space_eqearth" -> {
-      // the SAME Scala doubles the Column expression embeds
-      // (PolarOps.eqEarthForward — authalic q like the EASE twin, then
+      // the SAME Scala doubles the projection kernel uses
+      // (PolarOps.EqualEarth — authalic q like the EASE twin, then
       // the published polynomial), interpolated for bit-parity
       import PolarOps.{AuthalicR, E => PE, E2 => PE2, EqEarthM, Qp}
-      import graft.functions.EqEarthTheta.{A1, A2, A3, A4}
+      import PolarOps.{EqEarthA1 => A1, EqEarthA2 => A2, EqEarthA3 => A3,
+        EqEarthA4 => A4}
       s"""WITH $cellsCte,
          g AS (SELECT 5.0 + (i + 0.5) * 0.01 AS lon,
                       48.0 + (j + 0.5) * 0.02 AS lat, v
@@ -1510,8 +1513,8 @@ object ResamplePack extends QueryPack {
            AND ay >= 5774000.0 AND ay < 5982000.0"""
     },
     "q_resample_space_hom" -> {
-      // the SAME Scala doubles the Column expression embeds
-      // (PolarOps.hotineForward on EPSG:29873 — per-CRS Everest 1830
+      // the SAME Scala doubles the projection kernel uses
+      // (PolarOps.HotineOm forward on EPSG:29873 — per-CRS Everest 1830
       // constants), interpolated for bit-parity
       val h = PolarOps.hotineForCrs("EPSG:29873").get
       s"""WITH $cellsCte,
@@ -1558,8 +1561,8 @@ object ResamplePack extends QueryPack {
            AND ay >= 222000.0 AND ay < 438000.0"""
     },
     "q_resample_space_stereo" -> {
-      // the SAME Scala doubles the Column expression embeds
-      // (PolarOps.obliqueStereoForward on EPSG:28992 — per-CRS Bessel
+      // the SAME Scala doubles the projection kernel uses
+      // (PolarOps.ObliqueStereo forward on EPSG:28992 — per-CRS Bessel
       // constants), interpolated so both engines share every constant
       // bit-for-bit
       val os = PolarOps.obliqueStereoForCrs("EPSG:28992").get
@@ -1624,8 +1627,8 @@ object ResamplePack extends QueryPack {
          GROUP BY bj"""
     },
     "q_resample_space_merc" -> {
-      // the SAME Scala doubles the Column expression embeds
-      // (PolarOps.mercForward on EPSG:3002 — per-CRS Bessel 1841
+      // the SAME Scala doubles the projection kernel uses
+      // (PolarOps.Merc forward on EPSG:3002 — per-CRS Bessel 1841
       // constants), interpolated for bit-parity
       val mc = PolarOps.mercForCrs("EPSG:3002").get
       s"""WITH $cellsCte,
@@ -1653,8 +1656,8 @@ object ResamplePack extends QueryPack {
            AND ay >= 238000.0 AND ay < 454000.0"""
     },
     "q_resample_space_eqc" -> {
-      // the SAME Scala doubles the Column expression embeds
-      // (PolarOps.eqcForward on EPSG:4087 — WGS84 meridian-arc series),
+      // the SAME Scala doubles the projection kernel uses
+      // (PolarOps.Eqc forward on EPSG:4087 — WGS84 meridian-arc series),
       // interpolated for bit-parity
       val q = PolarOps.eqcForCrs("EPSG:4087").get
       s"""WITH $cellsCte,
@@ -1683,8 +1686,8 @@ object ResamplePack extends QueryPack {
            AND ay >= 5320000.0 AND ay < 5536000.0"""
     },
     "q_resample_space_gk" -> {
-      // the SAME Scala doubles the Column expression embeds
-      // (PolarOps.tmercForward on EPSG:27700 — per-CRS Airy 1830
+      // the SAME Scala doubles the projection kernel uses
+      // (PolarOps.Tmerc forward on EPSG:27700 — per-CRS Airy 1830
       // constants, the Snyder 8-9..8-14 series), interpolated for
       // bit-parity
       val tm = PolarOps.tmercForCrs("EPSG:27700").get
@@ -1739,10 +1742,12 @@ object ResamplePack extends QueryPack {
            AND ay >= 68000.0 AND ay < 292000.0"""
     },
     "q_gm_transform" -> {
-      // the SAME Scala doubles the Column expression embeds (UtmOps
+      // the SAME Scala doubles the projection kernel uses (UtmOps
       // zone-32 forward + the covering-grid formula), interpolated so
       // both engines share every constant bit-for-bit
-      import UtmOps.{A => UA, E2, Ep2, K0, M0, M2, M4, M6}
+      val utm = UtmOps.UtmZone(32, north = true).tm
+      import utm.{a => UA, e2 => E2, ep2 => Ep2, k0 => K0, m0 => M0,
+        m2 => M2, m4 => M4, m6 => M6}
       s"""WITH g AS (SELECT (id % 40)::BIGINT AS i, (id // 40)::BIGINT AS j,
                       6.0 + ((id % 40) + 0.5) * 0.05 AS lon,
                       44.0 + ((id // 40) + 0.5) * 0.05 AS lat

@@ -377,7 +377,8 @@ object KerchunkSource {
       StructField("length", LongType, nullable = false),
       StructField("inline", BinaryType, nullable = true)))
     val spillDir = java.nio.file.Files.createTempDirectory("kerchunk-spill-")
-    spillDir.toFile.deleteOnExit()
+    // the parquet parts are read lazily; the tree goes when the JVM exits
+    org.apache.spark.graftbridge.ShutdownDelete.register(spillDir.toFile)
     val prefix = s"$varName/"
     val buf = new java.util.ArrayList[Row](spillBatch)
     def flush(): Unit = if (!buf.isEmpty) {

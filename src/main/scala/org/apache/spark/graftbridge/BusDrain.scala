@@ -10,7 +10,8 @@ import org.apache.spark.SparkContext
   * skewing the drift-adjusted floors (the per-query medians themselves
   * are unaffected — only the stage attribution). Package placement (a
   * descendant of org.apache.spark) is the supported way to reach a
-  * `private[spark]` member from library code; nothing else lives here.
+  * `private[spark]` member from library code; only such bridges live
+  * here.
   */
 object BusDrain {
   def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()

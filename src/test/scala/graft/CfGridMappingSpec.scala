@@ -225,17 +225,17 @@ class CfGridMappingSpec extends AnyFunSuite {
 
   test("geostationary: the published GOES-R PUG worked example") {
     val g = PolarOps.geosForCrs("GEOS:-75.0:3.5786023E7:x").get
-    val (x, y) = PolarOps.geosForwardScalar(-84.690932, 33.846162, g)
+    val (x, y) = g.forward(-84.690932, 33.846162)
     assert(math.abs(x / g.h - (-0.024052)) < 1e-6, s"x=${x / g.h}")
     assert(math.abs(y / g.h - 0.095340) < 1e-6, s"y=${y / g.h}")
-    val (lo, la) = PolarOps.geosInverseScalar(x, y, g)
+    val (lo, la) = g.inverse(x, y)
     assert(math.abs(lo - (-84.690932)) < 1e-9)
     assert(math.abs(la - 33.846162) < 1e-9)
     // off-disk scan angle: no ellipsoid intersection -> NaN
-    val (lo2, la2) = PolarOps.geosInverseScalar(0.4 * g.h, 0.0, g)
+    val (lo2, la2) = g.inverse(0.4 * g.h, 0.0)
     assert(lo2.isNaN && la2.isNaN)
     // far-side point: not visible -> NaN
-    val (xf, yf) = PolarOps.geosForwardScalar(105.0, 0.0, g)
+    val (xf, yf) = g.forward(105.0, 0.0)
     assert(xf.isNaN || yf.isNaN)
   }
 
@@ -245,12 +245,12 @@ class CfGridMappingSpec extends AnyFunSuite {
     val pts = Seq((0.0, 0.0), (9.5, 0.0), (20.0, 40.0), (-30.0, -55.0),
       (45.0, 10.0))
     pts.foreach { case (lo, la) =>
-      val (x, y) = PolarOps.geosForwardScalar(lo, la, gy)
-      val (lo2, la2) = PolarOps.geosInverseScalar(x, y, gy)
+      val (x, y) = gy.forward(lo, la)
+      val (lo2, la2) = gy.inverse(x, y)
       assert(math.abs(lo2 - lo) < 1e-8 && math.abs(la2 - la) < 1e-8,
         s"($lo,$la) -> ($x,$y) -> ($lo2,$la2)")
-      val (xx, yx) = PolarOps.geosForwardScalar(lo, la, gx)
-      val (lox, lax) = PolarOps.geosInverseScalar(xx, yx, gx)
+      val (xx, yx) = gx.forward(lo, la)
+      val (lox, lax) = gx.inverse(xx, yx)
       assert(math.abs(lox - lo) < 1e-8 && math.abs(lax - la) < 1e-8)
       if (lo != gy.lon0Deg || la != 0.0)
         assert(math.abs(x - xx) > 1e-6 || math.abs(y - yx) > 1e-6 ||
@@ -259,26 +259,6 @@ class CfGridMappingSpec extends AnyFunSuite {
     // default string: standard height, sweep x
     assert(PolarOps.geosForCrs("GEOS:-137.0").contains(
       PolarOps.Geos(-137.0, 35786023.0, sweepX = true)))
-  }
-
-  test("geostationary Column forms agree with the scalar twins") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val g = PolarOps.geosForCrs("GEOS:-75.0:3.5786023E7:x").get
-    val pts = Seq((-84.690932, 33.846162), (-75.0, 0.0), (-100.0, 45.0),
-      (-40.0, -20.0))
-    val df = pts.toDF("lon", "lat")
-    val (xc, yc) = PolarOps.geosForward(col("lon"), col("lat"), g)
-    val (loC, laC) = { val (a, b) = (xc, yc); PolarOps.geosInverse(a, b, g) }
-    val rows = df.select(xc.as("x"), yc.as("y"), loC.as("lo"), laC.as("la"))
-      .collect()
-    pts.zip(rows).foreach { case ((lo, la), r) =>
-      val (xs, ys) = PolarOps.geosForwardScalar(lo, la, g)
-      assert(math.abs(r.getDouble(0) - xs) < 1e-6)
-      assert(math.abs(r.getDouble(1) - ys) < 1e-6)
-      assert(math.abs(r.getDouble(2) - lo) < 1e-8)
-      assert(math.abs(r.getDouble(3) - la) < 1e-8)
-    }
   }
 
   test("fromNetcdf: CF-attributed LCC granule auto-derives its grid") {

@@ -67,18 +67,40 @@ class GmTransformSpec extends AnyFunSuite {
     assert(t.gm.width >= 2 && t.gm.height >= 2)
     // UTM -> LCC (Lambert-93) via the geographic pivot: transform the
     // UTM covering grid and verify a center round-trips through the
-    // scalar forms within a metre
+    // kernels within a metre
     val t2 = GmTransform.transform(spark, t.gm, "EPSG:2154",
       xyRes = Some(5000.0))
     assert(t2.gm.crs == "EPSG:2154")
     val row = t2.coords.filter(col("i") === 2 && col("j") === 2).head()
     val z = graft.operators.UtmOps.zoneForCrs("EPSG:32632").get
-    val (lon, lat) = graft.operators.UtmOps.inverseScalar(
-      t.gm.xForI(2), t.gm.yForJ(2), z)
+    val (lon, lat) = z.inverse(t.gm.xForI(2), t.gm.yForJ(2))
     val lc = graft.operators.PolarOps.lccForCrs("EPSG:2154").get
-    val (ex, ey) = graft.operators.PolarOps.lccForwardScalar(lon, lat, lc)
+    val (ex, ey) = lc.forward(lon, lat)
     assert(math.abs(row.getDouble(2) - ex) < 1.0)
     assert(math.abs(row.getDouble(3) - ey) < 1.0)
+  }
+
+  test("no-xy_res route and the projected->projected pivot compile " +
+    "without the codegen fallback") {
+    // with spark.sql.codegen.fallback=false a generated class Janino
+    // cannot compile fails the query instead of running interpreted; the
+    // UTM -> LCC pivot used to inline its whole projection math into
+    // every consumer and fail to compile there
+    val key = "spark.sql.codegen.fallback"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      val gm = GridMapping(24, 18, 8.0, 50.0, 0.05, 0.05, crs = "CRS84")
+      val t = GmTransform.transform(spark, gm, "EPSG:32632")
+      val t2 = GmTransform.transform(spark, t.gm, "EPSG:2154",
+        xyRes = Some(5000.0))
+      assert(t2.gm.crs == "EPSG:2154" && t2.gm.width >= 2)
+      assert(t2.coords.filter(!isnan(col("x"))).count() ==
+        t.gm.width * t.gm.height)
+    } finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 
   test("edge rows that transform off-domain (NaN) don't break the " +

@@ -409,7 +409,7 @@ class PipelineOpsSpec extends AnyFunSuite {
       (s * 3 + 0L, jitter(a, s)), (s * 3 + 1L, jitter(b, s)), (s * 3 + 2L, jitter(c, s))))
     val df = rows.toDF("vec_id", "embedding")
     val base = df.filter($"vec_id" < 6)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_store").toFile
+    val dir = new java.io.File(TestDirs.tmpDir("graft_ivf_store"))
     dir.deleteOnExit()
     val path = dir.getAbsolutePath + "/idx"
     graft.operators.IvfOps.save(
@@ -537,7 +537,7 @@ class PipelineOpsSpec extends AnyFunSuite {
   test("incrementalCC never shuffles the labels table (broadcast-only plan)") {
     import spark.implicits._
     import graft.operators.ClusterOps
-    val dir = java.nio.file.Files.createTempDirectory("inc-cc").toString
+    val dir = TestDirs.tmpDir("inc-cc")
     spark.range(100000L)
       .select(col("id").as("node"), (col("id") - col("id") % 2).as("comp"))
       .write.mode("overwrite").parquet(dir)

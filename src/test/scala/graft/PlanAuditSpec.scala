@@ -561,14 +561,21 @@ class PlanAuditSpec extends AnyFunSuite {
         !p.contains("BroadcastNestedLoop"), s"$q:\n${p.take(600)}")
       assert(!p.contains("Window"), s"$q: no window")
     }
-    // the Equal Earth inverse's Newton solve is the native expression
-    val inv = graft.operators.PolarOps.eqEarthInverse(
+    // the Equal Earth transform (Newton solve included) is the one
+    // projection expression, not a UDF
+    val inv = graft.operators.SpatialOps.transformXY("EPSG:8857", "CRS84",
       org.apache.spark.sql.functions.lit(400000.0),
-      org.apache.spark.sql.functions.lit(5.9e6),
-      graft.operators.PolarOps.eqEarthForCrs("EPSG:8857").get)
-    import org.apache.spark.sql.graft.ColumnBridge
-    assert(ColumnBridge.expression(inv._2).toString.contains("eqearth_theta") ||
-      ColumnBridge.expression(inv._1).toString.contains("eqearth_theta"),
-      "inverse must route through the EqEarthTheta codegen expression")
+      org.apache.spark.sql.functions.lit(5.9e6))
+    val exprs = spark.range(1).select(inv._1, inv._2)
+      .queryExecution.analyzed.expressions
+    assert(exprs.nonEmpty && exprs.forall(_.exists(
+      _.isInstanceOf[graft.functions.ProjectXY])) &&
+      !exprs.exists(_.exists(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.ScalaUDF])),
+      s"inverse must route through the project_xy expression: $exprs")
+    val q = SparkEntry.queries("q_resample_space_eqearth")(spark, sf)
+    assert(q.queryExecution.optimizedPlan.exists(_.expressions.exists(
+      _.exists(_.isInstanceOf[graft.functions.ProjectXY]))),
+      "the query plan must run the project_xy expression")
   }
 }

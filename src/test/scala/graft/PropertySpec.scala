@@ -2,7 +2,6 @@ package graft
 
 import graft.cube.GridMapping
 import graft.functions.Colormaps
-import graft.operators.UtmOps
 import graft.operators.UtmOps.UtmZone
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,8 +18,8 @@ class PropertySpec extends AnyFunSuite {
       val lo = 6.05 + rnd.nextDouble() * 5.9  // zone 32 interior
       val la = -79.0 + rnd.nextDouble() * 158.0
       val z = UtmZone(32, north = la >= 0)
-      val (e, n) = UtmOps.forwardScalar(lo, la, z)
-      val (lo2, la2) = UtmOps.inverseScalar(e, n, z)
+      val (e, n) = z.forward(lo, la)
+      val (lo2, la2) = z.inverse(e, n)
       assert(math.abs(lo2 - lo) < 1e-7 && math.abs(la2 - la) < 1e-7,
         s"($lo,$la) -> ($e,$n) -> ($lo2,$la2)")
       assert(n > -1e7 && n < 2e7)
@@ -77,7 +76,7 @@ class PropertySpec extends AnyFunSuite {
     import graft.sources.NetcdfSource
     import NetcdfSource.NcDim
     val rnd = new scala.util.Random(19)
-    val dir = java.nio.file.Files.createTempDirectory("graft_nc_prop")
+    val dir = java.nio.file.Paths.get(TestDirs.tmpDir("graft_nc_prop"))
     (1 to 50).foreach { t =>
       val (h, w) = (1 + rnd.nextInt(12), 1 + rnd.nextInt(12))
       val data = Array.fill(h * w)(
@@ -104,7 +103,7 @@ class PropertySpec extends AnyFunSuite {
   test("GeoTIFF round-trips random rasters bit-for-bit, both compressions (50 files)") {
     import graft.sources.GeoTiffSource
     val rnd = new scala.util.Random(23)
-    val dir = java.nio.file.Files.createTempDirectory("graft_tif_prop")
+    val dir = java.nio.file.Paths.get(TestDirs.tmpDir("graft_tif_prop"))
     (1 to 50).foreach { t =>
       val (h, w) = (1 + rnd.nextInt(12), 1 + rnd.nextInt(12))
       val data = Array.fill(h * w)(
@@ -131,7 +130,7 @@ class PropertySpec extends AnyFunSuite {
     import graft.sources.GeoTiffSource
     import graft.operators.JpegCodec
     val rnd = new scala.util.Random(29)
-    val dir = java.nio.file.Files.createTempDirectory("graft_tifjpeg")
+    val dir = java.nio.file.Paths.get(TestDirs.tmpDir("graft_tifjpeg"))
     // 25x22 image, tile 16 → 2x2 tiles with both edges padded
     val (w, h) = (25, 22)
     val data = Array.fill(w * h)(rnd.nextInt(256).toDouble)
@@ -191,7 +190,7 @@ class PropertySpec extends AnyFunSuite {
   test("GeoTIFF int16+LZW+predictor2 (the published-raster combo) round-trips (20 files)") {
     import graft.sources.GeoTiffSource
     val rnd = new scala.util.Random(37)
-    val dir = java.nio.file.Files.createTempDirectory("graft_tif_lzw")
+    val dir = java.nio.file.Paths.get(TestDirs.tmpDir("graft_tif_lzw"))
     (1 to 20).foreach { t =>
       val (h, w) = (1 + rnd.nextInt(12), 1 + rnd.nextInt(12))
       val nb = 1 + rnd.nextInt(3)
@@ -222,7 +221,7 @@ class PropertySpec extends AnyFunSuite {
     val spark = GraftSession.builder("4").getOrCreate()
     import spark.implicits._
     val rnd = new scala.util.Random(43)
-    val dir = java.nio.file.Files.createTempDirectory("graft_zarr_prop")
+    val dir = java.nio.file.Paths.get(TestDirs.tmpDir("graft_zarr_prop"))
     (1 to 12).foreach { t =>
       val (ny, nx) = (1 + rnd.nextInt(9), 1 + rnd.nextInt(9))
       val (cy, cx) = (1 + rnd.nextInt(ny), 1 + rnd.nextInt(nx))
@@ -270,7 +269,7 @@ class PropertySpec extends AnyFunSuite {
     import graft.sources.GeoTiffSource
     import GeoTiffSource.Raster
     val rnd = new scala.util.Random(41)
-    val dir = java.nio.file.Files.createTempDirectory("graft_cog")
+    val dir = java.nio.file.Paths.get(TestDirs.tmpDir("graft_cog"))
     (1 to 15).foreach { t =>
       val (h, w) = (2 + rnd.nextInt(30), 2 + rnd.nextInt(30))
       val nb = 1 + rnd.nextInt(3)
@@ -305,7 +304,7 @@ class PropertySpec extends AnyFunSuite {
     import graft.sources.ShapefileSource
     import ShapefileSource.{DbfField, ShpPoint}
     val rnd = new scala.util.Random(29)
-    val dir = java.nio.file.Files.createTempDirectory("graft_shp_prop")
+    val dir = java.nio.file.Paths.get(TestDirs.tmpDir("graft_shp_prop"))
     (1 to 30).foreach { t =>
       val n = 1 + rnd.nextInt(20)
       val pts = Seq.fill(n)(ShpPoint(
@@ -357,7 +356,7 @@ class PropertySpec extends AnyFunSuite {
     // halfway between stop 0 and 1 the alpha interpolates too
     assert(((cm.argb(0.25) >>> 24) & 0xff) == 192)
     // file round-trip through the registry's get() path
-    val dir = java.nio.file.Files.createTempDirectory("cpd")
+    val dir = java.nio.file.Paths.get(TestDirs.tmpDir("cpd"))
     val p = dir.resolve("mymap.cpd")
     java.nio.file.Files.writeString(p, cpd)
     val loaded = Colormaps.get(p.toString)

@@ -131,12 +131,11 @@ class ResampleSpec extends AnyFunSuite {
   test("mercator reprojection round-trips and matches known anchors") {
     import spark.implicits._
     val df = Seq((0.0, 0.0), (90.0, 45.0), (-180.0, -85.0)).toDF("lon", "lat")
-    val out = df.select(
-      graft.operators.ReprojectOps.lonToMercX(col("lon")).as("mx"),
-      graft.operators.ReprojectOps.latToMercY(col("lat")).as("my"))
-    val back = out.select(
-      graft.operators.ReprojectOps.mercXToLon(col("mx")).as("lon"),
-      graft.operators.ReprojectOps.mercYToLat(col("my")).as("lat")).collect()
+    import graft.operators.SpatialOps.transformXY
+    val (mx, my) = transformXY("CRS84", "EPSG:3857", col("lon"), col("lat"))
+    val out = df.select(mx.as("mx"), my.as("my"))
+    val (lon, lat) = transformXY("EPSG:3857", "CRS84", col("mx"), col("my"))
+    val back = out.select(lon.as("lon"), lat.as("lat")).collect()
     val orig = df.collect()
     orig.zip(back).foreach { case (o, b) =>
       assert(math.abs(o.getDouble(0) - b.getDouble(0)) < 1e-9)
@@ -225,7 +224,7 @@ class ResampleSpec extends AnyFunSuite {
     // unsupported pair raises
     intercept[IllegalArgumentException] {
       SpatialOps.resampleInSpace(RegularSource(cells,
-        geo.copy(crs = "EPSG:32633")), merc, Seq("v")).collect()
+        geo.copy(crs = "EPSG:9999")), merc, Seq("v")).collect()
     }
   }
 
@@ -267,22 +266,22 @@ class ResampleSpec extends AnyFunSuite {
     import graft.operators.UtmOps.UtmZone
     val z32 = UtmZone(32, north = true)
     // central meridian (lon 9°) → false easting exactly; equator → N = 0
-    val (e0, n0) = UtmOps.forwardScalar(9.0, 0.0, z32)
+    val (e0, n0) = z32.forward(9.0, 0.0)
     assert(math.abs(e0 - 500000.0) < 1e-6 && math.abs(n0) < 1e-6)
     // well-known zone-edge easting at the equator: ~166,021.44 m (lon 6°)
-    val (eEdge, _) = UtmOps.forwardScalar(6.0, 0.0, z32)
+    val (eEdge, _) = z32.forward(6.0, 0.0)
     assert(math.abs(eEdge - 166021.44) < 1.0, s"edge easting $eEdge")
     // northing on the central meridian at 45° = k0 × meridian arc
     // (WGS84 arc to 45° = 4,984,944.38 m → 4,982,950.40 m)
-    val (_, n45) = UtmOps.forwardScalar(9.0, 45.0, z32)
+    val (_, n45) = z32.forward(9.0, 45.0)
     assert(math.abs(n45 - 4982950.40) < 1.0, s"45N northing $n45")
     // forward → inverse round-trips to sub-millimeter in degrees, both
     // hemispheres, off-meridian
     for ((lon, lat, z) <- Seq(
         (7.8509, 47.9941, z32), (11.9, 44.2, z32),
         (13.5, -8.8, UtmZone(33, north = false)))) {
-      val (e, n) = UtmOps.forwardScalar(lon, lat, z)
-      val (lon2, lat2) = UtmOps.inverseScalar(e, n, z)
+      val (e, n) = z.forward(lon, lat)
+      val (lon2, lat2) = z.inverse(e, n)
       assert(math.abs(lon2 - lon) < 1e-8 && math.abs(lat2 - lat) < 1e-8,
         s"round-trip ($lon,$lat) -> ($e,$n) -> ($lon2,$lat2)")
       if (z.north) assert(n > 0 && n < 10000000)
@@ -293,13 +292,13 @@ class ResampleSpec extends AnyFunSuite {
     assert(UtmOps.zoneForCrs("EPSG:3857").isEmpty)
     assert(UtmOps.zoneForLonLat(7.85, 47.99) == z32)
 
-    // column form agrees with the scalar form
+    // the project_xy expression agrees with the kernel
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val df = Seq((7.8509, 47.9941)).toDF("lon", "lat")
-    val (ec, nc) = UtmOps.forward(col("lon"), col("lat"), z32)
+    val (ec, nc) = ProjectionSpec.forwardCol(z32, col("lon"), col("lat"))
     val row = df.select(ec.as("e"), nc.as("n")).head()
-    val (eS, nS) = UtmOps.forwardScalar(7.8509, 47.9941, z32)
+    val (eS, nS) = z32.forward(7.8509, 47.9941)
     assert(math.abs(row.getDouble(0) - eS) < 1e-6)
     assert(math.abs(row.getDouble(1) - nS) < 1e-6)
 

@@ -178,7 +178,7 @@ class StoreMaintenanceSpec extends AnyFunSuite {
   test("NetCDF classic round-trip: dims, coords, row-major data, distributed decode") {
     import graft.sources.NetcdfSource
     import NetcdfSource.NcDim
-    val dir = Files.createTempDirectory("graft_nc").toFile
+    val dir = new java.io.File(TestDirs.tmpDir("graft_nc"))
     val p = new java.io.File(dir, "t.nc").getAbsolutePath
     // 2×3 grid, y coord var present, x left to index fallback
     NetcdfSource.write(p,
@@ -260,7 +260,7 @@ class StoreMaintenanceSpec extends AnyFunSuite {
   test("NetCDF record (unlimited) dimension: interleaved layout round-trips") {
     import graft.sources.NetcdfSource
     import NetcdfSource.NcDim
-    val dir = Files.createTempDirectory("graft_nc_rec").toFile
+    val dir = new java.io.File(TestDirs.tmpDir("graft_nc_rec"))
     val p = new java.io.File(dir, "rec.nc").getAbsolutePath
     // time is UNLIMITED (3 records), x fixed; time coord + v(time, x) are
     // both record variables → the per-record interleaved block layout
@@ -285,7 +285,7 @@ class StoreMaintenanceSpec extends AnyFunSuite {
 
   test("GeoTIFF multi-band: 2-band inline and 3-band external tag vectors") {
     import graft.sources.GeoTiffSource
-    val dir = Files.createTempDirectory("graft_tif_mb").toFile
+    val dir = new java.io.File(TestDirs.tmpDir("graft_tif_mb"))
     val b1 = Array(1.0, 2.0, 3.0, 4.0)
     val b2 = Array(10.0, 20.0, 30.0, 40.0)
     val b3 = Array(0.5, Double.NaN, 2.5, 3.5)
@@ -324,7 +324,7 @@ class StoreMaintenanceSpec extends AnyFunSuite {
 
   test("GeoTIFF round-trip: georeferencing, row-major strips, deflate") {
     import graft.sources.GeoTiffSource
-    val dir = Files.createTempDirectory("graft_tif").toFile
+    val dir = new java.io.File(TestDirs.tmpDir("graft_tif"))
     // 3×2 raster, origin (100, 50), 2×2 pixels, north-up
     val r = GeoTiffSource.Raster(3, 2, Array(1.0, 2.0, 3.0, 4.0, Double.NaN, 6.0),
       2.0, 2.0, 100.0, 50.0)
@@ -349,7 +349,7 @@ class StoreMaintenanceSpec extends AnyFunSuite {
 
   test("GeoTIFF GDAL_NODATA: sentinel masks to NaN on read, NaN re-packs on write") {
     import graft.sources.{GeoTiffSource, KerchunkSource}
-    val dir = Files.createTempDirectory("graft_tifnd").toFile
+    val dir = new java.io.File(TestDirs.tmpDir("graft_tifnd"))
     // float64: NaN pixels leave as -9999, sentinel pixels come back NaN
     val r = GeoTiffSource.Raster(3, 2,
       Array(1.0, Double.NaN, 3.0, 4.0, Double.NaN, 6.0), 2.0, 2.0, 100.0, 50.0)
