@@ -12,9 +12,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * materialized-aggregate form of MultiLevelDataset.
   *
   * Level k+1's plan aggregates level k's plan (progressive 2×2 blocks),
-  * but no written level is read back: each level write replays the whole
-  * lineage from the input cube, so writing Ln scans the input once more
-  * and runs n aggregations — L1 costs 2 jobs, L2 3.
+  * but no written level is read back: each level write replays its whole
+  * lineage from the input cube. The writes therefore do not depend on
+  * each other, and [[writeLevels]] runs them concurrently, one thread per
+  * level, so a pyramid costs about its slowest level rather than the sum
+  * of all levels' jobs.
   *
   * The `_levels.json` sidecar records each level's schema (every field
   * nullable, as Parquet schema inference returns it), and every level is
@@ -125,9 +127,31 @@ object LevelStore {
     * every other one (a string class label is carried, not dropped). The
     * chosen aggregators are recorded in the `_levels.json` sidecar so the
     * pyramid-rewrite rule retargets only MATCHING aggregates.
+    *
+    * The level writes run at once, each on its own thread that carries the
+    * caller's Spark local properties (job group, description, SQL
+    * execution) and active session, so every level job is attributed like
+    * a job the caller ran itself. The sidecar is written after every level
+    * has; when a level fails, the call waits for the others to end, writes
+    * no sidecar and rethrows the first level's failure.
     */
   def writeLevels(cube: Cube, root: String, maxLevel: Int,
                   methods: Seq[(String, String)] = Seq.empty): Seq[GridMapping] = {
+    val chosen = methodsFor(cube, methods)
+    val levels = levelCubes(cube, maxLevel, chosen)
+    concurrently(cube.df.sparkSession, levels.zipWithIndex.map { case (c, l) =>
+      () => c.df.write.mode("overwrite").parquet(levelPath(root, l))
+    })
+    val gms = levels.map(_.gm)
+    writeMeta(root, cube, gms,
+      levels.map(c => nullable(c.df.schema).asInstanceOf[StructType]),
+      chosen.toMap)
+    gms
+  }
+
+  /** `methods`, or the default rule of [[writeLevels]], checked. */
+  private def methodsFor(cube: Cube,
+                         methods: Seq[(String, String)]): Seq[(String, String)] = {
     val chosen: Seq[(String, String)] =
       if (methods.nonEmpty) methods
       else cube.varNames.map(v => v -> (cube.df.schema(v).dataType match {
@@ -139,8 +163,16 @@ object LevelStore {
     require(!chosen.exists(_._2 == "count"),
       "count does not compose progressively (level k+1 would count level-k " +
         "cells, not base rows) — record counts as a summed variable instead")
+    chosen
+  }
+
+  /** The cubes [[writeLevels]] writes as levels 0..maxLevel: level k+1's
+    * plan is the 2×2 block aggregation of level k's, in L0's column order. */
+  private[graft] def levelCubes(cube: Cube, maxLevel: Int,
+                                methods: Seq[(String, String)] = Seq.empty): Seq[Cube] = {
+    val chosen = methodsFor(cube, methods)
     val order = cube.df.columns
-    val levels = (1 to maxLevel).scanLeft(cube) { (cur, _) =>
+    (1 to maxLevel).scanLeft(cube) { (cur, _) =>
       val (agg, gm2) = SubsampleOps.subsample(cur, 2, chosen)
       val df2 = chosen.foldLeft(agg) { case (d, (v, m)) =>
         d.withColumnRenamed(s"${v}_$m", v)
@@ -150,14 +182,36 @@ object LevelStore {
       Cube(df2.select(order.filter(df2.columns.contains).map(col).toIndexedSeq: _*),
         gm2, cur.timeCol, cur.yCol, cur.xCol)
     }
-    levels.zipWithIndex.foreach { case (c, l) =>
-      c.df.write.mode("overwrite").parquet(levelPath(root, l))
+  }
+
+  /** Run `bodies` at once, one per-call thread each, under the caller's
+    * local properties and active session; returns once every body has
+    * ended and then rethrows the first failure (in `bodies` order), the
+    * others suppressed into it. */
+  private def concurrently(spark: SparkSession, bodies: Seq[() => Unit]): Unit = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(bodies.length,
+      (r: Runnable) => {
+        val t = new Thread(r, "graft-levels")
+        t.setDaemon(true)
+        t
+      })
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val outcomes = try {
+      bodies.map(b => org.apache.spark.sql.execution.SQLExecution
+        .withThreadLocalCaptured(session, pool)(b()))
+        .map(f => scala.util.Try(f.join()))
+    } finally pool.shutdown()
+    val failures = outcomes.collect { case scala.util.Failure(e) =>
+      e match {
+        case c: java.util.concurrent.CompletionException if c.getCause != null =>
+          c.getCause
+        case other => other
+      }
     }
-    val gms = levels.map(_.gm)
-    writeMeta(root, cube, gms,
-      levels.map(c => nullable(c.df.schema).asInstanceOf[StructType]),
-      chosen.toMap)
-    gms
+    failures.headOption.foreach { first =>
+      failures.tail.foreach(first.addSuppressed)
+      throw first
+    }
   }
 
   /** Level `level` of the pyramid at `root`, read with the schema its

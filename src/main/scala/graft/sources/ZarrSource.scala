@@ -870,15 +870,23 @@ object ZarrSource {
     }
   }
 
+  /** The chunk id [[cellsByChunkVars]] gives a row whose coordinates are
+    * not all among the lookups; the writers' chunk tasks skip it. */
+  private[sources] val UnmatchedChunk = -1L
+
   /** The shared write-side layout step ([[writeCubeVars]], [[appendCube]]
     * and [[ZarrV3Source.writeCube]]): map each dim's value to its index
     * with [[graft.functions.CoordIndex]] (binary search over the
-    * driver-held `lookups`, no Spark job; a row whose value is not among
-    * them is dropped, as the inner join this replaces dropped it), then
-    * compute (row-major chunk id over `grid`, in-chunk offset) with
-    * integer arithmetic. The per-row payload is the array of all variable
-    * values, so one shuffle by `__cid` downstream moves each input row
-    * exactly once. Each dim's lookup values must be distinct.
+    * driver-held `lookups`, no Spark job), then compute (row-major chunk
+    * id over `grid`, in-chunk offset) with integer arithmetic. A row whose
+    * value is not among the lookups gets chunk id [[UnmatchedChunk]] and
+    * is dropped by the writer's chunk task, as the inner join this
+    * replaces dropped it. The drop is not a Filter: Catalyst would push
+    * one on a grouping column below the input's aggregates, where it
+    * re-evaluates the lookup (and the expression it looks up) on every
+    * input row. The per-row payload is the array of all variable values,
+    * so one shuffle by `__cid` downstream moves each input row exactly
+    * once. Each dim's lookup values must be distinct.
     */
   private[sources] def cellsByChunkVars(df: DataFrame, dimNames: Seq[String],
                                         lookups: Seq[Seq[(Double, Int)]],
@@ -891,16 +899,31 @@ object ZarrSource {
         case ((name, lookup), k) =>
           graft.functions.CoordIndex.col(col(name), lookup).as(s"__i$k")
       } ++ varNames.map(col): _*)
-      .where(idx.map(_.isNotNull).reduce(_ && _))
+    val matched = idx.map(_.isNotNull).reduce(_ && _)
     val cid = dimNames.indices.foldLeft(lit(0L)) { (acc, k) =>
       acc * grid(k) + floor(idx(k) / chunks(k)).cast("long")
     }
     val off = dimNames.indices.foldLeft(lit(0L)) { (acc, k) =>
       acc * chunks(k) + (idx(k) % chunks(k))
     }
-    withIdx.select(cid.as("__cid"), off.cast("int").as("__off"),
+    withIdx.select(when(matched, cid).otherwise(UnmatchedChunk).as("__cid"),
+        when(matched, off.cast("int")).otherwise(0).as("__off"),
         array(varNames.map(col(_).cast("double")): _*).as("__vs"))
       .as[(Long, Int, Seq[Double])]
+  }
+
+  /** The writers' one shuffle: group [[cellsByChunkVars]]' rows by chunk
+    * id and run `write` once per chunk with its rows, skipping the
+    * unmatched rows' [[UnmatchedChunk]] group. */
+  private[sources] def perChunk[U: org.apache.spark.sql.Encoder](
+      cells: org.apache.spark.sql.Dataset[(Long, Int, Seq[Double])])(
+      write: (Long, Iterator[(Long, Int, Seq[Double])]) => Iterator[U])
+      : org.apache.spark.sql.Dataset[U] = {
+    val spark = cells.sparkSession
+    import spark.implicits._
+    cells.groupByKey(_._1).flatMapGroups { (cid, it) =>
+      if (cid == UnmatchedChunk) Iterator.empty else write(cid, it)
+    }
   }
 
   /** Decompose a row-major chunk id back into per-dim chunk coordinates. */
@@ -1029,7 +1052,7 @@ object ZarrSource {
     val za = ZarrArray(shape, chunks, "<f8", Double.NaN, codec,
       dims.map(_._1), sep)
     val grids = Seq.fill(nVars)(ChunkStats.blockGrid(za, v3 = false))
-    val written = cells.groupByKey(_._1).flatMapGroups { (cidV, it) =>
+    val written = perChunk(cells) { (cidV, it) =>
       val data = Array.fill(nVars)(Array.fill(chunkElems)(Double.NaN))
       it.foreach { case (_, o, vs) =>
         var v = 0
@@ -1119,7 +1142,7 @@ object ZarrSource {
     val foldStats = carried.isDefined
     val zaGrown = za.copy(shape = shape) // the fold's in-bounds cells
     val grids = Seq(ChunkStats.blockGrid(za, v3 = false))
-    val written = cells.groupByKey(_._1).flatMapGroups { (cidV, it) =>
+    val written = perChunk(cells) { (cidV, it) =>
       val keyIdx = chunkKeyOf(cidV, grid)
       val path = s"$arrayDir/${keyIdx.mkString(sep)}"
       // boundary chunk: merge over what is already on disk (only possible

@@ -556,7 +556,7 @@ object ZarrV3Source {
     val taskBs = ByteStore.current // captured VALUE — runs inside chunk tasks
     val computeStats = stats
     val grids = Seq(ChunkStats.blockGrid(za, v3 = true))
-    val written = cells.groupByKey(_._1).flatMapGroups { (cidV, it) =>
+    val written = ZarrSource.perChunk(cells) { (cidV, it) =>
       val data = Array.fill(chunkElems)(Double.NaN)
       it.foreach { case (_, o, vs) => data(o) = vs.head }
       val key = ZarrSource.chunkKeyOf(cidV, grid)

@@ -658,6 +658,8 @@ final class ZarrScanBuilder(meta: ZarrGroupMeta,
   // variable, distinct, a non-consumed filter, two group keys on the SAME
   // dim (correlated keys break per-dim independence — the partial fold
   // handles those), or a group cardinality beyond `MaxGroups` declines.
+  // An aggregate over data variables is complete too when the ANALYZE
+  // sidecar answers every chunk it would fold ([[supportCompletePushDown]]).
   private val MaxGroups = 65536L
 
   private def groupDimsOf(agg: Aggregation): Option[Seq[String]] = {
@@ -700,7 +702,14 @@ final class ZarrScanBuilder(meta: ZarrGroupMeta,
         case _ => false
       }
 
-  override def supportCompletePushDown(agg: Aggregation): Boolean = supported(agg)
+  /** Complete when the coordinates answer the aggregate (above), or when
+    * the ANALYZE sidecar answers every surviving chunk of the partial
+    * fold below: the [[ZarrVarAggScan]] then merges its per-chunk rows
+    * into final rows, so Spark plans no aggregate and no exchange above
+    * it. Avg declines here; Spark then asks again with it split into sum
+    * and count. */
+  override def supportCompletePushDown(agg: Aggregation): Boolean =
+    supported(agg) || (partialSupported(agg) && varAggScan(agg).statsComplete)
 
   // ---- PARTIAL pushdown over data variables: min/max/sum/count grouped
   // by dims OR block indices `floor((dim ± c) / s)` folds per chunk
@@ -735,10 +744,11 @@ final class ZarrScanBuilder(meta: ZarrGroupMeta,
         case _ => false
       }
 
-  private var partial: Option[(Aggregation, Seq[ZarrGroupKey], StructType)] = None
+  private var partial: Option[ZarrVarAggScan] = None
 
-  override def pushAggregation(agg: Aggregation): Boolean = {
-    def aggFields = agg.aggregateExpressions.zipWithIndex.map {
+  /** The pushed aggregate's output schema: group keys, then aggregates. */
+  private def aggSchema(agg: Aggregation, keys: Seq[ZarrGroupKey]): StructType = {
+    val aggFields = agg.aggregateExpressions.zipWithIndex.map {
       case (_: CountStar, i) => StructField(s"agg_$i", LongType, nullable = false)
       case (_: Count, i) => StructField(s"agg_$i", LongType, nullable = false)
       case (_, i) => StructField(s"agg_$i", DoubleType, nullable = true)
@@ -746,7 +756,7 @@ final class ZarrScanBuilder(meta: ZarrGroupMeta,
     // group output types must match Spark's own expression types: a
     // plain dim/var is the double cell value, a block/bucket index is
     // Floor's LONG, a calendar field is Extract's INT
-    def groupFields(keys: Seq[ZarrGroupKey]) = keys.zipWithIndex.map {
+    val groupFields = keys.zipWithIndex.map {
       case (k, i) => k.kind match {
         case ZarrGroupKey.Id => StructField(k.dim, DoubleType, nullable = false)
         case ZarrGroupKey.Extract =>
@@ -754,22 +764,35 @@ final class ZarrScanBuilder(meta: ZarrGroupMeta,
         case _ => StructField(s"group_$i", LongType, nullable = false)
       }
     }
+    StructType(groupFields ++ aggFields)
+  }
+
+  // the partial-fold scan of the aggregate last asked about: Spark asks
+  // supportCompletePushDown before pushAggregation with the same
+  // Aggregation, and the scan's sidecar planning is done once for both
+  private var lastVarAgg: Option[ZarrVarAggScan] = None
+  private def varAggScan(agg: Aggregation): ZarrVarAggScan =
+    lastVarAgg.filter(_.agg eq agg).getOrElse {
+      val keys = groupKeysOf(agg).get
+      val scan = ZarrVarAggScan(meta, consumed, agg, aggSchema(agg, keys), keys)
+      lastVarAgg = Some(scan)
+      scan
+    }
+
+  override def pushAggregation(agg: Aggregation): Boolean =
     if (supported(agg)) {
       val keys = groupKeysOf(agg).get
-      aggregated = Some((agg, keys, StructType(groupFields(keys) ++ aggFields)))
+      aggregated = Some((agg, keys, aggSchema(agg, keys)))
       true
     } else if (partialSupported(agg)) {
-      val keys = groupKeysOf(agg).get
-      partial = Some((agg, keys, StructType(groupFields(keys) ++ aggFields)))
+      partial = Some(varAggScan(agg))
       true
     } else false
-  }
 
   override def build(): Scan = (aggregated, partial) match {
     case (Some((agg, keys, schema)), _) =>
       ZarrAggScan(meta, consumed, agg, schema, keys)
-    case (None, Some((agg, keys, schema))) =>
-      ZarrVarAggScan(meta, consumed, agg, schema, keys)
+    case (None, Some(scan)) => scan
     case _ =>
       topNFold match {
         // the fold needs every sort column in the scan output (Spark keeps

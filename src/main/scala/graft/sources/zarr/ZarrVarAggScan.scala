@@ -53,6 +53,15 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StructType}
   * bit-for-bit as the Floor(Divide(...))/Cast chain Spark would run, NaN
   * and ±Inf included.
   *
+  * When the ANALYZE sidecar ([[ChunkStats]], inline form) answers EVERY
+  * surviving chunk, nothing is left to read and the scan finishes the
+  * job itself: it merges the per-chunk rows by group key on the driver
+  * ([[finalRows]], Spark's merge semantics) and returns the final rows in
+  * its one stat-row partition, and the builder accepts the pushdown as
+  * COMPLETE — Spark plans no partial or final aggregate and no exchange,
+  * so the query is one job. A chunk the sidecar cannot answer keeps the
+  * partial shape above.
+  *
   * The reference analog is dask's blockwise tree-reduction over chunked
   * arrays (`dataset.mean()` folds each chunk before any inter-worker
   * communication); this is that behavior surfaced through Catalyst so ANY
@@ -98,23 +107,22 @@ final case class ZarrVarAggScan(meta: ZarrGroupMeta, consumed: Array[Filter],
     meta.za.dims ++ vars.filter(meta.dataVars.contains).distinct
   }
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val required = innerRequired
-    // index group keys and aggregated columns against the INNER SCHEMA's
-    // field order — the order the chunk cursor actually emits (schemaFor
-    // keeps dims first, then dataVars in their SORTED resolution order),
-    // NOT the aggregate-appearance order of innerCols: binding against
-    // appearance order silently swaps variables when a query aggregates
-    // 2+ data vars out of alphabetical order (e.g. agg(sum("w"), sum("v")))
-    val names = required.fieldNames.toSeq
-    val bound = groupKeys.map(k => k.copy(colIdx = names.indexOf(k.dim))).toArray
+  /** Index group keys and aggregated columns against the INNER SCHEMA's
+    * field order — the order the chunk cursor actually emits (schemaFor
+    * keeps dims first, then dataVars in their SORTED resolution order),
+    * NOT the aggregate-appearance order of innerCols: binding against
+    * appearance order silently swaps variables when a query aggregates
+    * 2+ data vars out of alphabetical order (e.g. agg(sum("w"), sum("v"))). */
+  private lazy val names: Seq[String] = innerRequired.fieldNames.toSeq
+
+  private lazy val specs: Seq[ZarrAggSpec] = {
     def spec(op: Int, column: VExpr): ZarrAggSpec = {
       val c = ZarrVarAggScan.aggColumn(meta, column).get
       val colIdx = names.indexOf(c.name)
       ZarrAggSpec(op, colIdx, c.guard.isDefined, c.squared,
         c.guard.map(names.indexOf).getOrElse(colIdx), c.abs)
     }
-    val specs = agg.aggregateExpressions.toSeq.map {
+    agg.aggregateExpressions.toSeq.map {
       case _: CountStar => ZarrAggSpec(ZarrAggSpec.CountStar, -1)
       case c: Count => spec(ZarrAggSpec.Count, c.column)
       case m: Min => spec(ZarrAggSpec.Min, m.column)
@@ -123,14 +131,19 @@ final case class ZarrVarAggScan(meta: ZarrGroupMeta, consumed: Array[Filter],
       case other =>
         throw new IllegalStateException(s"unexpected pushed aggregate $other")
     }
-    val shared = ZarrScan.sharedState(meta, required, consumed, None)
+  }
+
+  /** The chunk plan: the partial rows the ANALYZE sidecar answers and the
+    * chunks that must be read. A chunk whose cells are ALL selected and
+    * whose group keys are constant across it answers its partial row
+    * straight from the per-chunk moments — zero chunk IO. Chunks the
+    * sidecar cannot answer exactly fold in the reader. Planned once per
+    * scan: the builder consults it to accept a complete pushdown. */
+  private lazy val planned: (Seq[Seq[Any]], Seq[ZarrInputPartition]) = {
+    val shared = ZarrScan.sharedState(meta, innerRequired, consumed, None)
     val chunkParts =
-      ZarrScan.planChunkParts(meta, consumed, Array.empty, required, None)
-    // ANALYZE sidecar fast path: a chunk whose cells are ALL selected and
-    // whose group keys are constant across it answers its partial row
-    // straight from the per-chunk moments — zero chunk IO. Chunks the
-    // sidecar cannot answer exactly fold in the reader as before.
-    val (statRows, readParts) = meta.stats match {
+      ZarrScan.planChunkParts(meta, consumed, Array.empty, innerRequired, None)
+    meta.stats match {
       case Some(st) =>
         // bulk-resolve the needed (variable, chunk) moments once — with
         // the parquet side table that is one broadcast join over exactly
@@ -152,14 +165,74 @@ final case class ZarrVarAggScan(meta: ZarrGroupMeta, consumed: Array[Filter],
         (rows.result(), reads.result())
       case None => (Seq.empty[Seq[Any]], chunkParts)
     }
+  }
+
+  /** Whether the sidecar answers every surviving chunk: the scan then
+    * returns FINAL rows ([[finalRows]]), so the builder accepts a complete
+    * pushdown. Only an inline sidecar qualifies — resolving the parquet
+    * side table is a Spark job, which planning must not run. */
+  private[zarr] def statsComplete: Boolean =
+    meta.stats.exists(_.isInstanceOf[ChunkStats.EagerStats]) &&
+      planned._2.isEmpty
+
+  override def planInputPartitions(): Array[InputPartition] = {
+    val (statRows, readParts) = planned
+    if (statsComplete)
+      return Array(ZarrStatRowsPartition(finalRows(statRows)))
+    val bound = groupKeys.map(k => k.copy(colIdx = names.indexOf(k.dim))).toArray
     val readPartitions =
-      ZarrScan.pack(readParts, meta.za, required.fields.length).map { p =>
+      ZarrScan.pack(readParts, meta.za, innerRequired.fields.length).map { p =>
         ZarrVarAggPartition(p.asInstanceOf[ZarrPackedPartition], bound,
           specs): InputPartition
       }
     if (statRows.isEmpty) readPartitions
     else readPartitions ++ statRows.grouped(8192)
       .map(rs => ZarrStatRowsPartition(rs): InputPartition)
+  }
+
+  /** Merge per-chunk partial rows into the aggregate's final rows, by
+    * group key in chunk order, with Spark's own merge semantics: counts
+    * add; a sum adds its non-null partials onto 0.0 (null when none
+    * was), NaN propagating; min/max keep the least/greatest non-null
+    * partial under Spark's double ordering (NaN greatest, -0.0 equal to
+    * 0.0, the earlier partial kept on a tie). Keys are already normalized
+    * per chunk (-0.0 → 0.0, canonical NaN) and compare by their bits. A
+    * global aggregate always yields one row, even over no chunk. */
+  private def finalRows(partials: Seq[Seq[Any]]): Seq[Seq[Any]] = {
+    val nk = groupKeys.length
+    def keyBits(r: Seq[Any]): Seq[Long] = r.take(nk).map {
+      case d: Double => java.lang.Double.doubleToLongBits(d)
+      case n: Long => n
+      case i: Int => i.toLong
+      case other => throw new IllegalStateException(s"group key $other")
+    }
+    def cmp(a: Any, b: Any): Int =
+      org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(
+        a.asInstanceOf[Double], b.asInstanceOf[Double])
+    def merge(acc: Array[Any], r: Seq[Any]): Unit =
+      specs.indices.foreach { i =>
+        val (a, b) = (acc(nk + i), r(nk + i))
+        acc(nk + i) = specs(i).op match {
+          case ZarrAggSpec.CountStar | ZarrAggSpec.Count =>
+            a.asInstanceOf[Long] + b.asInstanceOf[Long]
+          case _ if b == null => a
+          case ZarrAggSpec.Sum =>
+            (if (a == null) 0.0 else a.asInstanceOf[Double]) + b.asInstanceOf[Double]
+          case ZarrAggSpec.Min => if (a == null || cmp(b, a) < 0) b else a
+          case ZarrAggSpec.Max => if (a == null || cmp(b, a) > 0) b else a
+        }
+      }
+    def empty(r: Seq[Any]): Array[Any] =
+      (r.take(nk) ++ specs.map(s =>
+        if (s.op == ZarrAggSpec.CountStar || s.op == ZarrAggSpec.Count) 0L
+        else null)).toArray
+    val groups = new java.util.LinkedHashMap[Seq[Long], Array[Any]]()
+    partials.foreach { r =>
+      merge(groups.computeIfAbsent(keyBits(r), _ => empty(r)), r)
+    }
+    import scala.jdk.CollectionConverters._
+    if (nk == 0 && groups.isEmpty) Seq(empty(Nil).toSeq)
+    else groups.values.asScala.map(_.toSeq).toSeq
   }
 
   /** This chunk's partial-aggregate row from the sidecar alone, or None
@@ -732,13 +805,13 @@ final case class ZarrVarAggPartition(base: ZarrPackedPartition,
                                      specs: Seq[ZarrAggSpec])
     extends InputPartition
 
-/** Partial rows answered from the ANALYZE sidecar at planning time —
-  * zero chunk IO; Spark's final aggregation merges them with the read
-  * partitions' folds. Emitted in bounded groups (8192 rows) so a
-  * fully-sidecar-answered archive scan parallelizes across tasks and no
-  * single task ships O(archive) rows; the driver holds the rows only
+/** Rows answered from the ANALYZE sidecar at planning time — zero chunk
+  * IO. Partial rows, which Spark's final aggregation merges with the
+  * read partitions' folds, go out in bounded groups (8192 rows) so no
+  * single task ships O(archive) rows; the driver holds them only
   * transiently, the same order of memory as the candidate chunk-key
-  * vector planning already materializes. */
+  * vector planning already materializes. A scan the sidecar answers
+  * completely emits its merged final rows as one such partition. */
 final case class ZarrStatRowsPartition(rows: Seq[Seq[Any]])
     extends InputPartition
 

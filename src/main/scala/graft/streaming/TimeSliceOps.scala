@@ -122,6 +122,16 @@ object TimeSliceOps {
     * is exactly arrival order; the distributed chunk-assembly shuffle
     * happens inside the batch, per slice.
     *
+    * The first batch writes the group with its chunk-statistics sidecar
+    * ([[graft.sources.zarr.ChunkStats]]), and every append folds the
+    * chunks it writes into it, so the group stays analyzed: a read-back
+    * aggregate over whole appended slices is answered from the sidecar,
+    * one job and no chunk read. Once the group outgrows the inline
+    * sidecar budget (`ChunkStats.MaxInlineStatRows` rows), the append that
+    * crosses it writes the parquet side table, the next append finds no
+    * inline sidecar to fold into and drops it, and from then on the group
+    * is unanalyzed and read-backs fold the chunks they read.
+    *
     * A micro-batch runs three Spark jobs: the labels job (a distinct per
     * partition, no shuffle; a batch without labels is skipped), then the
     * write's chunk-shuffle map stage and its chunk-write stage (the
@@ -151,7 +161,7 @@ object TimeSliceOps {
         if (labels.nonEmpty) {
           if (!graft.sources.ByteStore.current.exists(s"$groupDir/.zgroup"))
             graft.sources.ZarrSource.writeCube(batch, groupDir, varName,
-              (tCol -> labels) +: spatialDims, chunks, codec)
+              (tCol -> labels) +: spatialDims, chunks, codec, stats = true)
           else
             graft.sources.ZarrSource.appendCube(batch, groupDir, varName, labels)
         }

@@ -83,6 +83,51 @@ class CoordIndexSpec extends AnyFunSuite {
       .forall { case (a, b) => a == b || (a.isNaN && b.isNaN) }, got)
   }
 
+  test("writeCubeVars looks coordinates up above the input's aggregates, not per input row") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // a daily input averaged to 2-day, 2×2 cells: the generator's shape,
+    // whose grouping keys are the written cube's dims
+    val input = spark.sparkContext.parallelize(
+      for (t <- 0 until 4; y <- 0 until 4; x <- 0 until 4)
+        yield (t.toDouble, y + 0.5, x + 0.5, (t * 100 + y * 10 + x).toDouble), 2)
+      .toDF("t", "y", "x", "v")
+    val cube = input.groupBy((floor(col("t") / 2) * 2.0).as("t"),
+        (floor(col("y") / 2) * 2.0 + 1.0).as("y"), (floor(col("x") / 2) * 2.0 + 1.0).as("x"))
+      .agg(avg(col("v")).as("v"))
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        plans.add(qe); ()
+      }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val g = TestDirs.tmpDir("coordplan")
+    spark.listenerManager.register(listener)
+    try {
+      ZarrSource.writeCubeVars(cube, g, Seq("v"),
+        Seq("t" -> Array(0.0, 2.0), "y" -> Array(1.0, 3.0), "x" -> Array(1.0, 3.0)),
+        Seq(1, 2, 2))
+      org.apache.spark.graftbridge.BusDrain.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    object Aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import scala.jdk.CollectionConverters._
+    val aggs = plans.asScala.toSeq.flatMap(qe =>
+      Aqe.collect(qe.executedPlan) { case a: HashAggregateExec => a })
+    assert(aggs.nonEmpty)
+    for (a <- aggs; below <- Aqe.collect(a.child) { case n => n }) {
+      assert(!below.expressions.exists(_.toString.contains("coord_index")),
+        s"coord_index below an aggregate: $below")
+    }
+    val got = ZarrSource.readAll(s"$g/v", ZarrSource.openArray(s"$g/v")).toSeq
+    val want = for (t <- Seq(0, 2); y <- Seq(0, 2); x <- Seq(0, 2)) yield
+      (for (dt <- 0 to 1; dy <- 0 to 1; dx <- 0 to 1)
+        yield ((t + dt) * 100 + (y + dy) * 10 + (x + dx)).toDouble).sum / 8
+    assert(got == want)
+  }
+
   test("writeCubeVars runs two jobs: the chunk shuffle's map stage and the writes") {
     import spark.implicits._
     val y = (0 until 6).map(_ + 0.5).toArray

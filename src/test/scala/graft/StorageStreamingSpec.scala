@@ -1,7 +1,8 @@
 package graft
 
 import graft.cube.{Cube, GridMapping}
-import graft.sources.{ByteStore, CubeWriter, ZarrSource}
+import graft.sources.{ByteStore, CubeWriter, LevelStore, ZarrSource}
+import graft.sources.zarr.ChunkStats
 import graft.streaming.TimeSliceOps
 import org.apache.spark.graftbridge.BusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -208,6 +209,94 @@ class StorageStreamingSpec extends AnyFunSuite {
     assert(zarrContents(a) == ((Seq(0.0, 1.0), zvals(0.0) ++ zvals(1.0))))
     assert(zarrContents(b) == ((Seq(10.0, 11.0), zvals(10.0) ++ zvals(11.0))))
     assert(ZarrSource.listArrays(a).sorted == Seq("t", "v", "x", "y"))
+  }
+
+  /** `group` streamed from `src`: created with slice 0, then three
+    * appends of one slice each. */
+  private def streamFourSlices(src: String, group: String): Unit =
+    (0 to 3).foreach { t =>
+      putSlice(src, t.toDouble)
+      awaitZarr(startZarr(src, group))
+    }
+
+  private def statsDoc(group: String) =
+    new com.fasterxml.jackson.databind.ObjectMapper().readTree(
+      new java.io.File(s"$group/${ChunkStats.FileName}"))
+
+  test("streamZarrAppend: the group stays analyzed across appends, as a fresh ANALYZE") {
+    val group = s"${tmpDir("zgrp")}/cube.zarr"
+    streamFourSlices(tmpDir("zsrc"), group)
+    val za = ZarrSource.openArray(s"$group/v")
+    assert(za.shape == Seq(4, 3, 4))
+    assert(ChunkStats.load(ByteStore.current, group, za, group)
+      .exists(_.isInstanceOf[ChunkStats.EagerStats]))
+    val streamed = statsDoc(group)
+    ChunkStats.analyze(spark, group)
+    assert(statsDoc(group) == streamed)
+  }
+
+  test("streamZarrAppend: aggregates over whole appended slices are one job from the sidecar") {
+    val group = s"${tmpDir("zgrp")}/cube.zarr"
+    streamFourSlices(tmpDir("zsrc"), group)
+    val whole = Seq(1.0, 2.0, 3.0)
+    def aggs(df: DataFrame) = df.agg(count(lit(1)).as("n"), count(col("v")).as("nv"),
+      sum(col("v")).as("s"), min(col("v")).as("lo"), max(col("v")).as("hi"))
+    def global(df: DataFrame) = aggs(df.filter(col("t").isin(whole: _*)))
+    def byTime(df: DataFrame) = df.filter(col("t") >= 1.0).groupBy(col("t"))
+      .agg(count(lit(1)).as("n"), count(col("v")).as("nv"), sum(col("v")).as("s"),
+        min(col("v")).as("lo"), max(col("v")).as("hi"))
+    def halfSelected(df: DataFrame) = aggs(df.filter(col("y") >= 1.0))
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    // row-path truth: the RDD reader, which never consults the sidecar
+    val cells = ZarrSource.readCubeVars(spark, group, Seq("v"))
+    val truth = Seq(global _, byTime _, halfSelected _).map(q => rows(q(cells)))
+    def zarr = spark.read.format("zarr").load(group)
+    // a chunk the filter half-selects is read: the partial shape stays
+    val (half, halfJobs) = JobCount.of(spark)(rows(halfSelected(zarr)))
+    assert(half == truth(2))
+    assert(halfJobs == 2, s"$halfJobs jobs")
+    val halfPlan = halfSelected(zarr).queryExecution.executedPlan.toString
+    assert(halfPlan.contains("HashAggregate"), halfPlan)
+    // every v chunk corrupted: the whole-slice aggregates never read one
+    new java.io.File(s"$group/v").listFiles().filter(_.getName.head.isDigit)
+      .foreach(f => java.nio.file.Files.write(f.toPath, Array[Byte](9, 9, 9)))
+    for ((q, want) <- Seq(global _, byTime _).zip(truth)) {
+      val (got, jobs) = JobCount.of(spark)(rows(q(zarr)))
+      assert(got == want)
+      assert(jobs == 1, s"$jobs jobs: $got")
+      val plan = q(zarr).queryExecution.executedPlan.toString
+      assert(plan.contains("ZarrVarAggScan") && !plan.contains("Exchange") &&
+        !plan.contains("HashAggregate"), plan)
+    }
+  }
+
+  test("two writeLevels and one streamZarrAppend at once on one session match the serial run") {
+    import spark.implicits._
+    val lgm = GridMapping(8, 8, 0.0, 0.0, 1.0, 1.0)
+    def dense(v0: Double) = Cube((for (j <- 0 until 8; i <- 0 until 8)
+      yield (ts("2024-01-01 00:00:00"), lgm.yForJ(j), lgm.xForI(i), v0 + j * 8 + i))
+      .toDF("time", "y", "x", "v"), lgm)
+    def run(a: String, b: String, src: String, group: String): Seq[() => Unit] = Seq(
+      () => { LevelStore.writeLevels(dense(0.0), a, 2); () },
+      () => { LevelStore.writeLevels(dense(1000.0), b, 2); () },
+      () => streamFourSlices(src, group))
+    def dirs() = (tmpDir("lvlA"), tmpDir("lvlB"), tmpDir("zsrc"),
+      s"${tmpDir("zgrp")}/cube.zarr")
+    val (a1, b1, s1, g1) = dirs()
+    run(a1, b1, s1, g1).foreach(_())
+    val (a2, b2, s2, g2) = dirs()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
+    try {
+      run(a2, b2, s2, g2).map(body => pool.submit(new Runnable { def run(): Unit = body() }))
+        .foreach(_.get())
+    } finally pool.shutdown()
+    for ((serial, concurrent) <- Seq(a1 -> a2, b1 -> b2); l <- 0 to 2) {
+      def rows(r: String) = LevelStore.openLevel(spark, r, l).collect().map(_.toString).sorted.toSeq
+      assert(rows(concurrent) == rows(serial), s"$concurrent L$l")
+    }
+    assert(LevelStore.readMeta(a2) == LevelStore.readMeta(a1))
+    assert(zarrContents(g2) == zarrContents(g1))
+    assert(statsDoc(g2).path("vars") == statsDoc(g1).path("vars"))
   }
 
   test("flatMapGroupsWithState: state persists across batches, last is by event time") {

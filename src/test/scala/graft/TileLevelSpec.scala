@@ -3,7 +3,9 @@ package graft
 import graft.cube.{Cube, GridMapping, TilingScheme}
 import graft.operators.TileOps
 import graft.sources.LevelStore
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.graftbridge.BusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Timestamp
@@ -78,6 +80,107 @@ class TileLevelSpec extends AnyFunSuite {
         assert(df.count() == 64 >> (2 * l))
       }
     }
+  }
+
+  /** 8×8 cells at two times: v the row-major index plus a time offset,
+    * w its reverse, and a string label. */
+  private def twoStepCube(): Cube = {
+    import spark.implicits._
+    val gm = GridMapping(8, 8, 0.0, 0.0, 1.0, 1.0)
+    val t1 = Timestamp.valueOf("2024-01-02 00:00:00")
+    val rows = for (t <- Seq(t0, t1); j <- 0 until 8; i <- 0 until 8)
+      yield (t, gm.yForJ(j), gm.xForI(i), (j * 8 + i) + (if (t == t0) 0.0 else 0.25),
+        (64 - j * 8 - i).toDouble / 3, s"c${(i + j) % 3}")
+    Cube(rows.toDF("time", "y", "x", "v", "w", "kind"), gm)
+  }
+
+  private def partSizes(dir: String): Seq[Long] =
+    new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-"))
+      .map(_.length).sorted.toSeq
+
+  test("LevelStore: levels written concurrently equal a sequential write, rows and bytes") {
+    val cube = twoStepCube()
+    val root = TestDirs.tmpDir("levels_conc")
+    LevelStore.writeLevels(cube, root, 2)
+    val serial = TestDirs.tmpDir("levels_serial")
+    LevelStore.levelCubes(cube, 2).zipWithIndex.foreach { case (c, l) =>
+      c.df.write.mode("overwrite").parquet(s"$serial/L$l")
+    }
+    for (l <- 0 to 2) {
+      def rows(r: String) =
+        spark.read.parquet(s"$r/L$l").collect().map(_.toString).sorted.toSeq
+      assert(rows(root) == rows(serial), s"L$l rows")
+      assert(rows(root).length == 128 >> (2 * l))
+      assert(partSizes(s"$root/L$l") == partSizes(s"$serial/L$l"), s"L$l part sizes")
+    }
+    assert(LevelStore.readMeta(root).get.levels.length == 3)
+  }
+
+  test("LevelStore: a failing level rethrows after every level job ended, with no sidecar") {
+    import spark.implicits._
+    val gm = GridMapping(8, 8, 0.0, 0.0, 1.0, 1.0)
+    // every 2×2 block's sum of n overflows a long (ANSI): L1 and L2 fail,
+    // L0 (the cells as they are) writes
+    val rows = for (j <- 0 until 8; i <- 0 until 8)
+      yield (t0, gm.yForJ(j), gm.xForI(i), Long.MaxValue / 3)
+    val cube = Cube(rows.toDF("time", "y", "x", "n"), gm)
+    val root = TestDirs.tmpDir("levels_fail")
+    val e = intercept[Exception](
+      LevelStore.writeLevels(cube, root, 2, Seq("n" -> "sum")))
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+    assert(chain.exists(c => String.valueOf(c.getMessage).toLowerCase.contains("overflow")), e)
+    BusDrain.drain(spark.sparkContext)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty,
+      "a level job still runs after writeLevels returned")
+    assert(new java.io.File(s"$root/L0/_SUCCESS").exists, "L0 did not finish")
+    assert(!new java.io.File(s"$root/${LevelStore.MetaFileName}").exists)
+  }
+
+  test("LevelStore: every level job carries the caller's job group, from foreachBatch too") {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        seen.add((String.valueOf(j.properties.getProperty("spark.jobGroup.id")),
+          String.valueOf(j.properties.getProperty("spark.job.description"))))
+        ()
+      }
+    }
+    import scala.jdk.CollectionConverters._
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("levels-caller", "pyramid of the test cube", interruptOnCancel = false)
+      try LevelStore.writeLevels(twoStepCube(), TestDirs.tmpDir("levels_group"), 2)
+      finally sc.clearJobGroup()
+      BusDrain.drain(sc)
+      val direct = seen.asScala.toSeq
+      // L0 one job, L1 and L2 an aggregation's map stage plus the write
+      assert(direct.length >= 3, direct)
+      assert(direct.forall(_ == (("levels-caller", "pyramid of the test cube"))), direct)
+
+      val src = TestDirs.tmpDir("levels_stream_src")
+      twoStepCube().df.coalesce(1).write.mode("overwrite").parquet(src)
+      BusDrain.drain(sc)
+      seen.clear()
+      val root = TestDirs.tmpDir("levels_stream")
+      val q = spark.readStream.schema(twoStepCube().df.schema).parquet(src)
+        .writeStream
+        .foreachBatch { (b: DataFrame, _: Long) =>
+          LevelStore.writeLevels(Cube(b, GridMapping(8, 8, 0.0, 0.0, 1.0, 1.0)), root, 2)
+          ()
+        }
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .option("checkpointLocation", TestDirs.tmpDir("levels_stream_ckpt"))
+        .start()
+      q.awaitTermination()
+      q.exception.foreach(e => throw e)
+      BusDrain.drain(sc)
+      val inBatch = seen.asScala.toSeq
+      assert(inBatch.length >= 3, inBatch)
+      assert(inBatch.forall(_._1 == q.runId.toString), inBatch)
+      assert(LevelStore.readMeta(root).get.levels.length == 3)
+      assert(LevelStore.openLevel(spark, root, 2).count() == 8)
+    } finally sc.removeSparkListener(listener)
   }
 
   test("level-for-resolution advances only when BOTH axes exceed the ask") {

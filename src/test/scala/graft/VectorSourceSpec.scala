@@ -22,7 +22,7 @@ class VectorSourceSpec extends AnyFunSuite {
          "geometry": {"type": "Point", "coordinates": [5, 5]},
          "properties": {"name": "pt", "cls": 2, "score": 1.5}}
       ]}"""
-    val f = Files.createTempFile(TestDirs.base, "features", ".geojson")
+    val f = Paths.get(TestDirs.tmpDir("features"), "features.geojson")
     Files.writeString(f, json)
     val df = GeoJsonSource.readFeatures(spark, f.toString)
     assert(df.columns.toSeq == Seq("geometry", "name", "cls", "score"))
