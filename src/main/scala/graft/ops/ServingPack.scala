@@ -814,7 +814,8 @@ object ServingPack extends QueryPack {
         if (!new java.io.File(refsPath).exists())
           java.nio.file.Files.writeString(java.nio.file.Paths.get(refsPath),
             KerchunkSource.scanHdf5(s"$base/$day.nc"))
-        KerchunkSource.readCube(s, refsPath, "v").withColumn("day", lit(day))
+        s.read.format("kerchunk").option("vars", "v").load(refsPath)
+          .withColumn("day", lit(day))
       }.reduce(_ unionByName _)
         .filter(!isnan(col("v")))
         .groupBy("day")
@@ -832,7 +833,7 @@ object ServingPack extends QueryPack {
     // checksum so a transposed / mis-strided / mis-chunked decode cannot
     // pass. 1×50×90 chunks → 16 chunk files across 2 days.
     "q_zarr" -> ((s, d) => {
-      ZarrSource.readCube(s, zarrFixture(s, d), "v")
+      s.read.format("zarr").option("vars", "v").load(zarrFixture(s, d))
         .filter(!isnan(col("v")))
         .groupBy(col("t").cast("long").as("day_idx"))
         .agg(count(lit(1)).as("n_cells"),
@@ -868,9 +869,9 @@ object ServingPack extends QueryPack {
           cubeDims, chunks = Seq(1, 50, 90))
       }
       val group = s"$base/cube.zarr"
-      // readCubeVars: both variables decoded by the SAME chunk task — one
-      // pass over the chunk grid, no per-variable re-scan, no join
-      ZarrSource.readCubeVars(s, group, Seq("v", "w"))
+      // one scan of both variables: a chunk task decodes v's and w's
+      // objects for its key — one pass over the chunk grid, no join
+      s.read.format("zarr").option("vars", "v,w").load(group)
         .filter(!isnan(col("v")) && !isnan(col("w")))
         .groupBy(col("t").cast("long").as("day_idx"))
         .agg(count(lit(1)).as("n_cells"),
@@ -1679,7 +1680,7 @@ object ServingPack extends QueryPack {
       val group = s"s3g://zarrcube/$sfName/cube.zarr"
       ZarrSource.writeCube(dailyCubeDf(s, d, days), group, "v",
         cubeDims, chunks = Seq(1, 50, 90))
-      ZarrSource.readCube(s, group, "v")
+      s.read.format("zarr").option("vars", "v").load(group)
         .filter(!isnan(col("v")))
         .groupBy(col("t").cast("long").as("day_idx"))
         .agg(count(lit(1)).as("n_cells"),
@@ -1700,7 +1701,7 @@ object ServingPack extends QueryPack {
       val emu = graft.sources.s3.S3Emulator.shared
       emu.mountDir(s"zarrhttp-$sfName", base)
       val url = s"${emu.endpoint}/zarrhttp-$sfName/cube.zarr"
-      ZarrSource.readCube(s, url, "v")
+      s.read.format("zarr").option("vars", "v").load(url)
         .filter(!isnan(col("v")))
         .groupBy(col("t").cast("long").as("day_idx"))
         .agg(count(lit(1)).as("n_cells"),
@@ -1722,7 +1723,7 @@ object ServingPack extends QueryPack {
       val emu = graft.sources.ftp.FtpEmulator.shared
       emu.mountDir(s"zarrftp-$sfName", base)
       val url = s"${emu.endpoint}/zarrftp-$sfName/cube.zarr"
-      ZarrSource.readCube(s, url, "v")
+      s.read.format("zarr").option("vars", "v").load(url)
         .filter(!isnan(col("v")))
         .groupBy(col("t").cast("long").as("day_idx"))
         .agg(count(lit(1)).as("n_cells"),
@@ -1838,7 +1839,7 @@ object ServingPack extends QueryPack {
         ZarrSource.unchunkGroup(s"$base/cube.zarr")
       }
       val group = s"$base/cube.zarr"
-      ZarrSource.readCube(s, group, "v")
+      s.read.format("zarr").option("vars", "v").load(group)
         .filter(!isnan(col("v")))
         .groupBy(col("t").cast("long").as("day_idx"))
         .agg(count(lit(1)).as("n_cells"),
@@ -1871,7 +1872,7 @@ object ServingPack extends QueryPack {
         ZarrSource.appendCube(daily("2024-01-02", 1.0), s"$base/cube.zarr", "v", Array(1.0))
       }
       val group = s"$base/cube.zarr"
-      ZarrSource.readCube(s, group, "v")
+      s.read.format("zarr").option("vars", "v").load(group)
         .filter(!isnan(col("v")))
         .groupBy(col("t").cast("long").as("day_idx"))
         .agg(count(lit(1)).as("n_cells"),
@@ -1886,8 +1887,8 @@ object ServingPack extends QueryPack {
     // the zlib store's oracle bit-for-bit: the codec is lossless and the
     // pipeline above it identical.
     "q_zarr_blosc" -> ((s, d) => {
-      ZarrSource.readCube(s,
-          zarrFixture(s, d, ZarrSource.Blosc("lz4", 5, shuffle = 1), tag = "blosc"), "v")
+      s.read.format("zarr").option("vars", "v")
+        .load(zarrFixture(s, d, ZarrSource.Blosc("lz4", 5, shuffle = 1), tag = "blosc"))
         .filter(!isnan(col("v")))
         .groupBy(col("t").cast("long").as("day_idx"))
         .agg(count(lit(1)).as("n_cells"),
@@ -1903,9 +1904,9 @@ object ServingPack extends QueryPack {
     // chunk id) and chunk-per-task read as v2; same 2-day oracle, so a key-
     // encoding, codec-chain or checksum bug cannot pass.
     "q_zarr_v3" -> ((s, d) => {
-      ZarrV3Source.readCube(s,
-          zarrV3Fixture(s, d, Seq(ZarrSource.ZstdC(3), ZarrSource.Crc32c),
-            chunks = Seq(1, 50, 90), shardInner = None, tag = ""), "v")
+      s.read.format("zarr").option("vars", "v")
+        .load(zarrV3Fixture(s, d, Seq(ZarrSource.ZstdC(3), ZarrSource.Crc32c),
+          chunks = Seq(1, 50, 90), shardInner = None, tag = ""))
         .filter(!isnan(col("v")))
         .groupBy(col("t").cast("long").as("day_idx"))
         .agg(count(lit(1)).as("n_cells"),
@@ -1922,10 +1923,10 @@ object ServingPack extends QueryPack {
     // is the task unit both ways; the same oracle pins the index walk,
     // missing-inner-chunk fill and inner decode bit-for-bit.
     "q_zarr_v3_sharded" -> ((s, d) => {
-      ZarrV3Source.readCube(s,
-          zarrV3Fixture(s, d, Seq(ZarrSource.ZstdC(3)),
-            chunks = Seq(1, 100, 180), shardInner = Some(Seq(1, 25, 45)),
-            tag = "shard"), "v")
+      s.read.format("zarr").option("vars", "v")
+        .load(zarrV3Fixture(s, d, Seq(ZarrSource.ZstdC(3)),
+          chunks = Seq(1, 100, 180), shardInner = Some(Seq(1, 25, 45)),
+          tag = "shard"))
         .filter(!isnan(col("v")))
         .groupBy(col("t").cast("long").as("day_idx"))
         .agg(count(lit(1)).as("n_cells"),
@@ -1973,35 +1974,35 @@ object ServingPack extends QueryPack {
           round(sum((col("y") + col("x")).cast("decimal(28,10)")), 6)
             .cast("double").as("sum_coord"),
           round(sum(col("v").cast("decimal(28,10)")), 6).cast("double").as("sum_v"))
-      sums(KerchunkSource.readCube(s, zarrRefs.toString, "v"),
+      sums(s.read.format("kerchunk").option("vars", "v").load(zarrRefs.toString),
           concat(lit("zarr_day"), col("t").cast("long").cast("string")))
         .unionByName(
-          sums(KerchunkSource.readCube(s, ncRefs.toString, "v"),
+          sums(s.read.format("kerchunk").option("vars", "v").load(ncRefs.toString),
             lit("nc_2024-01-01")))
         .unionByName(
-          sums(KerchunkSource.readCube(s, tifRefs.toString, "v"),
+          sums(s.read.format("kerchunk").option("vars", "v").load(tifRefs.toString),
             lit("tif_2024-01-01")))
         .unionByName(
           // the jp2 granule stores day-1 event COUNTS dense over the full
           // grid (0 where no events), so all 100×360 cells survive the
           // NaN filter and sum_v is the day's event count
-          sums(KerchunkSource.readCube(s, jp2Refs.toString, "v"),
+          sums(s.read.format("kerchunk").option("vars", "v").load(jp2Refs.toString),
             lit("jp2_2024-01-01")))
     }),
 
     // the lazy-reference read path (store/ref/store.py:49-53 contract)
     // over the SAME zarr refs doc as q_kerchunk: metadata and coords
-    // stream in bounded passes, the data chunk refs spill to a parquet
-    // side table joined against the enumerated chunk grid — nothing is
-    // broadcast, so a 10^8-ref archive opens with O(metadata) driver
-    // memory. Hash-matches the direct reader's daily-mean checksum.
+    // stream in bounded passes and only the chunks that survive pruning
+    // have their refs resolved, so a 10^8-ref archive opens with
+    // O(metadata) driver memory. Hash-matches the direct reader's
+    // daily-mean checksum.
     "q_kerchunk_lazy" -> ((s, d) => {
       val group = zarrFixture(s, d)
       val base = refsDir(d)
       val zarrRefs = base.resolve("zarr_lazy.refs.json")
       java.nio.file.Files.write(zarrRefs,
         KerchunkSource.scanZarr(group).getBytes("UTF-8"))
-      KerchunkSource.readCubeLazy(s, zarrRefs.toString, "v")
+      s.read.format("kerchunk").option("vars", "v").load(zarrRefs.toString)
         .filter(!isnan(col("v")))
         .groupBy(concat(lit("zarr_day"),
           col("t").cast("long").cast("string")).as("src"))
@@ -2058,7 +2059,7 @@ object ServingPack extends QueryPack {
         KerchunkSource.scanGranules(s, ncs), "t", Array(0.0, 1.0))
       val refsPath = refsDir(d).resolve("combined.refs.json")
       java.nio.file.Files.write(refsPath, combined.getBytes("UTF-8"))
-      KerchunkSource.readCube(s, refsPath.toString, "v")
+      s.read.format("kerchunk").option("vars", "v").load(refsPath.toString)
         .filter(!isnan(col("v")))
         .groupBy(col("t").cast("long").as("day_idx"))
         .agg(count(lit(1)).as("n_cells"),
@@ -2470,7 +2471,7 @@ object ServingPack extends QueryPack {
         push(2, daily("2024-01-02", 1.0))
       }
       val group = s"$base/cube.zarr"
-      ZarrSource.readCube(s, group, "v")
+      s.read.format("zarr").option("vars", "v").load(group)
         .filter(!isnan(col("v")))
         .groupBy(col("t").cast("long").as("day_idx"))
         .agg(count(lit(1)).as("n_cells"),

@@ -204,45 +204,39 @@ object DataStore {
       case "geotiff" => GeoTiffSource.readRaster(spark, path)
       case "jpeg2000" => graft.sources.jp2.Jp2Source.readRaster(spark, path)
       case "shapefile" => ShapefileSource.readFeatures(spark, path)
-      case "zarr" if ByteStore.current.exists(s"$path/zarr.json") =>
-        // Zarr v3 store (one zarr.json per node, no .zgroup)
-        val dataVar = ZarrV3Source.listArrays(path)
-          .find { v =>
-            val za = ZarrV3Source.openArray(s"$path/$v")
-            za.dims.nonEmpty && za.dims != Seq(v)
-          }
-          .getOrElse(throw new IllegalArgumentException(s"$path: no data variable"))
-        ZarrV3Source.readCube(spark, path, dataVar)
       case "zarr" =>
-        // data variables = arrays that are not their own 1-D coordinate.
-        // When they share one grid (the writeCubeVars layout) the WHOLE
-        // dataset opens as one wide DataFrame, like the reference's
-        // open_dataset; mixed-grid groups fall back to the first variable.
-        // a data variable has dimensions and is not its own 1-D
-        // coordinate; 0-dim arrays (CF grid-mapping variables) are
-        // metadata, never data
-        val dataVars = ZarrSource.listArrays(path)
-          .filter { v =>
-            val za = ZarrSource.openArray(s"$path/$v")
-            za.dims.nonEmpty && za.dims != Seq(v)
-          }
-        require(dataVars.nonEmpty, s"$path: no data variable")
-        val heads = dataVars.map(v => ZarrSource.openArray(s"$path/$v"))
-        val shared = heads.forall(z =>
-          z.dims == heads.head.dims && z.shape == heads.head.shape &&
-            z.chunks == heads.head.chunks)
-        if (dataVars.size == 1 || !shared)
-          ZarrSource.readCube(spark, path, dataVars.head)
-        else ZarrSource.readCubeVars(spark, path, dataVars)
+        // data variables = arrays that have dimensions and are not their
+        // own 1-D coordinate (0-dim arrays, CF grid-mapping variables, are
+        // metadata). When they share one grid (the writeCubeVars layout)
+        // the WHOLE dataset opens as one wide DataFrame, like the
+        // reference's open_dataset; a mixed-grid group opens its first
+        // data variable. v2 and v3 groups follow the same rule.
+        val v3 = ByteStore.current.exists(s"$path/zarr.json")
+        val names =
+          if (v3) ZarrV3Source.listArrays(path) else ZarrSource.listArrays(path)
+        val heads = names.map { v =>
+          v -> (if (v3) ZarrV3Source.openArray(s"$path/$v")
+                else ZarrSource.openArray(s"$path/$v"))
+        }.filter { case (v, za) => za.dims.nonEmpty && za.dims != Seq(v) }
+        require(heads.nonEmpty, s"$path: no data variable")
+        val lead = heads.head._2
+        val shared = heads.forall { case (_, z) =>
+          z.dims == lead.dims && z.shape == lead.shape && z.chunks == lead.chunks
+        }
+        val vars = if (shared) heads.map(_._1) else Seq(heads.head._1)
+        spark.read.format("zarr").option("vars", vars.mkString(",")).load(path)
       case "kerchunk" =>
-        val refs = KerchunkSource.parse(path)
-        val dataVar = KerchunkSource.listArrays(refs)
+        // metadata keys only: the data-chunk refs stay on disk until the
+        // scan resolves the chunks that survive pruning
+        val meta = KerchunkSource.parseSelective(path,
+          k => k.substring(k.lastIndexOf('/') + 1).startsWith(".z"))
+        val dataVar = KerchunkSource.listArrays(meta)
           .find { v =>
-            val za = KerchunkSource.openArray(refs, v)
+            val za = KerchunkSource.openArray(meta, v)
             za.dims.nonEmpty && za.dims != Seq(v)
           }
           .getOrElse(throw new IllegalArgumentException(s"$path: no data variable"))
-        KerchunkSource.readCube(spark, path, dataVar)
+        spark.read.format("kerchunk").option("vars", dataVar).load(path)
       case fmt =>
         val r = spark.read.format(fmt)
         (if (fmt == "csv") r.option("header", "true").option("inferSchema", "true")

@@ -1,7 +1,7 @@
 package graft.sources
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
 
 /** Kerchunk-style virtual datasets — the reference opens archives of
@@ -22,16 +22,18 @@ import scala.jdk.CollectionConverters._
   *     "lat/0":        "base64:AAAA..." } }
   * }}}
   *
-  * [[readCube]] reads such a document as a cube with the SAME semantics as
-  * [[ZarrSource.readCube]] (one chunk per task, coords broadcast, missing
-  * key → fill value); [[scanZarr]] and [[scanNetcdf]] are the generator
+  * `spark.read.format("kerchunk").load(refsJson)` reads such a document
+  * as a cube with the SAME scan as `format("zarr")` (missing key → fill
+  * value); [[scanZarr]] and [[scanNetcdf]] are the generator
   * side — they index an existing Zarr group / NetCDF-3 classic file into a
   * refs document without touching the payload bytes (the NetCDF scan reads
   * only the header, exactly like kerchunk's netCDF3 scanner).
   *
   * Scale story: the refs document itself is the known kerchunk bottleneck
-  * (millions of chunks → a large JSON); here it is parsed once on the
-  * driver and BROADCAST, which holds to O(10M) refs. Each task then does
+  * (millions of chunks → a large JSON); `format("kerchunk")` opens it
+  * lazily ([[graft.sources.zarr.ZarrTable.openRefsLazy]]): metadata and
+  * coordinates stream in bounded passes and only the chunks that survive
+  * pruning have their refs resolved. Each task then does
   * one positioned range-read against the original file — on a cluster
   * store that is the same access pattern as a parquet column chunk read.
   * Templates (`{{u}}`) and the parquet-refs evolution are out of scope v0.
@@ -296,155 +298,6 @@ object KerchunkSource {
       val k = s"$name/${key.mkString(za.separator)}"
       if (refs.contains(k)) Some(fetch(refs(k))) else None
     })
-
-  /** One data variable of the virtual dataset as long-format rows — the
-    * kerchunk counterpart of [[ZarrSource.readCube]]: same schema, same
-    * missing-chunk → fill semantics, one chunk ref per task, with the
-    * refs document broadcast and each task range-reading its own chunk
-    * from the ORIGINAL file.
-    */
-  def readCube(spark: SparkSession, refsJsonPath: String,
-               varName: String): DataFrame = {
-    val refs = parse(refsJsonPath)
-    val za = openArray(refs, varName)
-    val coords: Seq[Array[Double]] = za.dims.zipWithIndex.map { case (dim, k) =>
-      if (refs.contains(s"$dim/.zarray")) {
-        val cza = openArray(refs, dim)
-        require(cza.shape == Seq(za.shape(k)),
-          s"refs:$dim: coordinate shape ${cza.shape} != dim size ${za.shape(k)}")
-        readAll(refs, dim, cza)
-      } else Array.tabulate(za.shape(k))(_.toDouble)
-    }
-    val bcRefs = spark.sparkContext.broadcast(refs)
-    val bs = ByteStore.current // captured VALUE — fetch runs in chunk tasks
-    ZarrSource.cubeDf(spark, za, varName, coords, key => {
-      val k = s"$varName/${key.mkString(za.separator)}"
-      if (bcRefs.value.contains(k))
-        ZarrSource.decodeChunk(fetch(bcRefs.value(k), bs), za)
-      else Array.fill(za.chunkElems)(za.cfDecode(za.fillValue))
-    })
-  }
-
-  /** [[readCube]] for reference sets too large for one in-memory map.
-    *
-    * Driver memory is O(metadata + coordinates), never O(chunk refs)
-    * (the reference's lazy-reference contract, `store/ref/store.py:49-53`):
-    *
-    *  - pass 1 streams only the `.z*` metadata keys (O(#arrays));
-    *  - pass 2 streams only the dimension variables' own chunk refs
-    *    (1-D coordinates — driver-sized by definition);
-    *  - pass 3 streams the data variable's chunk refs straight into a
-    *    spilled parquet table in `spillBatch`-bounded batches.
-    *
-    * Assembly is then fully relational: the chunk grid is enumerated with
-    * `spark.range`, LEFT-joined to the spilled ref table (missing chunk →
-    * fill value, identical to [[readCube]]), and each task fetches and
-    * decodes only its own partition's refs — nothing is broadcast, so at
-    * 10^8 refs the ref set is just another distributed table and the
-    * chunk fetches scale out with the cluster. The spill directory lives
-    * under java.io.tmpdir for the lifetime of the returned plan.
-    */
-  def readCubeLazy(spark: SparkSession, refsJsonPath: String, varName: String,
-                   spillBatch: Int = 200000): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.functions.{col, concat_ws, lit}
-    import org.apache.spark.sql.types._
-    def isMeta(k: String): Boolean =
-      k.substring(k.lastIndexOf('/') + 1).startsWith(".z")
-    val meta = parseSelective(refsJsonPath, isMeta)
-    val za = openArray(meta, varName)
-    val coordVars = za.dims.filter(d => meta.contains(s"$d/.zarray"))
-    val coordRefs =
-      if (coordVars.isEmpty) meta
-      else {
-        val prefixes = coordVars.map(_ + "/")
-        Refs(meta.entries ++ parseSelective(refsJsonPath,
-          k => !isMeta(k) && prefixes.exists(k.startsWith)).entries)
-      }
-    val coords: Seq[Array[Double]] = za.dims.zipWithIndex.map { case (dim, k) =>
-      if (meta.contains(s"$dim/.zarray")) {
-        val cza = openArray(meta, dim)
-        require(cza.shape == Seq(za.shape(k)),
-          s"refs:$dim: coordinate shape ${cza.shape} != dim size ${za.shape(k)}")
-        readAll(coordRefs, dim, cza)
-      } else Array.tabulate(za.shape(k))(_.toDouble)
-    }
-    // pass 3: chunk refs → spilled parquet, driver holds ≤ spillBatch rows
-    val spillSchema = StructType(Seq(
-      StructField("key", StringType, nullable = false),
-      StructField("url", StringType, nullable = true),
-      StructField("offset", LongType, nullable = false),
-      StructField("length", LongType, nullable = false),
-      StructField("inline", BinaryType, nullable = true)))
-    val spillDir = java.nio.file.Files.createTempDirectory("kerchunk-spill-")
-    // the parquet parts are read lazily; the tree goes when the JVM exits
-    org.apache.spark.graftbridge.ShutdownDelete.register(spillDir.toFile)
-    val prefix = s"$varName/"
-    val buf = new java.util.ArrayList[Row](spillBatch)
-    def flush(): Unit = if (!buf.isEmpty) {
-      spark.createDataFrame(buf, spillSchema)
-        .write.mode("append").parquet(spillDir.toString)
-      buf.clear()
-    }
-    val kept = streamRefs(refsJsonPath,
-      k => k.startsWith(prefix) && !isMeta(k)) { (k, r) =>
-      buf.add(Row(k.stripPrefix(prefix), r.url, r.offset, r.length, r.inline))
-      if (buf.size >= spillBatch) flush()
-    }
-    flush()
-    val refsDf =
-      if (kept == 0L)
-        spark.createDataFrame(new java.util.ArrayList[Row](), spillSchema)
-      else spark.read.schema(spillSchema).parquet(spillDir.toString)
-    // relational assembly: enumerate the chunk grid, left-join the refs
-    val grid = za.chunkGrid
-    val nChunks = grid.map(_.toLong).product
-    val strides = grid.scanRight(1L)((g, acc) => g * acc).tail
-    val keyCol = concat_ws(za.separator,
-      grid.indices.map(k =>
-        ((col("id") / lit(strides(k))).cast("long") % lit(grid(k).toLong))
-          .cast("string")): _*)
-    val keysDf = spark.range(nChunks).select(keyCol.as("key"))
-    val joined = keysDf.join(refsDf, Seq("key"), "left")
-    val bcCoords = spark.sparkContext.broadcast(coords)
-    val bs = ByteStore.current // driver-captured VALUE, travels with tasks
-    val sep = za.separator
-    val rank = za.shape.length
-    val outSchema = StructType(
-      za.dims.map(StructField(_, DoubleType)) :+
-        StructField(varName, DoubleType))
-    val zaB = za
-    val rdd = joined.rdd.mapPartitions { it =>
-      it.flatMap { row =>
-        val key = row.getString(0)
-          .split(java.util.regex.Pattern.quote(sep)).map(_.toInt).toSeq
-        val url = row.getAs[String]("url")
-        val inline = row.getAs[Array[Byte]]("inline")
-        val data =
-          if (url == null && inline == null)
-            Array.fill(zaB.chunkElems)(zaB.cfDecode(zaB.fillValue))
-          else ZarrSource.decodeChunk(
-            fetch(Ref(url, row.getAs[Long]("offset"),
-              row.getAs[Long]("length"), inline), bs), zaB)
-        val rows = Seq.newBuilder[Row]
-        ZarrSource.foreachCell(zaB, key) { (flat, global) =>
-          val vals = new Array[Any](rank + 1)
-          var rem = global
-          var k = rank - 1
-          while (k >= 0) {
-            val g = (rem % zaB.shape(k)).toInt
-            rem /= zaB.shape(k)
-            vals(k) = bcCoords.value(k)(g)
-            k -= 1
-          }
-          vals(rank) = data(flat)
-          rows += Row.fromSeq(vals.toIndexedSeq)
-        }
-        rows.result()
-      }
-    }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   // ------------------------------------------------------------- scanners
 

@@ -1,9 +1,8 @@
 package graft.sources
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import java.nio.{ByteBuffer, ByteOrder}
 import scala.jdk.CollectionConverters._
 import graft.sources.zarr.ChunkStats
@@ -26,9 +25,10 @@ import graft.sources.zarr.ChunkStats
   *
   * Scale story — the part that makes this the Spark re-expression of the
   * reference's dask model: the CHUNK is the unit of parallelism in both
-  * directions. [[readCube]] schedules one task per chunk (a 100 TB cube is
-  * millions of chunk files decoded independently; coordinate arrays are
-  * 1-D driver-sized, broadcast). [[writeCube]] maps coordinate values to
+  * directions. Reads go through the `format("zarr")` scan
+  * ([[graft.sources.zarr.ZarrTableProvider]]), whose input partitions are
+  * chunks (a 100 TB cube is millions of chunk files decoded independently;
+  * coordinate arrays are 1-D driver-sized). [[writeCube]] maps coordinate values to
   * indices by binary search over the driver-held coordinates, shuffles
   * rows once by target chunk id and assembles/compresses/writes each
   * chunk in its task with memory bounded by the chunk size — no driver
@@ -232,11 +232,6 @@ object ZarrSource {
         .getOrElse("."), shuffleElem,
       attrNum("scale_factor", 1.0), attrNum("add_offset", 0.0), cfFill)
   }
-
-  /** Does the group contain an array `name` (consolidated-aware)? */
-  private def hasArray(groupDir: String, name: String): Boolean =
-    consolidated(groupDir).exists(m => !m.path(s"$name/.zarray").isMissingNode) ||
-      ByteStore.current.exists(s"$groupDir/$name/.zarray")
 
   /** Array names in a group — from the consolidated metadata when present
     * (no directory listing), else the subdirectories holding a `.zarray`.
@@ -461,117 +456,6 @@ object ZarrSource {
       }
       flat += 1
     }
-  }
-
-  // ------------------------------------------------------------- reading
-
-  /** One data variable as long-format rows — a column per dimension (the
-    * same-named 1-D coordinate array's value if present, else the index)
-    * plus the value. Distributed ONE CHUNK PER TASK: the chunk list is the
-    * RDD, each task decodes its own file; a missing chunk file yields the
-    * fill value (the spec's sparse-store semantics).
-    */
-  def readCube(spark: SparkSession, groupDir: String, varName: String): DataFrame = {
-    val arrayDir = s"$groupDir/$varName"
-    val za = openArray(arrayDir)
-    // 1-D coordinate arrays are driver-sized (like the reference's xarray
-    // index coords) — read here, broadcast to the chunk tasks
-    val coords: Seq[Array[Double]] = za.dims.zipWithIndex.map { case (dim, k) =>
-      val cdir = s"$groupDir/$dim"
-      if (hasArray(groupDir, dim)) {
-        val cza = openArray(cdir)
-        require(cza.shape == Seq(za.shape(k)),
-          s"$cdir: coordinate shape ${cza.shape} != dim size ${za.shape(k)}")
-        readAll(cdir, cza)
-      } else Array.tabulate(za.shape(k))(_.toDouble)
-    }
-    val bs = ByteStore.current // captured VALUE — runs inside chunk tasks
-    cubeDf(spark, za, varName, coords, key =>
-      bs.readIfExists(s"$arrayDir/${key.mkString(za.separator)}") match {
-        case Some(raw) => decodeChunk(raw, za)
-        case None => Array.fill(za.chunkElems)(za.cfDecode(za.fillValue))
-      })
-  }
-
-  /** All data variables of a group as ONE wide DataFrame (a column per
-    * dimension + a column per variable) — the reader twin of
-    * [[writeCubeVars]] and the shape the reference's `open_dataset`
-    * returns. Still one task per chunk key: each task decodes the N
-    * variables' chunk objects for its key, so an N-variable read is one
-    * pass over the chunk grid, not N reads re-listing the store.
-    * All variables must share the dims/shape/chunk grid (the
-    * [[writeCubeVars]] layout).
-    */
-  def readCubeVars(spark: SparkSession, groupDir: String,
-                   varNames: Seq[String]): DataFrame = {
-    require(varNames.nonEmpty, "at least one variable")
-    val zas = varNames.map(v => openArray(s"$groupDir/$v"))
-    val za = zas.head
-    varNames.zip(zas).tail.foreach { case (v, z) =>
-      require(z.dims == za.dims && z.shape == za.shape && z.chunks == za.chunks,
-        s"$groupDir/$v: dims/shape/chunks differ from ${varNames.head} — " +
-          "readCubeVars needs one shared grid")
-    }
-    val coords: Seq[Array[Double]] = za.dims.zipWithIndex.map { case (dim, k) =>
-      if (hasArray(groupDir, dim)) readAll(s"$groupDir/$dim", openArray(s"$groupDir/$dim"))
-      else Array.tabulate(za.shape(k))(_.toDouble)
-    }
-    val bs = ByteStore.current // captured VALUE — runs inside chunk tasks
-    val names = varNames.toIndexedSeq
-    val zasIdx = zas.toIndexedSeq
-    cubeDfVars(spark, za, names, coords, key =>
-      names.indices.map { v =>
-        bs.readIfExists(s"$groupDir/${names(v)}/${key.mkString(zasIdx(v).separator)}") match {
-          case Some(raw) => decodeChunk(raw, zasIdx(v))
-          case None =>
-            Array.fill(zasIdx(v).chunkElems)(zasIdx(v).cfDecode(zasIdx(v).fillValue))
-        }
-      })
-  }
-
-  /** Shared long-format cube assembly — ONE TASK PER CHUNK with the chunk
-    * payload produced by `chunkData` (which runs IN the task and must be
-    * serializable; it returns the full-chunk-shape decoded array, fill-
-    * filled when the chunk is absent). [[KerchunkSource.readCube]] reuses
-    * this with a byte-range fetch, so the two readers cannot drift.
-    */
-  private[sources] def cubeDf(spark: SparkSession, za: ZarrArray,
-                              varName: String, coords: Seq[Array[Double]],
-                              chunkData: Seq[Int] => Array[Double]): DataFrame =
-    cubeDfVars(spark, za, Seq(varName), coords, key => Seq(chunkData(key)))
-
-  /** [[cubeDf]] for N variables sharing one grid: `chunkData` returns one
-    * decoded full-chunk array per variable, each task emits wide rows. */
-  private[sources] def cubeDfVars(spark: SparkSession, za: ZarrArray,
-                                  varNames: Seq[String], coords: Seq[Array[Double]],
-                                  chunkData: Seq[Int] => Seq[Array[Double]]): DataFrame = {
-    val bc = spark.sparkContext.broadcast(coords)
-    val keys = allChunkKeys(za.chunkGrid)
-    val schema = StructType(
-      za.dims.map(StructField(_, DoubleType)) ++
-        varNames.map(StructField(_, DoubleType)))
-    val rank = za.shape.length
-    val nVars = varNames.length
-    val rdd = spark.sparkContext.parallelize(keys, keys.length).flatMap { key =>
-      val data = chunkData(key).toIndexedSeq
-      val rows = Seq.newBuilder[Row]
-      foreachCell(za, key) { (flat, global) =>
-        val vals = new Array[Any](rank + nVars)
-        var rem = global
-        var k = rank - 1
-        while (k >= 0) {
-          val g = (rem % za.shape(k)).toInt
-          rem /= za.shape(k)
-          vals(k) = bc.value(k)(g)
-          k -= 1
-        }
-        var v = 0
-        while (v < nVars) { vals(rank + v) = data(v)(flat); v += 1 }
-        rows += Row.fromSeq(vals.toIndexedSeq)
-      }
-      rows.result()
-    }
-    spark.createDataFrame(rdd, schema)
   }
 
   // ------------------------------------------------------------- writing

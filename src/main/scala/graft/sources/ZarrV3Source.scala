@@ -2,7 +2,7 @@ package graft.sources
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import java.nio.{ByteBuffer, ByteOrder}
 import scala.jdk.CollectionConverters._
 import graft.sources.zarr.ChunkStats
@@ -30,9 +30,10 @@ import graft.sources.zarr.ChunkStats
   * count drops by the shard/chunk volume ratio while the inner chunk
   * stays the decode/cache unit. Here the SHARD is the unit of
   * parallelism in both directions ([[ZarrSource.ZarrArray.chunks]] holds
-  * the shard shape): [[readCube]] schedules one task per shard object;
-  * [[writeCube]] shuffles rows once by shard id and each task encodes
-  * its inner chunks + index without the whole array ever materializing.
+  * the shard shape): the `format("zarr")` scan plans shard objects as
+  * its chunks; [[writeCube]] shuffles rows once by shard id and each task
+  * encodes its inner chunks + index without the whole array ever
+  * materializing.
   */
 object ZarrV3Source {
   import ZarrSource.{Blosc, Codec, Crc32c, Gzip, Raw, Shard, V3Chain, ZarrArray, Zlib, ZstdC}
@@ -204,12 +205,6 @@ object ZarrV3Source {
     parseArrayJson(doc, arrayDir)
   }
 
-  private def hasArray(groupDir: String, name: String): Boolean =
-    consolidated(groupDir).exists(m =>
-      m.path(name).path("node_type").asText == "array") ||
-      readJson(s"$groupDir/$name/zarr.json")
-        .exists(_.path("node_type").asText == "array")
-
   /** Array names in a v3 group — from the group document's consolidated
     * metadata when present (no directory listing).
     */
@@ -241,61 +236,17 @@ object ZarrV3Source {
     else key.mkString(za.separator)
 
   /** Decode one SHARD object: verify + read the (offset, nbytes) index,
-    * decode each present inner chunk with the inner chain, scatter into a
-    * shard-shaped array (missing inner chunk = fill), then apply CF
-    * mask-and-scale once — same contract as [[ZarrSource.decodeChunk]].
+    * decode each present inner chunk with the inner chain and scatter it
+    * into a shard-shaped array (missing inner chunk = fill), with the CF
+    * mask-and-scale of [[ZarrSource.decodeChunk]].
     */
   private[sources] def decodeShard(raw: Array[Byte], za: ZarrArray,
                                    sh: Shard): Array[Double] = {
-    val innerGrid = za.chunks.zip(sh.inner).map { case (c, i) => c / i }
-    val nInner = innerGrid.product
-    val idxSize = nInner * 16 + (if (sh.indexCrc) 4 else 0)
-    require(raw.length >= idxSize,
-      s"shard of ${raw.length} bytes shorter than its $idxSize-byte index")
-    val idxRaw =
-      if (sh.indexAtEnd) java.util.Arrays.copyOfRange(raw, raw.length - idxSize, raw.length)
-      else java.util.Arrays.copyOfRange(raw, 0, idxSize)
-    val idx = ByteBuffer.wrap(
-      if (sh.indexCrc) ZarrSource.decodeStep(idxRaw, Crc32c) else idxRaw)
-      .order(ByteOrder.LITTLE_ENDIAN)
-    // inner chunks decode against a synthetic chunk-shaped array; CF decode
-    // is deferred to the single pass over the assembled shard below
-    val innerZa = za.copy(shape = sh.inner, chunks = sh.inner,
-      codec = if (sh.innerSteps.isEmpty) Raw else V3Chain(sh.innerSteps),
-      cfScale = 1.0, cfOffset = 0.0, cfFill = None)
-    val out = Array.fill(za.chunkElems)(za.fillValue)
-    val rank = za.chunks.length
-    // in-shard strides of the shard-shaped output array (C order)
-    val stride = za.chunks.scanRight(1)(_ * _).tail.toArray
-    ZarrSource.allChunkKeys(innerGrid).zipWithIndex.foreach { case (ik, flatIk) =>
-      val offset = idx.getLong(flatIk * 16)
-      val nbytes = idx.getLong(flatIk * 16 + 8)
-      if (offset != -1L || nbytes != -1L) { // 2^64-1 twice = missing
-        require(offset >= 0 && nbytes > 0 && offset + nbytes <= raw.length,
-          s"shard index entry $flatIk out of bounds: offset=$offset nbytes=$nbytes")
-        val data = ZarrSource.decodeChunk(
-          java.util.Arrays.copyOfRange(raw, offset.toInt, (offset + nbytes).toInt),
-          innerZa)
-        // scatter: inner-chunk cell (i0..ik) → shard offset
-        ZarrSource.foreachCell(innerZa, ik.map(_ => 0)) { (flat, _) =>
-          var rem = flat
-          var shardOff = 0
-          var k = rank - 1
-          while (k >= 0) {
-            val g = ik(k) * sh.inner(k) + rem % sh.inner(k)
-            rem /= sh.inner(k)
-            shardOff += g * stride(k)
-            k -= 1
-          }
-          out(shardOff) = data(flat)
-        }
-      }
-    }
-    if (za.cfActive) {
-      var j = 0
-      while (j < out.length) { out(j) = za.cfDecode(out(j)); j += 1 }
-    }
-    out
+    def slice(off: Long, len: Long) =
+      java.util.Arrays.copyOfRange(raw, off.toInt, (off + len).toInt)
+    // every inner chunk is admitted, so no cell keeps the exclusion value
+    walkShard(za, sh, raw.length.toLong, "", _ => true, Double.NaN)(
+      slice, _.iterator.map { case (off, len) => slice(off, len) })
   }
 
   /** v3-aware chunk decode: routes shards to [[decodeShard]], everything
@@ -323,40 +274,50 @@ object ZarrV3Source {
   private[sources] def decodeShardSelective(store: ByteStore, path: String,
                                             za: ZarrArray, sh: Shard,
                                             keep: Set[Int],
-                                            failValue: Double): Array[Double] = {
+                                            failValue: Double): Array[Double] =
+    walkShard(za, sh, store.size(path), s"$path: ", keep, failValue)(
+      store.readRange(path, _, _), store.readRanges(path, _).iterator)
+
+  /** The one shard-index walk behind both shard decoders, over a shard of
+    * `size` bytes: read and crc-check the index (`readRange`), bounds-check
+    * the admitted present entries, fetch their payloads in one call
+    * (`readRanges`, in entry order), decode each with the inner chain and
+    * scatter it in C order into the shard-shaped output; admitted missing
+    * inner chunks get the decoded fill value, excluded ones `excluded`.
+    * `where` prefixes the `require` messages.
+    */
+  private def walkShard(za: ZarrArray, sh: Shard, size: Long, where: String,
+                        keep: Int => Boolean, excluded: Double)(
+      readRange: (Long, Long) => Array[Byte],
+      readRanges: Seq[(Long, Long)] => Iterator[Array[Byte]]): Array[Double] = {
     val innerGrid = za.chunks.zip(sh.inner).map { case (c, i) => c / i }
-    val nInner = innerGrid.product
-    val idxSize = nInner * 16 + (if (sh.indexCrc) 4 else 0)
-    val size = store.size(path)
+    val idxSize = innerGrid.product * 16 + (if (sh.indexCrc) 4 else 0)
     require(size >= idxSize,
-      s"$path: shard of $size bytes shorter than its $idxSize-byte index")
-    val idxRaw =
-      if (sh.indexAtEnd) store.readRange(path, size - idxSize, idxSize.toLong)
-      else store.readRange(path, 0L, idxSize.toLong)
+      s"${where}shard of $size bytes shorter than its $idxSize-byte index")
+    val idxRaw = readRange(if (sh.indexAtEnd) size - idxSize else 0L, idxSize.toLong)
     val idx = ByteBuffer.wrap(
       if (sh.indexCrc) ZarrSource.decodeStep(idxRaw, Crc32c) else idxRaw)
       .order(ByteOrder.LITTLE_ENDIAN)
+    // admitted inner chunks with their index entries; 2^64−1 twice = missing
+    val (present, missing) = ZarrSource.allChunkKeys(innerGrid).zipWithIndex
+      .collect { case (ik, ord) if keep(ord) =>
+        (ik, ord, idx.getLong(ord * 16), idx.getLong(ord * 16 + 8))
+      }
+      .partition { case (_, _, off, nb) => off != -1L || nb != -1L }
+    present.foreach { case (_, ord, off, nb) =>
+      require(off >= 0 && nb > 0 && off + nb <= size,
+        s"${where}shard index entry $ord out of bounds: offset=$off nbytes=$nb")
+    }
+    // inner chunks decode against a synthetic chunk-shaped array; the CF
+    // decode is applied per cell as they scatter
     val innerZa = za.copy(shape = sh.inner, chunks = sh.inner,
       codec = if (sh.innerSteps.isEmpty) Raw else V3Chain(sh.innerSteps),
       cfScale = 1.0, cfOffset = 0.0, cfFill = None)
-    val out = Array.fill(za.chunkElems)(failValue)
+    val cf: Double => Double = if (za.cfActive) za.cfDecode else x => x
+    val out = Array.fill(za.chunkElems)(excluded)
     val rank = za.chunks.length
+    // in-shard strides of the shard-shaped output array (C order)
     val stride = za.chunks.scanRight(1)(_ * _).tail.toArray
-    val decodedFill = za.cfDecode(za.fillValue)
-    // admitted inner keys with their index entries; missing ones fill
-    val wanted = ZarrSource.allChunkKeys(innerGrid).zipWithIndex
-      .filter { case (_, flatIk) => keep.contains(flatIk) }
-      .map { case (ik, flatIk) =>
-        (ik, idx.getLong(flatIk * 16), idx.getLong(flatIk * 16 + 8), flatIk)
-      }
-    val present = wanted.filter { case (_, off, nb, _) => off != -1L || nb != -1L }
-    present.foreach { case (_, off, nb, flatIk) =>
-      require(off >= 0 && nb > 0 && off + nb <= size,
-        s"$path: shard index entry $flatIk out of bounds: offset=$off nbytes=$nb")
-    }
-    val raws = store.readRanges(path, present.map { case (_, off, nb, _) =>
-      (off, nb)
-    })
     def scatter(ik: Seq[Int])(value: Int => Double): Unit =
       ZarrSource.foreachCell(innerZa, ik.map(_ => 0)) { (flat, _) =>
         var rem = flat
@@ -370,12 +331,13 @@ object ZarrV3Source {
         }
         out(shardOff) = value(flat)
       }
-    present.zip(raws).foreach { case ((ik, _, _, _), raw) =>
-      val data = ZarrSource.decodeChunk(raw, innerZa)
-      scatter(ik)(flat => za.cfDecode(data(flat)))
-    }
-    wanted.filter { case (_, off, nb, _) => off == -1L && nb == -1L }
-      .foreach { case (ik, _, _, _) => scatter(ik)(_ => decodedFill) }
+    present.iterator.zip(readRanges(present.map { case (_, _, off, nb) => (off, nb) }))
+      .foreach { case ((ik, _, _, _), raw) =>
+        val data = ZarrSource.decodeChunk(raw, innerZa)
+        scatter(ik)(flat => cf(data(flat)))
+      }
+    val fill = cf(za.fillValue)
+    missing.foreach { case (ik, _, _, _) => scatter(ik)(_ => fill) }
     out
   }
 
@@ -385,32 +347,6 @@ object ZarrV3Source {
     ZarrSource.readAllWith(za, key =>
       bs.readIfExists(s"$arrayDir/${chunkKey(za, key.map(_.toLong))}"),
       decodeAny)
-  }
-
-  // ------------------------------------------------------------- reading
-
-  /** One data variable as long-format rows — the v3 counterpart of
-    * [[ZarrSource.readCube]], sharing its chunk-per-task assembly
-    * ([[ZarrSource.cubeDf]]). For a sharded array the task unit is the
-    * SHARD object; its inner chunks decode inside the task.
-    */
-  def readCube(spark: SparkSession, groupDir: String, varName: String): DataFrame = {
-    val arrayDir = s"$groupDir/$varName"
-    val za = openArray(arrayDir)
-    val coords: Seq[Array[Double]] = za.dims.zipWithIndex.map { case (dim, k) =>
-      if (hasArray(groupDir, dim)) {
-        val cza = openArray(s"$groupDir/$dim")
-        require(cza.shape == Seq(za.shape(k)),
-          s"$groupDir/$dim: coordinate shape ${cza.shape} != dim size ${za.shape(k)}")
-        readAll(s"$groupDir/$dim", cza)
-      } else Array.tabulate(za.shape(k))(_.toDouble)
-    }
-    val bs = ByteStore.current // captured VALUE — runs inside chunk tasks
-    ZarrSource.cubeDf(spark, za, varName, coords, key =>
-      bs.readIfExists(s"$arrayDir/${chunkKey(za, key.map(_.toLong))}") match {
-        case Some(raw) => decodeAny(raw, za)
-        case None => Array.fill(za.chunkElems)(za.cfDecode(za.fillValue))
-      })
   }
 
   // ------------------------------------------------------------- writing

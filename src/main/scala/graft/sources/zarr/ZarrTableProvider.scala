@@ -20,8 +20,9 @@ import scala.jdk.CollectionConverters._
 
 /** DataSourceV2 Zarr connector — `spark.read.format("zarr").load(group)`
   * and `df.write.format("zarr").option("dims", "t,y,x").save(group)`:
-  * the relational face of [[ZarrSource]], with the two scan optimizations
-  * the DataFrame read path cannot express over a hand-built RDD:
+  * the relational face of [[ZarrSource]] and the one reader of Zarr v2/v3
+  * groups (kerchunk and the granule formats share its scan), with the two
+  * scan optimizations a hand-built RDD cannot express:
   *
   *  - **Chunk pruning from pushed dimension predicates.** A filter on a
   *    dimension column (`t === 0.5`, `y >= 40 && y < 60`, `t.isin(...)`,
@@ -251,8 +252,8 @@ final case class NoSuchZarrGroup(groupDir: String) extends Table with SupportsRe
 /** Planning-time view of one group: the shared grid array metadata, the
   * data variable names, and the (driver-sized) coordinate arrays.
   * `v3` selects the Zarr v3 chunk-key encoding + codec chain (incl.
-  * sharding — the shard object is the partition unit, as in
-  * [[graft.sources.ZarrV3Source.readCube]]). When `refs` is set the
+  * sharding — the shard object is the chunk the scan plans, decoded by
+  * [[graft.sources.ZarrV3Source.decodeShard]]). When `refs` is set the
   * table is VIRTUAL — chunk bytes come from kerchunk byte-range
   * references into the original granule files (NetCDF/HDF5/GeoTIFF/
   * refs-JSON), and each input partition carries only its OWN chunk's

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{NetcdfSource, ZarrSource}
+import graft.sources.{CubeTruth, NetcdfSource, ZarrSource}
 import graft.sources.NetcdfSource.NcDim
 import graft.sources.zarr.ChunkStats
 import org.apache.spark.sql.SparkSession
@@ -149,7 +149,7 @@ class ArchiveSubchunkSpec extends AnyFunSuite {
     // ...and it still ANSWERS: corrupt every chunk, the guarded
     // statistics must come from stat rows alone
     val truth = graft.operators.StatsOps.statisticsFold(
-      ZarrSource.readCubeVars(spark, g, Seq("v")), "v").collect().head
+      CubeTruth.zarr(spark, g, Seq("v")), "v").collect().head
     new java.io.File(s"$g/v").listFiles()
       .filter(_.getName.head.isDigit)
       .foreach(f => Files.write(f.toPath, Array[Byte](9, 9, 9)))

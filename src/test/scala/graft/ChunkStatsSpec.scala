@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.ZarrSource
+import graft.sources.{CubeTruth, ZarrSource}
 import graft.sources.zarr.ChunkStats
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -82,9 +82,9 @@ class ChunkStatsSpec extends AnyFunSuite {
   test("global statistics answer from the sidecar with ZERO chunk IO") {
     val g = writeFixture()
     ChunkStats.analyze(spark, g)
-    // row-path truth through the RDD reader (no sidecar involved)
+    // row-path truth from the readAll cells (no sidecar involved)
     val truth = graft.operators.StatsOps.statisticsFold(
-      ZarrSource.readCubeVars(spark, g, Seq("v", "w", "c")), "w")
+      CubeTruth.zarr(spark, g, Seq("v", "w", "c")), "w")
       .collect().head
     Seq("v", "w", "c").foreach(corrupt(g, _))
     val ds = spark.read.format("zarr").load(g)
@@ -105,7 +105,7 @@ class ChunkStatsSpec extends AnyFunSuite {
   test("grouped aggregates use stat rows when keys are chunk-constant") {
     val g = writeFixture()
     ChunkStats.analyze(spark, g)
-    val truth = ZarrSource.readCubeVars(spark, g, Seq("v", "w", "c"))
+    val truth = CubeTruth.zarr(spark, g, Seq("v", "w", "c"))
       .groupBy(col("t"), floor(col("y") / 25.0).as("by"))
       .agg(count(lit(1)).as("n"), sum(col("v")).as("sv"))
       .collect().map(r => (r.getDouble(0), r.getLong(1), r.getLong(2),
@@ -211,7 +211,7 @@ class ChunkStatsSpec extends AnyFunSuite {
     // zero-IO stat rows resolve the same way: corrupt everything, the
     // guarded statistics still answer
     val truth = graft.operators.StatsOps.statisticsFold(
-      ZarrSource.readCubeVars(spark, g, Seq("v", "w", "c")), "w")
+      CubeTruth.zarr(spark, g, Seq("v", "w", "c")), "w")
       .collect().head
     Seq("v", "w", "c").foreach(corrupt(g, _))
     val q = graft.operators.StatsOps.statisticsFold(
@@ -250,7 +250,7 @@ class ChunkStatsSpec extends AnyFunSuite {
     val _ = born
     // ...and the born sidecar serves queries with zero chunk IO
     val truth = graft.operators.StatsOps.statisticsFold(
-      ZarrSource.readCubeVars(spark, g, Seq("v", "w")), "w").collect().head
+      CubeTruth.zarr(spark, g, Seq("v", "w")), "w").collect().head
     Seq("v", "w").foreach(corrupt(g, _))
     val q = graft.operators.StatsOps.statisticsFold(
       spark.read.format("zarr").load(g), "w")

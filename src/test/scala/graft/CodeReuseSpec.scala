@@ -55,7 +55,7 @@ class CodeReuseSpec extends AnyFunSuite {
     push(1) // first append: compiles the append plan once
     val later = Seq(push(2), push(3))
     assert(later == Seq(0L, 0L), s"compiles per later append run: $later")
-    val back = graft.sources.ZarrSource.readCube(spark, group, "v")
+    val back = spark.read.format("zarr").option("vars", "v").load(group)
       .agg(count(lit(1)), sum("v")).head()
     assert(back.getLong(0) == 48)
     assert(back.getDouble(1) == (0 until 4).map(slice(_).agg(sum("v"))

@@ -83,7 +83,7 @@ class FtpStoreSpec extends AnyFunSuite {
       "t" -> Array(0.0, 1.0), "y" -> Array(0.0, 1.0), "x" -> Array(0.0, 1.0))
     ZarrSource.writeCube(df, dir.getAbsolutePath, "v", dims,
       chunks = Seq(1, 2, 2))
-    val got = ZarrSource.readCube(spark, url("zarr"), "v")
+    val got = spark.read.format("zarr").option("vars", "v").load(url("zarr"))
       .orderBy("t", "y", "x").collect()
     assert(got.length == 8)
     got.zipWithIndex.foreach { case (r, i) =>

@@ -98,7 +98,7 @@ class Hdf5SourceSpec extends AnyFunSuite {
     def asMap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getDouble(0), r.getDouble(1)) -> r.getDouble(2)).toMap
     val direct = asMap(NetcdfSource.readCube(spark, p, "v"))
-    val virt = asMap(KerchunkSource.readCube(spark, refsPath, "v"))
+    val virt = asMap(spark.read.format("kerchunk").option("vars", "v").load(refsPath))
     assert(direct.size == 6 && virt == direct)
     // the refs carry the filter stack, not re-encoded bytes
     val refs = Files.readString(Paths.get(refsPath))
@@ -127,7 +127,7 @@ class Hdf5SourceSpec extends AnyFunSuite {
     // kerchunk scan references the inline bytes like a contiguous block
     val refsPath = s"$dir/c.refs.json"
     Files.writeString(Paths.get(refsPath), KerchunkSource.scanHdf5(p))
-    val virt = KerchunkSource.readCube(spark, refsPath, "v").collect()
+    val virt = spark.read.format("kerchunk").option("vars", "v").load(refsPath).collect()
       .map(r => (r.getDouble(0), r.getDouble(1)) -> r.getDouble(2)).toMap
     assert(virt.size == 6 && virt((0.0, 1.5)) == 0.25)
     // a >=64 KiB coordinate stays contiguous even with the flag on (the
@@ -261,7 +261,7 @@ class Hdf5SourceSpec extends AnyFunSuite {
     def asMap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getDouble(0), r.getDouble(1)) -> r.getDouble(2)).toMap
     val direct = asMap(NetcdfSource.readCube(spark, p, "v"))
-    val virt = asMap(KerchunkSource.readCube(spark, refsPath, "v"))
+    val virt = asMap(spark.read.format("kerchunk").option("vars", "v").load(refsPath))
     assert(direct.size == 6 && virt == direct)
   }
 

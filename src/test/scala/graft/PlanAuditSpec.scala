@@ -578,4 +578,22 @@ class PlanAuditSpec extends AnyFunSuite {
       _.exists(_.isInstanceOf[graft.functions.ProjectXY]))),
       "the query plan must run the project_xy expression")
   }
+
+  test("Zarr-family cube queries read through the DSv2 cube scan, never an RDD scan") {
+    import org.apache.spark.sql.execution.RDDScanExec
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val cubeQueries = Seq("q_zarr", "q_zarr_multivar", "q_zarr_s3", "q_zarr_http",
+      "q_zarr_ftp", "q_unchunk", "q_zarr_append", "q_zarr_blosc", "q_zarr_v3",
+      "q_zarr_v3_sharded", "q_stream_zarr", "q_kerchunk", "q_kerchunk_hdf5",
+      "q_kerchunk_lazy", "q_kerchunk_combine")
+    for (q <- cubeQueries) {
+      val leaves = SparkEntry.queries(q)(spark, sf).queryExecution.sparkPlan
+        .collectLeaves()
+      assert(leaves.nonEmpty && leaves.forall {
+        case b: BatchScanExec => b.scan.getClass.getName.startsWith("graft.sources.zarr.")
+        case _ => false
+      }, s"$q: every leaf must be a graft cube scan: $leaves")
+      assert(!leaves.exists(_.isInstanceOf[RDDScanExec]), s"$q: $leaves")
+    }
+  }
 }

@@ -257,11 +257,11 @@ class PropertySpec extends AnyFunSuite {
           }
         }
       }
-      check(ZarrSource.readCube(spark, g, "v"), "direct")
+      check(spark.read.format("zarr").option("vars", "v").load(g), "direct")
       val refsPath = s"$dir/s$t.refs.json"
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(refsPath), KerchunkSource.scanZarr(g))
-      check(KerchunkSource.readCube(spark, refsPath, "v"), "kerchunk")
+      check(spark.read.format("kerchunk").option("vars", "v").load(refsPath), "kerchunk")
     }
   }
 

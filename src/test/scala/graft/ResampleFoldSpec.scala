@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.ZarrSource
+import graft.sources.{CubeTruth, ZarrSource}
 import graft.sources.zarr.ChunkStats
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -61,7 +61,7 @@ class ResampleFoldSpec extends AnyFunSuite {
     assert(q.queryExecution.executedPlan.toString.contains("ZarrVarAggScan"),
       q.queryExecution.executedPlan.toString.take(1200))
     // row-path truth through methodAgg over real timestamps
-    val rows = ZarrSource.readCubeVars(spark, g, Seq("v", "w"))
+    val rows = CubeTruth.zarr(spark, g, Seq("v", "w"))
       .withColumn("ts", timestamp_seconds(col("t") * 86400.0))
     val truth = graft.operators.TemporalOps.resampleInTime(
       rows, "ts", "2D",
@@ -77,7 +77,7 @@ class ResampleFoldSpec extends AnyFunSuite {
       extraKeys = Seq("y", "x"))
     // one-pass row-path truth: the same min_by/max_by semantics without
     // the two-phase gather
-    val rows = ZarrSource.readCubeVars(spark, g, Seq("v", "w"))
+    val rows = CubeTruth.zarr(spark, g, Seq("v", "w"))
     val truth = graft.operators.TemporalOps.resampleInTimeNumeric(
       rows, "t", 86400.0, "2D", Seq("v" -> "first", "w" -> "first"),
       extraKeys = Seq("y", "x"))
@@ -105,7 +105,7 @@ class ResampleFoldSpec extends AnyFunSuite {
     val zc = spark.read.format("zarr").load(g)
     val q = graft.operators.TemporalOps.resampleArgFold(
       zc, "t", 86400.0, "2D", "v", argmax = true, extraKeys = Seq("y"))
-    val rows = ZarrSource.readCubeVars(spark, g, Seq("v", "w"))
+    val rows = CubeTruth.zarr(spark, g, Seq("v", "w"))
     val truth = graft.operators.TemporalOps.resampleInTimeNumeric(
       rows, "t", 86400.0, "2D", Seq("v" -> "argmax"), extraKeys = Seq("y"))
     assert(sortedRows(q) === sortedRows(truth))
@@ -129,7 +129,7 @@ class ResampleFoldSpec extends AnyFunSuite {
   test("all-NaN buckets emit null rows — fold == row path unconditionally") {
     val g = writeFixture()
     val zc = spark.read.format("zarr").load(g)
-    val rows = ZarrSource.readCubeVars(spark, g, Seq("v", "w"))
+    val rows = CubeTruth.zarr(spark, g, Seq("v", "w"))
     // w's t=0 slice is all-NaN; "1D" buckets make it an all-NaN BUCKET
     val qf = graft.operators.TemporalOps.resampleFirstLastFold(
       zc, "t", 86400.0, "1D", Seq("w"), last = false,
@@ -194,7 +194,7 @@ class ResampleFoldSpec extends AnyFunSuite {
   test("resampleQuantileFold: exact per-bucket median/percentile == row path") {
     val g = writeFixture()
     val zc = spark.read.format("zarr").load(g)
-    val rows = ZarrSource.readCubeVars(spark, g, Seq("v", "w"))
+    val rows = CubeTruth.zarr(spark, g, Seq("v", "w"))
     for ((vr, p) <- Seq(("v", 0.5), ("v", 0.9), ("w", 0.5), ("w", 0.25))) {
       val q = graft.operators.TemporalOps.resampleQuantileFold(
         zc, "t", 86400.0, "2D", vr, p, bins = 8)
@@ -257,7 +257,7 @@ class ResampleFoldSpec extends AnyFunSuite {
       zc, "t", 86400.0, "1D", "w", 0.5, bins = 8)
     assert(q.count() === 4L)
     assert(q.filter(col("w_median").isNull).count() === 1L)
-    val rows = ZarrSource.readCubeVars(spark, g, Seq("v", "w"))
+    val rows = CubeTruth.zarr(spark, g, Seq("v", "w"))
     val vv = when(col("w").cast("double") <= lit(Double.PositiveInfinity),
       col("w").cast("double"))
     val truth = rows.groupBy(floor(col("t") / 1.0).as("__b"))

@@ -164,7 +164,7 @@ class S3EmulatorSpec extends AnyFunSuite {
     assert(keys.contains("cube.zarr/.zmetadata"))
     assert(keys.count(_.matches("cube\\.zarr/v/\\d+\\.\\d+\\.\\d+")) === 8)
 
-    val back = ZarrSource.readCube(spark, group, "v")
+    val back = spark.read.format("zarr").option("vars", "v").load(group)
     assert(back.count() === 48)
     val direct = df.agg(round(sum($"v"), 6)).as[Double].head()
     assert(back.agg(round(sum($"v"), 6)).as[Double].head() === direct)
@@ -177,7 +177,7 @@ class S3EmulatorSpec extends AnyFunSuite {
     val df2 = (for { yi <- y; xi <- x } yield (2.0, yi, xi, 200 + yi * 10 + xi))
       .toSeq.toDF("t", "y", "x", "v")
     ZarrSource.appendCube(df2, group, "v", t2)
-    val appended = ZarrSource.readCube(spark, group, "v")
+    val appended = spark.read.format("zarr").option("vars", "v").load(group)
     assert(appended.count() === 72)
     assert(appended.filter($"t" === 2.0).agg(round(sum($"v"), 6)).as[Double].head()
       === df2.agg(round(sum($"v"), 6)).as[Double].head())
@@ -206,7 +206,7 @@ class S3EmulatorSpec extends AnyFunSuite {
     assert(objs.map(_._1).contains("cube.zarr/zarr.json"))
     assert(objs.map(_._1).count(_.startsWith("cube.zarr/v/c/")) === 2) // 2 shards
 
-    val back = ZarrV3Source.readCube(spark, group, "v")
+    val back = spark.read.format("zarr").option("vars", "v").load(group)
     assert(back.count() === 64)
     assert(back.agg(round(sum($"v"), 6)).as[Double].head() ===
       df.agg(round(sum($"v"), 6)).as[Double].head())
@@ -233,7 +233,7 @@ class S3EmulatorSpec extends AnyFunSuite {
     S3Emulator.shared.mountDir("served", base)
 
     // the cube reads back THROUGH the S3 protocol, no copy
-    val back = ZarrSource.readCube(spark, "s3g://served/cube.zarr", "v")
+    val back = spark.read.format("zarr").option("vars", "v").load("s3g://served/cube.zarr")
     assert(back.count() === 30)
     assert(back.agg(round(sum($"v"), 6)).as[Double].head() ===
       df.agg(round(sum($"v"), 6)).as[Double].head())
@@ -309,7 +309,7 @@ class S3EmulatorSpec extends AnyFunSuite {
     push(1, slice(0.0))
     push(2, slice(1.0))
 
-    val back = ZarrSource.readCube(spark, group, "v")
+    val back = spark.read.format("zarr").option("vars", "v").load(group)
     assert(back.count() === 24)
     assert(back.agg(round(sum($"v"), 6)).as[Double].head() ===
       (slice(0.0) union slice(1.0)).agg(round(sum($"v"), 6)).as[Double].head())
@@ -400,8 +400,8 @@ class S3EmulatorSpec extends AnyFunSuite {
     S3Emulator.shared.mountDir("zhttp", base)
     val url = s"${S3Emulator.shared.endpoint}/zhttp/cube.zarr"
 
-    val direct = ZarrSource.readCube(spark, local, "v")
-    val overHttp = ZarrSource.readCube(spark, url, "v")
+    val direct = spark.read.format("zarr").option("vars", "v").load(local)
+    val overHttp = spark.read.format("zarr").option("vars", "v").load(url)
     assert(overHttp.count() === direct.count())
     assert(overHttp.agg(round(sum($"v" * ($"t" + 1) + $"y" - $"x"), 6)).as[Double].head()
       === direct.agg(round(sum($"v" * ($"t" + 1) + $"y" - $"x"), 6)).as[Double].head())
@@ -414,7 +414,7 @@ class S3EmulatorSpec extends AnyFunSuite {
     val refsPath = s"$base/refs.http.json"
     java.nio.file.Files.write(java.nio.file.Paths.get(refsPath),
       refsJson.getBytes("UTF-8"))
-    val viaRefs = KerchunkSource.readCube(spark, refsPath, "v")
+    val viaRefs = spark.read.format("kerchunk").option("vars", "v").load(refsPath)
     assert(viaRefs.agg(round(sum($"v" * ($"t" + 1) + $"y" - $"x"), 6)).as[Double].head()
       === direct.agg(round(sum($"v" * ($"t" + 1) + $"y" - $"x"), 6)).as[Double].head())
 
@@ -461,8 +461,8 @@ class S3EmulatorSpec extends AnyFunSuite {
     java.nio.file.Files.write(java.nio.file.Paths.get(refsPath),
       refsJson.getBytes("UTF-8"))
 
-    val viaRefs = KerchunkSource.readCube(spark, refsPath, "v")
-    val direct = ZarrSource.readCube(spark, local, "v")
+    val viaRefs = spark.read.format("kerchunk").option("vars", "v").load(refsPath)
+    val direct = spark.read.format("zarr").option("vars", "v").load(local)
     assert(viaRefs.count() === direct.count())
     assert(viaRefs.agg(round(sum($"v" * ($"t" + 1) + $"y" - $"x"), 6)).as[Double].head()
       === direct.agg(round(sum($"v" * ($"t" + 1) + $"y" - $"x"), 6)).as[Double].head())

@@ -1,7 +1,7 @@
 package graft
 
 import graft.cube.{Cube, GridMapping}
-import graft.sources.{ByteStore, CubeWriter, LevelStore, ZarrSource}
+import graft.sources.{ByteStore, CubeTruth, CubeWriter, LevelStore, ZarrSource}
 import graft.sources.zarr.ChunkStats
 import graft.streaming.TimeSliceOps
 import org.apache.spark.graftbridge.BusDrain
@@ -247,8 +247,8 @@ class StorageStreamingSpec extends AnyFunSuite {
         min(col("v")).as("lo"), max(col("v")).as("hi"))
     def halfSelected(df: DataFrame) = aggs(df.filter(col("y") >= 1.0))
     def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
-    // row-path truth: the RDD reader, which never consults the sidecar
-    val cells = ZarrSource.readCubeVars(spark, group, Seq("v"))
+    // row-path truth: the readAll cells, which never consult the sidecar
+    val cells = CubeTruth.zarr(spark, group, Seq("v"))
     val truth = Seq(global _, byTime _, halfSelected _).map(q => rows(q(cells)))
     def zarr = spark.read.format("zarr").load(group)
     // a chunk the filter half-selects is read: the partial shape stays

@@ -385,7 +385,7 @@ class StoreMaintenanceSpec extends AnyFunSuite {
     val refsPath = new java.io.File(dir, "nd.refs.json").getAbsolutePath
     Files.writeString(java.nio.file.Paths.get(refsPath),
       KerchunkSource.scanGeoTiff(p))
-    val kb = KerchunkSource.readCube(spark, refsPath, "v").collect()
+    val kb = spark.read.format("kerchunk").option("vars", "v").load(refsPath).collect()
       .map(x => (x.getDouble(0), x.getDouble(1)) -> x.getDouble(2)).toMap
     assert(kb((49.0, 101.0)) == 1.0 && kb((49.0, 103.0)).isNaN
       && kb((47.0, 103.0)).isNaN && kb((47.0, 105.0)) == 6.0, kb.toString)

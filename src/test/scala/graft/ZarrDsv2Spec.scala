@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.ZarrSource
+import graft.sources.{CubeTruth, ZarrSource}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -35,12 +35,12 @@ class ZarrDsv2Spec extends AnyFunSuite {
     g
   }
 
-  test("full read equals the RDD reader; schema is dims + sorted vars") {
+  test("full read equals the readAll truth; schema is dims + sorted vars") {
     val g = writeFixture()
     val ds = spark.read.format("zarr").load(g)
     assert(ds.columns.toSeq == Seq("t", "y", "x", "v", "w"))
     assert(ds.count() === 72)
-    val direct = ZarrSource.readCubeVars(spark, g, Seq("v", "w"))
+    val direct = CubeTruth.zarr(spark, g, Seq("v", "w"))
     val a = ds.agg(round(sum(col("v") * 3 + col("w")), 6)).head.getDouble(0)
     val b = direct.agg(round(sum(col("v") * 3 + col("w")), 6)).head.getDouble(0)
     assert(a === b)
@@ -205,8 +205,9 @@ class ZarrDsv2Spec extends AnyFunSuite {
     val g = s"${tmpDir("dsv2w")}/written.zarr"
     df.write.format("zarr").option("dims", "t,y,x")
       .option("chunks", "1,2,3").save(g)
-    // the written group is a real consolidated v2 group the RDD reader opens
-    val direct = ZarrSource.readCubeVars(spark, g, Seq("v", "w"))
+    // the written group is a real consolidated v2 group the whole-array
+    // readers decode
+    val direct = CubeTruth.zarr(spark, g, Seq("v", "w"))
     assert(direct.count() === 24)
     // and the connector reads it back with the chunking we asked for:
     // grid (2,2,2) -> 8 chunk tasks
@@ -445,8 +446,8 @@ class ZarrDsv2Spec extends AnyFunSuite {
     import spark.implicits._
     // v carries NaN holes: min skips NaN (NaN sorts greatest), max
     // returns NaN, sum poisons, count counts cells (NaN is not null) —
-    // the pushed plan must match the unpushed RDD-path aggregation row
-    // for row
+    // the pushed plan must match the unpushed aggregation over the
+    // readAll cells row for row
     val t = Array(0.0, 1.0)
     val y = Array(0.0, 1.0, 2.0)
     val x = Array(0.0, 1.0)
@@ -467,7 +468,7 @@ class ZarrDsv2Spec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(plan.contains("ZarrVarAggScan"), plan.take(600))
     val pushed = agg(pushedDf)
-    val plain = agg(ZarrSource.readCubeVars(spark, g, Seq("v")))
+    val plain = agg(CubeTruth.zarr(spark, g, Seq("v")))
     assert(pushed.length === 2)
     pushed.zip(plain).foreach { case ((pt, pmn, pmx, psm, pn), (qt, qmn, qmx, qsm, qn)) =>
       assert(pt === qt && pn === qn)
@@ -619,7 +620,7 @@ class ZarrDsv2Spec extends AnyFunSuite {
     val ne = ys(ds.filter(col("y") =!= 20.0))
     assert(ne.count(_.isNaN) === 2 && ne.length === 6, ne)
     // and the reference behavior matches an unpushed evaluation over rows
-    val plain = ZarrSource.readCube(spark, g, "v")
+    val plain = CubeTruth.zarr(spark, g, Seq("v"))
     assert(ds.filter(col("y") > 15.0).count() ===
       plain.filter(col("y") > 15.0).count())
     assert(ds.filter(col("y") =!= 20.0).count() ===
@@ -672,7 +673,7 @@ class ZarrDsv2Spec extends AnyFunSuite {
     val viaCols = ds.filter(col("y") > 10.0 && col("x") <= 2.5)
       .select("w", "t").collect().map(r => (r.getDouble(0), r.getDouble(1)))
       .sortBy(identity).toSeq
-    val direct = ZarrSource.readCubeVars(spark, g, Seq("v", "w"))
+    val direct = CubeTruth.zarr(spark, g, Seq("v", "w"))
       .filter(col("y") > 10.0 && col("x") <= 2.5)
       .select("w", "t").collect().map(r => (r.getDouble(0), r.getDouble(1)))
       .sortBy(identity).toSeq
@@ -1125,9 +1126,9 @@ class ZarrDsv2Spec extends AnyFunSuite {
     spark.sql("DELETE FROM gdel.`series.zarr` WHERE t >= 3.0")
     assert(cube.count() === 9)
     assert(cube.agg(max("t")).head.getDouble(0) === 2.0)
-    // the store itself shrank (not a view trick): direct reader agrees,
+    // the store itself shrank (not a view trick): the readAll truth agrees,
     // shape metadata rewritten, out-of-range chunk objects gone
-    assert(ZarrSource.readCube(spark, g, "v").count() === 9)
+    assert(CubeTruth.zarr(spark, g, Seq("v")).count() === 9)
     assert(ZarrSource.openArray(s"$g/v").shape === Seq(3, 3))
     assert(!new java.io.File(s"$g/v/2.0").exists()) // t-chunks 2x -> idx 2 dropped
     // values of the surviving boundary chunk are untouched
@@ -1269,7 +1270,7 @@ class ZarrDsv2Spec extends AnyFunSuite {
     assert(ZarrSource.openArray(s"$g/v").shape === Seq(4, 2))
     assert(new java.io.File(s"$g/v/3.0").exists())
     assert(ZarrSource.openArray(s"$g/t").shape === Seq(4))
-    assert(ZarrSource.readCube(spark, g, "v").count() === 8)
+    assert(CubeTruth.zarr(spark, g, Seq("v")).count() === 8)
   }
 
   test("block-key grouped aggregates fold per chunk (pyramid-build shape)") {
@@ -1293,7 +1294,7 @@ class ZarrDsv2Spec extends AnyFunSuite {
       .collectFirst { case b: BatchScanExec => b }.get
     assert(scan.inputRDD.count() === 24L)
     // values and TYPES match the unpushed aggregation exactly
-    val expect = ZarrSource.readCubeVars(spark, g, Seq("v", "w"))
+    val expect = CubeTruth.zarr(spark, g, Seq("v", "w"))
       .groupBy(col("t"), floor(col("y") / 20.0).as("by"),
         floor((col("x") - 0.5) / 3.0).as("bx"))
       .agg(count(lit(1)).as("n"), sum("v").as("sv"), min("w").as("mw"))
@@ -1306,7 +1307,7 @@ class ZarrDsv2Spec extends AnyFunSuite {
     // avg rides Spark's avg -> sum/count partial rewrite over block keys
     val avgQ = ds.groupBy(floor(col("y") / 20.0).as("by")).agg(avg("v").as("av"))
     assert(avgQ.queryExecution.executedPlan.toString.contains("ZarrVarAggScan"))
-    val avgE = ZarrSource.readCubeVars(spark, g, Seq("v", "w"))
+    val avgE = CubeTruth.zarr(spark, g, Seq("v", "w"))
       .groupBy(floor(col("y") / 20.0).as("by")).agg(avg("v").as("av"))
     assert(avgQ.collect().map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1).toSeq
       === avgE.collect().map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1).toSeq)
@@ -1314,7 +1315,7 @@ class ZarrDsv2Spec extends AnyFunSuite {
     val f = ds.filter(col("t") >= 1.0)
       .groupBy(floor(col("x") / 2.0).as("bx")).agg(sum("w").as("sw"))
     assert(f.queryExecution.executedPlan.toString.contains("ZarrVarAggScan"))
-    val fE = ZarrSource.readCubeVars(spark, g, Seq("v", "w"))
+    val fE = CubeTruth.zarr(spark, g, Seq("v", "w"))
       .filter(col("t") >= 1.0)
       .groupBy(floor(col("x") / 2.0).as("bx")).agg(sum("w").as("sw"))
     assert(f.collect().map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1).toSeq
@@ -1396,7 +1397,7 @@ class ZarrDsv2Spec extends AnyFunSuite {
     val f = ds.filter(col("t") >= 1.0)
       .orderBy(col("w").desc, col("v")).limit(5)
     assert(f.queryExecution.executedPlan.toString.contains("PushedTopNFold"))
-    val expect = ZarrSource.readCubeVars(spark, g, Seq("v", "w"))
+    val expect = CubeTruth.zarr(spark, g, Seq("v", "w"))
       .filter(col("t") >= 1.0)
       .orderBy(col("w").desc, col("v")).limit(5)
       .collect().map(_.toSeq)
@@ -1437,11 +1438,11 @@ class ZarrDsv2Spec extends AnyFunSuite {
       .collectFirst { case b: BatchScanExec => b }.get
     // 4 chunks x (2x2 blocks each) = 16 partial rows cross the exchange
     assert(scan.inputRDD.count() === 16L)
-    // values match the RDD-path pyramid step exactly, NaN holes included:
+    // values match the row-path pyramid step exactly, NaN holes included:
     // the (0,0) block keeps its one valid cell's value, a fully-NaN block
     // would be null — xarray's skipna mean
     val expect = SubsampleOps.subsample(
-      Cube(ZarrSource.readCubeVars(spark, g, Seq("v")), gm, "t", "y", "x"),
+      Cube(CubeTruth.zarr(spark, g, Seq("v")), gm, "t", "y", "x"),
       2, Seq("v" -> "mean"))._1
       .collect().map(r => (r.getDouble(0), r.getLong(1), r.getLong(2),
         r.getDouble(3))).sortBy(r => (r._1, r._2, r._3))
@@ -1457,7 +1458,7 @@ class ZarrDsv2Spec extends AnyFunSuite {
       2, Seq("v" -> "mean"))
     assert(lvlDown.queryExecution.executedPlan.toString.contains("ZarrVarAggScan"))
     val expDown = SubsampleOps.subsample(
-      Cube(ZarrSource.readCubeVars(spark, g, Seq("v")), gmDown, "t", "y", "x"),
+      Cube(CubeTruth.zarr(spark, g, Seq("v")), gmDown, "t", "y", "x"),
       2, Seq("v" -> "mean"))._1
       .collect().map(r => (r.getLong(1), r.getLong(2), r.getDouble(3))).sorted
     assert(lvlDown.collect().map(r => (r.getLong(1), r.getLong(2),
@@ -1474,7 +1475,7 @@ class ZarrDsv2Spec extends AnyFunSuite {
       Seq("v" -> "min", "v" -> "max", "v" -> "sum", "v" -> "count"))
     assert(mm.queryExecution.executedPlan.toString.contains("ZarrVarAggScan"))
     val mmE = SubsampleOps.subsample(
-      Cube(ZarrSource.readCubeVars(spark, g2, Seq("v")), gm, "t", "y", "x"),
+      Cube(CubeTruth.zarr(spark, g2, Seq("v")), gm, "t", "y", "x"),
       4, Seq("v" -> "min", "v" -> "max", "v" -> "sum", "v" -> "count"))._1
     assert(mm.collect().map(_.toSeq).map(_.toString).sorted.toSeq ===
       mmE.collect().map(_.toSeq).map(_.toString).sorted.toSeq)
@@ -1533,7 +1534,7 @@ class ZarrDsv2Spec extends AnyFunSuite {
     // partial-rows audit: each chunk holds ONE time slice -> one calendar
     // group -> 12 partial rows cross the exchange, not 72 cells
     assert(scanOf(q).inputRDD.count() === 12L)
-    val expect = ZarrSource.readCubeVars(spark, g, Seq("v", "w"))
+    val expect = CubeTruth.zarr(spark, g, Seq("v", "w"))
       .groupBy(year(ts).as("yr"), month(ts).as("mo"))
       .agg(count(lit(1)).as("n"), sum(col("v")).as("sv"),
         min(col("w")).as("mw"), max(col("v")).as("xv"))
@@ -1543,7 +1544,7 @@ class ZarrDsv2Spec extends AnyFunSuite {
     val hq = ds.groupBy(hour((col("t") * 45000.0).cast("timestamp")).as("hh"))
       .agg(sum(col("v")).as("sv"))
     assert(hq.queryExecution.executedPlan.toString.contains("extract(HOUR"))
-    val hExpect = ZarrSource.readCubeVars(spark, g, Seq("v"))
+    val hExpect = CubeTruth.zarr(spark, g, Seq("v"))
       .groupBy(hour((col("t") * 45000.0).cast("timestamp")).as("hh"))
       .agg(sum(col("v")).as("sv")).collect().map(_.toSeq).sortBy(_.toString)
     assert(hq.collect().map(_.toSeq).sortBy(_.toString).toSeq === hExpect.toSeq)
@@ -1554,7 +1555,7 @@ class ZarrDsv2Spec extends AnyFunSuite {
     assert(rs.queryExecution.executedPlan.toString.contains("ZarrVarAggScan"),
       rs.queryExecution.executedPlan.toString.take(900))
     val rsE = graft.operators.TemporalOps.resampleInTimeNumeric(
-      ZarrSource.readCubeVars(spark, g, Seq("v", "w")),
+      CubeTruth.zarr(spark, g, Seq("v", "w")),
       "t", 2678400.0, "1M", Seq("v" -> "mean", "w" -> "max"))
       .collect().map(_.toSeq).sortBy(_.toString)
     assert(rs.collect().map(_.toSeq).sortBy(_.toString).toSeq === rsE.toSeq)
@@ -1564,7 +1565,7 @@ class ZarrDsv2Spec extends AnyFunSuite {
       ds, "t", 86400.0, "2D", Seq("v" -> "sum", "v" -> "count"))
     assert(rf.queryExecution.executedPlan.toString.contains("ZarrVarAggScan"))
     val rfE = graft.operators.TemporalOps.resampleInTimeNumeric(
-      ZarrSource.readCubeVars(spark, g, Seq("v")),
+      CubeTruth.zarr(spark, g, Seq("v")),
       "t", 86400.0, "2D", Seq("v" -> "sum", "v" -> "count"))
       .collect().map(_.toSeq).sortBy(_.toString)
     assert(rf.collect().map(_.toSeq).sortBy(_.toString).toSeq === rfE.toSeq)
@@ -1576,7 +1577,7 @@ class ZarrDsv2Spec extends AnyFunSuite {
       ds, "t", 2678400.0, "1M", Seq("v" -> "mean"), extraKeys = Seq("y", "x"))
     assert(rsCell.queryExecution.executedPlan.toString.contains("ZarrVarAggScan"))
     val rsCellE = graft.operators.TemporalOps.resampleInTimeNumeric(
-      ZarrSource.readCubeVars(spark, g, Seq("v")),
+      CubeTruth.zarr(spark, g, Seq("v")),
       "t", 2678400.0, "1M", Seq("v" -> "mean"), extraKeys = Seq("y", "x"))
       .collect().map(_.toSeq).sortBy(_.toString)
     assert(rsCell.collect().map(_.toSeq).sortBy(_.toString).toSeq === rsCellE.toSeq)
@@ -1611,7 +1612,7 @@ class ZarrDsv2Spec extends AnyFunSuite {
     // each chunk spans few buckets: 12 chunks x <=2 bins >= rows, << 72
     val partials = scanOf(q).inputRDD.count()
     assert(partials <= 24L, s"expected O(chunks x bins) partials, got $partials")
-    val expect = ZarrSource.readCubeVars(spark, g, Seq("v"))
+    val expect = CubeTruth.zarr(spark, g, Seq("v"))
       .groupBy(floor((col("v") - 100.0) / 500.0).as("bin"))
       .agg(count(lit(1)).as("n"), min(col("v")).as("mn"),
         max(col("v")).as("mx"))
@@ -1621,7 +1622,7 @@ class ZarrDsv2Spec extends AnyFunSuite {
     // histogram); w = t+y+x collides across chunks -> real merge above
     val rq = ds.groupBy(col("w")).count()
     assert(rq.queryExecution.executedPlan.toString.contains("ZarrVarAggScan"))
-    val rExpect = ZarrSource.readCubeVars(spark, g, Seq("w"))
+    val rExpect = CubeTruth.zarr(spark, g, Seq("w"))
       .groupBy(col("w")).count().collect()
       .map(r => (r.getDouble(0), r.getLong(1))).sortBy(_._1)
     assert(rq.collect().map(r => (r.getDouble(0), r.getLong(1)))
@@ -1630,7 +1631,7 @@ class ZarrDsv2Spec extends AnyFunSuite {
     val fq = ds.filter(col("t") >= 1.0)
       .groupBy(floor(col("v") / 1000.0).as("bin")).count()
     assert(scanOf(fq).partitions.length === 8) // 4 of 12 chunks pruned
-    val fExpect = ZarrSource.readCubeVars(spark, g, Seq("v"))
+    val fExpect = CubeTruth.zarr(spark, g, Seq("v"))
       .filter(col("t") >= 1.0)
       .groupBy(floor(col("v") / 1000.0).as("bin")).count()
       .collect().map(_.toSeq).sortBy(_.toString)
@@ -1649,7 +1650,7 @@ class ZarrDsv2Spec extends AnyFunSuite {
         sum(col("v") * col("v")).as("s2"))
     val planStr = q.queryExecution.executedPlan.toString
     assert(planStr.contains("ZarrVarAggScan"), planStr.take(1200))
-    val expect = ZarrSource.readCubeVars(spark, g, Seq("v"))
+    val expect = CubeTruth.zarr(spark, g, Seq("v"))
       .groupBy(col("t"))
       .agg(count(lit(1)).as("n"), sum(col("v")).as("s1"),
         sum(col("v") * col("v")).as("s2"))
@@ -1692,7 +1693,7 @@ class ZarrDsv2Spec extends AnyFunSuite {
     val hfRows = hf.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
     assert(hfRows.map(_._2).sum === vals.length.toLong) // NaN never counted
     val expectH = graft.operators.StatsOps.histogramFold(
-      ZarrSource.readCubeVars(spark, g2, Seq("v")), "v", 4)
+      CubeTruth.zarr(spark, g2, Seq("v")), "v", 4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
     assert(hfRows.toSeq === expectH.toSeq)
   }
@@ -1730,7 +1731,7 @@ class ZarrDsv2Spec extends AnyFunSuite {
     assert(mf.queryExecution.executedPlan.toString.contains("ZarrVarAggScan"),
       mf.queryExecution.executedPlan.toString.take(900))
     val modeExpect = SubsampleOps.subsample(
-      Cube(ZarrSource.readCubeVars(spark, g, Seq("v")), gm, "t", "y", "x"),
+      Cube(CubeTruth.zarr(spark, g, Seq("v")), gm, "t", "y", "x"),
       4, Seq("v" -> "mode"))._1
       .collect().map(r => (r.getDouble(0), r.getLong(1), r.getLong(2),
         r.getDouble(3))).sorted
@@ -1739,7 +1740,7 @@ class ZarrDsv2Spec extends AnyFunSuite {
     // k=4 equals the aggregate path (blockAgg "first") cell for cell
     val (out4, _) = SubsampleOps.subsampleFirst(cube, 4, Seq("v"))
     val expect = SubsampleOps.subsample(
-      Cube(ZarrSource.readCubeVars(spark, g, Seq("v")), gm, "t", "y", "x"),
+      Cube(CubeTruth.zarr(spark, g, Seq("v")), gm, "t", "y", "x"),
       4, Seq("v" -> "first"))._1
       .collect().map(r => (r.getDouble(0), r.getLong(1), r.getLong(2),
         r.getDouble(3))).sorted
@@ -1835,7 +1836,7 @@ class ZarrDsv2Spec extends AnyFunSuite {
                raw: org.apache.spark.sql.DataFrame): Unit =
       assert(df.collect().map(_.toSeq).sortBy(_.toString).toSeq ===
         raw.collect().map(_.toSeq).sortBy(_.toString).toSeq)
-    val raw = ZarrSource.readCubeVars(spark, g, Seq("v", "w"))
+    val raw = CubeTruth.zarr(spark, g, Seq("v", "w"))
     // a TWO-column bucket is not a chunk-computable single-column key
     val q1 = ds.groupBy(floor((col("v") + col("w")) / 100.0).as("b")).count()
     assert(noAggScan(q1), q1.queryExecution.executedPlan.toString.take(600))

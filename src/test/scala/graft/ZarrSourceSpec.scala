@@ -29,7 +29,7 @@ class ZarrSourceSpec extends AnyFunSuite {
     // chunk files exist with the spec's dotted names
     assert(Files.exists(Paths.get(s"$g/v/0.0")) && Files.exists(Paths.get(s"$g/v/1.2")))
     assert(Files.exists(Paths.get(s"$g/.zgroup")))
-    val back = ZarrSource.readCube(spark, g, "v").collect()
+    val back = spark.read.format("zarr").option("vars", "v").load(g).collect()
       .map(r => (r.getDouble(0), r.getDouble(1)) -> r.getDouble(2)).toMap
     assert(back.size == 15)
     assert(back((10.0, 0.5)) == 0.0 && back((30.0, 4.5)) == 24.0)
@@ -56,9 +56,9 @@ class ZarrSourceSpec extends AnyFunSuite {
     // both arrays carry the same chunk grid; consolidated metadata lists both
     assert(Files.exists(Paths.get(s"$g/v/0.0")) && Files.exists(Paths.get(s"$g/w/0.0")))
     assert(ZarrSource.listArrays(g).toSet === Set("y", "x", "v", "w"))
-    val v = ZarrSource.readCube(spark, g, "v").collect()
+    val v = spark.read.format("zarr").option("vars", "v").load(g).collect()
       .map(r => (r.getDouble(0), r.getDouble(1)) -> r.getDouble(2)).toMap
-    val w = ZarrSource.readCube(spark, g, "w").collect()
+    val w = spark.read.format("zarr").option("vars", "w").load(g).collect()
       .map(r => (r.getDouble(0), r.getDouble(1)) -> r.getDouble(2)).toMap
     assert(v.size === 9 && w.size === 9)
     assert(v((10.0, 0.5)) === 0.0 && w((10.0, 0.5)) === 0.0)
@@ -66,7 +66,7 @@ class ZarrSourceSpec extends AnyFunSuite {
     assert(v((30.0, 2.5)).isNaN && w((30.0, 2.5)).isNaN)
 
     // wide read: one task per chunk decodes BOTH variables
-    val wide = ZarrSource.readCubeVars(spark, g, Seq("v", "w")).collect()
+    val wide = spark.read.format("zarr").option("vars", "v,w").load(g).collect()
       .map(r => (r.getDouble(0), r.getDouble(1)) -> (r.getDouble(2), r.getDouble(3)))
       .toMap
     assert(wide.size === 9)
@@ -77,6 +77,28 @@ class ZarrSourceSpec extends AnyFunSuite {
     val opened = DataStore.openDataset(spark, g)
     assert(opened.columns.toSeq === Seq("y", "x", "v", "w"))
     assert(opened.count() === 9)
+  }
+
+  test("openDataset: a mixed-grid group opens its first data variable") {
+    import spark.implicits._
+    val g = s"${tmpDir("zarrmixedopen")}/mixed.zarr"
+    // v on (t, xa) 3×4, w on (yb, xb) 2×2: one group, two grids
+    val t = Array(0.0, 1.0, 2.0)
+    val xa = Array(0.0, 1.0, 2.0, 3.0)
+    ZarrSource.writeCube((for { ti <- t; xi <- xa } yield (ti, xi, ti * 10 + xi))
+      .toSeq.toDF("t", "xa", "v"), g, "v",
+      Seq("t" -> t, "xa" -> xa), chunks = Seq(1, 4))
+    val yb = Array(5.0, 6.0)
+    val xb = Array(7.0, 8.0)
+    ZarrSource.writeCube((for { yi <- yb; xi <- xb } yield (yi, xi, yi + xi))
+      .toSeq.toDF("yb", "xb", "w"), g, "w",
+      Seq("yb" -> yb, "xb" -> xb), chunks = Seq(2, 2))
+    val opened = DataStore.openDataset(spark, g)
+    assert(opened.columns.toSeq === Seq("t", "xa", "v"))
+    val cells = opened.collect()
+      .map(r => (r.getDouble(0), r.getDouble(1)) -> r.getDouble(2)).toMap
+    assert(cells.size === 12)
+    for (ti <- t; xi <- xa) assert(cells((ti, xi)) === ti * 10 + xi)
   }
 
   test("3-D cube, a chunk with NO rows is absent and reads as fill") {
@@ -91,7 +113,7 @@ class ZarrSourceSpec extends AnyFunSuite {
       Seq("t" -> ts, "y" -> ys, "x" -> xs), chunks = Seq(1, 2, 2))
     assert(Files.exists(Paths.get(s"$g/v/0.0.0")))
     assert(!Files.exists(Paths.get(s"$g/v/1.0.0"))) // empty chunk not written
-    val back = ZarrSource.readCube(spark, g, "v")
+    val back = spark.read.format("zarr").option("vars", "v").load(g)
     assert(back.count() == 8)
     assert(back.filter(col("t") === 1.0 && !isnan(col("v"))).count() == 0)
     assert(back.filter(col("t") === 0.0 && isnan(col("v"))).count() == 0)
@@ -115,7 +137,7 @@ class ZarrSourceSpec extends AnyFunSuite {
     assert(ZarrSource.listArrays(g) == Seq("v", "x", "y"))
     val za = ZarrSource.openArray(s"$g/v")
     assert(za.dims == Seq("y", "x") && za.shape == Seq(2, 2))
-    val back = ZarrSource.readCube(spark, g, "v").collect()
+    val back = spark.read.format("zarr").option("vars", "v").load(g).collect()
       .map(r => (r.getDouble(0), r.getDouble(1)) -> r.getDouble(2)).toMap
     assert(back((1.0, 3.0)) == 10.0 && back((2.0, 4.0)) == 20.0)
     assert(back((1.0, 4.0)).isNaN)
@@ -144,7 +166,7 @@ class ZarrSourceSpec extends AnyFunSuite {
     assert(Files.exists(Paths.get(s"$g/v/2.0")))
     val za = ZarrSource.openArray(s"$g/v")
     assert(za.shape == Seq(5, 3) && za.chunks == Seq(2, 3))
-    val back = ZarrSource.readCube(spark, g, "v").collect()
+    val back = spark.read.format("zarr").option("vars", "v").load(g).collect()
       .map(r => (r.getDouble(0), r.getDouble(1)) -> r.getDouble(2)).toMap
     assert(back.size == 15)
     for { t <- t0 ++ tNew; y <- ys if !(t == 4.0 && y == 2.5) }
@@ -186,7 +208,7 @@ class ZarrSourceSpec extends AnyFunSuite {
     val zaCons = ZarrSource.openArray(s"$g/v")
     assert(zaCons.chunks == zaCons.shape, ".zmetadata must be refreshed")
     Files.writeString(Paths.get(s"$g/v/.zarray"), zarrayJson)
-    val back = ZarrSource.readCube(spark, g, "v").collect()
+    val back = spark.read.format("zarr").option("vars", "v").load(g).collect()
       .map(r => (r.getDouble(0), r.getDouble(1)) -> r.getDouble(2)).toMap
     assert(back.size == 15 && back((30.0, 4.5)) == 24.0)
     // coordsOnly leaves the data variable alone
@@ -216,7 +238,7 @@ class ZarrSourceSpec extends AnyFunSuite {
     // consolidated metadata also carries the old attrs — drop it so the
     // patched per-array document is authoritative for this test
     Files.deleteIfExists(Paths.get(s"$g/.zmetadata"))
-    val back = ZarrSource.readCube(spark, g, "v").collect()
+    val back = spark.read.format("zarr").option("vars", "v").load(g).collect()
       .map(r => (r.getDouble(0), r.getDouble(1)) -> r.getDouble(2)).toMap
     assert(back((0.5, 0.5)) == 105.0, back.toString)
     assert(back((0.5, 1.5)).isNaN) // raw fill sentinel → NaN
@@ -247,7 +269,7 @@ class ZarrSourceSpec extends AnyFunSuite {
     val rows1 = (for { t <- tNew.toSeq; y <- ys } yield (t, y, phys(t, y)))
       .filterNot { case (t, y, _) => t == 4.0 && y == 1.5 }
     ZarrSource.appendCube(rows1.toDF("t", "y", "v"), g, "v", tNew)
-    val back = ZarrSource.readCube(spark, g, "v").collect()
+    val back = spark.read.format("zarr").option("vars", "v").load(g).collect()
       .map(r => (r.getDouble(0), r.getDouble(1)) -> r.getDouble(2)).toMap
     assert(back.size == 10)
     // pre-existing cells — including the merged boundary chunk row t=2 —
@@ -281,7 +303,7 @@ class ZarrSourceSpec extends AnyFunSuite {
     val za = ZarrSource.openArray(s"$g/a")
     assert(za.separator == "/" && za.codec == ZarrSource.Raw && za.fillValue == 0.0)
     assert(za.dims == Seq("dim_0", "dim_1")) // no _ARRAY_DIMENSIONS → synthetic
-    val back = ZarrSource.readCube(spark, g, "a").collect()
+    val back = spark.read.format("zarr").option("vars", "a").load(g).collect()
       .map(r => (r.getDouble(0), r.getDouble(1)) -> r.getDouble(2)).toMap
     assert(back == Map((0.0, 0.0) -> 1.5, (1.0, 0.0) -> 3.5,
       (0.0, 1.0) -> 0.0, (1.0, 1.0) -> 0.0))
@@ -353,8 +375,8 @@ class ZarrSourceSpec extends AnyFunSuite {
     Files.writeString(Paths.get(refsPath), KerchunkSource.scanZarr(g))
     def asMap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getDouble(0), r.getDouble(1)) -> r.getDouble(2)).toMap
-    val direct = asMap(ZarrSource.readCube(spark, g, "v"))
-    val virt = asMap(KerchunkSource.readCube(spark, refsPath, "v"))
+    val direct = asMap(spark.read.format("zarr").option("vars", "v").load(g))
+    val virt = asMap(spark.read.format("kerchunk").option("vars", "v").load(refsPath))
     assert(virt.size == 15 && direct.size == 15)
     direct.foreach { case (k, v) =>
       assert(v.isNaN == virt(k).isNaN && (v.isNaN || v == virt(k)), s"at $k")
@@ -377,7 +399,7 @@ class ZarrSourceSpec extends AnyFunSuite {
       "expected one chunk ref per record")
     val refsPath = s"${tmpDir("kcn2")}/refs.json"
     Files.writeString(Paths.get(refsPath), refsJson)
-    val back = KerchunkSource.readCube(spark, refsPath, "v").collect()
+    val back = spark.read.format("kerchunk").option("vars", "v").load(refsPath).collect()
       .map(r => (r.getDouble(0), r.getDouble(1)) -> r.getDouble(2)).toMap
     assert(back.size == 12)
     for (t <- 0 until 3; i <- 0 until 4)
@@ -428,7 +450,7 @@ class ZarrSourceSpec extends AnyFunSuite {
       Array.tabulate(6)(_.toDouble))
     val refsPath = s"${tmpDir("kcfleet2")}/all.refs.json"
     Files.writeString(Paths.get(refsPath), combined)
-    val back = KerchunkSource.readCube(spark, refsPath, "v").collect()
+    val back = spark.read.format("kerchunk").option("vars", "v").load(refsPath).collect()
       .map(r => (r.getDouble(0), r.getDouble(1)) -> r.getDouble(2)).toMap
     assert(back.size == 18)
     for (g <- 0 until 6; i <- 0 until 3)
@@ -488,7 +510,7 @@ class ZarrSourceSpec extends AnyFunSuite {
     assert(direct(0) == 105.0 && direct(1).isNaN && direct(3) == 120.0)
     val refsPath = s"${tmpDir("kcf2")}/p.refs.json"
     Files.writeString(Paths.get(refsPath), KerchunkSource.scanNetcdf(p))
-    val back = KerchunkSource.readCube(spark, refsPath, "v").collect()
+    val back = spark.read.format("kerchunk").option("vars", "v").load(refsPath).collect()
       .map(r => r.getDouble(0) -> r.getDouble(1)).toMap
     assert(back(0.5) == 105.0 && back(1.5).isNaN
       && back(2.5) == 115.0 && back(3.5) == 120.0, back.toString)
@@ -503,7 +525,7 @@ class ZarrSourceSpec extends AnyFunSuite {
     Files.writeString(Paths.get(refsPath), KerchunkSource.scanNetcdf(p))
     // CF-packed shorts → physical Kelvin, identical to the direct reader
     import org.apache.spark.sql.functions._
-    val stats = KerchunkSource.readCube(spark, refsPath, "analysed_sst")
+    val stats = spark.read.format("kerchunk").option("vars", "analysed_sst").load(refsPath)
       .filter(!isnan(col("analysed_sst")))
       .agg(count(lit(1)), sum(col("analysed_sst")), min(col("analysed_sst")),
         max(col("analysed_sst")))
@@ -524,7 +546,7 @@ class ZarrSourceSpec extends AnyFunSuite {
     val refsPath = s"${tmpDir("kcsns")}/s.refs.json"
     Files.writeString(Paths.get(refsPath), KerchunkSource.scanHdf5(p))
     import org.apache.spark.sql.functions._
-    val stats = KerchunkSource.readCube(spark, refsPath, "conc_chl")
+    val stats = spark.read.format("kerchunk").option("vars", "conc_chl").load(refsPath)
       .agg(count(lit(1)), sum(col("conc_chl"))).collect()(0)
     val direct = NetcdfSource.read(p).varByName("conc_chl").data
     assert(stats.getLong(0) == 10000L)
@@ -548,7 +570,7 @@ class ZarrSourceSpec extends AnyFunSuite {
     assert(refsJson.contains("\"a/0/0\""), "nested chunk key missing:\n" + refsJson)
     val refsPath = s"${tmpDir("kcsep2")}/s.refs.json"
     Files.writeString(Paths.get(refsPath), refsJson)
-    val back = KerchunkSource.readCube(spark, refsPath, "a").collect()
+    val back = spark.read.format("kerchunk").option("vars", "a").load(refsPath).collect()
       .map(r => (r.getDouble(0), r.getDouble(1)) -> r.getDouble(2)).toMap
     assert(back == Map((0.0, 0.0) -> 1.5, (1.0, 0.0) -> 3.5,
       (0.0, 1.0) -> 0.0, (1.0, 1.0) -> 0.0))
@@ -586,7 +608,7 @@ class ZarrSourceSpec extends AnyFunSuite {
       "expected per-slice refs:\n" + refsJson)
     val refsPath = s"${tmpDir("kcbig2")}/refs.json"
     Files.writeString(Paths.get(refsPath), refsJson)
-    val back = KerchunkSource.readCube(spark, refsPath, "v").collect()
+    val back = spark.read.format("kerchunk").option("vars", "v").load(refsPath).collect()
       .map(r => (r.getDouble(0), r.getDouble(1)) -> r.getDouble(2)).toMap
     assert(back.size == 12)
     for (j <- 0 until 4; i <- 0 until 3)
@@ -605,7 +627,7 @@ class ZarrSourceSpec extends AnyFunSuite {
       deflate = true, tileSize = 4)
     val refs1 = s"$dir/tiled.refs.json"
     Files.writeString(Paths.get(refs1), KerchunkSource.scanGeoTiff(p1))
-    val back1 = KerchunkSource.readCube(spark, refs1, "v").collect()
+    val back1 = spark.read.format("kerchunk").option("vars", "v").load(refs1).collect()
       .map(r => (r.getDouble(0), r.getDouble(1), r.getDouble(2)) -> r.getDouble(3))
       .toMap
     assert(back1.size == h * w * nb)
@@ -618,7 +640,7 @@ class ZarrSourceSpec extends AnyFunSuite {
       GeoTiffSource.Raster(3, 2, Array(1.0, 2.0, 3.0, 4.0, 5.0, 6.0), 1, 1, 0, 2))
     val refs2 = s"$dir/striped.refs.json"
     Files.writeString(Paths.get(refs2), KerchunkSource.scanGeoTiff(p2))
-    val back2 = KerchunkSource.readCube(spark, refs2, "v").collect()
+    val back2 = spark.read.format("kerchunk").option("vars", "v").load(refs2).collect()
       .map(r => (r.getDouble(0), r.getDouble(1)) -> r.getDouble(2)).toMap
     assert(back2 == Map(
       (1.5, 0.5) -> 1.0, (1.5, 1.5) -> 2.0, (1.5, 2.5) -> 3.0,
@@ -648,7 +670,7 @@ class ZarrSourceSpec extends AnyFunSuite {
     val refs = KerchunkSource.parse(refsPath)
     val tileKeys = (0 until 3).flatMap(j => (0 until 3).map(i => s"v/$j.$i"))
     tileKeys.foreach(k => assert(refs.contains(k), s"missing chunk ref $k"))
-    val back = KerchunkSource.readCube(spark, refsPath, "v").collect()
+    val back = spark.read.format("kerchunk").option("vars", "v").load(refsPath).collect()
       .map(r => (r.getDouble(0), r.getDouble(1)) -> r.getDouble(2)).toMap
     assert(back.size == h * w)
     for (j <- 0 until h; i <- 0 until w)
@@ -677,7 +699,7 @@ class ZarrSourceSpec extends AnyFunSuite {
       paths.map(p => KerchunkSource.scanNetcdf(p)), "t", Array(10.0, 20.0))
     val refsPath = s"$dir/combined.refs.json"
     Files.writeString(Paths.get(refsPath), combined)
-    val back = KerchunkSource.readCube(spark, refsPath, "v").collect()
+    val back = spark.read.format("kerchunk").option("vars", "v").load(refsPath).collect()
       .map(r => (r.getDouble(0), r.getDouble(1), r.getDouble(2)) -> r.getDouble(3))
       .toMap
     assert(back.size == 12)
@@ -733,18 +755,16 @@ class ZarrSourceSpec extends AnyFunSuite {
       k => k.startsWith("small/") && !k.contains("/.z"))((_, _) => ())
     assert(streamed == 2L)
     // lazy read: inline chunks decode, the missing chunk fills
-    val back = KerchunkSource.readCubeLazy(spark, refsPath, "small").collect()
+    val back = spark.read.format("kerchunk").option("vars", "small").load(refsPath)
+      .collect()
       .map(r => (r.getDouble(0), r.getDouble(1)) -> r.getDouble(2)).toMap
     assert(back == Map(
       (0.0, 0.0) -> 1.5, (0.0, 1.0) -> 2.5,
       (1.0, 0.0) -> -9.0, (1.0, 1.0) -> -9.0,
       (2.0, 0.0) -> 1.5, (2.0, 1.0) -> 2.5))
-    // spillBatch=1 forces a flush per ref — multi-batch spilling is lossless
-    assert(KerchunkSource.readCubeLazy(spark, refsPath, "small",
-      spillBatch = 1).count() == 6)
   }
 
-  test("kerchunk lazy: readCubeLazy equals readCube on a scanned real group") {
+  test("kerchunk lazy: the lazy refs scan equals the eager-parsed truth on a scanned real group") {
     import spark.implicits._
     import graft.sources.KerchunkSource
     val ys = Array(10.0, 20.0, 30.0)
@@ -761,8 +781,8 @@ class ZarrSourceSpec extends AnyFunSuite {
     Files.writeString(Paths.get(refsPath), KerchunkSource.scanZarr(g))
     def asMap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getDouble(0), r.getDouble(1)) -> r.getDouble(2)).toMap
-    val eager = asMap(KerchunkSource.readCube(spark, refsPath, "v"))
-    val lazyM = asMap(KerchunkSource.readCubeLazy(spark, refsPath, "v"))
+    val eager = asMap(graft.sources.CubeTruth.kerchunk(spark, refsPath, Seq("v")))
+    val lazyM = asMap(spark.read.format("kerchunk").option("vars", "v").load(refsPath))
     assert(eager.size == 15 && lazyM.size == 15)
     eager.foreach { case (k, v) =>
       assert(v.isNaN == lazyM(k).isNaN && (v.isNaN || v == lazyM(k)), s"at $k")
@@ -791,7 +811,7 @@ class ZarrSourceSpec extends AnyFunSuite {
          | "a/0.0": "base64:$b64",
          | "a/1.0": ["file://$dir/c01"]
          |}}""".stripMargin)
-    val back = KerchunkSource.readCube(spark, refsPath, "a").collect()
+    val back = spark.read.format("kerchunk").option("vars", "a").load(refsPath).collect()
       .map(r => (r.getDouble(0), r.getDouble(1)) -> r.getDouble(2)).toMap
     assert(back == Map(
       (0.0, 0.0) -> 1.5, (0.0, 1.0) -> 2.5,   // inline base64

@@ -32,7 +32,7 @@ class ZarrV3SourceSpec extends AnyFunSuite {
     assert(Files.exists(Paths.get(s"$g/v/c/0/0")) &&
       Files.exists(Paths.get(s"$g/v/c/1/2")))
     assert(!Files.exists(Paths.get(s"$g/v/.zarray"))) // no v2 documents
-    val back = ZarrV3Source.readCube(spark, g, "v").collect()
+    val back = spark.read.format("zarr").option("vars", "v").load(g).collect()
       .map(r => (r.getDouble(0), r.getDouble(1)) -> r.getDouble(2)).toMap
     assert(back.size == 15)
     assert(back((10.0, 0.5)) == 0.0 && back((30.0, 4.5)) == 24.0)
@@ -48,7 +48,7 @@ class ZarrV3SourceSpec extends AnyFunSuite {
       ZarrV3Source.writeCube(
         Seq((1.0, 3.0, 10.0), (2.0, 4.0, 20.5)).toDF("y", "x", "v"),
         g, "v", Seq("y" -> ys, "x" -> xs), chunks = Seq(2, 2), steps = steps)
-      val back = ZarrV3Source.readCube(spark, g, "v").collect()
+      val back = spark.read.format("zarr").option("vars", "v").load(g).collect()
         .map(r => (r.getDouble(0), r.getDouble(1)) -> r.getDouble(2)).toMap
       assert(back((1.0, 3.0)) == 10.0 && back((2.0, 4.0)) == 20.5)
       assert(back((1.0, 4.0)).isNaN)
@@ -67,7 +67,7 @@ class ZarrV3SourceSpec extends AnyFunSuite {
     bytes(0) = (bytes(0) ^ 0x1).toByte
     Files.write(p, bytes)
     val e = intercept[Exception] {
-      ZarrV3Source.readCube(spark, g, "v").collect()
+      spark.read.format("zarr").option("vars", "v").load(g).collect()
     }
     assert(e.getMessage != null || e.getCause != null) // task wraps the require
   }
@@ -94,7 +94,7 @@ class ZarrV3SourceSpec extends AnyFunSuite {
     // metadata declares sharding_indexed
     val doc = new String(Files.readAllBytes(Paths.get(s"$g/v/zarr.json")))
     assert(doc.contains("sharding_indexed") && doc.contains("index_location"))
-    val back = ZarrV3Source.readCube(spark, g, "v").collect()
+    val back = spark.read.format("zarr").option("vars", "v").load(g).collect()
       .map(r => (r.getDouble(0), r.getDouble(1)) -> r.getDouble(2)).toMap
     assert(back.size == 24)
     assert(back((0.0, 0.0)) == 0.0 && back((3.0, 2.0)) == 32.0)
@@ -138,7 +138,7 @@ class ZarrV3SourceSpec extends AnyFunSuite {
     val crc = ByteBuffer.allocate(4).order(ByteOrder.LITTLE_ENDIAN)
       .putInt(c.getValue.toInt).array()
     Files.write(Paths.get(s"$g/v/c/0/0"), body ++ idx.array() ++ crc)
-    val back = ZarrV3Source.readCube(spark, g, "v").collect()
+    val back = spark.read.format("zarr").option("vars", "v").load(g).collect()
       .map(r => (r.getDouble(0), r.getDouble(1)) -> r.getDouble(2)).toMap
     assert(back == Map((0.0, 0.0) -> 7.0, (0.0, 1.0) -> -5.0,
       (1.0, 0.0) -> -5.0, (1.0, 1.0) -> 9.0)) // fill_value -5 where absent
@@ -163,7 +163,7 @@ class ZarrV3SourceSpec extends AnyFunSuite {
     Files.write(Paths.get(s"$g/v/0.0"), payload.array())
     val za = ZarrV3Source.openArray(s"$g/v")
     assert(za.dtype == ">i2" && !za.v3DefaultKeys && za.separator == ".")
-    val back = ZarrV3Source.readCube(spark, g, "v").collect()
+    val back = spark.read.format("zarr").option("vars", "v").load(g).collect()
       .map(r => (r.getDouble(0), r.getDouble(1)) -> r.getDouble(2)).toMap
     assert(back == Map((0.0, 0.0) -> 1.0, (0.0, 1.0) -> -2.0,
       (1.0, 0.0) -> 300.0, (1.0, 1.0) -> 4.0))
@@ -181,8 +181,31 @@ class ZarrV3SourceSpec extends AnyFunSuite {
     // metadata must be sufficient (the object-store fast path)
     Seq("y", "x", "v").foreach(a => Files.delete(Paths.get(s"$g/$a/zarr.json")))
     assert(ZarrV3Source.listArrays(g).toSet == Set("y", "x", "v"))
-    val back = ZarrV3Source.readCube(spark, g, "v")
+    val back = spark.read.format("zarr").option("vars", "v").load(g)
     assert(back.filter(!isnan(col("v"))).count() == 2)
+  }
+
+  test("openDataset opens every data variable of a v3 group on one grid") {
+    import spark.implicits._
+    val ys = Array(10.0, 20.0)
+    val xs = Array(0.5, 1.5, 2.5)
+    val cells = for { (y, j) <- ys.zipWithIndex.toSeq; (x, i) <- xs.zipWithIndex }
+      yield (y, x, j * 10.0 + i)
+    val g = s"${tmpDir("zarrv3open")}/cube.zarr"
+    ZarrV3Source.writeCube(cells.toDF("y", "x", "v"), g, "v",
+      Seq("y" -> ys, "x" -> xs), chunks = Seq(1, 2))
+    ZarrV3Source.writeCube(cells.map { case (y, x, v) => (y, x, -v) }.toDF("y", "x", "w"),
+      g, "w", Seq("y" -> ys, "x" -> xs), chunks = Seq(1, 2))
+    // each writeCube consolidates only its own variable: drop the
+    // consolidated metadata so the group lists both arrays
+    Files.write(Paths.get(s"$g/zarr.json"),
+      """{"zarr_format": 3, "node_type": "group", "attributes": {}}""".getBytes)
+    assert(ZarrV3Source.listArrays(g) == Seq("v", "w", "x", "y"))
+    val opened = graft.sources.DataStore.openDataset(spark, g)
+    assert(opened.columns.toSeq == Seq("y", "x", "v", "w"))
+    val back = opened.collect()
+      .map(r => (r.getDouble(0), r.getDouble(1)) -> (r.getDouble(2), r.getDouble(3))).toMap
+    assert(back == cells.map { case (y, x, v) => (y, x) -> (v, -v) }.toMap)
   }
 
   test("plain large v3 chunks: the born sidecar equals ANALYZE's (no strips)") {
