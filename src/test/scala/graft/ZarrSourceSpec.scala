@@ -764,7 +764,7 @@ class ZarrSourceSpec extends AnyFunSuite {
       (2.0, 0.0) -> 1.5, (2.0, 1.0) -> 2.5))
   }
 
-  test("kerchunk lazy: the lazy refs scan equals the eager-parsed truth on a scanned real group") {
+  test("kerchunk lazy: the lazy refs scan equals the eager-parsed truth on a group") {
     import spark.implicits._
     import graft.sources.KerchunkSource
     val ys = Array(10.0, 20.0, 30.0)
